@@ -3,103 +3,62 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times every SparkEntry query at the sf-dir given by
-  * SPARK_GRAFT_SF_DIR, best-of-3 (r17; see the GC note in main), and
-  * emits ONE machine-readable JSON line — to stdout, to stderr (sbt
-  * leaves stderr unprefixed), and to bench_out.json in the working
-  * directory so the harness never has to fish the line out of log
-  * noise.
+  * SPARK_GRAFT_SF_DIR with [[Measure.battery]] (best-of-3, GC quiesce
+  * before each query), and emits ONE machine-readable JSON line — to
+  * stdout, to stderr (sbt leaves stderr unprefixed), and to
+  * bench_out.json in the working directory so the harness never has to
+  * fish the line out of log noise.
   *
   * The session is the library's own bootstrap (GraftSession.local: AQE,
   * core-sized shuffle partitions, UTC) — benching the engine as shipped,
   * not an untuned default session. Per-query failures are logged to
   * stderr and excluded from the total rather than silently summed as -1.
   *
-  * q_ngram_jaccard is benched via its LSH-candidate scale path
-  * (q_ngram_jaccard_lsh); the exact |Q|·N form remains the correctness
-  * oracle in Verify but is not the formulation a 100 TB run would use.
+  * Measured (r17): battery totals reproduce within 0.3% across full
+  * re-runs; residual per-query variance has an absolute floor of
+  * ~±0.15 s from the OS/scheduler, which on ~1 s queries can still read
+  * as 15–30% — the scale gate's isolated re-timing stays the arbiter for
+  * any plan-shape question.
   */
 object Bench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark: SparkSession = GraftSession.local("graft-bench")
-    spark.sparkContext.setLogLevel("WARN")
 
-    // best-of-3 per query, runs back-to-back (r17; was best-of-2). Two
-    // reproducibility fixes the r16 verdict asked for, each measured
-    // before adoption:
-    //  - GC quiesce before every timed query (was every 10th): 160+
-    //    back-to-back queries accumulate tenured garbage whose
-    //    collection pressure lands on whichever query runs next —
-    //    r16's sub-second numbers swung ~2× between rounds
-    //    (q_changelog 0.71↔1.46 while the gate's isolated timing was
-    //    flat). Needs the pinned heap (-Xms=-Xmx, build.sbt): without
-    //    it the full collections SHRANK the committed heap and the
-    //    next query re-committed pages inside its timer (battery grew
-    //    54 s → 76 s).
-    //  - a third back-to-back sample: tightens the min on the ~1 s
-    //    tail. Consecutive (not interleaved-pass) runs are deliberate:
-    //    whole-stage codegen's class cache holds 100 entries, so a
-    //    full-battery pass evicts every query's generated classes and
-    //    an interleaved min-across-passes design re-measured COLD
-    //    codegen for all 167 queries every pass (battery total 47.8 s
-    //    → 74.1 s, measured before rejecting it).
-    // Result (measured): battery totals reproduce within 0.3% across
-    // full re-runs; residual per-query variance has an absolute floor
-    // of ~±0.15 s from the OS/scheduler, which on ~1 s queries can
-    // still read as 15–30% — the scale gate's isolated re-timing stays
-    // the arbiter for any plan-shape question. The first run pays
-    // one-off costs (codegen, file-index, fixture memo builds) that a
-    // long-lived engine amortizes; min reflects steady-state
-    // throughput. Caches are NOT cleared: memoized layouts/indexes are
-    // the steady state being measured.
-    def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
-      catch {
-        case e: Throwable =>
-          System.err.println(s"[bench] $name FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
-          -1.0
-      }
-    }
+  /** Queries the compact line carries next to the totals. */
+  private val headline = Seq("q1_agg", "q3_join_agg", "q5_multijoin", "q_scan_project",
+    "q_window_rank", "q_dedup_exact", "q_ann_bruteforce", "q_profile")
 
-    val benched = (SparkEntry.queries - "q_ngram_jaccard")
-    val results = benched.map { case (name, fn) =>
-      System.gc()
-      val t1 = once(name, fn)
-      name -> (if (t1 < 0) t1
-               else math.min(t1, math.min(once(name, fn), once(name, fn))))
-    }
-    val failed = results.filter(_._2 < 0).keys.toSeq.sorted
-    if (failed.nonEmpty)
-      System.err.println(s"[bench] ${failed.size} queries failed: ${failed.mkString(", ")}")
-
+  /** The bench_out.json line and the compact stdout line for `results`
+    * (query → seconds, -1 when it failed). The compact line exists
+    * because a harness that keeps only the last ~2 KB of output
+    * head-truncated a 108-entry per-query map (~4 KB) (r1–r7); the full
+    * map lives in bench_out.json. `cpus` is the core count the
+    * session ran with, so a low-core scaling probe can see that
+    * SPARK_GRAFT_CPUS took effect. */
+  private[graft] def render(results: Map[String, Double], cpus: Int,
+                            sfDir: String): (String, String) = {
     def jmap(m: Iterable[(String, Double)]): String =
       m.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
     val total = results.values.filter(_ >= 0).sum
-    // r18: report the core count the session actually ran with (additive
-    // field, prescribed by the r17 verdict so the driver's low-core
-    // scaling probe can SEE that SPARK_GRAFT_CPUS took effect — the env
-    // plumbing itself is unchanged, GraftSession.local has honored it
-    // since r1). No timing-methodology change this round.
-    val cpus = GraftSession.cpus
-    val fullJson =
+    val nFailed = results.values.count(_ < 0)
+    val full =
       s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},""" +
-        s""""n_failed":${failed.size},"cpus":$cpus,"queries":${jmap(results)},"sf":"$sfDir"}"""
-    Files.write(Paths.get("bench_out.json"), (fullJson + "\n").getBytes(StandardCharsets.UTF_8))
-    // The final stdout line must be COMPACT: the driver's tail capture keeps
-    // only ~2 KB, and a 108-entry per-query map (~4 KB) head-truncates the
-    // line, leaving BENCH_r{N}.parsed = null (r1–r7). So the literal last
-    // line carries the totals plus a fixed headline subset; the full
-    // per-query map lives in bench_out.json, which the driver also ships.
-    val headline = Seq("q1_agg", "q3_join_agg", "q5_multijoin", "q_scan_project",
-      "q_window_rank", "q_dedup_exact", "q_ann_bruteforce", "q_profile")
-      .flatMap(n => results.get(n).map(n -> _))
+        s""""n_failed":$nFailed,"cpus":$cpus,"queries":${jmap(results)},"sf":"$sfDir"}"""
     val compact =
       s"""{"metric":"total","value":${f"$total%.2f"},"unit":"sec","n_queries":${results.size},""" +
-        s""""n_failed":${failed.size},"cpus":$cpus,"queries":${jmap(headline)},"sf":"$sfDir"}"""
+        s""""n_failed":$nFailed,"cpus":$cpus,""" +
+        s""""queries":${jmap(headline.flatMap(n => results.get(n).map(n -> _)))},"sf":"$sfDir"}"""
+    (full, compact)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = Measure.sfDir
+    val spark = GraftSession.local("graft-bench")
+    val results = Measure.battery(spark, sfDir, runs = 3, tag = "bench")
+    val failed = results.filter(_._2 < 0).keys.toSeq.sorted
+    if (failed.nonEmpty)
+      System.err.println(s"[bench] ${failed.size} queries failed: ${failed.mkString(", ")}")
+    val (full, compact) = render(results, GraftSession.cpus, sfDir)
+    Files.write(Paths.get("bench_out.json"), (full + "\n").getBytes(StandardCharsets.UTF_8))
     // stop Spark FIRST so its shutdown logging can't land after the JSON.
     // Print the greppable sentinel first and the BARE compact line LAST: with
     // build.sbt's StdoutOutput + showSuccess:=false the bare line is the

@@ -34,19 +34,14 @@ object BenchOne {
 
   def main(args: Array[String]): Unit = {
     val (runs, names0) = parseArgs(args)
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sfDir = Measure.sfDir
     val names = if (names0.nonEmpty) names0 else SparkEntry.queries.keys.toSeq.sorted
     val spark: SparkSession = GraftSession.local("graft-bench-one")
-    spark.sparkContext.setLogLevel("WARN")
     names.foreach { name =>
       SparkEntry.queries.get(name) match {
         case None => println(f"$name%-28s UNKNOWN")
         case Some(fn) =>
-          val times = (1 to runs).map { _ =>
-            val t0 = System.nanoTime()
-            fn(spark, sfDir).count()
-            (System.nanoTime() - t0) / 1e9
-          }
+          val times = (1 to runs).map(_ => Measure.seconds(fn(spark, sfDir).count()))
           println(f"$name%-28s best=${times.min}%7.3f s  runs=${times.map(t => f"$t%.3f").mkString(",")}")
       }
     }

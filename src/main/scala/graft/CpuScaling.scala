@@ -3,6 +3,11 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
+import org.json4s._
+import org.json4s.jackson.JsonMethods
+
+import scala.jdk.CollectionConverters._
+
 /** CPU-scaling probe (r18, VERDICT #1): time the heavy query families
   * ISOLATED at the 10× gate corpus under the CURRENT `SPARK_GRAFT_CPUS`,
   * so two runs (8 vs 32 cores) yield per-query parallel-speedup ratios
@@ -12,11 +17,12 @@ import java.nio.file.{Files, Paths}
   * how parallel the operators are (the r17 driver flagged exactly that).
   *
   * Methodology matches the gate's isolated re-timing: GC quiesce before
-  * every query, best-of-3, the scaled corpus reused/built by the same
-  * `ScaleGate.ensureScaled` the gate runs. Each run writes
-  * `cpu_scaling_c<N>.json`; once both core counts have run, the merged
-  * `cpu_scaling.json` (per-query low/high seconds + speedup ratio) is
-  * written for committing next to scale_gate.json.
+  * every query, best-of-3 ([[Measure.bestOf]]), the scaled corpus
+  * reused/built by [[ScaleUp.ensureScaled]]. Each run writes
+  * `cpu_scaling_c<N>.json`; once two core counts have run, the merged
+  * `cpu_scaling.json` (per-query low/high seconds + speedup ratio, for
+  * the lowest and highest core counts on disk) is written for
+  * committing next to scale_gate.json.
   *
   * Run:
   *   SPARK_GRAFT_CPUS=32 sbt "runMain graft.CpuScaling /tmp/graft-sf1"
@@ -37,64 +43,56 @@ object CpuScaling {
     "q_profile", "q_tfidf_topterms", "q_bpe_tokens", "q_decontaminate",
     "q_meta_count")
 
-  private def writeMergedIfComplete(low: Int, high: Int): Unit = {
-    def load(n: Int): Option[Map[String, Double]] = {
-      val p = Paths.get(s"cpu_scaling_c$n.json")
-      if (!Files.exists(p)) None
-      else {
-        val s = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-        // own writer's format: "name":sec pairs inside "queries":{...}
-        val body = s.substring(s.indexOf("\"queries\":{") + 11, s.lastIndexOf("}"))
-        Some(body.split(",").filter(_.nonEmpty).map { kv =>
-          val Array(k, v) = kv.split(":")
-          k.replace("\"", "") -> v.takeWhile(c => c != '}').toDouble
-        }.toMap)
+  /** One run's `cpu_scaling_c<cpus>.json` text. */
+  private[graft] def perCoreJson(cpus: Int, dir: String, times: Seq[(String, Double)]): String =
+    times.map { case (k, v) => f""""$k":$v%.3f""" }.mkString(
+      s"""{"cpus":$cpus,"dir":"$dir","queries":{""", ",", "}}\n")
+
+  /** `cpu_scaling.json` from the per-core texts: the lowest core count
+    * against the highest; None until two distinct counts exist. */
+  private[graft] def merged(perCore: Seq[String]): Option[String] = {
+    implicit val formats: Formats = DefaultFormats
+    val runs = perCore.map(JsonMethods.parse(_)).map(j =>
+      (j \ "cpus").extract[Int] -> (j \ "queries").extract[Map[String, Double]]).toMap
+    if (runs.size < 2) None
+    else {
+      val (low, high) = (runs.keys.min, runs.keys.max)
+      val (lo, hi) = (runs(low), runs(high))
+      val rows = heavy.filter(q => lo.contains(q) && hi.contains(q)).map { q =>
+        val ratio = if (hi(q) > 0) lo(q) / hi(q) else -1.0
+        f""""$q":{"c${low}_sec":${lo(q)}%.3f,"c${high}_sec":${hi(q)}%.3f,"speedup":$ratio%.2f}"""
       }
-    }
-    (load(low), load(high)) match {
-      case (Some(lo), Some(hi)) =>
-        val rows = heavy.filter(q => lo.contains(q) && hi.contains(q)).map { q =>
-          val ratio = if (hi(q) > 0) lo(q) / hi(q) else -1.0
-          f""""$q":{"c${low}_sec":${lo(q)}%.3f,"c${high}_sec":${hi(q)}%.3f,"speedup":$ratio%.2f}"""
-        }
-        val json = rows.mkString(
-          s"""{"cpus_low":$low,"cpus_high":$high,"per_query":{""", ",", "}}\n")
-        Files.write(Paths.get("cpu_scaling.json"), json.getBytes(StandardCharsets.UTF_8))
-        println(s"[cpuscale] merged cpu_scaling.json written ($low vs $high cpus)")
-      case _ =>
-        println(s"[cpuscale] waiting for the other core count before merging")
+      Some(rows.mkString(
+        s"""{"cpus_low":$low,"cpus_high":$high,"per_query":{""", ",", "}}\n"))
     }
   }
 
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("/tmp/graft-sf1")
-    val copies = args.lift(1).map(_.toInt).getOrElse(10)
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = GraftSession.cpus
-
     val spark = GraftSession.local("graft-cpu-scaling")
-    spark.sparkContext.setLogLevel("WARN")
-    ScaleGate.ensureScaled(spark, sfDir, outDir, copies)
+    ScaleUp.ensureScaled(spark, Measure.sfDir, outDir)
 
     val results = heavy.flatMap { name =>
       SparkEntry.queries.get(name).map { fn =>
-        System.gc()
-        def once(): Double = {
-          val t0 = System.nanoTime()
-          fn(spark, outDir).count()
-          (System.nanoTime() - t0) / 1e9
-        }
-        val best = Seq(once(), once(), once()).min
+        val best = Measure.bestOf(3)(fn(spark, outDir).count())
         println(f"[cpuscale] $name%-28s cpus=$cpus best=$best%7.3f s")
         name -> best
       }
     }
     spark.stop()
 
-    val json = results.map { case (k, v) => f""""$k":$v%.3f""" }.mkString(
-      s"""{"cpus":$cpus,"dir":"$outDir","queries":{""", ",", "}}\n")
-    Files.write(Paths.get(s"cpu_scaling_c$cpus.json"), json.getBytes(StandardCharsets.UTF_8))
+    Files.write(Paths.get(s"cpu_scaling_c$cpus.json"),
+      perCoreJson(cpus, outDir, results).getBytes(StandardCharsets.UTF_8))
     println(s"[cpuscale] wrote cpu_scaling_c$cpus.json")
-    writeMergedIfComplete(8, 32)
+    val perCore = Files.list(Paths.get(".")).iterator.asScala.toSeq
+      .filter(_.getFileName.toString.matches("""cpu_scaling_c\d+\.json"""))
+      .map(p => new String(Files.readAllBytes(p), StandardCharsets.UTF_8))
+    merged(perCore) match {
+      case Some(json) =>
+        Files.write(Paths.get("cpu_scaling.json"), json.getBytes(StandardCharsets.UTF_8))
+        println("[cpuscale] merged cpu_scaling.json written")
+      case None => println("[cpuscale] waiting for another core count before merging")
+    }
   }
 }

@@ -3,8 +3,6 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Standing scale-regression gate (SURVEY §6): build (or reuse) the
   * 10× key-remapped copy of the base sf dir, run the full battery at
   * both scales, and FAIL (exit 1) if any query's wall-clock grows
@@ -13,8 +11,8 @@ import org.apache.spark.sql.SparkSession
   * precisely because it ran; this main makes it a one-command gate that
   * every round must keep green instead of a sweep that rots.
   *
-  * Gate rule: breach when `scaledTime / max(baseTime, floor) > bound`
-  * with default bound 12.0 and floor 0.2 s (a 0.05 s base is
+  * Gate rule: breach when `scaledTime / max(baseTime, Floor) > Bound`
+  * with Bound 12.0 and Floor 0.2 s (a 0.05 s base is
   * fixed-overhead-dominated; 10× of "nothing" measures JVM noise, not
   * plan shape). The bound derivation (r9, revised from 8.0): the gate
   * exists to separate LINEAR scaling from super-linear returns, and on
@@ -28,11 +26,10 @@ import org.apache.spark.sql.SparkSession
   * measure an order of magnitude past any of that: the two real
   * super-linear plans the r8 sweep caught ran 162× and ~100×. 12.0
   * passes every honest linear plan under battery pressure and still
-  * fails an N² return by 8×. Both knobs are overridable (`--bound=`,
-  * `--floor=`) so a future tightening is a flag, not a rewrite. Times
-  * are best-of-2 per query per scale — same steady-state treatment as
-  * `Bench`, so one-time index/memo builds (IVF, co-bucketed layouts,
-  * snapshot commits) don't count as scaling.
+  * fails an N² return by 8×. Times are best-of-2 per query per scale
+  * ([[Measure.battery]], the same method as `Bench`), so one-time
+  * index/memo builds (IVF, co-bucketed layouts, snapshot commits) don't
+  * count as scaling.
   *
   * [[boundOverrides]] lists the queries that are super-linear BY
   * DESIGN, each with its complexity-model bound — loudly, per the
@@ -40,11 +37,15 @@ import org.apache.spark.sql.SparkSession
   * every override is printed when applied.
   *
   * Run: SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
-  *      sbt "runMain graft.ScaleGate /tmp/graft-sf1 10"
+  *      sbt "runMain graft.ScaleGate /tmp/graft-sf1"
   * Writes scale_gate.json (per-query base/scaled/ratio + breaches) and
   * prints one PASS/FAIL line last.
   */
 object ScaleGate {
+
+  // the gate rule's constants, derived in the scaladoc above
+  private val Bound = 12.0
+  private val Floor = 0.2
 
   final case class Row(name: String, base: Double, scaled: Double,
                        ratio: Double, breach: Boolean,
@@ -101,91 +102,31 @@ object ScaleGate {
       }
     }
 
-  /** The scaled copy is reused when every table already has a parquet
-    * _SUCCESS marker — rebuilding 10× of sf0.1 costs ~1 min, so the
-    * gate's steady-state cost is the two battery runs. */
-  private[graft] def ensureScaled(spark: SparkSession, sfDir: String,
-                                  outDir: String, copies: Int): Unit = {
-    val tables = Seq("region", "nation", "customer", "supplier", "part",
-      "orders", "lineitem", "events", "documents", "embeddings")
-    val missing = tables.filterNot(t =>
-      Files.exists(Paths.get(s"$outDir/$t.parquet/_SUCCESS")))
-    if (missing.isEmpty) { println(s"[gate] reusing scaled copy at $outDir"); return }
-    println(s"[gate] building ${copies}x copy at $outDir (missing: ${missing.mkString(",")})")
-    missing.foreach { t =>
-      ScaleUp.scaled(spark, sfDir, t, copies)
-        .write.mode("overwrite").parquet(s"$outDir/$t.parquet")
-    }
-  }
-
-  private def runBattery(spark: SparkSession, dir: String): Map[String, Double] = {
-    def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try { fn(spark, dir).count(); (System.nanoTime() - t0) / 1e9 }
-      catch { case e: Throwable =>
-        System.err.println(s"[gate] FAILED at $dir: ${e.getClass.getSimpleName}: ${e.getMessage}")
-        -1.0
-      }
-    }
-    // same battery as Bench: the exact |Q|·N n-gram form stays a
-    // Verify-only oracle, not a scale path. Same GC discipline as
-    // Bench too — quiesce before EVERY query (r17, was every 10th):
-    // 160+ back-to-back queries accumulate tenured garbage whose
-    // collection lands on whichever query runs next (r15 measured 3×
-    // inflation on q_bpe_tokens at the 10× scale, 8.5 s in-battery vs
-    // 2.6 s isolated; the r17 every-10th battery still read a pure
-    // map-side query, q_normalize_text, at ratio 11.3). The forced
-    // collection costs ~5 s per battery and brings every in-battery
-    // ratio near its isolated value, so breach decisions for
-    // non-override queries stop riding GC phase.
-    (SparkEntry.queries - "q_ngram_jaccard").map { case (name, fn) =>
-      System.gc()
-      val t1 = once(fn)
-      name -> (if (t1 < 0) t1 else math.min(t1, once(fn)))
-    }
-  }
-
   def main(args: Array[String]): Unit = {
-    val pos = args.filterNot(_.startsWith("--"))
-    val outDir = pos.headOption.getOrElse("/tmp/graft-sf1")
-    val copies = pos.lift(1).map(_.toInt).getOrElse(10)
-    def flag(name: String, dflt: Double): Double =
-      args.collectFirst { case a if a.startsWith(s"--$name=") =>
-        a.stripPrefix(s"--$name=").toDouble }.getOrElse(dflt)
-    val bound = flag("bound", 12.0)
-    val floor = flag("floor", 0.2)
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
+    val outDir = args.headOption.getOrElse("/tmp/graft-sf1")
+    val sfDir = Measure.sfDir
     val spark = GraftSession.local("graft-scale-gate")
-    spark.sparkContext.setLogLevel("WARN")
-    ensureScaled(spark, sfDir, outDir, copies)
+    ScaleUp.ensureScaled(spark, sfDir, outDir)
 
     println(s"[gate] battery at base $sfDir")
-    val base = runBattery(spark, sfDir)
+    val base = Measure.battery(spark, sfDir, runs = 2, tag = "gate")
     println(f"[gate] base total ${base.values.filter(_ >= 0).sum}%.1f s, ${base.size} queries")
     println(s"[gate] battery at scaled $outDir")
-    val scaled = runBattery(spark, outDir)
+    val scaled = Measure.battery(spark, outDir, runs = 2, tag = "gate")
     println(f"[gate] scaled total ${scaled.values.filter(_ >= 0).sum}%.1f s")
 
     // override queries re-time ISOLATED (GC-quiesced, best-of-2, both
     // scales) and the breach decision uses THAT ratio against the model
     // bound — in-battery numbers stay recorded alongside for drift
     // auditing; a query that already failed outright stays a breach
-    val rows = evaluate(base, scaled, bound, floor).map { r =>
+    val rows = evaluate(base, scaled, Bound, Floor).map { r =>
       if (!boundOverrides.contains(r.name) || r.ratio < 0) r
       else {
         val fn = SparkEntry.queries(r.name)
-        def iso(dir: String): Double = {
-          System.gc()
-          def once(): Double = {
-            val t0 = System.nanoTime()
-            fn(spark, dir).count(); (System.nanoTime() - t0) / 1e9
-          }
-          math.min(once(), once())
-        }
+        def iso(dir: String): Double = Measure.bestOf(2)(fn(spark, dir).count())
         val ib = iso(sfDir)
         val isc = iso(outDir)
-        val ir = isc / math.max(ib, floor)
+        val ir = isc / math.max(ib, Floor)
         val qBound = boundOverrides(r.name)
         println(f"[gate] ${r.name}%-28s isolated base=$ib%.3f scaled=$isc%.3f " +
           f"ratio=$ir%.2f vs model bound $qBound%.1f (in-battery ${r.ratio}%.2f)")
@@ -200,7 +141,7 @@ object ScaleGate {
           f""","iso_base":$ib%.3f,"iso_scaled":$isc%.3f,"iso_ratio":$ir%.2f"""
         }.getOrElse("") + "}"
     }.mkString(
-      s"""{"copies":$copies,"bound":$bound,"floor":$floor,"n_breaches":${breaches.size},"rows":[""",
+      s"""{"copies":${ScaleUp.Copies},"bound":$Bound,"floor":$Floor,"n_breaches":${breaches.size},"rows":[""",
       ",", "]}\n")
     Files.write(Paths.get("scale_gate.json"), json.getBytes(StandardCharsets.UTF_8))
 
@@ -211,6 +152,6 @@ object ScaleGate {
     if (breaches.nonEmpty) {
       println(s"SCALE_GATE: FAIL (${breaches.size} breaches: ${breaches.map(_.name).mkString(", ")})")
       sys.exit(1)
-    } else println(f"SCALE_GATE: PASS (${rows.size} queries, worst ratio ${rows.map(_.ratio).max}%.2f, bound $bound)")
+    } else println(f"SCALE_GATE: PASS (${rows.size} queries, worst ratio ${rows.map(_.ratio).max}%.2f, bound $Bound)")
   }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -15,10 +17,17 @@ import org.apache.spark.sql.functions._
   * one population (`doc_id` collisions would turn every near-dup
   * family into one giant cluster and invalidate the sweep).
   *
+  * [[ensureScaled]] is the one path that writes the scaled corpus; the
+  * gate, `CpuScaling` and `StreamProbe` call it before they read it.
+  *
   * Run: SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
-  *      sbt "runMain graft.ScaleUp /tmp/graft-sf1 10"
+  *      sbt "runMain graft.ScaleUp /tmp/graft-sf1"
   */
 object ScaleUp {
+
+  /** The scale factor of the gate's corpus: one decade, the span the
+    * gate's bounds (and `ScaleGate.boundOverrides`) are derived for. */
+  val Copies = 10
 
   /** Key columns per table — remapped consistently everywhere. */
   private val keyCols: Map[String, Seq[String]] = Map(
@@ -33,12 +42,12 @@ object ScaleUp {
     "region" -> Nil,
     "nation" -> Nil)
 
-  def scaled(spark: SparkSession, sfDir: String, table: String, copies: Int): DataFrame = {
+  private def scaled(spark: SparkSession, sfDir: String, table: String): DataFrame = {
     val df = spark.read.parquet(s"$sfDir/$table.parquet")
-    val keys = keyCols.getOrElse(table, Nil)
-    if (keys.isEmpty || copies <= 1) df
-    else (0 until copies).map { i =>
-      val keyed = keys.foldLeft(df)((d, c) => d.withColumn(c, col(c) * copies + i))
+    val keys = keyCols(table)
+    if (keys.isEmpty) df
+    else (0 until Copies).map { i =>
+      val keyed = keys.foldLeft(df)((d, c) => d.withColumn(c, col(c) * Copies + i))
       // Population must grow in CONTENT, not just in keys: verbatim text
       // copies give every doc `copies` exact clones, so LSH bucket width
       // and candidate pairs grow quadratically in the copy count — a
@@ -85,20 +94,26 @@ object ScaleUp {
     }.reduce(_ unionAll _)
   }
 
-  def main(args: Array[String]): Unit = {
-    val outDir = args.headOption.getOrElse("/tmp/graft-sf1")
-    val copies = args.lift(1).map(_.toInt).getOrElse(10)
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = GraftSession.local("graft-scaleup", GraftSession.cpus)
+  /** Build the 10× copy of `sfDir` at `outDir`, or reuse it: a table is
+    * rebuilt only when its parquet `_SUCCESS` marker is missing, since
+    * rebuilding 10× of sf0.1 costs ~1 min. */
+  def ensureScaled(spark: SparkSession, sfDir: String, outDir: String): Unit = {
+    val missing = keyCols.keys.toSeq.sorted.filterNot(t =>
+      Files.exists(Paths.get(s"$outDir/$t.parquet/_SUCCESS")))
+    if (missing.isEmpty) { println(s"[scaleup] reusing scaled copy at $outDir"); return }
+    println(s"[scaleup] building ${Copies}x copy at $outDir (missing: ${missing.mkString(",")})")
     // events.ts is TIMESTAMP(NANOS): read it as epoch-nanos long and
     // write it back as plain INT64 — Tables.events handles both shapes
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    keyCols.keys.toSeq.sorted.foreach { t =>
-      val out = s"$outDir/$t.parquet"
-      scaled(spark, sfDir, t, copies)
-        .write.mode("overwrite").parquet(out)
-      println(s"$t -> $out")
+    missing.foreach { t =>
+      scaled(spark, sfDir, t).write.mode("overwrite").parquet(s"$outDir/$t.parquet")
+      println(s"$t -> $outDir/$t.parquet")
     }
+  }
+
+  def main(args: Array[String]): Unit = {
+    val spark = GraftSession.local("graft-scaleup")
+    ensureScaled(spark, Measure.sfDir, args.headOption.getOrElse("/tmp/graft-sf1"))
     spark.stop()
   }
 }

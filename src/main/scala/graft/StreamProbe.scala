@@ -22,10 +22,9 @@ import org.apache.spark.sql.functions._
 object StreamProbe {
   def main(args: Array[String]): Unit = {
     val scaledDir = args.headOption.getOrElse("/tmp/graft-sf1")
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sfDir = Measure.sfDir
     val spark = GraftSession.local("graft-stream-probe")
-    spark.sparkContext.setLogLevel("WARN")
-    ScaleGate.ensureScaled(spark, sfDir, scaledDir, 10)
+    ScaleUp.ensureScaled(spark, sfDir, scaledDir)
 
     // identical batch content at both corpus sizes: 200 novel docs (text
     // made unique so nothing dedups away and every batch pays the full
@@ -51,10 +50,7 @@ object StreamProbe {
       (1 to 3).map { b =>
         val batch = batchSrc.map { case (id, t) =>
           (id + 1000000L * b, s"$t novel$tag$b") }.toSeq.toDF("doc_id", "text")
-        System.gc()
-        val t0 = System.nanoTime()
-        ingest(batch, b.toLong)
-        val sec = (System.nanoTime() - t0) / 1e9
+        val sec = Measure.bestOf(1)(ingest(batch, b.toLong))
         println(f"[sprobe] $tag batch $b%d: $sec%.3f s")
         sec
       }

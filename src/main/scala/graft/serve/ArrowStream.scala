@@ -26,12 +26,14 @@ import scala.jdk.CollectionConverters._
   *
   * Scalar types plus one level of numeric arrays (embeddings) cover the
   * engine's query surface; an unsupported column type fails fast at
-  * schema construction — before any byte streams — with the column name.
+  * schema construction ([[writer]]) — before any byte streams — with
+  * the column name.
   */
 object ArrowStream {
 
-  /** Spark field → Arrow field (nullable, UTC timestamps, 128-bit
-    * decimals — matching how Spark's own Arrow path maps its types). */
+  /** Spark field → Arrow field (nullable, UTC timestamps, zone-less NTZ
+    * timestamps, 128-bit decimals — matching how Spark's own Arrow path
+    * maps its types). */
   private def arrowField(f: StructField): Field = {
     def prim(t: ArrowType): Field =
       new Field(f.name, FieldType.nullable(t), java.util.Collections.emptyList())
@@ -48,6 +50,7 @@ object ArrowStream {
       case d: DecimalType => prim(new ArrowType.Decimal(d.precision, d.scale, 128))
       case DateType => prim(new ArrowType.Date(DateUnit.DAY))
       case _: TimestampType => prim(new ArrowType.Timestamp(TimeUnit.MICROSECOND, "UTC"))
+      case TimestampNTZType => prim(new ArrowType.Timestamp(TimeUnit.MICROSECOND, null))
       case ArrayType(et, _) =>
         // fail at SCHEMA time, before the 200 header and stream start: the
         // writer only implements these element types
@@ -66,6 +69,8 @@ object ArrowStream {
   private def toMicros(v: Any): Long = v match {
     case t: java.sql.Timestamp => math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
     case i: java.time.Instant => i.getEpochSecond * 1000000L + i.getNano / 1000L
+    case t: java.time.LocalDateTime =>
+      t.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L + t.getNano / 1000L
   }
 
   private def toEpochDay(v: Any): Int = v match {
@@ -89,16 +94,27 @@ object ArrowStream {
         x.setSafe(i, v.asInstanceOf[java.math.BigDecimal].setScale(d.scale))
       case (x: DateDayVector, _) => x.setSafe(i, toEpochDay(v))
       case (x: TimeStampMicroTZVector, _) => x.setSafe(i, toMicros(v))
+      case (x: TimeStampMicroVector, _) => x.setSafe(i, toMicros(v))
       case (x, t) => throw new IllegalArgumentException(
         s"no arrow writer for ${x.getClass.getSimpleName} / $t")
     }
 
   /** Stream `df` as Arrow IPC record batches of `batchSize` rows. */
-  def write(df: DataFrame, os: OutputStream, batchSize: Int): Unit = {
+  def write(df: DataFrame, os: OutputStream, batchSize: Int): Unit =
+    writer(df, batchSize)(os)
+
+  /** Build `df`'s Arrow schema now, throwing on an unsupported column
+    * type, and return the function that streams `df` under it — so a
+    * server can fail before it commits to a 200 header. */
+  def writer(df: DataFrame, batchSize: Int): OutputStream => Unit = {
+    val schema = new Schema(df.schema.fields.map(arrowField).toSeq.asJava)
+    os => stream(df, schema, os, batchSize)
+  }
+
+  private def stream(df: DataFrame, schema: Schema, os: OutputStream, batchSize: Int): Unit = {
     val sparkSchema = df.schema
     val allocator = new RootAllocator(Long.MaxValue)
     try {
-      val schema = new Schema(sparkSchema.fields.map(arrowField).toSeq.asJava)
       val root = VectorSchemaRoot.create(schema, allocator)
       try {
         val writer = new ArrowStreamWriter(root, null, Channels.newChannel(os))

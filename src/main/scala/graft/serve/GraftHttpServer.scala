@@ -62,6 +62,7 @@ final class GraftHttpServer(
   private var server: HttpServer = _
   // per-start() lifecycle so stop()/start() cycles get a fresh scheduler
   private var timeouts: java.util.concurrent.ScheduledExecutorService = _
+  private var handlers: java.util.concurrent.ExecutorService = _
 
   /** Bound port (ephemeral when constructed with port=0). */
   def boundPort: Int = server.getAddress.getPort
@@ -86,7 +87,14 @@ final class GraftHttpServer(
     server.createContext("/staged", (ex: HttpExchange) => safely(ex)(handleStaged))
     server.createContext("/branches", (ex: HttpExchange) => safely(ex)(handleBranches))
     server.createContext("/partitions", (ex: HttpExchange) => safely(ex)(handlePartitions))
-    server.setExecutor(Executors.newFixedThreadPool(4))
+    val threads = Executors.defaultThreadFactory()
+    val handlerIds = new java.util.concurrent.atomic.AtomicInteger()
+    handlers = Executors.newFixedThreadPool(4, (r: Runnable) => {
+      val t = threads.newThread(r)
+      t.setName(s"graft-http-$boundPort-handler-${handlerIds.incrementAndGet()}")
+      t
+    })
+    server.setExecutor(handlers)
     server.start()
     this
   }
@@ -95,6 +103,11 @@ final class GraftHttpServer(
     if (server != null) {
       server.stop(0); server = null
       timeouts.shutdownNow(); timeouts = null
+      // the handler threads are not daemons: left running, every
+      // start/stop cycle would leak 4 of them and keep the JVM alive
+      handlers.shutdownNow()
+      handlers.awaitTermination(10, java.util.concurrent.TimeUnit.SECONDS)
+      handlers = null
     }
   }
 
@@ -252,6 +265,10 @@ final class GraftHttpServer(
 
   private def streamResult(ex: HttpExchange, df: DataFrame, desc: String): Unit = {
     val arrow = param(ex, "format").contains("arrow")
+    // the Arrow schema is built BEFORE the 200 header, so an unsupported
+    // column type gets safely's error status, not a 200 with no body
+    val body: OutputStream => Unit =
+      if (arrow) ArrowStream.writer(df, batchSize) else ndjson(df)
     // one job group per request, interruptible: disconnect or timeout
     // cancels the Spark jobs feeding the iterator, not just the stream
     val sc = spark.sparkContext
@@ -271,18 +288,7 @@ final class GraftHttpServer(
         else "application/x-ndjson; charset=utf-8")
       ex.sendResponseHeaders(200, 0) // 0 = chunked transfer
       val os = ex.getResponseBody
-      try {
-        if (arrow) ArrowStream.write(df, os, batchSize)
-        else {
-          write(os, df.schema.json + "\n")
-          // toLocalIterator pulls one partition at a time; grouped()
-          // flushes size-bounded batches to the consumer
-          df.toJSON.toLocalIterator().asScala.grouped(batchSize).foreach { batch =>
-            batch.foreach(line => write(os, line + "\n"))
-            os.flush()
-          }
-        }
-      } finally os.close()
+      try body(os) finally os.close()
     } catch {
       case e: Throwable => // client gone or query died: free the executors
         sc.cancelJobGroup(groupId)
@@ -290,6 +296,16 @@ final class GraftHttpServer(
     } finally {
       timeout.foreach(_.cancel(false))
       sc.clearJobGroup()
+    }
+  }
+
+  /** Schema line, then one JSON row per line: toLocalIterator pulls one
+    * partition at a time, grouped() flushes size-bounded batches. */
+  private def ndjson(df: DataFrame)(os: OutputStream): Unit = {
+    write(os, df.schema.json + "\n")
+    df.toJSON.toLocalIterator().asScala.grouped(batchSize).foreach { batch =>
+      batch.foreach(line => write(os, line + "\n"))
+      os.flush()
     }
   }
 

@@ -46,6 +46,7 @@ class ArrowStreamSpec extends SparkSpec {
       (col("id") * 100 + 0.07).cast("decimal(12,2)").as("dec"),
       to_date(concat(lit("2024-01-0"), col("id") + 1)).as("dt"),
       to_timestamp(concat(lit("2024-06-01 10:00:00."), col("id") + 1)).as("ts"),
+      to_timestamp_ntz(concat(lit("2024-06-01 10:00:00."), col("id") + 1)).as("ntz"),
       encode(concat(lit("b"), col("id")), "UTF-8").as("bin"))
     val (rows, batches) = roundtrip(df, batchSize = 3)
     assert(batches == 3 && rows.size == 7) // 3+3+1
@@ -73,6 +74,8 @@ class ArrowStreamSpec extends SparkSpec {
       val wantMicros = math.floorDiv(wantTs.getTime, 1000L) * 1000000L + wantTs.getNanos / 1000L
       assert(got("ts").asInstanceOf[Long] == wantMicros,
         s"ts mismatch: got ${got("ts")}, want $wantMicros")
+      // TimeStampMicroVector (no zone) yields the LocalDateTime itself
+      assert(got("ntz") == want.getAs[java.time.LocalDateTime]("ntz"))
       assert(got("bin").asInstanceOf[Array[Byte]].toSeq ==
         want.getAs[Array[Byte]]("bin").toSeq)
     }

@@ -449,6 +449,46 @@ class GraftHttpServerSpec extends SparkSpec {
     } finally srv.stop()
   }
 
+  test("TIMESTAMP_NTZ tables stream over Arrow; an unsupported type is refused before the 200") {
+    val srv = new GraftHttpServer(spark, sfDir, port = 0, batchSize = 1000).start()
+    try {
+      val base = s"http://127.0.0.1:${srv.boundPort}"
+      assert(graft.Tables.load(spark, sfDir, "orders").schema("o_orderdate").dataType ==
+        org.apache.spark.sql.types.TimestampNTZType)
+      val conn = URI.create(s"$base/table?format=arrow&name=orders")
+        .toURL.openConnection().asInstanceOf[HttpURLConnection]
+      assert(conn.getResponseCode == 200)
+      val alloc = new org.apache.arrow.memory.RootAllocator()
+      val reader = new org.apache.arrow.vector.ipc.ArrowStreamReader(conn.getInputStream, alloc)
+      var arrowRows = 0
+      while (reader.loadNextBatch()) arrowRows += reader.getVectorSchemaRoot.getRowCount
+      reader.close(); alloc.close(); conn.disconnect()
+      val (jc, jbody) = get(s"$base/table?name=orders")
+      assert(jc == 200)
+      assert(arrowRows > 0 && arrowRows == jbody.trim.split("\n").length - 1)
+
+      val (ac, abody) = get(s"$base/query?format=arrow&sql=" +
+        enc("SELECT split(o_comment, ' ') AS words FROM orders"))
+      assert(ac != 200 && abody.contains("words"), s"$ac $abody")
+    } finally srv.stop()
+  }
+
+  test("stop() ends the named handler threads: none outlive three start/stop cycles") {
+    def handlerThreads(port: Int) = Thread.getAllStackTraces.keySet.toArray
+      .map(_.asInstanceOf[Thread])
+      .filter(t => t.isAlive && t.getName.startsWith(s"graft-http-$port-handler-"))
+    val ports = (1 to 3).map { _ =>
+      val srv = new GraftHttpServer(spark, sfDir, port = 0).start()
+      val port = srv.boundPort
+      try {
+        assert(get(s"http://127.0.0.1:$port/query")._1 == 400)
+        assert(handlerThreads(port).nonEmpty, "requests run on the named handler pool")
+      } finally srv.stop()
+      port
+    }
+    ports.foreach(p => assert(handlerThreads(p).isEmpty, s"handler threads of :$p still alive"))
+  }
+
   private def awaitNoActiveJobs(timeoutMs: Long): Unit = {
     val tracker = spark.sparkContext.statusTracker
     val deadline = System.currentTimeMillis() + timeoutMs
