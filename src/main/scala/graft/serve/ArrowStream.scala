@@ -1,166 +1,45 @@
 package graft.serve
 
 import java.io.OutputStream
-import java.nio.channels.Channels
-import java.nio.charset.StandardCharsets.UTF_8
 
-import org.apache.arrow.memory.RootAllocator
-import org.apache.arrow.vector._
-import org.apache.arrow.vector.complex.ListVector
-import org.apache.arrow.vector.ipc.ArrowStreamWriter
-import org.apache.arrow.vector.types.{DateUnit, FloatingPointPrecision, TimeUnit}
-import org.apache.arrow.vector.types.pojo.{ArrowType, Field, FieldType, Schema}
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.types._
-
-import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, GraftArrowShim}
 
 /** DataFrame → Arrow IPC stream, batched — the columnar wire format of
   * the reference's `do_get` (reference: src/flight_server/server.py:41,
   * 10k-row record batches), written over plain chunked HTTP with the
-  * arrow-vector jars Spark already ships. Rows pull through
-  * `toLocalIterator` one partition at a time, so serving a huge result
-  * never materializes it driver-side; each record batch flushes to the
-  * consumer as soon as it's full, bounding latency exactly like Flight's
-  * chunks.
+  * arrow-vector jars Spark already ships.
   *
-  * Scalar types plus one level of numeric arrays (embeddings) cover the
-  * engine's query surface; an unsupported column type fails fast at
-  * schema construction ([[writer]]) — before any byte streams — with
-  * the column name.
+  * Encoding is Spark's own Arrow path (`ArrowConverters`, the one Spark
+  * Connect and `toPandas` use): each partition becomes record batches of
+  * at most `batchSize` rows on its executor, so batches end at partition
+  * boundaries and every type a DataFrame can hold goes over the wire.
+  *
+  * Scale: one Spark job per window of partitions ([[OrderedPartitions]]);
+  * batches are written in partition order and flushed after each
+  * partition. The driver holds one window of encoded partitions, never a
+  * decoded row: at most `defaultParallelism` partitions, and no more than
+  * fit in half of `spark.driver.maxResultSize` and an eighth of the heap.
   */
 object ArrowStream {
 
-  /** Spark field → Arrow field (nullable, UTC timestamps, zone-less NTZ
-    * timestamps, 128-bit decimals — matching how Spark's own Arrow path
-    * maps its types). */
-  private def arrowField(f: StructField): Field = {
-    def prim(t: ArrowType): Field =
-      new Field(f.name, FieldType.nullable(t), java.util.Collections.emptyList())
-    f.dataType match {
-      case BooleanType => prim(ArrowType.Bool.INSTANCE)
-      case ByteType => prim(new ArrowType.Int(8, true))
-      case ShortType => prim(new ArrowType.Int(16, true))
-      case IntegerType => prim(new ArrowType.Int(32, true))
-      case LongType => prim(new ArrowType.Int(64, true))
-      case FloatType => prim(new ArrowType.FloatingPoint(FloatingPointPrecision.SINGLE))
-      case DoubleType => prim(new ArrowType.FloatingPoint(FloatingPointPrecision.DOUBLE))
-      case StringType => prim(ArrowType.Utf8.INSTANCE)
-      case BinaryType => prim(ArrowType.Binary.INSTANCE)
-      case d: DecimalType => prim(new ArrowType.Decimal(d.precision, d.scale, 128))
-      case DateType => prim(new ArrowType.Date(DateUnit.DAY))
-      case _: TimestampType => prim(new ArrowType.Timestamp(TimeUnit.MICROSECOND, "UTC"))
-      case TimestampNTZType => prim(new ArrowType.Timestamp(TimeUnit.MICROSECOND, null))
-      case ArrayType(et, _) =>
-        // fail at SCHEMA time, before the 200 header and stream start: the
-        // writer only implements these element types
-        if (!Seq(IntegerType, LongType, FloatType, DoubleType).contains(et))
-          throw new IllegalArgumentException(
-            s"column '${f.name}': array<$et> not supported on the arrow wire")
-        val child = arrowField(StructField("element", et))
-        new Field(f.name, FieldType.nullable(ArrowType.List.INSTANCE),
-          java.util.List.of(child))
-      case other =>
-        throw new IllegalArgumentException(
-          s"column '${f.name}': type $other not supported on the arrow wire")
-    }
-  }
-
-  private def toMicros(v: Any): Long = v match {
-    case t: java.sql.Timestamp => math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
-    case i: java.time.Instant => i.getEpochSecond * 1000000L + i.getNano / 1000L
-    case t: java.time.LocalDateTime =>
-      t.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L + t.getNano / 1000L
-  }
-
-  private def toEpochDay(v: Any): Int = v match {
-    case d: java.sql.Date => d.toLocalDate.toEpochDay.toInt
-    case d: java.time.LocalDate => d.toEpochDay.toInt
-  }
-
-  /** Write one non-null scalar into vector slot `i`. */
-  private def setScalar(vec: FieldVector, dt: DataType, i: Int, v: Any): Unit =
-    (vec, dt) match {
-      case (x: BitVector, _) => x.setSafe(i, if (v.asInstanceOf[Boolean]) 1 else 0)
-      case (x: TinyIntVector, _) => x.setSafe(i, v.asInstanceOf[Byte].toInt)
-      case (x: SmallIntVector, _) => x.setSafe(i, v.asInstanceOf[Short].toInt)
-      case (x: IntVector, _) => x.setSafe(i, v.asInstanceOf[Int])
-      case (x: BigIntVector, _) => x.setSafe(i, v.asInstanceOf[Long])
-      case (x: Float4Vector, _) => x.setSafe(i, v.asInstanceOf[Float])
-      case (x: Float8Vector, _) => x.setSafe(i, v.asInstanceOf[Double])
-      case (x: VarCharVector, _) => x.setSafe(i, v.asInstanceOf[String].getBytes(UTF_8))
-      case (x: VarBinaryVector, _) => x.setSafe(i, v.asInstanceOf[Array[Byte]])
-      case (x: DecimalVector, d: DecimalType) =>
-        x.setSafe(i, v.asInstanceOf[java.math.BigDecimal].setScale(d.scale))
-      case (x: DateDayVector, _) => x.setSafe(i, toEpochDay(v))
-      case (x: TimeStampMicroTZVector, _) => x.setSafe(i, toMicros(v))
-      case (x: TimeStampMicroVector, _) => x.setSafe(i, toMicros(v))
-      case (x, t) => throw new IllegalArgumentException(
-        s"no arrow writer for ${x.getClass.getSimpleName} / $t")
-    }
-
-  /** Stream `df` as Arrow IPC record batches of `batchSize` rows. */
+  /** Stream `df` as Arrow IPC record batches of at most `batchSize` rows. */
   def write(df: DataFrame, os: OutputStream, batchSize: Int): Unit =
     writer(df, batchSize)(os)
 
-  /** Build `df`'s Arrow schema now, throwing on an unsupported column
-    * type, and return the function that streams `df` under it — so a
-    * server can fail before it commits to a 200 header. */
+  /** Build `df`'s Arrow schema now, throwing on a column type Spark's
+    * Arrow writer cannot encode, and return the function that streams
+    * `df` under it — so a server can fail before it commits to a 200
+    * header. */
   def writer(df: DataFrame, batchSize: Int): OutputStream => Unit = {
-    val schema = new Schema(df.schema.fields.map(arrowField).toSeq.asJava)
-    os => stream(df, schema, os, batchSize)
-  }
-
-  private def stream(df: DataFrame, schema: Schema, os: OutputStream, batchSize: Int): Unit = {
-    val sparkSchema = df.schema
-    val allocator = new RootAllocator(Long.MaxValue)
-    try {
-      val root = VectorSchemaRoot.create(schema, allocator)
-      try {
-        val writer = new ArrowStreamWriter(root, null, Channels.newChannel(os))
-        writer.start()
-        df.toLocalIterator().asScala.grouped(batchSize).foreach { batch =>
-          root.allocateNew()
-          // list writers are positional and must be rebuilt per batch
-          val listWriters = sparkSchema.fields.zipWithIndex.collect {
-            case (StructField(_, ArrayType(et, _), _, _), c) =>
-              c -> (root.getVector(c).asInstanceOf[ListVector].getWriter, et)
-          }.toMap
-          var i = 0
-          batch.foreach { row =>
-            var c = 0
-            while (c < sparkSchema.length) {
-              if (!row.isNullAt(c)) {
-                listWriters.get(c) match {
-                  case Some((w, et)) =>
-                    w.setPosition(i)
-                    w.startList()
-                    row.getSeq[Any](c).foreach {
-                      case null => throw new IllegalArgumentException(
-                        s"column '${sparkSchema(c).name}': null array elements not supported on the arrow wire")
-                      case e => et match {
-                        case IntegerType => w.writeInt(e.asInstanceOf[Int])
-                        case LongType => w.writeBigInt(e.asInstanceOf[Long])
-                        case FloatType => w.writeFloat4(e.asInstanceOf[Float])
-                        case DoubleType => w.writeFloat8(e.asInstanceOf[Double])
-                        case other => throw new IllegalArgumentException(
-                          s"column '${sparkSchema(c).name}': array<$other> not supported on the arrow wire")
-                      }
-                    }
-                    w.endList()
-                  case None => setScalar(root.getVector(c), sparkSchema(c).dataType, i, row.get(c))
-                }
-              }
-              c += 1
-            }
-            i += 1
-          }
-          root.setRowCount(i)
-          writer.writeBatch()
+    GraftArrowShim.arrowSchema(df)
+    os => GraftArrowShim.withExecution(df, "graft arrow stream") {
+      val batches = GraftArrowShim.arrowBatches(df, batchSize)
+      GraftArrowShim.writeStream(df, os) { writeBatches =>
+        OrderedPartitions.iterator(df, batches).foreach { part =>
+          writeBatches(part.iterator)
           os.flush()
         }
-        writer.end()
-      } finally root.close()
-    } finally allocator.close()
+      }
+    }
   }
 }

@@ -7,7 +7,7 @@ import java.util.concurrent.Executors
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import graft.sql.QueryEngine
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftArrowShim, SparkSession}
 
 /** Network serving endpoint over the engine — the reference capability a
   * user hits first: its Arrow Flight server (reference:
@@ -38,9 +38,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     approximate distinct count from manifest HLL sketches (S37)
   *   - `GET /staged?table=...` — pending write-audit-publish stages (S38)
   *
-  * Scale: rows stream through `toLocalIterator` one partition at a time
-  * — serving a 100 TB result never materializes it driver-side; the
-  * batch flush bounds consumer latency exactly like Flight's chunks.
+  * Scale: every result, Arrow or NDJSON, is encoded on the executors
+  * and streamed by [[OrderedPartitions]]: one Spark job per window of
+  * partitions, written in partition order and flushed after each
+  * partition. Per request the driver holds one window: at most
+  * `defaultParallelism` encoded partitions, and no more than fit in half
+  * of `spark.driver.maxResultSize` and an eighth of the heap (a single
+  * larger partition still goes alone), so a result far larger than the
+  * driver streams through it.
+  *
+  * `/tables`, `/table` and `/query` read the temp views `start()`
+  * registers and list no files. Views belong to the session, not to the
+  * server: if another engine on the same session registers a different
+  * directory, this server serves that corpus.
+  *
   * Binds loopback by default (a cache node serves co-located consumers;
   * cross-node transport is the cluster's RPC layer, not this shim).
   *
@@ -115,29 +126,26 @@ final class GraftHttpServer(
 
   private def handleTables(ex: HttpExchange): Unit = {
     val body = graft.Tables.names
-      .map(n => s""""$n":${graft.Tables.load(spark, dir, n).schema.json}""")
+      .map(n => s""""$n":${spark.table(n).schema.json}""")
       .mkString("{", ",", "}")
     respond(ex, 200, body + "\n")
   }
 
   private def handleSchema(ex: HttpExchange): Unit =
-    respond(ex, 200, param(ex, "sql").map(engine.sql(_).schema.json + "\n")
-      .getOrElse(throw new IllegalArgumentException("missing sql parameter")))
+    respond(ex, 200, engine.sql(required(ex, "sql")).schema.json + "\n")
 
   private def handleQuery(ex: HttpExchange): Unit = {
-    val sql = param(ex, "sql").getOrElse(
-      throw new IllegalArgumentException("missing sql parameter"))
+    val sql = required(ex, "sql")
     streamResult(ex, engine.sql(sql), s"/query: ${sql.take(120)}")
   }
 
   /** `do_get` by table name — the reference's actual ticket shape
     * (server.py:40: ticket = table id, streamed in record batches). */
   private def handleTable(ex: HttpExchange): Unit = {
-    val name = param(ex, "name").getOrElse(
-      throw new IllegalArgumentException("missing name parameter"))
+    val name = required(ex, "name")
     if (!graft.Tables.names.contains(name))
       throw new IllegalArgumentException(s"unknown table: $name")
-    streamResult(ex, graft.Tables.load(spark, dir, name), s"/table: $name")
+    streamResult(ex, engine.sql(s"SELECT * FROM $name"), s"/table: $name")
   }
 
   private def cat: graft.meta.SnapshotCatalog = catalog.getOrElse(
@@ -148,10 +156,8 @@ final class GraftHttpServer(
     * [[graft.meta.SnapshotCatalog.changesBetween]]:
     * `GET /changes?table=T&from=ID[&to=ID][&format=arrow]`. */
   private def handleChanges(ex: HttpExchange): Unit = {
-    val table = param(ex, "table").getOrElse(
-      throw new IllegalArgumentException("missing table parameter"))
-    val from = param(ex, "from").getOrElse(
-      throw new IllegalArgumentException("missing from parameter")).toLong
+    val table = required(ex, "table")
+    val from = required(ex, "from").toLong
     val to = param(ex, "to").map(_.toLong)
     // mode=percommit streams the Delta-CDF-style attributed feed (one
     // diff per commit, _commit_snapshot_id/_commit_timestamp_ms columns);
@@ -167,8 +173,7 @@ final class GraftHttpServer(
     * src/iceberg_management/metadata.py:189):
     * `GET /history?table=T[&limit=N]`. */
   private def handleHistory(ex: HttpExchange): Unit = {
-    val table = param(ex, "table").getOrElse(
-      throw new IllegalArgumentException("missing table parameter"))
+    val table = required(ex, "table")
     val limit = param(ex, "limit").map(_.toInt)
     val body = cat.history(table, limit).map { m =>
       m.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
@@ -181,8 +186,7 @@ final class GraftHttpServer(
     * row/file/byte counts plus outstanding MoR delete-file and
     * masked-row counts. Metadata-only, no data file opens. */
   private def handleStats(ex: HttpExchange): Unit = {
-    val table = param(ex, "table").getOrElse(
-      throw new IllegalArgumentException("missing table parameter"))
+    val table = required(ex, "table")
     val snap = param(ex, "snapshot").map(_.toLong)
     val body = cat.tableStats(table, snap).map {
       case (k, v: String) => s""""$k":"$v""""
@@ -196,10 +200,8 @@ final class GraftHttpServer(
     * "ndv":N}` or 404 when the column is not sketch-indexed — answered
     * without touching a data file. */
   private def handleNdv(ex: HttpExchange): Unit = {
-    val table = param(ex, "table").getOrElse(
-      throw new IllegalArgumentException("missing table parameter"))
-    val column = param(ex, "column").getOrElse(
-      throw new IllegalArgumentException("missing column parameter"))
+    val table = required(ex, "table")
+    val column = required(ex, "column")
     val snap = param(ex, "snapshot").map(_.toLong)
     cat.approxCountDistinct(spark, table, column, snap) match {
       case Some(n) =>
@@ -210,15 +212,12 @@ final class GraftHttpServer(
     }
   }
 
-  /** Pending write-audit-publish stages (SURVEY §2 S38):
-    * `GET /staged?table=T` → the audit queue. */
   /** Per-partition manifest rollup (SURVEY §2 S36's `$partitions`
     * as a service): `GET /partitions?table=T` -> one JSON object per
     * partition tuple with file/row/byte/delete-entry counts — the
     * remote small-file/skew monitor, zero data files opened. */
   private def handlePartitions(ex: HttpExchange): Unit = {
-    val table = param(ex, "table").getOrElse(
-      throw new IllegalArgumentException("missing table parameter"))
+    val table = required(ex, "table")
     val snap = cat.currentSnapshot(table).getOrElse(
       throw new IllegalArgumentException(s"no snapshots for table $table"))
     val delRows: Map[String, Long] = snap.deleteFiles
@@ -236,9 +235,10 @@ final class GraftHttpServer(
     respond(ex, 200, body + "\n")
   }
 
+  /** Pending write-audit-publish stages (SURVEY §2 S38):
+    * `GET /staged?table=T` → the audit queue. */
   private def handleStaged(ex: HttpExchange): Unit = {
-    val table = param(ex, "table").getOrElse(
-      throw new IllegalArgumentException("missing table parameter"))
+    val table = required(ex, "table")
     val body = cat.listStaged(table).flatMap(id => cat.staged(table, id)).map { st =>
       s"""{"staged_id":${quote(st.stagedId)},"parent_id":${st.parentId.getOrElse(-1L)},""" +
         s""""timestamp_ms":${st.timestampMs},"n_files":${st.paths.size}}"""
@@ -249,8 +249,7 @@ final class GraftHttpServer(
   /** Branch refs of a table (SURVEY §2 S44): `GET /branches?table=T` →
     * name, head snapshot id and fork point per branch. Metadata-only. */
   private def handleBranches(ex: HttpExchange): Unit = {
-    val table = param(ex, "table").getOrElse(
-      throw new IllegalArgumentException("missing table parameter"))
+    val table = required(ex, "table")
     val body = cat.branches(table).flatMap { name =>
       val ref = cat.branchRef(table, name)
       cat.currentSnapshot(ref).map { head =>
@@ -270,7 +269,7 @@ final class GraftHttpServer(
     val body: OutputStream => Unit =
       if (arrow) ArrowStream.writer(df, batchSize) else ndjson(df)
     // one job group per request, interruptible: disconnect or timeout
-    // cancels the Spark jobs feeding the iterator, not just the stream
+    // cancels the Spark jobs feeding the stream, not just the stream
     val sc = spark.sparkContext
     val groupId = s"graft-http-${java.util.UUID.randomUUID().toString.take(8)}"
     sc.setJobGroup(groupId, desc, interruptOnCancel = true)
@@ -299,13 +298,23 @@ final class GraftHttpServer(
     }
   }
 
-  /** Schema line, then one JSON row per line: toLocalIterator pulls one
-    * partition at a time, grouped() flushes size-bounded batches. */
+  /** Schema line, then one JSON row per line, encoded on the executors
+    * in chunks of `batchSize` lines and written in partition order. */
   private def ndjson(df: DataFrame)(os: OutputStream): Unit = {
+    val json = df.toJSON
+    val lines = batchSize
     write(os, df.schema.json + "\n")
-    df.toJSON.toLocalIterator().asScala.grouped(batchSize).foreach { batch =>
-      batch.foreach(line => write(os, line + "\n"))
-      os.flush()
+    GraftArrowShim.withExecution(json, "graft ndjson stream") {
+      val chunks = json.queryExecution.toRdd.mapPartitions(
+        _.map(_.getUTF8String(0).getBytes).grouped(lines).map { group =>
+          val b = new java.io.ByteArrayOutputStream()
+          group.foreach { line => b.write(line); b.write('\n') }
+          b.toByteArray
+        })
+      OrderedPartitions.iterator(json, chunks).foreach { part =>
+        part.foreach(os.write)
+        os.flush()
+      }
     }
   }
 
@@ -318,6 +327,9 @@ final class GraftHttpServer(
           URLDecoder.decode(kv.stripPrefix(name + "="), "UTF-8")
       }
     }
+
+  private def required(ex: HttpExchange, name: String): String =
+    param(ex, name).getOrElse(throw new IllegalArgumentException(s"missing $name parameter"))
 
   private def safely(ex: HttpExchange)(h: HttpExchange => Unit): Unit =
     try h(ex)
@@ -342,11 +354,4 @@ final class GraftHttpServer(
   private def quote(s: String): String =
     "\"" + Option(s).getOrElse("").replace("\\", "\\\\").replace("\"", "\\\"")
       .replace("\n", "\\n") + "\""
-
-  private implicit class RichJIterator[A](it: java.util.Iterator[A]) {
-    def asScala: Iterator[A] = new Iterator[A] {
-      def hasNext: Boolean = it.hasNext
-      def next(): A = it.next()
-    }
-  }
 }

@@ -1,14 +1,21 @@
 package graft.serve
 
-import org.apache.spark.sql.{DataFrame, Row}
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.StructType
+
+import scala.jdk.CollectionConverters._
 
 /** Batched result serving — the zero-egress analogue of the reference's
   * Arrow Flight `do_get` (reference: src/flight_server/server.py:41
-  * streams a table in 10k-row record batches). `toLocalIterator` pulls
-  * one partition at a time to the driver, so serving a 100 TB result
-  * never materializes it driver-side; batches bound the consumer's
-  * working set exactly like Flight's stream chunks.
+  * streams a table in 10k-row record batches).
+  *
+  * Scale: `stream` pulls rows with `toLocalIterator`, one Spark job per
+  * partition, so the driver holds one partition of rows at a time and
+  * a result far larger than the driver streams through it; batches
+  * bound the consumer's working set exactly like Flight's stream chunks.
+  * The HTTP server's wire formats take [[OrderedPartitions]] instead.
   */
 object ServingApi {
   val DefaultBatchSize = 10000
@@ -24,15 +31,19 @@ object ServingApi {
     * `get_flight_info` (reference: server.py:19). */
   def flightInfo(df: DataFrame): StructType = df.schema
 
-  /** Catalog listing: table name → schema for the served corpus — the
-    * analogue of `list_flights` (reference: server.py:14). */
-  def listTables(spark: org.apache.spark.sql.SparkSession, dir: String): Map[String, StructType] =
-    graft.Tables.names.map(n => n -> graft.Tables.load(spark, dir, n).schema).toMap
+  // per session, whose read settings shape the inferred schemas; a
+  // session's entry goes when the session is collected
+  private val tableSchemas =
+    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[String, Map[String, StructType]]]()
 
-  private implicit class RichJIterator[A](it: java.util.Iterator[A]) {
-    def asScala: Iterator[A] = new Iterator[A] {
-      def hasNext: Boolean = it.hasNext
-      def next(): A = it.next()
-    }
-  }
+  /** Catalog listing: table name → schema for the served corpus — the
+    * analogue of `list_flights` (reference: server.py:14). Each table is
+    * resolved (file listing, schema inference) on the first call for
+    * `spark` and `dir` only; later calls run no Spark job. This assumes
+    * a corpus directory is not rewritten in place while a session
+    * serves it: a rewrite is not seen by later calls. */
+  def listTables(spark: SparkSession, dir: String): Map[String, StructType] =
+    tableSchemas.synchronized(tableSchemas.computeIfAbsent(spark, _ => new ConcurrentHashMap()))
+      .computeIfAbsent(dir,
+        _ => graft.Tables.names.map(n => n -> graft.Tables.load(spark, dir, n).schema).toMap)
 }

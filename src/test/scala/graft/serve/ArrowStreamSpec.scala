@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
 
 /** Type-coverage roundtrip for the Arrow wire: every scalar type the
   * engine's query surface produces, plus nulls and batch boundaries,
-  * must survive write → ArrowStreamReader intact. */
+  * must survive write → ArrowStreamReader intact. Batches are encoded
+  * per partition, so they end at partition boundaries. */
 class ArrowStreamSpec extends SparkSpec {
 
   private def roundtrip(df: org.apache.spark.sql.DataFrame, batchSize: Int) = {
@@ -18,10 +19,10 @@ class ArrowStreamSpec extends SparkSpec {
     val alloc = new RootAllocator()
     val reader = new ArrowStreamReader(new ByteArrayInputStream(bos.toByteArray), alloc)
     val rows = scala.collection.mutable.ArrayBuffer[Map[String, Any]]()
-    var batches = 0
+    val batches = scala.collection.mutable.ArrayBuffer[Int]()
     while (reader.loadNextBatch()) {
       val root = reader.getVectorSchemaRoot
-      batches += 1
+      batches += root.getRowCount
       (0 until root.getRowCount).foreach { i =>
         rows += root.getSchema.getFields.toArray.map { f =>
           val name = f.asInstanceOf[org.apache.arrow.vector.types.pojo.Field].getName
@@ -30,7 +31,17 @@ class ArrowStreamSpec extends SparkSpec {
       }
     }
     reader.close(); alloc.close()
-    (rows.toSeq, batches)
+    (rows.toSeq, batches.toSeq)
+  }
+
+  /** Batch count is the sum over partitions of ⌈rows / batchSize⌉, and
+    * no batch exceeds `batchSize` rows. */
+  private def assertPartitionBatches(
+      df: org.apache.spark.sql.DataFrame, batchSize: Int, batches: Seq[Int]): Unit = {
+    val perPartition = df.rdd.mapPartitions(it => Iterator(it.size)).collect()
+    assert(batches.size == perPartition.map(n => (n + batchSize - 1) / batchSize).sum,
+      s"batches $batches for partitions ${perPartition.toSeq} at batchSize $batchSize")
+    assert(batches.forall(n => n > 0 && n <= batchSize), s"batches $batches")
   }
 
   test("scalar types, nulls, and batch boundaries roundtrip exactly") {
@@ -49,7 +60,9 @@ class ArrowStreamSpec extends SparkSpec {
       to_timestamp_ntz(concat(lit("2024-06-01 10:00:00."), col("id") + 1)).as("ntz"),
       encode(concat(lit("b"), col("id")), "UTF-8").as("bin"))
     val (rows, batches) = roundtrip(df, batchSize = 3)
-    assert(batches == 3 && rows.size == 7) // 3+3+1
+    assert(rows.size == 7)
+    assertPartitionBatches(df, 3, batches)
+    assertPartitionBatches(df, 1, roundtrip(df, batchSize = 1)._2)
 
     val expected = df.collect()
     rows.zip(expected).zipWithIndex.foreach { case ((got, want), idx) =>
@@ -81,13 +94,15 @@ class ArrowStreamSpec extends SparkSpec {
     }
   }
 
-  test("unsupported column types fail fast with the column name") {
+  test("map columns roundtrip as Arrow maps") {
     import spark.implicits._
     val df = Seq((1, Map("k" -> 1))).toDF("id", "m")
-    val e = intercept[IllegalArgumentException] {
-      ArrowStream.write(df, new ByteArrayOutputStream(), 10)
-    }
-    assert(e.getMessage.contains("'m'"))
+    val (rows, _) = roundtrip(df, 10)
+    assert(rows.size == 1 && rows.head("id") == 1)
+    val entries = rows.head("m").asInstanceOf[java.util.List[_]]
+    assert(entries.size == 1)
+    val entry = entries.get(0).asInstanceOf[java.util.Map[String, Any]]
+    assert(entry.get("key").toString == "k" && entry.get("value") == 1)
   }
 
   test("empty result yields a valid zero-batch stream") {

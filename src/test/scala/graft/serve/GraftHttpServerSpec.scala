@@ -160,9 +160,9 @@ class GraftHttpServerSpec extends SparkSpec {
     val srv = new GraftHttpServer(spark, sfDir, port = 0, batchSize = 5).start()
     try {
       // explicit REPARTITION(8) (AQE keeps user-specified partition counts)
-      // forces multiple result partitions so toLocalIterator streams early
-      // batches while later partition jobs still remain; disconnect is
-      // detected on the first write after the client left
+      // splits the result, so partition 0's rows are written while the
+      // rest of its window still runs; disconnect is detected on the
+      // first write after the client left
       val sql = enc("SELECT reflect('java.lang.Thread','sleep', 5L) AS z, k " +
         "FROM (SELECT /*+ REPARTITION(8) */ l_orderkey AS k FROM lineitem)")
       val sock = new java.net.Socket("127.0.0.1", srv.boundPort)
@@ -449,7 +449,7 @@ class GraftHttpServerSpec extends SparkSpec {
     } finally srv.stop()
   }
 
-  test("TIMESTAMP_NTZ tables stream over Arrow; an unsupported type is refused before the 200") {
+  test("NTZ and array<string> stream over Arrow; a bad plan gets no 200") {
     val srv = new GraftHttpServer(spark, sfDir, port = 0, batchSize = 1000).start()
     try {
       val base = s"http://127.0.0.1:${srv.boundPort}"
@@ -467,10 +467,96 @@ class GraftHttpServerSpec extends SparkSpec {
       assert(jc == 200)
       assert(arrowRows > 0 && arrowRows == jbody.trim.split("\n").length - 1)
 
-      val (ac, abody) = get(s"$base/query?format=arrow&sql=" +
-        enc("SELECT split(o_comment, ' ') AS words FROM orders"))
-      assert(ac != 200 && abody.contains("words"), s"$ac $abody")
+      // array<string>: Spark's encoder writes it; rows equal the NDJSON path
+      val words = enc("SELECT split(o_orderpriority, '-') AS words FROM orders")
+      val arrowWords = arrowColumn(s"$base/query?format=arrow&sql=$words", "words").map {
+        case null => null
+        case l: java.util.List[_] => l.asScala.map(_.toString)
+      }
+      val (wc, wbody) = get(s"$base/query?sql=$words")
+      assert(wc == 200)
+      val json = new com.fasterxml.jackson.databind.ObjectMapper()
+      val jsonWords = wbody.trim.split("\n").toSeq.tail.map { line =>
+        Option(json.readTree(line).get("words")).map(a => (0 until a.size).map(a.get(_).asText())).orNull
+      }
+      assert(arrowWords.size == arrowRows && arrowWords == jsonWords)
+
+      // a request that fails at planning gets a non-200 and no Arrow bytes
+      val bad = URI.create(s"$base/query?format=arrow&sql=" +
+        enc("SELECT no_such_column FROM orders")).toURL.openConnection()
+        .asInstanceOf[HttpURLConnection]
+      assert(bad.getResponseCode != 200)
+      assert(!bad.getContentType.contains("arrow"))
+      val badBody = Source.fromInputStream(bad.getErrorStream, "UTF-8").mkString
+      bad.disconnect()
+      assert(badBody.startsWith("{\"error\"") && badBody.contains("no_such_column"), badBody)
     } finally srv.stop()
+  }
+
+  test("/tables answers from the registered views and runs no Spark job") {
+    val srv = new GraftHttpServer(spark, sfDir, port = 0).start()
+    try {
+      val ((code, body), jobs) = JobCounter.during(spark) {
+        get(s"http://127.0.0.1:${srv.boundPort}/tables")
+      }
+      assert(code == 200 && graft.Tables.names.forall(n => body.contains("\"" + n + "\"")))
+      assert(body.contains("l_orderkey"))
+      assert(jobs.jobs == 0, s"/tables ran ${jobs.jobs} Spark jobs")
+    } finally srv.stop()
+  }
+
+  test("results run one Spark job per window of defaultParallelism partitions, in order") {
+    val srv = new GraftHttpServer(spark, sfDir, port = 0, batchSize = 4).start()
+    try {
+      val base = s"http://127.0.0.1:${srv.boundPort}"
+      def ndjsonIds(sql: String): Seq[Long] =
+        get(s"$base/query?sql=${enc(sql)}")._2.trim.split("\n").toSeq.tail
+          .map(l => "\"id\":(\\d+)".r.findFirstMatchIn(l).get.group(1).toLong)
+      def arrowIds(sql: String): Seq[Long] =
+        arrowColumn(s"$base/query?format=arrow&sql=${enc(sql)}", "id")
+          .map(_.asInstanceOf[Long])
+
+      // (a) 3 partitions, one window: one job for either wire format
+      val three = "SELECT id FROM range(0, 30, 1, 3)"
+      val (ids, arrowJobs) = JobCounter.during(spark)(arrowIds(three))
+      assert(ids == (0L until 30L))
+      assert(arrowJobs.jobs == 1, s"3-partition Arrow result ran ${arrowJobs.jobs} jobs")
+      val (jsonIds, jsonJobs) = JobCounter.during(spark)(ndjsonIds(three))
+      assert(jsonIds == ids && jsonJobs.jobs == 1)
+
+      // (b) partition 0 finishes last; rows still come in partition order
+      val slowFirst = "SELECT id, reflect('java.lang.Thread', 'sleep', " +
+        "CASE WHEN id = 0 THEN 1500L ELSE 0L END) AS z FROM range(0, 30, 1, 3)"
+      val (slowIds, slowJobs) = JobCounter.during(spark)(arrowIds(slowFirst))
+      assert(slowJobs.tasks.maxBy(_._2)._1 == 0, s"partition 0 not last: ${slowJobs.tasks}")
+      assert(slowIds == (0L until 30L) && ndjsonIds(slowFirst) == slowIds)
+
+      // (c) more partitions than defaultParallelism: ⌈p / parallelism⌉ jobs
+      val par = spark.sparkContext.defaultParallelism
+      val p = 2 * par + 1
+      val wide = s"SELECT id FROM range(0, ${10 * p}, 1, $p)"
+      val (wideIds, wideJobs) = JobCounter.during(spark)(arrowIds(wide))
+      assert(wideIds == (0L until 10L * p))
+      assert(wideJobs.jobs == (p + par - 1) / par,
+        s"$p partitions at parallelism $par ran ${wideJobs.jobs} jobs")
+    } finally srv.stop()
+  }
+
+  /** Every value of `column` in an Arrow reply, in stream order. */
+  private def arrowColumn(url: String, column: String): Seq[AnyRef] = {
+    val conn = URI.create(url).toURL.openConnection().asInstanceOf[HttpURLConnection]
+    val code = conn.getResponseCode
+    assert(code == 200 && conn.getContentType.contains("arrow"),
+      s"$code ${Option(conn.getErrorStream).map(Source.fromInputStream(_, "UTF-8").mkString)}")
+    val alloc = new org.apache.arrow.memory.RootAllocator()
+    val reader = new org.apache.arrow.vector.ipc.ArrowStreamReader(conn.getInputStream, alloc)
+    val out = scala.collection.mutable.ArrayBuffer[AnyRef]()
+    while (reader.loadNextBatch()) {
+      val v = reader.getVectorSchemaRoot.getVector(column)
+      (0 until v.getValueCount).foreach(i => out += v.getObject(i))
+    }
+    reader.close(); alloc.close(); conn.disconnect()
+    out.toSeq
   }
 
   test("stop() ends the named handler threads: none outlive three start/stop cycles") {
