@@ -193,11 +193,17 @@ final case class ViewMeta(
   * operation, not just the publish. */
 final class CommitConflictException(msg: String) extends RuntimeException(msg)
 
-/** The INTENT of a commit, declared relative to the snapshot the writer
-  * planned against (`basisSnapshotId`) — the piece Iceberg's
-  * `SnapshotProducer` keeps that a flat final-file-list commit loses.
-  * With it, the optimistic-commit retry can RECONCILE instead of
-  * clobber: a pure append (removedPaths empty) re-applies cleanly on
+/** The INTENT of a commit: what it changes, declared relative to the
+  * snapshot the writer planned against (`basisSnapshotId`). Like
+  * Iceberg's `AppendFiles` / `RewriteFiles`, it names only the change,
+  * never the survivors: every publish attempt builds the new file list
+  * from its ACTUAL parent as
+  *
+  *   files = parent − `removedPaths` + the commit's added files + `addFiles`
+  *
+  * and there is no mode in which a caller lists the table's files
+  * itself. So the optimistic-commit retry RECONCILES instead of
+  * clobbering: a pure append (removedPaths empty) re-applies cleanly on
   * whatever the new current is (concurrent appends all survive — the
   * fast-append path a 1000-executor ingest fleet needs), while a
   * rewrite re-applies only after validating that nothing it depends on
@@ -215,14 +221,19 @@ final class CommitConflictException(msg: String) extends RuntimeException(msg)
   *    partition overwrite uses this: a concurrent append into a
   *    replaced partition has no serializable order).
   *
-  * `retireDeleteFiles` names delete files this commit consumes (a
-  * materialization); concurrent masks over untouched files carry
-  * forward untouched. `strictBasis` refuses ANY head movement
-  * (rollback: "roll back from X" is meaningless once X isn't current).
-  * `basisSnapshotId = None` means "planned against an empty table". */
+  * `addFiles` are entries already scanned elsewhere (a cherry-pick's
+  * replayed files, a rollback target's), applied as they are; one the
+  * parent already holds is not listed twice. `retireDeleteFiles` names
+  * delete files this commit consumes (a materialization); concurrent
+  * masks over untouched files carry forward untouched. `strictBasis`
+  * refuses ANY head movement (rollback: "roll back from X" is
+  * meaningless once X isn't current). `basisSnapshotId = None` means
+  * "planned against an empty table"; `CommitIntent(None)`, the default
+  * of [[SnapshotCatalog.commit]], is a plain append. */
 final case class CommitIntent(
     basisSnapshotId: Option[Long],
     removedPaths: Seq[String] = Nil,
+    addFiles: Seq[FileMeta] = Nil,
     addDeleteFiles: Seq[DeleteFileMeta] = Nil,
     retireDeleteFiles: Seq[String] = Nil,
     strictBasis: Boolean = false,
@@ -323,12 +334,16 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
 
   // ---- commit ----------------------------------------------------------
 
-  /** Commit a new snapshot listing `paths` as the table's data files.
-    * Computes per-file row counts, sizes and min/max stats in one job;
-    * optionally builds bloom filters for `bloomColumns`. Files whose
-    * metadata is supplied in `reuseMeta` are NOT re-scanned — a commit
-    * that touches k of n files costs O(k), which is what keeps
-    * copy-on-write deletes and appends viable on 100k-file tables.
+  /** Commit a new snapshot that adds `added`, the data files this commit
+    * wrote, and applies `intent` (see [[CommitIntent]]): the new
+    * snapshot's files are the publish attempt's parent, minus
+    * `intent.removedPaths`, plus `added`, plus `intent.addFiles`. Only
+    * `added` is scanned: per-file row counts, sizes and min/max stats in
+    * one job, bloom filters for `bloomColumns` optionally. Every other
+    * file keeps its manifest entry, so a commit that touches k of n
+    * files costs O(k), which is what keeps copy-on-write deletes and
+    * appends viable on 100k-file tables. The default intent is a plain
+    * append.
     *
     * Bloom-indexed columns are STICKY table metadata (recorded in
     * snapshot props): once a commit indexes columns, every later commit
@@ -340,72 +355,47 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
   def commit(
       spark: SparkSession,
       table: String,
-      paths: Seq[String],
+      added: Seq[String],
       bloomColumns: Seq[String] = Nil,
       bloomFpp: Double = 0.03,
-      reuseMeta: Map[String, FileMeta] = Map.empty,
       props: Map[String, String] = Map.empty,
       sketchColumns: Seq[String] = Nil,
       deleteFilesOverride: Option[Seq[DeleteFileMeta]] = None,
-      intent: Option[CommitIntent] = None,
+      intent: CommitIntent = CommitIntent(None),
       declaredSchema: Option[StructType] = None): SnapshotMeta = {
     // deleteFilesOverride replaces the whole delete-file list verbatim —
     // deterministic only when the head can't drift under the commit
-    require(deleteFilesOverride.isEmpty || intent.forall(_.strictBasis),
-      "deleteFilesOverride requires strictBasis (or no intent): a drifting head makes a verbatim delete-file list a lost-update")
-    val (reusedPaths, newPaths) = paths.map(normalize).partition(reuseMeta.contains)
+    require(deleteFilesOverride.isEmpty || intent.strictBasis,
+      "deleteFilesOverride requires strictBasis: a drifting head makes a verbatim delete-file list a lost-update")
+    val newPaths = added.map(normalize)
     // MoR delete-file carry-forward: unless the caller overrides (a
     // rollback restores the target's), the parent's delete files
     // survive iff they still reference a live data file — a rewrite
     // that replaced every referenced file retires the delete file with
-    // it (Iceberg's rewrite_data_files does the same). With an intent,
-    // retired files drop and added files append; `prev` here is the
-    // ACTUAL parent of this publish attempt, so concurrent masks over
-    // untouched files always carry.
+    // it (Iceberg's rewrite_data_files does the same). Retired files
+    // drop and added files append; `prev` here is the ACTUAL parent of
+    // this publish attempt, so concurrent masks over untouched files
+    // always carry.
     def carriedDeletes(prev: Option[SnapshotMeta], live: Set[String]): Seq[DeleteFileMeta] =
       deleteFilesOverride.getOrElse {
-        val retire = intent.map(_.retireDeleteFiles.map(normalize).toSet).getOrElse(Set.empty)
+        val retire = intent.retireDeleteFiles.map(normalize).toSet
         prev.map(_.deleteFiles
             .filterNot(d => retire.contains(d.path))
             .filter(_.dataPaths.exists(live.contains))).getOrElse(Nil) ++
-          intent.map(_.addDeleteFiles).getOrElse(Nil)
+          intent.addDeleteFiles
       }
-    // The final file list of one publish attempt. Legacy (no intent):
-    // exactly the caller's list. With intent: survivors are recomputed
-    // from the ATTEMPT's actual parent (concurrent appends merge in,
-    // removed files drop out), caller-scanned new files append, and
-    // caller-provided reuse metas not already present apply last (a
-    // cherry-pick's replayed files). Validation runs first — a commit
-    // that can't be reconciled throws instead of clobbering.
-    def resolveFiles(prev: Option[SnapshotMeta], newFiles: Seq[FileMeta]): Seq[FileMeta] =
-      intent match {
-        case None => newFiles ++ reusedPaths.map(reuseMeta)
-        case Some(it) =>
-          validateIntent(table, it, prev)
-          val removed = it.removedPaths.map(normalize).toSet
-          val survivors = prev.map(_.files.filterNot(f => removed.contains(f.path))).getOrElse(Nil)
-          val present = survivors.map(_.path).toSet ++ newFiles.map(_.path)
-          // caller-provided reuse metas split two ways: a path that was
-          // part of the BASIS snapshot is just a stale survivor list
-          // entry — if it's gone from the actual parent, a concurrent
-          // rewrite removed it, and re-adding it would RESURRECT its
-          // rows (and duplicate the rewrite's outputs). Only paths from
-          // OUTSIDE the basis (a cherry-pick's replayed files, a
-          // rollback target's) are genuine extras to apply.
-          val basisFiles: Option[Set[String]] = it.basisSnapshotId
-            .flatMap(snapshotById(table, _)).map(_.files.map(_.path).toSet)
-          val candidates = reusedPaths.filter(p => !present.contains(p) && !removed.contains(p))
-          // An expired basis must degrade CONSERVATIVELY: with no basis file
-          // list we cannot tell stale survivors from genuine extras, and
-          // admitting all candidates would resurrect concurrently-rewritten
-          // rows. Conflict instead — the writer re-reads and retries.
-          if (it.basisSnapshotId.isDefined && basisFiles.isEmpty && candidates.nonEmpty)
-            throw new CommitConflictException(
-              s"Basis snapshot ${it.basisSnapshotId.get} of $table was expired during the " +
-                "commit; cannot distinguish stale survivors from extras — retry from current state")
-          val extras = candidates.filter(p => basisFiles.forall(bf => !bf.contains(p)))
-          newFiles ++ survivors ++ extras.map(reuseMeta)
-      }
+    // The file list of one publish attempt, rebuilt from the ATTEMPT's
+    // actual parent: concurrent appends merge in, removed files drop
+    // out, the scanned new files and the intent's `addFiles` apply.
+    // Validation runs first — a commit that can't be reconciled throws
+    // instead of clobbering.
+    def resolveFiles(prev: Option[SnapshotMeta], newFiles: Seq[FileMeta]): Seq[FileMeta] = {
+      validateIntent(table, intent, prev)
+      val removed = intent.removedPaths.map(normalize).toSet
+      val survivors = prev.map(_.files.filterNot(f => removed.contains(f.path))).getOrElse(Nil)
+      val present = survivors.map(_.path).toSet ++ newFiles.map(_.path)
+      newFiles ++ survivors ++ intent.addFiles.filterNot(f => present.contains(f.path))
+    }
     val stickyBloomCols =
       if (bloomColumns.nonEmpty) bloomColumns
       else currentSnapshot(table)
@@ -427,8 +417,9 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
       SnapshotCatalog.StickyValueProps.flatMap { k =>
         prevValueProps.get(k).filterNot(_ => props.contains(k)).map(k -> _)
       }
-    // no new files to scan: all-reused commits AND fully-empty commits
-    // (e.g. a delete that removed every row) carry the schema forward
+    // no new files to scan: metadata-only commits AND fully-empty
+    // commits (e.g. a delete that removed every row) carry the schema
+    // forward
     if (newPaths.isEmpty) {
       return publish(table) { prevOpt =>
         val prev0 = prevOpt.getOrElse(throw new IllegalArgumentException(
@@ -653,7 +644,7 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
     }
   }
 
-  /** Reconciliation guard for an intent-bearing commit attempt: no-op
+  /** Reconciliation guard for one commit attempt: no-op
     * when the attempt's parent IS the basis (no concurrency); otherwise
     * enforce the [[CommitIntent]] contract against the actual parent.
     * If the basis snapshot was itself concurrently expired, its file /
@@ -1835,8 +1826,7 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
       throw new IllegalArgumentException(s"Snapshot $snapshotId not found for $table"))
     val basis = currentSnapshot(table)
     val targetPaths = target.files.map(_.path).toSet
-    commit(spark, table, target.files.map(_.path),
-      reuseMeta = target.files.map(f => f.path -> f).toMap,
+    commit(spark, table, Nil,
       props = Map(
         SnapshotCatalog.OperationProp -> SnapshotCatalog.OpRewrite,
         SnapshotCatalog.RollbackOfProp -> snapshotId.toString),
@@ -1845,10 +1835,11 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
       deleteFilesOverride = Some(target.deleteFiles),
       // "roll back from X" is only meaningful while X is current: a
       // commit landing mid-rollback must conflict, not be silently undone
-      intent = Some(CommitIntent(
+      intent = CommitIntent(
         basisSnapshotId = basis.map(_.snapshotId),
         removedPaths = basis.map(_.files.map(_.path).filterNot(targetPaths.contains)).getOrElse(Nil),
-        strictBasis = true)))
+        addFiles = target.files,
+        strictBasis = true))
   }
 
   /** Re-apply an APPEND commit's added files onto the current head
@@ -1865,19 +1856,19 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
     val op = src.props.getOrElse(SnapshotCatalog.OperationProp, SnapshotCatalog.OpAppend)
     require(op == SnapshotCatalog.OpAppend,
       s"cherryPick supports append snapshots only; $snapshotId is a $op")
-    val parentPaths = src.parentId.flatMap(snapshotById(table, _))
-      .map(_.files.map(_.path).toSet).getOrElse(Set.empty)
-    val added = src.files.filterNot(f => parentPaths.contains(f.path))
     val basis = currentSnapshot(table)
-    val cur = basis.map(_.files).getOrElse(Nil)
-    commit(spark, table, cur.map(_.path) ++ added.map(_.path),
-      reuseMeta = (cur ++ added).map(f => f.path -> f).toMap,
+    // the files `snapshotId` added over its parent, less those the basis
+    // already holds: one a concurrent rewrite removes must stay removed
+    val held = (src.parentId.flatMap(snapshotById(table, _)).toSeq ++ basis)
+      .flatMap(_.files.map(_.path)).toSet
+    val added = src.files.filterNot(f => held.contains(f.path))
+    commit(spark, table, Nil,
       props = Map(
         SnapshotCatalog.OperationProp -> SnapshotCatalog.OpAppend,
         SnapshotCatalog.CherryPickOfProp -> snapshotId.toString),
       // append intent: the replayed files apply on whatever head the
       // publish lands on — concurrent commits merge, never clobbered
-      intent = Some(CommitIntent(basis.map(_.snapshotId))))
+      intent = CommitIntent(basis.map(_.snapshotId), addFiles = added))
   }
 
   // ---- schema evolution v2: rename + drop (metadata-only) --------------
@@ -2505,14 +2496,11 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
       stagedId: String): SnapshotMeta = {
     val st = staged(table, stagedId).getOrElse(throw new IllegalArgumentException(
       s"no staged commit $stagedId for table $table"))
-    val basis = currentSnapshot(table)
-    val prev = basis.map(_.files).getOrElse(Nil)
-    val snap = commit(spark, table, prev.map(_.path) ++ st.paths,
-      reuseMeta = prev.map(f => f.path -> f).toMap,
+    val snap = commit(spark, table, st.paths,
       props = Map(
         SnapshotCatalog.OperationProp -> SnapshotCatalog.OpAppend,
         SnapshotCatalog.WapIdProp -> stagedId) ++ st.props,
-      intent = Some(CommitIntent(basis.map(_.snapshotId))))
+      intent = CommitIntent(currentSnapshot(table).map(_.snapshotId)))
     discardStaged(table, stagedId)
     snap
   }

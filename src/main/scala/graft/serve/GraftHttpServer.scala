@@ -60,6 +60,8 @@ import org.apache.spark.sql.{DataFrame, GraftArrowShim, SparkSession}
   * jobs feeding its iterator on the next failed write, and
   * `queryTimeoutMs > 0` bounds total query time — a slow query cannot
   * pin one of the 4 handler threads (and its executor slots) forever.
+  * The timeout cancels the group's later jobs too, so one that fires
+  * between two windows of a stream still ends it.
   */
 final class GraftHttpServer(
     spark: SparkSession,
@@ -279,7 +281,7 @@ final class GraftHttpServer(
     val timeout =
       if (queryTimeoutMs <= 0 || sched == null) None
       else Some(sched.schedule(
-        new Runnable { def run(): Unit = sc.cancelJobGroup(groupId) },
+        new Runnable { def run(): Unit = OrderedPartitions.cancel(sc, groupId) },
         queryTimeoutMs, java.util.concurrent.TimeUnit.MILLISECONDS))
     try {
       ex.getResponseHeaders.add("Content-Type",

@@ -50,6 +50,12 @@ object OrderedPartitions {
     if (results > 0) math.min(results / 2, heap) else heap
   }
 
+  /** Cancel the request whose jobs run in job group `group`: its running
+    * window and every later one. Spark refuses the group's later jobs,
+    * so the next window is never run and its `next()` throws, also when
+    * the cancel falls between two windows. */
+  def cancel(sc: SparkContext, group: String): Unit = sc.cancelJobGroupAndFutureJobs(group)
+
   /** `rdd`, the encoded result of `plan`, one partition at a time. */
   def iterator(plan: Dataset[_], rdd: RDD[Array[Byte]]): Iterator[Part] = {
     val stored = plan.queryExecution.optimizedPlan.collectLeaves().map(_.stats.sizeInBytes).sum

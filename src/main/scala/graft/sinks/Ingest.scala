@@ -257,19 +257,16 @@ object Ingest {
         val partCols = parts.map { case Left(c) => c; case Right(t) => t.partCol }
         frame.write.partitionBy(partCols: _*).parquet(dir.toString)
       } else df.write.parquet(dir.toString)
-      val prevFiles = basis.map(_.files).getOrElse(Nil)
+      val added = Writers.listParquetIn(dir, recursive = partitionBy.nonEmpty)
       try {
-        val snap = catalog.commit(spark, table,
-          prevFiles.map(_.path) ++
-            Writers.listParquetIn(dir, recursive = partitionBy.nonEmpty),
-          reuseMeta = prevFiles.map(f => f.path -> f).toMap,
+        val snap = catalog.commit(spark, table, added,
           props = Map(
             SnapshotCatalog.OperationProp -> SnapshotCatalog.OpAppend,
             IngestFilesProp -> fresh.map(fp).mkString(","),
             IngestSourceProp -> src),
-          intent = Some(CommitIntent(basis.map(_.snapshotId), strictBasis = true)))
-        val prevPaths = prevFiles.map(_.path).toSet
-        val rows = snap.files.filterNot(f => prevPaths.contains(f.path)).map(_.rowCount).sum
+          intent = CommitIntent(basis.map(_.snapshotId), strictBasis = true))
+        val addedPaths = added.map(SnapshotCatalog.normalizePath).toSet
+        val rows = snap.files.filter(f => addedPaths.contains(f.path)).map(_.rowCount).sum
         // `skipped` counts ALREADY-INGESTED files only; fresh files a
         // max_files cap deferred are neither (the next run drains them)
         return IngestResult(fresh.size, all.size - freshAll.size, rows, Some(snap.snapshotId))

@@ -1,6 +1,6 @@
 package graft.sinks
 
-import graft.meta.SnapshotCatalog
+import graft.meta.{CommitIntent, SnapshotCatalog, SnapshotMeta}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -110,19 +110,25 @@ object MaterializedAgg {
     * labeled `rewrite` so the view's own CDC classifies it correctly).
     * State lands RANGE-CLUSTERED on the view keys, so each file covers
     * a disjoint key interval and a later delta-merge refresh prunes its
-    * rewrite set to the files the changed keys actually live in. */
+    * rewrite set to the files the changed keys actually live in. The
+    * commit removes every file of `basis`, the view snapshot the state
+    * was computed from, as [[Writers.replaceSnapshot]] does: a commit
+    * that removed one of them meanwhile (a compaction of the view)
+    * surfaces as a [[graft.meta.CommitConflictException]] instead of
+    * being undone. */
   private def writeReplace(
       catalog: SnapshotCatalog,
       table: String,
+      basis: Option[SnapshotMeta],
       df: DataFrame,
       keys: Seq[String],
       dataDir: String,
       props: Map[String, String]): Unit = {
-    val dir = java.nio.file.Paths.get(dataDir,
-      s"view-${java.util.UUID.randomUUID().toString.take(8)}")
-    df.repartitionByRange(keys.map(col): _*).write.parquet(dir.toString)
-    catalog.commit(df.sparkSession, table, Writers.listParquetIn(dir),
-      props = Map(SnapshotCatalog.OperationProp -> SnapshotCatalog.OpRewrite) ++ props)
+    catalog.commit(df.sparkSession, table,
+      Writers.writeFiles(df.repartitionByRange(keys.map(col): _*), dataDir, "view"),
+      props = Map(SnapshotCatalog.OperationProp -> SnapshotCatalog.OpRewrite) ++ props,
+      intent = CommitIntent(basis.map(_.snapshotId),
+        removedPaths = basis.map(_.files.map(_.path)).getOrElse(Nil)))
     ()
   }
 
@@ -184,10 +190,11 @@ object MaterializedAgg {
     val srcSnap = catalog.currentSnapshot(spec.src).getOrElse(
       throw new IllegalArgumentException(s"No snapshots for table ${spec.src}"))
     validateAgainst(srcSnap.schema, spec)
+    val viewSnap = catalog.currentSnapshot(viewTable)
     val agg = aggOf(
       scoped(catalog.read(spark, spec.src, snapshotId = Some(srcSnap.snapshotId)), spec),
       spec)
-    writeReplace(catalog, viewTable, agg, spec.keys, dataDir,
+    writeReplace(catalog, viewTable, viewSnap, agg, spec.keys, dataDir,
       specProps(spec) + (RefreshedAtProp -> srcSnap.snapshotId.toString))
     srcSnap.snapshotId
   }
@@ -436,11 +443,11 @@ object MaterializedAgg {
         .unionByName(dropped.withColumn("__drop", lit(true)))
       if (source.isEmpty)
         // the source moved but nothing under the view's scope changed:
-        // advance the watermark METADATA-ONLY, every file reused
-        catalog.commit(spark, viewTable, viewSnap.files.map(_.path),
-          reuseMeta = viewSnap.files.map(f => f.path -> f).toMap,
+        // advance the watermark METADATA-ONLY, every file kept
+        catalog.commit(spark, viewTable, Nil,
           props = Map(SnapshotCatalog.OperationProp -> SnapshotCatalog.OpRewrite) ++
-            newProps)
+            newProps,
+          intent = CommitIntent(Some(viewSnap.snapshotId)))
       else
         Writers.mergeApply(spark, catalog, viewTable, source, spec.keys,
           matched = Seq(
@@ -459,7 +466,7 @@ object MaterializedAgg {
         folded.filter(!col("__invalid")).drop("__invalid", "__touched")
           .filter(col("n_rows") > 0)
           .unionByName(recomputed)
-    writeReplace(catalog, viewTable, merged, spec.keys, dataDir, newProps)
+    writeReplace(catalog, viewTable, Some(viewSnap), merged, spec.keys, dataDir, newProps)
     srcSnap.snapshotId
   }
 }

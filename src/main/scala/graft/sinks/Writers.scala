@@ -3,7 +3,7 @@ package graft.sinks
 import java.nio.file.{Files, Paths}
 import java.util.UUID
 
-import graft.meta.{CommitIntent, DeleteFileMeta, FileMeta, PartTransform, PartitionTransforms, PruneFilter, RangeNum, RangeString, SnapshotCatalog, SnapshotMeta}
+import graft.meta.{CommitIntent, DeleteFileMeta, PartTransform, PartitionTransforms, PruneFilter, RangeNum, RangeString, SnapshotCatalog, SnapshotMeta}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -35,6 +35,18 @@ object Writers {
       .map(_.toAbsolutePath.toString).toList.sorted
     finally stream.close()
   }
+
+  /** Write `df` as parquet under a fresh `dataDir/<prefix>-<id>`
+    * directory and list the files it produced. */
+  private[sinks] def writeFiles(df: DataFrame, dataDir: String, prefix: String): Seq[String] = {
+    val dir = Paths.get(dataDir, s"$prefix-${UUID.randomUUID().toString.take(8)}")
+    df.write.parquet(dir.toString)
+    listParquet(dir)
+  }
+
+  /** An append planned against the table's current head. */
+  private def appendTo(catalog: SnapshotCatalog, table: String): CommitIntent =
+    CommitIntent(catalog.currentSnapshot(table).map(_.snapshotId))
 
   /** Morton (z-order) value of the given columns under per-column sorted
     * bucket boundaries: bucket index = #boundaries strictly below the
@@ -77,17 +89,13 @@ object Writers {
       partitionCols: Seq[String],
       props: Map[String, String] = Map.empty): SnapshotMeta = {
     writePartitioned(df, path, partitionCols)
-    val files = listParquet(Paths.get(path), recursive = true)
     // append semantics (the commit is labeled OpAppend): prior files
     // survive with their manifest metadata intact — each call writes to
     // its own directory, so repeated appends accumulate partitions'
     // files the way writeSnapshot accumulates unpartitioned ones
-    val prev = catalog.currentSnapshot(table)
-    val prevFiles = prev.map(_.files).getOrElse(Nil)
-    catalog.commit(df.sparkSession, table, prevFiles.map(_.path) ++ files,
-      reuseMeta = prevFiles.map(f => f.path -> f).toMap,
+    catalog.commit(df.sparkSession, table, listParquet(Paths.get(path), recursive = true),
       props = Map(SnapshotCatalog.OperationProp -> SnapshotCatalog.OpAppend) ++ props,
-      intent = Some(CommitIntent(prev.map(_.snapshotId))))
+      intent = appendTo(catalog, table))
   }
 
   /** Dynamic partition overwrite (SURVEY §2 S46 — the
@@ -133,8 +141,7 @@ object Writers {
     if (touched.exists(_.size != partitionCols.size))
       throw new IllegalStateException(
         s"overwrite of $table wrote files missing ${partitionCols.mkString(",")} values")
-    val prevFiles = current.map(_.files).getOrElse(Nil)
-    val (replaced, untouched) = prevFiles.partition { f =>
+    val replaced = current.map(_.files).getOrElse(Nil).filter { f =>
       val vals = partitionCols.flatMap(c => f.partitionValues.get(c).map(c -> _)).toMap
       if (vals.size != partitionCols.size)
         throw new IllegalStateException(
@@ -143,13 +150,12 @@ object Writers {
             "(its rows may belong to a touched partition); use deleteWhere + append instead")
       touched.contains(vals)
     }
-    catalog.commit(df.sparkSession, table, untouched.map(_.path) ++ newFiles,
-      reuseMeta = untouched.map(f => f.path -> f).toMap,
+    catalog.commit(df.sparkSession, table, newFiles,
       props = Map(
         SnapshotCatalog.OperationProp -> SnapshotCatalog.OpOverwrite,
         SnapshotCatalog.RewrittenFromProp ->
           replaced.map(_.path).sorted.mkString(",")) ++ props,
-      intent = Some(CommitIntent(
+      intent = CommitIntent(
         basisSnapshotId = current.map(_.snapshotId),
         removedPaths = replaced.map(_.path),
         // a concurrent append INTO a replaced partition has no
@@ -161,7 +167,7 @@ object Writers {
         conflictOnAdded = f => {
           val vals = partitionCols.flatMap(c => f.partitionValues.get(c).map(c -> _)).toMap
           vals.size != partitionCols.size || touched.contains(vals)
-        })))
+        }))
   }
 
   /** Hidden-partitioned write (Iceberg partition-spec transforms,
@@ -181,18 +187,14 @@ object Writers {
     require(spec.nonEmpty, "need at least one transform")
     val withCols = spec.foldLeft(df)((d, t) => d.withColumn(t.partCol, t.colExpr))
     writePartitioned(withCols, path, spec.map(_.partCol))
-    val files = listParquet(Paths.get(path), recursive = true)
     // append semantics: prior files survive with their manifest metadata
     // intact — including files written under a DIFFERENT partition spec
     // (Iceberg partition evolution: each file prunes by its own layout's
     // partition values; filters mapped for a spec a file doesn't carry
     // fall back to its column stats and never mis-prune)
-    val prev = catalog.currentSnapshot(table)
-    val prevFiles = prev.map(_.files).getOrElse(Nil)
-    catalog.commit(df.sparkSession, table, prevFiles.map(_.path) ++ files,
-      reuseMeta = prevFiles.map(f => f.path -> f).toMap,
+    catalog.commit(df.sparkSession, table, listParquet(Paths.get(path), recursive = true),
       props = Map(SnapshotCatalog.OperationProp -> SnapshotCatalog.OpAppend) ++ props,
-      intent = Some(CommitIntent(prev.map(_.snapshotId))))
+      intent = appendTo(catalog, table))
   }
 
   /** Read a transform-partitioned table with predicates stated on RAW
@@ -257,22 +259,16 @@ object Writers {
     val bounds: Seq[Seq[Double]] = df.stat.approxQuantile(zCols.toArray,
       (1 until buckets).map(_.toDouble / buckets).toArray, 0.01).map(_.toSeq).toSeq
     val zValue = zorderValue(zCols.zip(bounds))
-    val dir = Paths.get(dataDir, s"zorder-${UUID.randomUUID().toString.take(8)}")
-    df.withColumn("__z", zValue)
+    val files = writeFiles(df.withColumn("__z", zValue)
       .repartitionByRange(nFiles, col("__z"))
       .sortWithinPartitions("__z")
-      .drop("__z")
-      .write.parquet(dir.toString)
-    val files = listParquet(dir)
+      .drop("__z"), dataDir, "zorder")
     // append semantics, like writeSnapshot: prior files survive with their
     // manifest metadata intact (a full OPTIMIZE-style recluster is
     // read-everything + deleteWhere, an explicit user choice)
-    val prev = catalog.currentSnapshot(table)
-    val prevFiles = prev.map(_.files).getOrElse(Nil)
-    catalog.commit(df.sparkSession, table, prevFiles.map(_.path) ++ files,
-      reuseMeta = prevFiles.map(f => f.path -> f).toMap,
+    catalog.commit(df.sparkSession, table, files,
       props = Map(SnapshotCatalog.OperationProp -> SnapshotCatalog.OpAppend) ++ props,
-      intent = Some(CommitIntent(prev.map(_.snapshotId))))
+      intent = appendTo(catalog, table))
   }
 
   /** Copy-on-write row-level delete (Iceberg COW DELETE semantics):
@@ -291,31 +287,24 @@ object Writers {
     val current = catalog.currentSnapshot(table)
       .getOrElse(throw new IllegalArgumentException(s"No snapshots for table $table"))
     val affected = catalog.planFiles(table, pruneFilters).map(_.path).toSet
-    val untouchedMeta = current.files.filterNot(f => affected.contains(f.path))
+    // VISIBLE rows: a COW rewrite of files carrying outstanding MoR
+    // position deletes must not resurrect the masked rows
     val rewritten: Seq[String] =
       if (affected.isEmpty) Nil
-      else {
-        // VISIBLE rows: a COW rewrite of files carrying outstanding MoR
-        // position deletes must not resurrect the masked rows
-        val remaining = rowPredicate(
-          catalog.visibleRows(spark, current, affected.toSeq))
-        val dir = Paths.get(dataDir, s"rewrite-${UUID.randomUUID().toString.take(8)}")
-        remaining.write.parquet(dir.toString)
-        listParquet(dir)
-      }
+      else writeFiles(rowPredicate(catalog.visibleRows(spark, current, affected.toSeq)),
+        dataDir, "rewrite")
     // untouched files keep their manifest metadata — the commit scans
     // only the rewritten files. The operation kind + rewrite lineage in
     // props let incremental readers exclude rewrite outputs (surviving
     // rows of a COW delete are NOT new rows — see
     // SnapshotCatalog.readIncremental).
-    catalog.commit(spark, table, untouchedMeta.map(_.path) ++ rewritten,
-      reuseMeta = untouchedMeta.map(f => f.path -> f).toMap,
+    catalog.commit(spark, table, rewritten,
       props = Map(
         SnapshotCatalog.OperationProp -> SnapshotCatalog.OpDelete,
         SnapshotCatalog.RewrittenFromProp -> affected.toSeq.sorted.mkString(",")),
-      intent = Some(CommitIntent(
+      intent = CommitIntent(
         basisSnapshotId = Some(current.snapshotId),
-        removedPaths = affected.toSeq)))
+        removedPaths = affected.toSeq))
   }
 
   /** Copy-on-write row-level UPDATE (Iceberg COW UPDATE semantics; the
@@ -370,29 +359,22 @@ object Writers {
       .select(schema.fields.map { f =>
         assignMap.get(f.name).map(_.cast(f.dataType).as(f.name)).getOrElse(col(f.name))
       }.toIndexedSeq: _*)
-    val insDir = Paths.get(dataDir, s"upd-ins-${UUID.randomUUID().toString.take(8)}")
-    updated.write.parquet(insDir.toString)
-    val insertFiles = listParquet(insDir)
+    val insertFiles = writeFiles(updated, dataDir, "upd-ins")
     // nothing matched → leave the table alone (footer-count check only;
     // the matched pass already ran, this opens no data pages)
     if (insertFiles.isEmpty || spark.read.parquet(insertFiles: _*).count() == 0) {
       insertFiles.foreach(p => Files.deleteIfExists(Paths.get(p)))
       return current
     }
-    val survDir = Paths.get(dataDir, s"upd-rw-${UUID.randomUUID().toString.take(8)}")
-    flagged.filter(!col("__upd")).drop("__upd").write.parquet(survDir.toString)
-    val survivorFiles = listParquet(survDir)
-    val affectedSet = affected.toSet
-    val untouchedMeta = current.files.filterNot(f => affectedSet.contains(f.path))
-    catalog.commit(spark, table, untouchedMeta.map(_.path) ++ survivorFiles ++ insertFiles,
-      reuseMeta = untouchedMeta.map(f => f.path -> f).toMap,
+    val survivorFiles = writeFiles(flagged.filter(!col("__upd")).drop("__upd"), dataDir, "upd-rw")
+    catalog.commit(spark, table, survivorFiles ++ insertFiles,
       props = Map(
         SnapshotCatalog.OperationProp -> SnapshotCatalog.OpMerge,
         SnapshotCatalog.RewrittenFromProp -> affected.sorted.mkString(","),
         SnapshotCatalog.InsertFilesProp -> insertFiles.mkString(",")),
-      intent = Some(CommitIntent(
+      intent = CommitIntent(
         basisSnapshotId = Some(current.snapshotId),
-        removedPaths = affected)))
+        removedPaths = affected))
   }
 
   /** Merge-on-read row-level delete (the Iceberg v2 position-delete
@@ -428,9 +410,8 @@ object Writers {
     val marked = catalog.visibleRowsLineage(spark, current, affected)
       .filter(deleteCond)
       .select(col("_file"), col("_pos"))
-    val dir = Paths.get(dataDir, s"mor-del-${UUID.randomUUID().toString.take(8)}")
-    marked.repartition(1).sortWithinPartitions("_file", "_pos").write.parquet(dir.toString)
-    val delPath = listParquet(dir).head
+    val delPath = writeFiles(
+      marked.repartition(1).sortWithinPartitions("_file", "_pos"), dataDir, "mor-del").head
     // one bounded pass over the (tiny) delete file: per-data-file entry
     // counts give dataPaths + rowCount without a second scan of the data
     val perFile = spark.read.parquet(delPath).groupBy("_file").count().collect()
@@ -443,15 +424,14 @@ object Writers {
       rowCount = perFile.map(_.getLong(1)).sum,
       sizeBytes = Files.size(Paths.get(delPath)),
       dataPaths = perFile.map(r => SnapshotCatalog.normalizePath(r.getString(0))).toSeq.sorted)
-    catalog.commit(spark, table, current.files.map(_.path),
-      reuseMeta = current.files.map(f => f.path -> f).toMap,
+    catalog.commit(spark, table, Nil,
       props = Map(SnapshotCatalog.OperationProp -> SnapshotCatalog.OpMorDelete),
       // intent, not a verbatim delete-file list: concurrent masks carry,
       // and a concurrent rewrite of a file this mask's positions index
       // conflicts (the row_index values are per-file)
-      intent = Some(CommitIntent(
+      intent = CommitIntent(
         basisSnapshotId = Some(current.snapshotId),
-        addDeleteFiles = Seq(delMeta))))
+        addDeleteFiles = Seq(delMeta)))
   }
 
   /** Merge-on-read EQUALITY delete (the Iceberg v2 equality-delete file,
@@ -482,9 +462,7 @@ object Writers {
     val src = keys.select(keyCols.map(col): _*).distinct()
     val affected = catalog.planFiles(table, keyBoundFilters(src, keyCols)).map(_.path)
     if (affected.isEmpty) return current
-    val dir = Paths.get(dataDir, s"eq-del-${UUID.randomUUID().toString.take(8)}")
-    src.coalesce(1).write.parquet(dir.toString)
-    val delPath = listParquet(dir).head
+    val delPath = writeFiles(src.coalesce(1), dataDir, "eq-del").head
     val nKeys = spark.read.parquet(delPath).count()
     if (nKeys == 0) {
       Files.deleteIfExists(Paths.get(delPath))
@@ -496,15 +474,14 @@ object Writers {
       sizeBytes = Files.size(Paths.get(delPath)),
       dataPaths = affected.sorted,
       equalityColumns = keyCols)
-    catalog.commit(spark, table, current.files.map(_.path),
-      reuseMeta = current.files.map(f => f.path -> f).toMap,
+    catalog.commit(spark, table, Nil,
       props = Map(SnapshotCatalog.OperationProp -> SnapshotCatalog.OpMorDelete),
       // the equality mask scopes to `affected` (the files existing at
       // basis that could hold the keys) — a concurrent rewrite of one of
       // them conflicts rather than leaving a mask over dead paths
-      intent = Some(CommitIntent(
+      intent = CommitIntent(
         basisSnapshotId = Some(current.snapshotId),
-        addDeleteFiles = Seq(delMeta))))
+        addDeleteFiles = Seq(delMeta)))
   }
 
   /** Row-retention maintenance (the compliance TTL sweep): expire every
@@ -615,12 +592,8 @@ object Writers {
     val masked = current.deleteFiles.flatMap(_.dataPaths).distinct
       .filter(livePaths.contains)
     if (masked.isEmpty) return None
-    val keep = current.files.filterNot(f => masked.contains(f.path))
-    val dir = Paths.get(dataDir, s"mor-mat-${UUID.randomUUID().toString.take(8)}")
-    catalog.visibleRows(spark, current, masked).write.parquet(dir.toString)
-    val outputs = listParquet(dir)
-    Some(catalog.commit(spark, table, keep.map(_.path) ++ outputs,
-      reuseMeta = keep.map(f => f.path -> f).toMap,
+    val outputs = writeFiles(catalog.visibleRows(spark, current, masked), dataDir, "mor-mat")
+    Some(catalog.commit(spark, table, outputs,
       props = Map(
         SnapshotCatalog.OperationProp -> SnapshotCatalog.OpCompact,
         SnapshotCatalog.RewrittenFromProp -> masked.sorted.mkString(","),
@@ -630,10 +603,10 @@ object Writers {
       // landing concurrently on an untouched file carries forward, one
       // landing on a materialized file conflicts (its rows are baked
       // into outputs computed without it)
-      intent = Some(CommitIntent(
+      intent = CommitIntent(
         basisSnapshotId = Some(current.snapshotId),
         removedPaths = masked,
-        retireDeleteFiles = current.deleteFiles.map(_.path)))))
+        retireDeleteFiles = current.deleteFiles.map(_.path))))
   }
 
   /** Range-partitioned snapshot write: one shuffle splits `df` into
@@ -648,17 +621,12 @@ object Writers {
       rangeCol: String,
       nFiles: Int,
       props: Map[String, String] = Map.empty): SnapshotMeta = {
-    val dir = Paths.get(dataDir, s"ranged-${UUID.randomUUID().toString.take(8)}")
-    df.repartitionByRange(nFiles, col(rangeCol))
-      .sortWithinPartitions(rangeCol)
-      .write.parquet(dir.toString)
-    val files = listParquet(dir)
-    val prev = catalog.currentSnapshot(table)
-    val prevFiles = prev.map(_.files).getOrElse(Nil)
-    catalog.commit(df.sparkSession, table, prevFiles.map(_.path) ++ files,
-      reuseMeta = prevFiles.map(f => f.path -> f).toMap,
+    val files = writeFiles(
+      df.repartitionByRange(nFiles, col(rangeCol)).sortWithinPartitions(rangeCol),
+      dataDir, "ranged")
+    catalog.commit(df.sparkSession, table, files,
       props = Map(SnapshotCatalog.OperationProp -> SnapshotCatalog.OpAppend) ++ props,
-      intent = Some(CommitIntent(prev.map(_.snapshotId))))
+      intent = appendTo(catalog, table))
   }
 
   /** Per-key-column min/max of `source`, as manifest prune filters — ONE
@@ -728,25 +696,15 @@ object Writers {
     val src = source.select(targetCols.map(col): _*)
 
     val affected = catalog.planFiles(table, keyBoundFilters(src, keyCols)).map(_.path)
-    val affectedSet = affected.toSet
-    val untouchedMeta: Seq[FileMeta] =
-      current.files.filterNot(f => affectedSet.contains(f.path))
+    // visible rows: never resurrect MoR-masked rows into survivors
     val survivorFiles: Seq[String] =
       if (affected.isEmpty) Nil
-      else {
-        // visible rows: never resurrect MoR-masked rows into survivors
-        val survivors = catalog.visibleRows(spark, current, affected)
-          .join(src.select(keyCols.map(col): _*).distinct(), keyCols, "left_anti")
-        val dir = Paths.get(dataDir, s"merge-rw-${UUID.randomUUID().toString.take(8)}")
-        survivors.write.parquet(dir.toString)
-        listParquet(dir)
-      }
-    val insDir = Paths.get(dataDir, s"merge-ins-${UUID.randomUUID().toString.take(8)}")
-    src.write.parquet(insDir.toString)
-    val insertFiles = listParquet(insDir)
+      else writeFiles(catalog.visibleRows(spark, current, affected)
+        .join(src.select(keyCols.map(col): _*).distinct(), keyCols, "left_anti"),
+        dataDir, "merge-rw")
+    val insertFiles = writeFiles(src, dataDir, "merge-ins")
 
-    catalog.commit(spark, table, untouchedMeta.map(_.path) ++ survivorFiles ++ insertFiles,
-      reuseMeta = untouchedMeta.map(f => f.path -> f).toMap,
+    catalog.commit(spark, table, survivorFiles ++ insertFiles,
       props = props ++ Map(
         SnapshotCatalog.OperationProp -> SnapshotCatalog.OpMerge,
         SnapshotCatalog.RewrittenFromProp -> affected.sorted.mkString(","),
@@ -754,9 +712,9 @@ object Writers {
       // a concurrent APPEND is serializable with a merge (equivalent to
       // merge-then-append) and reconciles in; only a concurrent rewrite
       // or mask of the files this merge read conflicts
-      intent = Some(CommitIntent(
+      intent = CommitIntent(
         basisSnapshotId = Some(current.snapshotId),
-        removedPaths = affected)))
+        removedPaths = affected))
   }
 
   /** A MERGE WHEN clause (the Delta/Iceberg multi-clause surface).
@@ -911,9 +869,6 @@ object Writers {
     val bsAffected: Seq[String] =
       bsPrunes.flatMap(f => catalog.planFiles(table, f).map(_.path)).distinct
     val affected = (srcAffected ++ bsAffected).distinct
-    val affectedSet = affected.toSet
-    val untouchedMeta: Seq[FileMeta] =
-      current.files.filterNot(f => affectedSet.contains(f.path))
 
     // keys that actually exist in the target (≤ |source| rows — the
     // semi-join output is source-bounded, never table-bounded)
@@ -952,9 +907,7 @@ object Writers {
               .join(claimedKeys, keyCols, "left_anti")
               .unionByName(tu.filter(col("__bs_idx") === -1).drop("__bs_idx"))
         }
-        val dir = Paths.get(dataDir, s"merge-rw-${UUID.randomUUID().toString.take(8)}")
-        survivors.write.parquet(dir.toString)
-        listParquet(dir)
+        writeFiles(survivors, dataDir, "merge-rw")
       }
 
     // new rows: updated versions of matched rows (star = source row;
@@ -1029,22 +982,18 @@ object Writers {
         (updatesStar.toSeq ++ updatesSet.toSeq ++ insertsDf.toSeq ++ fromBySource.toSeq)
           .reduceOption(_ unionByName _) match {
           case None => Nil
-          case Some(newRows) =>
-            val dir = Paths.get(dataDir, s"merge-ins-${UUID.randomUUID().toString.take(8)}")
-            newRows.write.parquet(dir.toString)
-            listParquet(dir)
+          case Some(newRows) => writeFiles(newRows, dataDir, "merge-ins")
         }
       }
 
-    catalog.commit(spark, table, untouchedMeta.map(_.path) ++ survivorFiles ++ insertFiles,
-      reuseMeta = untouchedMeta.map(f => f.path -> f).toMap,
+    catalog.commit(spark, table, survivorFiles ++ insertFiles,
       props = props ++ Map(
         SnapshotCatalog.OperationProp -> SnapshotCatalog.OpMerge,
         SnapshotCatalog.RewrittenFromProp -> affected.sorted.mkString(","),
         SnapshotCatalog.InsertFilesProp -> insertFiles.mkString(",")),
-      intent = Some(CommitIntent(
+      intent = CommitIntent(
         basisSnapshotId = Some(current.snapshotId),
-        removedPaths = affected)))
+        removedPaths = affected))
   }
 
   /** Small-file compaction (Iceberg rewrite_data_files bin-pack): files
@@ -1115,11 +1064,10 @@ object Writers {
     val inScope: Set[String] =
       if (scope.isEmpty) current.files.map(_.path).toSet
       else catalog.planFiles(table, scope).map(_.path).toSet
-    val (small, big) = current.files.partition(f =>
+    val small = current.files.filter(f =>
       f.sizeBytes < smallBytes && inScope.contains(f.path))
     if (small.size < minFiles) return None
-    val groups = small.groupBy(_.partitionValues)
-    val (binned, loners) = groups.partition(_._2.size >= 2)
+    val binned = small.groupBy(_.partitionValues).filter(_._2.size >= 2)
     if (binned.isEmpty || binned.values.map(_.size).sum < minFiles) return None
     val base = Paths.get(dataDir, s"compact-${UUID.randomUUID().toString.take(8)}")
     val outputs = perGroupJobs(binned.toSeq
@@ -1139,16 +1087,14 @@ object Writers {
           .write.parquet(sub.toString)
         listParquet(sub)
       }.flatten
-    val rewritten = binned.values.flatten.toSeq
-    val kept = big ++ loners.values.flatten
-    Some(catalog.commit(spark, table, kept.map(_.path) ++ outputs,
-      reuseMeta = kept.map(f => f.path -> f).toMap,
+    val rewritten = binned.values.flatten.map(_.path).toSeq
+    Some(catalog.commit(spark, table, outputs,
       props = Map(
         SnapshotCatalog.OperationProp -> SnapshotCatalog.OpCompact,
-        SnapshotCatalog.RewrittenFromProp -> rewritten.map(_.path).sorted.mkString(",")),
-      intent = Some(CommitIntent(
+        SnapshotCatalog.RewrittenFromProp -> rewritten.sorted.mkString(",")),
+      intent = CommitIntent(
         basisSnapshotId = Some(current.snapshotId),
-        removedPaths = rewritten.map(_.path)))))
+        removedPaths = rewritten)))
   }
 
   /** Sorted / z-order rewrite (Iceberg `rewrite_data_files` with a
@@ -1258,9 +1204,9 @@ object Writers {
       props = Map(
         SnapshotCatalog.OperationProp -> SnapshotCatalog.OpCompact,
         SnapshotCatalog.RewrittenFromProp -> scopedPaths.sorted.mkString(",")),
-      intent = Some(CommitIntent(
+      intent = CommitIntent(
         basisSnapshotId = Some(current.snapshotId),
-        removedPaths = scopedPaths)))
+        removedPaths = scopedPaths))
   }
 
   /** Write-audit-publish, stage step: `df`'s files are written and
@@ -1274,9 +1220,7 @@ object Writers {
       df: DataFrame,
       dataDir: String,
       props: Map[String, String] = Map.empty): String = {
-    val dir = Paths.get(dataDir, s"staged-${UUID.randomUUID().toString.take(8)}")
-    df.write.parquet(dir.toString)
-    catalog.stageAppend(table, listParquet(dir), props)
+    catalog.stageAppend(table, writeFiles(df, dataDir, "staged"), props)
   }
 
   /** The PROSPECTIVE table state of a staged append — current snapshot
@@ -1314,16 +1258,11 @@ object Writers {
       props: Map[String, String] = Map.empty,
       sketchColumns: Seq[String] = Nil,
       declaredSchema: Option[org.apache.spark.sql.types.StructType] = None): SnapshotMeta = {
-    val dir = Paths.get(dataDir, s"commit-${UUID.randomUUID().toString.take(8)}")
-    df.write.parquet(dir.toString)
-    val files = listParquet(dir)
-    val prev = catalog.currentSnapshot(table)
-    val prevFiles = prev.map(_.files).getOrElse(Nil)
-    catalog.commit(df.sparkSession, table, prevFiles.map(_.path) ++ files, bloomColumns,
-      reuseMeta = prevFiles.map(f => f.path -> f).toMap,
+    val files = writeFiles(df, dataDir, "commit")
+    catalog.commit(df.sparkSession, table, files, bloomColumns,
       props = Map(SnapshotCatalog.OperationProp -> SnapshotCatalog.OpAppend) ++ props,
       sketchColumns = sketchColumns,
-      intent = Some(CommitIntent(prev.map(_.snapshotId))),
+      intent = appendTo(catalog, table),
       declaredSchema = declaredSchema)
   }
 
@@ -1340,19 +1279,17 @@ object Writers {
       df: DataFrame,
       dataDir: String,
       props: Map[String, String] = Map.empty): SnapshotMeta = {
-    val dir = Paths.get(dataDir, s"replace-${UUID.randomUUID().toString.take(8)}")
-    df.write.parquet(dir.toString)
-    val files = listParquet(dir)
+    val files = writeFiles(df, dataDir, "replace")
     val prev = catalog.currentSnapshot(table)
     val prevPaths = prev.map(_.files.map(_.path)).getOrElse(Nil)
     catalog.commit(df.sparkSession, table, files,
       props = Map(
         SnapshotCatalog.OperationProp -> SnapshotCatalog.OpOverwrite,
         SnapshotCatalog.RewrittenFromProp -> prevPaths.sorted.mkString(",")) ++ props,
-      intent = Some(CommitIntent(
+      intent = CommitIntent(
         basisSnapshotId = prev.map(_.snapshotId),
         removedPaths = prevPaths,
         // any concurrently added file is outside the restated state
-        conflictOnAdded = _ => true)))
+        conflictOnAdded = _ => true))
   }
 }

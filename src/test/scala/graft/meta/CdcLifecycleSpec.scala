@@ -581,7 +581,9 @@ class CdcLifecycleSpec extends SparkSpec {
                   cat.commit(spark, v,
                     listPq(dir.resolve("a")) ++ listPq(dir.resolve("b")),
                     props = vsnap.props +
-                      (SnapshotCatalog.OperationProp -> SnapshotCatalog.OpRewrite))
+                      (SnapshotCatalog.OperationProp -> SnapshotCatalog.OpRewrite),
+                    intent = CommitIntent(Some(vsnap.snapshotId),
+                      removedPaths = vsnap.files.map(_.path)))
                 }
               }
             }

@@ -3,6 +3,7 @@ package graft.meta
 import java.nio.file.Files
 
 import graft.SparkSpec
+import graft.serve.PublishRace
 import graft.sinks.Writers
 import org.apache.spark.sql.functions._
 
@@ -62,14 +63,41 @@ class CommitConflictSpec extends SparkSpec {
     val dirB = java.nio.file.Paths.get(dataDir, "b").toString
     customers.filter(col("c_custkey").between(11, 20)).write.parquet(dirA)
     customers.filter(col("c_custkey").between(21, 30)).write.parquet(dirB)
-    val basisFiles = s1.files.map(_.path)
-    val reuse = s1.files.map(f => f.path -> f).toMap
-    cat.commit(spark, "cust", basisFiles ++ parquetsUnder(dirA), reuseMeta = reuse,
-      intent = Some(CommitIntent(Some(s1.snapshotId))))
-    // B still claims basis s1 — the stale survivors list must NOT erase A's files
-    cat.commit(spark, "cust", basisFiles ++ parquetsUnder(dirB), reuseMeta = reuse,
-      intent = Some(CommitIntent(Some(s1.snapshotId))))
+    cat.commit(spark, "cust", parquetsUnder(dirA), intent = CommitIntent(Some(s1.snapshotId)))
+    // B still claims basis s1 — it must NOT erase A's files
+    cat.commit(spark, "cust", parquetsUnder(dirB), intent = CommitIntent(Some(s1.snapshotId)))
     assert(cat.read(spark, "cust").count() == 30)
+  }
+
+  test("append whose basis is rewritten and expired during its publish still lands") {
+    val root = Files.createTempDirectory("graft-ccr-exp-").toString
+    val dataDir = Files.createTempDirectory("graft-ccr-exp-data-").toString
+    val race = new PublishRace
+    val cat = new SnapshotCatalog(root, race.clock)
+    val other = new SnapshotCatalog(root)
+    Writers.writeRangedSnapshot(cat, "cust", customers.filter(col("c_custkey") <= 40),
+      dataDir, "c_custkey", nFiles = 2)
+    val s1 = cat.currentSnapshot("cust").get
+    // inside the append's publish, planned at s1: a second catalog
+    // rewrites one of s1's files (drops custkey <= 5) and expires s1
+    var rewrite: Option[SnapshotMeta] = None
+    race.arm {
+      rewrite = Some(Writers.deleteWhere(spark, other, "cust",
+        rowPredicate = df => df.filter(col("c_custkey") > 5),
+        pruneFilters = Seq(RangeNum("c_custkey", 0, 5)), dataDir = dataDir))
+      other.expireSnapshots("cust", keepLast = 1)
+    }
+    val appended = Writers.writeSnapshot(cat, "cust",
+      customers.filter(col("c_custkey").between(41, 50)), dataDir)
+    assert(race.fired)
+    assert(cat.snapshotById("cust", s1.snapshotId).isEmpty, "s1 must be expired")
+    assert(appended.parentId.contains(rewrite.get.snapshotId))
+    val rewriteOut = rewrite.get.files.map(_.path).filterNot(s1.files.map(_.path).contains)
+    assert(rewriteOut.nonEmpty && rewriteOut.forall(appended.files.map(_.path).contains),
+      "the rewrite's output must survive the append")
+    val keys = cat.read(spark, "cust").select(col("c_custkey").cast("long"))
+      .collect().map(_.getLong(0)).toSeq.sorted
+    assert(keys == (6L to 50L), "rewrite and append must both be visible, once each")
   }
 
   test("two COW rewrites of the same files: first lands, second conflicts") {
@@ -85,7 +113,7 @@ class CommitConflictSpec extends SparkSpec {
     customers.filter(col("c_custkey").between(10, 50)).write.parquet(out)
     val ex = intercept[CommitConflictException] {
       cat.commit(spark, "cust", parquetsUnder(out),
-        intent = Some(CommitIntent(Some(s1.snapshotId), removedPaths = victim)))
+        intent = CommitIntent(Some(s1.snapshotId), removedPaths = victim))
     }
     assert(ex.getMessage.contains("concurrently removed"))
     // the first rewrite's state is intact
@@ -111,7 +139,7 @@ class CommitConflictSpec extends SparkSpec {
     cat.visibleRows(spark, s1, Seq(fB.path)).filter(col("c_custkey") <= 90)
       .write.parquet(out)
     cat.commit(spark, "cust", parquetsUnder(out),
-      intent = Some(CommitIntent(Some(s1.snapshotId), removedPaths = Seq(fB.path))))
+      intent = CommitIntent(Some(s1.snapshotId), removedPaths = Seq(fB.path)))
     // BOTH rewrites' effects present: rows 11..90 remain
     assert(cat.read(spark, "cust").count() == 80)
   }
@@ -127,7 +155,7 @@ class CommitConflictSpec extends SparkSpec {
     cat.visibleRows(spark, s1, victim).coalesce(1).write.parquet(out)
     val ex = intercept[CommitConflictException] {
       cat.commit(spark, "cust", parquetsUnder(out),
-        intent = Some(CommitIntent(Some(s1.snapshotId), removedPaths = victim)))
+        intent = CommitIntent(Some(s1.snapshotId), removedPaths = victim))
     }
     assert(ex.getMessage.contains("mask rows"))
     assert(cat.read(spark, "cust").count() == 45)
@@ -145,9 +173,8 @@ class CommitConflictSpec extends SparkSpec {
       path = "/nonexistent/mask.parquet", rowCount = 1, sizeBytes = 10,
       dataPaths = Seq(victimPath))
     val ex = intercept[CommitConflictException] {
-      cat.commit(spark, "cust", s1.files.map(_.path),
-        reuseMeta = s1.files.map(f => f.path -> f).toMap,
-        intent = Some(CommitIntent(Some(s1.snapshotId), addDeleteFiles = Seq(staleMask))))
+      cat.commit(spark, "cust", Nil,
+        intent = CommitIntent(Some(s1.snapshotId), addDeleteFiles = Seq(staleMask)))
     }
     assert(ex.getMessage.contains("delete file references"))
   }
@@ -193,9 +220,9 @@ class CommitConflictSpec extends SparkSpec {
     assert(replaced.nonEmpty)
     val ex = intercept[CommitConflictException] {
       cat.commit(spark, "cust", newFiles,
-        intent = Some(CommitIntent(Some(s1.snapshotId),
+        intent = CommitIntent(Some(s1.snapshotId),
           removedPaths = replaced.map(_.path),
-          conflictOnAdded = f => touched.contains(f.partitionValues.filter(_._1 == "seg")))))
+          conflictOnAdded = f => touched.contains(f.partitionValues.filter(_._1 == "seg"))))
     }
     assert(ex.getMessage.contains("conflict with this commit's scope"))
     // nothing was clobbered
@@ -210,10 +237,9 @@ class CommitConflictSpec extends SparkSpec {
     // a rollback planned while s1 was still head: simulate with the
     // intent rollbackTo would carry — basis = the OLD head
     val ex = intercept[CommitConflictException] {
-      cat.commit(spark, "cust", s1.files.map(_.path),
-        reuseMeta = s1.files.map(f => f.path -> f).toMap,
+      cat.commit(spark, "cust", Nil,
         deleteFilesOverride = Some(Nil),
-        intent = Some(CommitIntent(Some(s1.snapshotId), strictBasis = true)))
+        intent = CommitIntent(Some(s1.snapshotId), strictBasis = true))
     }
     assert(ex.getMessage.contains("head moved"))
     // the real rollbackTo against the true current still works

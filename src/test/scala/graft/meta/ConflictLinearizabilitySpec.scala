@@ -133,4 +133,103 @@ class ConflictLinearizabilitySpec extends SparkSpec {
     info(s"30 rounds: $conflicts conflicts, $reconciled fully-reconciled rounds, " +
       s"final keys=${state.size}")
   }
+
+  test("10 rounds of racing merges and updates always land on a serial-order state") {
+    val cat = new SnapshotCatalog(Files.createTempDirectory("graft-linm-").toString)
+    val dataDir = Files.createTempDirectory("graft-linm-data-").toString
+    val customers = graft.Tables.customer(spark, sfDir)
+    val tagType = customers.schema("c_nationkey").dataType
+    val corpusMax = 140L
+    // key -> c_nationkey: merges and updates restate a key's tag
+    type State = Map[Long, Long]
+    type MergeOp = (String, State => State, () => Unit)
+
+    Writers.writeRangedSnapshot(cat, "t",
+      customers.filter(col("c_custkey").between(1, 40)), dataDir, "c_custkey", nFiles = 4)
+
+    def visible(): State = {
+      val rows = cat.read(spark, "t")
+        .select(col("c_custkey").cast("long"), col("c_nationkey").cast("long"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1))
+      assert(rows.length == rows.map(_._1).distinct.length,
+        s"duplicate visible keys: ${rows.groupBy(_._1).filter(_._2.length > 1).keys.toSeq.sorted.take(5)}")
+      rows.toMap
+    }
+    def rowsOf(ks: Seq[Long], tag: Long) =
+      customers.filter(col("c_custkey").isin(ks: _*))
+        .withColumn("c_nationkey", lit(tag).cast(tagType))
+
+    val rnd = new Random(777)
+    var nextFresh = 41L
+    var nextTag = 100L
+    var state = visible()
+    var conflicts = 0
+    var reconciled = 0
+
+    // kind 0 appends, 1 merges, 2 updates, 3 deletes
+    def mkOp(kind: Int): MergeOp = {
+      val ks = state.keys.toSeq.sorted
+      val tag = nextTag; nextTag += 1
+      kind match {
+        case 0 if nextFresh + 5 <= corpusMax => // append a fresh slice
+          val lo = nextFresh; val hi = lo + 2 + rnd.nextInt(3)
+          nextFresh = hi + 1
+          val orig = customers.filter(col("c_custkey").between(lo, hi))
+            .select(col("c_custkey").cast("long"), col("c_nationkey").cast("long"))
+            .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+          (s"append[$lo,$hi]", st => st ++ orig,
+            () => { Writers.writeSnapshot(cat, "t",
+              customers.filter(col("c_custkey").between(lo, hi)), dataDir); () })
+        case 0 | 1 => // MERGE: existing keys update, fresh keys insert
+          val existing = rnd.shuffle(ks).take(1 + rnd.nextInt(2))
+          val fresh =
+            if (nextFresh + 2 > corpusMax) Nil
+            else { val f = Seq(nextFresh, nextFresh + 1); nextFresh += 2; f }
+          val keys = existing ++ fresh
+          (s"merge${keys.mkString("[", ",", "]")}=$tag", st => st ++ keys.map(_ -> tag),
+            () => { Writers.mergeInto(spark, cat, "t", rowsOf(keys, tag),
+              Seq("c_custkey"), dataDir); () })
+        case 2 => // UPDATE ... SET c_nationkey = tag WHERE key in a range
+          val lo = ks(rnd.nextInt(ks.size)); val hi = lo + rnd.nextInt(3)
+          (s"update[$lo,$hi]=$tag",
+            st => st.map { case (k, v) => k -> (if (k >= lo && k <= hi) tag else v) },
+            () => { Writers.updateWhere(spark, cat, "t",
+              Seq("c_nationkey" -> lit(tag)), col("c_custkey").between(lo, hi),
+              Seq(RangeNum("c_custkey", lo.toDouble, hi.toDouble)), dataDir); () })
+        case _ => // COW delete of a key range
+          val lo = ks(rnd.nextInt(ks.size)); val hi = lo + rnd.nextInt(3)
+          (s"cowDelete[$lo,$hi]", st => st.filterNot { case (k, _) => k >= lo && k <= hi },
+            () => { Writers.deleteWhere(spark, cat, "t",
+              rowPredicate = df => df.filter(!col("c_custkey").between(lo, hi)),
+              pruneFilters = Seq(RangeNum("c_custkey", lo.toDouble, hi.toDouble)),
+              dataDir = dataDir); () })
+      }
+    }
+
+    for (round <- 1 to 10) {
+      // every round races a merge-shaped commit against any writer
+      val a = mkOp(1 + rnd.nextInt(2)); val b = mkOp(rnd.nextInt(4))
+      val results = Await.result(Future.sequence(Seq(a, b).map { op =>
+        Future(
+          try { op._3(); Right(op) }
+          catch { case e: CommitConflictException => Left((op, e)) })
+      }), 180.seconds)
+      val winners = results.collect { case Right(op) => op }
+      conflicts += results.count(_.isLeft)
+      assert(winners.nonEmpty, s"round $round: both writers conflicted (${a._1} vs ${b._1})")
+      if (winners.size == 2) reconciled += 1
+      val candidates: Seq[State] = winners.permutations
+        .map(perm => perm.foldLeft(state) { case (st, (_, f, _)) => f(st) }).toSeq
+      val actual = visible()
+      assert(candidates.contains(actual),
+        s"round $round: state after ${winners.map(_._1).mkString(" || ")} " +
+          s"(planned: ${a._1}, ${b._1}) matches no serial order; " +
+          s"diff vs first candidate: +${(actual.toSet -- candidates.head.toSet).toSeq.sortBy(_._1).take(5)} " +
+          s"-${(candidates.head.toSet -- actual.toSet).toSeq.sortBy(_._1).take(5)}")
+      state = actual
+    }
+    assert(reconciled > 0, "no round had both writers succeed")
+    info(s"10 rounds: $conflicts conflicts, $reconciled fully-reconciled rounds, " +
+      s"final keys=${state.size}")
+  }
 }

@@ -23,12 +23,11 @@ class ManifestScaleSpec extends SparkSpec {
   test("read-side manifest parses stay O(1) at 1000 snapshots") {
     val root = Files.createTempDirectory("graft-mcat-").toString
     val writer = new SnapshotCatalog(root)
-    val base = writer.commit(spark, "t", Seq(oneFile()))
-    val reuse = Map(base.files.head.path -> base.files.head)
+    writer.commit(spark, "t", Seq(oneFile()))
     // 999 metadata-only commits: the streaming-ingest shape (one commit
     // per micro-batch), no Spark jobs involved
     (1 until 1000).foreach { _ =>
-      writer.commit(spark, "t", Seq(base.files.head.path), reuseMeta = reuse)
+      writer.commit(spark, "t", Nil)
     }
     assert(writer.currentSnapshot("t").get.snapshotId == 1000L)
 
@@ -59,10 +58,9 @@ class ManifestScaleSpec extends SparkSpec {
     val root = Files.createTempDirectory("graft-masof-").toString
     var tick = 1000L
     val writer = new SnapshotCatalog(root, clock = () => { tick += 1000; tick })
-    val base = writer.commit(spark, "t", Seq(oneFile()))
-    val reuse = Map(base.files.head.path -> base.files.head)
+    writer.commit(spark, "t", Seq(oneFile()))
     (1 until 500).foreach { _ =>
-      writer.commit(spark, "t", Seq(base.files.head.path), reuseMeta = reuse)
+      writer.commit(spark, "t", Nil)
     }
     // snapshot k has timestamp 1000*(k+1); pick the as-of point between
     // snapshots 250 and 251
@@ -88,10 +86,9 @@ class ManifestScaleSpec extends SparkSpec {
     // per operation — no hidden directory listing or log replay.
     val root = Files.createTempDirectory("graft-m10k-").toString
     val writer = new SnapshotCatalog(root)
-    val base = writer.commit(spark, "t", Seq(oneFile()))
-    val reuse = Map(base.files.head.path -> base.files.head)
+    writer.commit(spark, "t", Seq(oneFile()))
     def commits(n: Int): Unit = (0 until n).foreach { _ =>
-      writer.commit(spark, "t", Seq(base.files.head.path), reuseMeta = reuse)
+      writer.commit(spark, "t", Nil)
     }
     def perCommitMs(n: Int): Double = {
       val t0 = System.nanoTime()
@@ -111,7 +108,7 @@ class ManifestScaleSpec extends SparkSpec {
     assert(reader.manifestParses.get() <= 3,
       s"planFiles parsed ${reader.manifestParses.get()} manifests at 10k snapshots")
     val late = new SnapshotCatalog(root)
-    late.commit(spark, "t", Seq(base.files.head.path), reuseMeta = reuse)
+    late.commit(spark, "t", Nil)
     assert(late.manifestParses.get() <= 3,
       s"commit at 10k snapshots parsed ${late.manifestParses.get()} manifests")
 
@@ -125,15 +122,14 @@ class ManifestScaleSpec extends SparkSpec {
   test("commit cost does not scale with snapshot count (pointer, not list+parse)") {
     val root = Files.createTempDirectory("graft-mcat2-").toString
     val writer = new SnapshotCatalog(root)
-    val base = writer.commit(spark, "t", Seq(oneFile()))
-    val reuse = Map(base.files.head.path -> base.files.head)
+    writer.commit(spark, "t", Seq(oneFile()))
     (1 until 500).foreach { _ =>
-      writer.commit(spark, "t", Seq(base.files.head.path), reuseMeta = reuse)
+      writer.commit(spark, "t", Nil)
     }
     // a fresh committer against the 500-snapshot table: its publish path
     // (currentSnapshot probe) must also be O(1) parses
     val late = new SnapshotCatalog(root)
-    late.commit(spark, "t", Seq(base.files.head.path), reuseMeta = reuse)
+    late.commit(spark, "t", Nil)
     assert(late.manifestParses.get() <= 3,
       s"one metadata commit parsed ${late.manifestParses.get()} manifests; publish must be O(1)")
   }
@@ -141,8 +137,7 @@ class ManifestScaleSpec extends SparkSpec {
   test("readers racing a committer always see a complete, monotonically advancing snapshot") {
     val root = Files.createTempDirectory("graft-race-").toString
     val writer = new SnapshotCatalog(root)
-    val base = writer.commit(spark, "t", Seq(oneFile()))
-    val reuse = Map(base.files.head.path -> base.files.head)
+    writer.commit(spark, "t", Seq(oneFile()))
     val reader = new SnapshotCatalog(root)
     @volatile var failure: Option[Throwable] = None
     @volatile var done = false
@@ -164,7 +159,7 @@ class ManifestScaleSpec extends SparkSpec {
     }
     readerThreads.foreach(_.start())
     (1 until 60).foreach { _ =>
-      writer.commit(spark, "t", Seq(base.files.head.path), reuseMeta = reuse)
+      writer.commit(spark, "t", Nil)
     }
     done = true
     readerThreads.foreach(_.join(10000))

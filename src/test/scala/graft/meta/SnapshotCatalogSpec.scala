@@ -60,7 +60,7 @@ class SnapshotCatalogSpec extends SparkSpec {
     val cat = new SnapshotCatalog(Files.createTempDirectory("graft-cat-").toString, () => t)
     cat.commit(spark, "customer", Seq(low))
     t = 2000L
-    cat.commit(spark, "customer", Seq(low, high))
+    cat.commit(spark, "customer", Seq(high))
 
     assert(cat.snapshots("customer").map(_.snapshotId) == Seq(1L, 2L))
     assert(cat.currentSnapshot("customer").get.snapshotId == 2L)
@@ -131,10 +131,9 @@ class SnapshotCatalogSpec extends SparkSpec {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration._
-    // metadata-only commits (reuseMeta) race on the snapshot id
-    val reuse = Map(base.files.head.path -> base.files.head)
+    // metadata-only commits (no added files) race on the snapshot id
     val fs = (1 to 6).map { _ =>
-      Future(cat.commit(spark, "customer", Seq(base.files.head.path), reuseMeta = reuse))
+      Future(cat.commit(spark, "customer", Nil))
     }
     val snaps = Await.result(Future.sequence(fs), 60.seconds)
     assert(snaps.map(_.snapshotId).distinct.size == 6, "two committers minted the same id")

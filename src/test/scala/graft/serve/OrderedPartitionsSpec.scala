@@ -1,6 +1,7 @@
 package graft.serve
 
 import graft.SparkSpec
+import org.apache.spark.SparkException
 import org.apache.spark.sql.DataFrame
 
 class OrderedPartitionsSpec extends SparkSpec {
@@ -40,6 +41,24 @@ class OrderedPartitionsSpec extends SparkSpec {
     // partitions near the budget run one per job
     val (alone, aloneJobs) = run(firstPartBytes = 1000, budget = 1500)
     assert(alone == (0 until n) && aloneJobs.jobs == n)
+  }
+
+  test("a cancel between two windows ends the stream: no later window runs") {
+    val sc = spark.sparkContext
+    val n = 2 * sc.defaultParallelism
+    val rdd = sc.parallelize(0 until n, n).map(i => Array.fill[Byte](1000)(i.toByte))
+    val group = s"ordered-cancel-${java.util.UUID.randomUUID()}"
+    sc.setJobGroup(group, "cancel between windows", interruptOnCancel = true)
+    val (err, jobs) =
+      try JobCounter.during(spark) {
+        // partitions near the budget: one partition per window
+        val it = OrderedPartitions.iterator(rdd, firstPartBytes = 1000, budget = 1500)
+        assert(it.next().head.head == 0)
+        OrderedPartitions.cancel(sc, group)
+        intercept[SparkException](it.next())
+      } finally sc.clearJobGroup()
+    assert(jobs.jobs == 1, s"a cancelled stream ran ${jobs.jobs} jobs")
+    assert(err.getMessage.contains(group))
   }
 
   test("the first window is sized from the bytes the plan reads") {

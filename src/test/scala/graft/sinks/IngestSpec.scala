@@ -376,8 +376,7 @@ class IngestSpec extends SparkSpec {
     // serving the path value — the two shapes coexist in one table
     val landed2 = dataDir.resolve("day=3")
     Seq((3L, "gamma")).toDF("id", "name").coalesce(1).write.parquet(landed2.toString)
-    cat.commit(spark, "shadowt", snap.files.map(_.path) ++ Writers.listParquetIn(landed2),
-      reuseMeta = snap.files.map(f => f.path -> f).toMap)
+    cat.commit(spark, "shadowt", Writers.listParquetIn(landed2))
     val got2 = cat.read(spark, "shadowt").orderBy("id")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSeq
     assert(got2 == Seq((1L, 1L, "alpha"), (2L, 2L, "beta"), (3L, 3L, "gamma")), s"$got2")

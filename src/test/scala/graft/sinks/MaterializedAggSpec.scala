@@ -3,7 +3,8 @@ package graft.sinks
 import java.nio.file.Files
 
 import graft.{SparkSpec, Tables}
-import graft.meta.SnapshotCatalog
+import graft.meta.{CommitIntent, SnapshotCatalog, SnapshotMeta}
+import graft.serve.PublishRace
 import org.apache.spark.sql.functions._
 
 /** Incremental aggregate views: after every refresh the view must equal
@@ -195,7 +196,8 @@ class MaterializedAggSpec extends SparkSpec {
     cat.commit(spark, "dm_view",
       Writers.listParquetIn(dirA) ++ Writers.listParquetIn(dirB),
       props = snap0.props +
-        (SnapshotCatalog.OperationProp -> SnapshotCatalog.OpRewrite))
+        (SnapshotCatalog.OperationProp -> SnapshotCatalog.OpRewrite),
+      intent = CommitIntent(Some(snap0.snapshotId), removedPaths = snap0.files.map(_.path)))
     val snap1 = cat.currentSnapshot("dm_view").get
     assert(snap1.files.size == 2)
     val fileA = snap1.files.find(_.path.contains(dirA.getFileName.toString)).get
@@ -298,7 +300,8 @@ class MaterializedAggSpec extends SparkSpec {
     cat.commit(spark, "nk_view",
       Writers.listParquetIn(dirA) ++ Writers.listParquetIn(dirB),
       props = snapV.props +
-        (SnapshotCatalog.OperationProp -> SnapshotCatalog.OpRewrite))
+        (SnapshotCatalog.OperationProp -> SnapshotCatalog.OpRewrite),
+      intent = CommitIntent(Some(snapV.snapshotId), removedPaths = snapV.files.map(_.path)))
     Writers.writeSnapshot(cat, "nk_src",
       Seq((Option.empty[String], 7.0, "pC"), (Some("a"), 9.0, "pA"))
         .toDF("k", "v", "p"), s"$base/data")
@@ -323,7 +326,8 @@ class MaterializedAggSpec extends SparkSpec {
     cat.commit(spark, "nk_view",
       Writers.listParquetIn(dirA2) ++ Writers.listParquetIn(dirB2),
       props = snapV2.props +
-        (SnapshotCatalog.OperationProp -> SnapshotCatalog.OpRewrite))
+        (SnapshotCatalog.OperationProp -> SnapshotCatalog.OpRewrite),
+      intent = CommitIntent(Some(snapV2.snapshotId), removedPaths = snapV2.files.map(_.path)))
     Writers.writeSnapshot(cat, "nk_src",
       Seq((Some("b"), 6.0, "pB")).toDF("k", "v", "p"), s"$base/data")
     MaterializedAgg.refreshByName(spark, cat, "nk_view", s"$base/view")
@@ -356,7 +360,8 @@ class MaterializedAggSpec extends SparkSpec {
     cat.commit(spark, "dm3_view",
       Writers.listParquetIn(dirA) ++ Writers.listParquetIn(dirB),
       props = snap0.props +
-        (SnapshotCatalog.OperationProp -> SnapshotCatalog.OpRewrite))
+        (SnapshotCatalog.OperationProp -> SnapshotCatalog.OpRewrite),
+      intent = CommitIntent(Some(snap0.snapshotId), removedPaths = snap0.files.map(_.path)))
     val snap1 = cat.currentSnapshot("dm3_view").get
     val fileA = snap1.files.find(_.path.contains(dirA.getFileName.toString)).get
 
@@ -424,7 +429,8 @@ class MaterializedAggSpec extends SparkSpec {
     cat.commit(spark, "dm2_view",
       Writers.listParquetIn(dirA) ++ Writers.listParquetIn(dirB),
       props = snap0.props +
-        (SnapshotCatalog.OperationProp -> SnapshotCatalog.OpRewrite))
+        (SnapshotCatalog.OperationProp -> SnapshotCatalog.OpRewrite),
+      intent = CommitIntent(Some(snap0.snapshotId), removedPaths = snap0.files.map(_.path)))
     val snap1 = cat.currentSnapshot("dm2_view").get
 
     // the source moves, but every changed row is OUTSIDE the view's
@@ -440,6 +446,49 @@ class MaterializedAggSpec extends SparkSpec {
     assert(snap2.props(MaterializedAgg.RefreshedAtProp).toLong ==
       cat.currentSnapshot("dm2_src").get.snapshotId)
     assert(cat.read(spark, "dm2_view").count() == 40)
+  }
+
+  test("a compaction of the view landing inside a watermark-only refresh survives") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft-mv-race-").toString
+    val race = new PublishRace
+    val cat = new SnapshotCatalog(s"$base/cat", race.clock)
+    val other = new SnapshotCatalog(s"$base/cat")
+    Writers.writeSnapshot(cat, "race_src",
+      (1 to 40).map(k => (k.toLong, k * 1.0)).toDF("k", "v"), s"$base/data")
+    MaterializedAgg.build(spark, cat,
+      MaterializedAgg.MvSpec("race_src", Seq("k"), sums = Seq("v"),
+        where = Some("v < 100.0")),
+      "race_view", s"$base/view")
+    // two files so the refresh takes the delta-merge path
+    val snap0 = cat.currentSnapshot("race_view").get
+    val state = cat.read(spark, "race_view")
+    val dirA = java.nio.file.Paths.get(base, "viewA")
+    val dirB = java.nio.file.Paths.get(base, "viewB")
+    state.filter(col("k") <= 20).coalesce(1).write.parquet(dirA.toString)
+    state.filter(col("k") > 20).coalesce(1).write.parquet(dirB.toString)
+    cat.commit(spark, "race_view",
+      Writers.listParquetIn(dirA) ++ Writers.listParquetIn(dirB),
+      props = snap0.props +
+        (SnapshotCatalog.OperationProp -> SnapshotCatalog.OpRewrite),
+      intent = CommitIntent(Some(snap0.snapshotId), removedPaths = snap0.files.map(_.path)))
+    val rendered = MaterializedAgg.readRendered(spark, cat, "race_view").collect().toSet
+
+    // out-of-scope churn: the refresh only advances the watermark, and a
+    // compaction of the view lands inside its publish
+    Writers.writeSnapshot(cat, "race_src",
+      Seq((200L, 5000.0)).toDF("k", "v"), s"$base/data")
+    var compacted: Option[SnapshotMeta] = None
+    race.arm { compacted = Writers.compact(spark, other, "race_view", s"$base/view") }
+    MaterializedAgg.refreshByName(spark, cat, "race_view", s"$base/view")
+    assert(race.fired && compacted.nonEmpty)
+    val head = cat.currentSnapshot("race_view").get
+    assert(head.parentId.contains(compacted.get.snapshotId))
+    assert(head.files.toSet == compacted.get.files.toSet,
+      "the watermark commit must keep the compaction's files")
+    assert(head.props(MaterializedAgg.RefreshedAtProp).toLong ==
+      cat.currentSnapshot("race_src").get.snapshotId)
+    assert(MaterializedAgg.readRendered(spark, cat, "race_view").collect().toSet == rendered)
   }
 
   test("a key whose rows all vanish leaves the view; no-op refresh commits nothing") {
