@@ -239,6 +239,19 @@ final case class CommitIntent(
     strictBasis: Boolean = false,
     conflictOnAdded: FileMeta => Boolean = _ => false)
 
+/** What one publish attempt changes on its parent — all a commit path
+  * states; [[SnapshotCatalog]]'s one snapshot constructor adds the rest.
+  * Files, delete files and schema default to the parent's. `props` are
+  * the commit's own props plus the table props it sets; `unset` names
+  * the table props it clears. Every other table prop
+  * ([[SnapshotCatalog.TableProps]]) carries from the parent. */
+private[meta] final case class SnapshotChange(
+    files: Option[Seq[FileMeta]] = None,
+    deleteFiles: Option[Seq[DeleteFileMeta]] = None,
+    schemaJson: Option[String] = None,
+    props: Map[String, String] = Map.empty,
+    unset: Seq[String] = Nil)
+
 /** File-skipping predicates evaluated against manifest indices. */
 sealed trait PruneFilter { def column: String }
 /** Equality on a string column: min/max range check + bloom membership. */
@@ -351,7 +364,12 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
     * merge/delete/compact rewrite can't silently strip the index the
     * IN-list scan path depends on. Passing `bloomColumns` explicitly
     * replaces the sticky set. (Iceberg analogue: table write properties
-    * driving puffin/stats maintenance across rewrites.) */
+    * driving puffin/stats maintenance across rewrites.) Which columns
+    * the new files index is read from the head before the stats job;
+    * the table props themselves carry from the publish attempt's parent,
+    * so a prop set by a commit that lands meanwhile survives. `props`
+    * holding [[SnapshotCatalog.MvSrcProp]] restates a materialized
+    * view's whole definition: spec props it omits are cleared. */
   def commit(
       spark: SparkSession,
       table: String,
@@ -396,45 +414,28 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
       val present = survivors.map(_.path).toSet ++ newFiles.map(_.path)
       newFiles ++ survivors ++ intent.addFiles.filterNot(f => present.contains(f.path))
     }
-    val stickyBloomCols =
-      if (bloomColumns.nonEmpty) bloomColumns
-      else currentSnapshot(table)
-        .flatMap(_.props.get(SnapshotCatalog.BloomColumnsProp))
-        .map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Nil)
-    val stickySketchCols =
-      if (sketchColumns.nonEmpty) sketchColumns
-      else currentSnapshot(table)
-        .flatMap(_.props.get(SnapshotCatalog.SketchColumnsProp))
-        .map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Nil)
-    val prevValueProps = currentSnapshot(table).map(_.props).getOrElse(Map.empty)
-    val withSticky = props ++
-      (if (stickyBloomCols.isEmpty) Map.empty
-       else Map(SnapshotCatalog.BloomColumnsProp -> stickyBloomCols.mkString(","))) ++
-      (if (stickySketchCols.isEmpty) Map.empty
-       else Map(SnapshotCatalog.SketchColumnsProp -> stickySketchCols.mkString(","))) ++
-      // value-shaped table metadata (comment, retention policy) is
-      // sticky too: carried unless the caller re-states it explicitly
-      SnapshotCatalog.StickyValueProps.flatMap { k =>
-        prevValueProps.get(k).filterNot(_ => props.contains(k)).map(k -> _)
-      }
+    // the change on top of the attempt's parent: explicitly passed index
+    // columns replace the sticky sets; every other table prop carries
+    def change(prev: Option[SnapshotMeta], newFiles: Seq[FileMeta],
+        schemaJson: Option[String]): SnapshotChange = {
+      val files = resolveFiles(prev, newFiles)
+      SnapshotChange(Some(files), Some(carriedDeletes(prev, files.map(_.path).toSet)),
+        schemaJson,
+        props ++ Seq(SnapshotCatalog.BloomColumnsProp -> bloomColumns,
+            SnapshotCatalog.SketchColumnsProp -> sketchColumns)
+          .collect { case (k, cs) if cs.nonEmpty => k -> cs.mkString(",") },
+        unset = if (props.contains(SnapshotCatalog.MvSrcProp)) SnapshotCatalog.MvSpecProps else Nil)
+    }
     // no new files to scan: metadata-only commits AND fully-empty
     // commits (e.g. a delete that removed every row) carry the schema
     // forward
-    if (newPaths.isEmpty) {
-      return publish(table) { prevOpt =>
-        val prev0 = prevOpt.getOrElse(throw new IllegalArgumentException(
-          s"A commit with no new files requires an existing snapshot for $table (schema source)"))
-        val files = resolveFiles(prevOpt, Nil)
-        SnapshotMeta(
-          snapshotId = prev0.snapshotId + 1,
-          timestampMs = clock(),
-          parentId = Some(prev0.snapshotId),
-          schemaJson = prev0.schemaJson,
-          files = files,
-          props = withSticky,
-          deleteFiles = carriedDeletes(prevOpt, files.map(_.path).toSet))
-      }
-    }
+    if (newPaths.isEmpty)
+      return publishOn(table)(prev => change(Some(prev), Nil, None))
+    val head = currentSnapshot(table)
+    def indexed(given: Seq[String], prop: String): Seq[String] =
+      if (given.nonEmpty) given
+      else head.flatMap(_.props.get(prop)).map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Nil)
+    val bloomCols = indexed(bloomColumns, SnapshotCatalog.BloomColumnsProp)
     val df = spark.read.parquet(newPaths: _*)
     val schema = df.schema
 
@@ -470,7 +471,8 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
     // (file, sketch column), aggregated map-side alongside min/max —
     // zero extra scans. Values sketch as strings (consistent with the
     // bloom index), so any column type is sketchable.
-    val sketchCols = stickySketchCols.filter(c => schema.fieldNames.contains(c))
+    val sketchCols = indexed(sketchColumns, SnapshotCatalog.SketchColumnsProp)
+      .filter(c => schema.fieldNames.contains(c))
     val sketchAggs = sketchCols.map(c =>
       hll_sketch_agg(col(c).cast("string")).as(s"sk__$c"))
 
@@ -529,8 +531,8 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
       normalize(r.getAs[String]("__file")) -> r.getAs[Long]("__rows")
     }.toMap
     val blooms: Map[String, Map[String, String]] =
-      if (stickyBloomCols.isEmpty) Map.empty
-      else buildBlooms(spark, table, newPaths, stickyBloomCols, rowsByFile, bloomFpp)
+      if (bloomCols.isEmpty) Map.empty
+      else buildBlooms(spark, table, newPaths, bloomCols, rowsByFile, bloomFpp)
 
     // committed vector index (r17): while the sticky pq props are in
     // force, every commit's NEW files encode under the table's frozen
@@ -539,7 +541,7 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
     // One codes job over the new files (per-row output can't ride the
     // per-file stats aggregate); cost O(new data), like the bloom build.
     val pqRef: Option[String] = VectorIndex.encodeForCommit(
-      spark, currentSnapshot(table).map(_.props).getOrElse(Map.empty),
+      spark, head.map(_.props).getOrElse(Map.empty),
       schema, newPaths, pqIndexDir(table))
 
     val newFiles = perFile.map { row =>
@@ -632,15 +634,7 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
       // the written files never enter a snapshot and fall to orphan GC
       SnapshotCatalog.enforceNotNull(
         table, merged, schema.fieldNames.toSeq, absentDefaults, defaulted)
-      val files = resolveFiles(prev, defaulted)
-      SnapshotMeta(
-        snapshotId = prev.map(_.snapshotId + 1).getOrElse(1L),
-        timestampMs = clock(),
-        parentId = prev.map(_.snapshotId),
-        schemaJson = merged.json,
-        files = files,
-        props = withSticky,
-        deleteFiles = carriedDeletes(prev, files.map(_.path).toSet))
+      change(prev, defaulted, Some(merged.json))
     }
   }
 
@@ -867,34 +861,24 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
             }.toMap
         }
 
-      last = publish(table) { prevOpt =>
-        val prev = prevOpt.getOrElse(throw new IllegalStateException(
-          s"table $table vanished during index build"))
+      last = publishOn(table) { prev =>
         // sticky merge recomputed from THIS attempt's actual parent —
         // a concurrent indexColumns on OTHER columns keeps its sticky
         // set instead of losing a last-writer-wins race on the props
         def merged(prop: String, add: Seq[String]): Seq[String] =
           (prev.props.get(prop).map(_.split(",").toSeq.filter(_.nonEmpty))
             .getOrElse(Nil) ++ add).distinct
-        val files = prev.files.map(f => f.copy(
-          blooms = f.blooms ++ bloomRefs.getOrElse(f.path, Map.empty),
-          sketches = f.sketches ++ sketchRefs.getOrElse(f.path, Map.empty)))
-        val sticky = Map(
-          SnapshotCatalog.BloomColumnsProp ->
-            merged(SnapshotCatalog.BloomColumnsProp, bloomColumns).mkString(","),
-          SnapshotCatalog.SketchColumnsProp ->
-            merged(SnapshotCatalog.SketchColumnsProp, sketchColumns).mkString(","))
-          .filter(_._2.nonEmpty) ++
-          SnapshotCatalog.StickyValueProps
-            .flatMap(k => prev.props.get(k).map(k -> _))
-        SnapshotMeta(
-          snapshotId = prev.snapshotId + 1,
-          timestampMs = clock(),
-          parentId = Some(prev.snapshotId),
-          schemaJson = prev.schemaJson,
-          files = files,
-          props = sticky + (SnapshotCatalog.OperationProp -> SnapshotCatalog.OpIndex),
-          deleteFiles = prev.deleteFiles)
+        SnapshotChange(
+          files = Some(prev.files.map(f => f.copy(
+            blooms = f.blooms ++ bloomRefs.getOrElse(f.path, Map.empty),
+            sketches = f.sketches ++ sketchRefs.getOrElse(f.path, Map.empty)))),
+          props = Map(
+            SnapshotCatalog.BloomColumnsProp ->
+              merged(SnapshotCatalog.BloomColumnsProp, bloomColumns).mkString(","),
+            SnapshotCatalog.SketchColumnsProp ->
+              merged(SnapshotCatalog.SketchColumnsProp, sketchColumns).mkString(","))
+            .filter(_._2.nonEmpty) +
+            (SnapshotCatalog.OperationProp -> SnapshotCatalog.OpIndex))
       }
       val missing = last.files.count(f => f.rowCount > 0 &&
         (bloomColumns.exists(c => !f.blooms.contains(c)) ||
@@ -919,27 +903,20 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
     require(columns.nonEmpty, s"dropIndexColumns on $table: pass at least one column")
     require(dropBlooms || dropSketches,
       s"dropIndexColumns on $table: nothing to drop")
-    publish(table) { prevOpt =>
-      val prev = prevOpt.getOrElse(
-        throw new IllegalArgumentException(s"No snapshots for table $table"))
-      def without(prop: String, active: Boolean): Map[String, String] =
-        prev.props.get(prop).map(_.split(",").toSeq.filter(_.nonEmpty)
-          .filterNot(c => active && columns.contains(c))).filter(_.nonEmpty)
-          .map(cols => Map(prop -> cols.mkString(","))).getOrElse(Map.empty)
-      SnapshotMeta(
-        snapshotId = prev.snapshotId + 1,
-        timestampMs = clock(),
-        parentId = Some(prev.snapshotId),
-        schemaJson = prev.schemaJson,
-        files = prev.files.map(f => f.copy(
+    publishOn(table) { prev =>
+      // the index-column lists left after the drop; an emptied one clears
+      val left = Seq(SnapshotCatalog.BloomColumnsProp -> dropBlooms,
+          SnapshotCatalog.SketchColumnsProp -> dropSketches).collect { case (p, true) =>
+        p -> prev.props.get(p).toSeq.flatMap(_.split(","))
+          .filter(c => c.nonEmpty && !columns.contains(c)).mkString(",")
+      }
+      SnapshotChange(
+        files = Some(prev.files.map(f => f.copy(
           blooms = if (dropBlooms) f.blooms -- columns else f.blooms,
-          sketches = if (dropSketches) f.sketches -- columns else f.sketches)),
-        props = without(SnapshotCatalog.BloomColumnsProp, dropBlooms) ++
-          without(SnapshotCatalog.SketchColumnsProp, dropSketches) ++
-          SnapshotCatalog.StickyValueProps
-            .flatMap(k => prev.props.get(k).map(k -> _)) +
+          sketches = if (dropSketches) f.sketches -- columns else f.sketches))),
+        props = left.filter(_._2.nonEmpty).toMap +
           (SnapshotCatalog.OperationProp -> SnapshotCatalog.OpIndex),
-        deleteFiles = prev.deleteFiles)
+        unset = left.filter(_._2.isEmpty).map(_._1))
     }
   }
 
@@ -950,8 +927,15 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
     * publish, and on id collision (a concurrent committer won) rebuild
     * against the new current and retry. A crash mid-write never leaves a
     * partial snap-*.json — content lands in a temp file first and
-    * publishes via hard-link (atomic, fails if the id is taken). */
-  private def publish(table: String)(mkSnap: Option[SnapshotMeta] => SnapshotMeta): SnapshotMeta = {
+    * publishes via hard-link (atomic, fails if the id is taken).
+    *
+    * `change` states only what the commit changes on the attempt's
+    * parent ([[SnapshotChange]]); [[snapshotOf]] builds the snapshot.
+    * Table props ([[SnapshotCatalog.TableProps]]) carry from that same
+    * parent unless the change sets or clears them, so a prop set by a
+    * commit that wins a race is never reverted by the retry. */
+  private[meta] def publish(table: String)(
+      change: Option[SnapshotMeta] => SnapshotChange): SnapshotMeta = {
     var attempts = 0
     while (attempts < 100) {
       val prev = currentSnapshot(table)
@@ -961,11 +945,34 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
       if (prev.isEmpty && viewMeta(table).isDefined)
         throw new IllegalArgumentException(
           s"a view named $table exists in this catalog; a table cannot shadow it")
-      val snap = mkSnap(prev)
+      val snap = snapshotOf(table, prev, change(prev))
       if (write(table, snap)) return snap
       attempts += 1
     }
     throw new IllegalStateException(s"snapshot commit contention on $table: gave up after $attempts attempts")
+  }
+
+  /** [[publish]] of a change that needs an existing parent. */
+  private[meta] def publishOn(table: String)(change: SnapshotMeta => SnapshotChange): SnapshotMeta =
+    publish(table)(prev => change(prev.getOrElse(
+      throw new IllegalArgumentException(s"No snapshots for table $table"))))
+
+  /** The one place a snapshot is made: id = parent + 1 (or 1), stamped with
+    * `clock()` after the parent is resolved, lineage to the parent, and
+    * the parent's table props less `unset`, plus `props`. */
+  private def snapshotOf(
+      table: String, prev: Option[SnapshotMeta], c: SnapshotChange): SnapshotMeta = {
+    def parent = prev.getOrElse(throw new IllegalArgumentException(s"No snapshots for table $table"))
+    val carried = prev.map(_.props.filter { case (k, _) =>
+      SnapshotCatalog.TableProps.contains(k) }).getOrElse(Map.empty)
+    SnapshotMeta(
+      snapshotId = prev.map(_.snapshotId + 1).getOrElse(1L),
+      timestampMs = clock(),
+      parentId = prev.map(_.snapshotId),
+      schemaJson = c.schemaJson.getOrElse(parent.schemaJson),
+      files = c.files.getOrElse(parent.files),
+      props = carried -- c.unset ++ c.props,
+      deleteFiles = c.deleteFiles.getOrElse(parent.deleteFiles))
   }
 
   /** Atomically publish one snapshot file; false iff the id is taken.
@@ -1723,9 +1730,11 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
 
   def schema(table: String): Option[StructType] = currentSnapshot(table).map(_.schema)
 
-  /** Reference: metadata.py:110 `get_table_stats`. */
+  /** Reference: metadata.py:110 `get_table_stats`. A table with no
+    * snapshots yields only its id; a snapshot id that names none throws. */
   def tableStats(table: String, snapshotId: Option[Long] = None): Map[String, Any] = {
-    val snapOpt = snapshotId.flatMap(snapshotById(table, _)).orElse(currentSnapshot(table))
+    val snapOpt =
+      if (snapshotId.isEmpty) currentSnapshot(table) else Some(resolveSnapshot(table, snapshotId))
     snapOpt.map { s =>
       Map[String, Any](
         "table_id" -> table,
@@ -1761,9 +1770,7 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
     * predicate's bounds to see which files a prune would keep. */
   def filesDf(spark: SparkSession, table: String, snapshotId: Option[Long] = None): DataFrame = {
     import spark.implicits._
-    val snap = snapshotId.flatMap(snapshotById(table, _))
-      .orElse(currentSnapshot(table))
-      .getOrElse(throw new IllegalArgumentException(s"No snapshots for table $table"))
+    val snap = resolveSnapshot(table, snapshotId)
     snap.files.map { f =>
       (f.path, f.sizeBytes, f.rowCount, f.partitionValues,
         f.stats.keys.toSeq.sorted, f.blooms.keys.toSeq.sorted,
@@ -1782,9 +1789,7 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
     * assembly bounded by manifest size. */
   def partitionsDf(spark: SparkSession, table: String, snapshotId: Option[Long] = None): DataFrame = {
     import spark.implicits._
-    val snap = snapshotId.flatMap(snapshotById(table, _))
-      .orElse(currentSnapshot(table))
-      .getOrElse(throw new IllegalArgumentException(s"No snapshots for table $table"))
+    val snap = resolveSnapshot(table, snapshotId)
     val delRows: Map[String, Long] = snap.deleteFiles
       .flatMap(d => d.dataPaths.map(_ -> d.rowCount))
       .groupBy(_._1).view.mapValues(_.map(_._2).sum).toMap
@@ -1800,9 +1805,7 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
     * files its entries reference. Bounded by metadata size. */
   def deleteFilesDf(spark: SparkSession, table: String, snapshotId: Option[Long] = None): DataFrame = {
     import spark.implicits._
-    val snap = snapshotId.flatMap(snapshotById(table, _))
-      .orElse(currentSnapshot(table))
-      .getOrElse(throw new IllegalArgumentException(s"No snapshots for table $table"))
+    val snap = resolveSnapshot(table, snapshotId)
     snap.deleteFiles.map { d =>
       (d.path,
         if (d.isEquality) "equality" else "position",
@@ -1887,9 +1890,7 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
   def renameColumn(table: String, from: String, to: String): SnapshotMeta = {
     require(to.matches("[A-Za-z_][A-Za-z0-9_]*"), s"invalid column name: $to")
     requireNoDependentViews(table, Some(from), s"rename column $table.$from")
-    publish(table) { prevOpt =>
-      val prev = prevOpt.getOrElse(
-        throw new IllegalArgumentException(s"No snapshots for table $table"))
+    publishOn(table) { prev =>
       val sch = prev.schema
       require(sch.fieldNames.contains(from), s"no column $from on $table")
       require(!sch.fieldNames.contains(to), s"column $to already exists on $table")
@@ -1905,17 +1906,10 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
           sketches = rekey(f.sketches), partitionValues = rekey(f.partitionValues),
           renames = f.renames - phys + (phys -> to), defaults = rekey(f.defaults))
       }
-      SnapshotMeta(
-        snapshotId = prev.snapshotId + 1,
-        timestampMs = clock(),
-        parentId = Some(prev.snapshotId),
-        schemaJson = StructType(sch.fields.map(f =>
-          if (f.name == from) f.copy(name = to) else f)).json,
-        files = files,
-        props = stickyRenamed(prev, from, Some(to)) ++ Map(
-          SnapshotCatalog.OperationProp -> SnapshotCatalog.OpSchemaEvolve,
-          SnapshotCatalog.RenameProp -> s"$from->$to"),
-        deleteFiles = prev.deleteFiles)
+      schemaEvolved(sch.fields.map(f => if (f.name == from) f.copy(name = to) else f),
+        Some(files), stickyRenamed(prev, from, Some(to)) +
+          (SnapshotCatalog.RenameProp -> s"$from->$to"))
+        .copy(unset = SnapshotCatalog.StickyProps)
     }
   }
 
@@ -1928,9 +1922,7 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
     * equality-delete file keys on the column. */
   def dropColumn(table: String, name: String): SnapshotMeta = {
     requireNoDependentViews(table, Some(name), s"drop column $table.$name")
-    publish(table) { prevOpt =>
-      val prev = prevOpt.getOrElse(
-        throw new IllegalArgumentException(s"No snapshots for table $table"))
+    publishOn(table) { prev =>
       val sch = prev.schema
       require(sch.fieldNames.contains(name), s"no column $name on $table")
       require(sch.fields.length > 1, s"cannot drop the only column of $table")
@@ -1943,16 +1935,9 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
           renames = f.renames - phys + (phys -> s"__graft_dropped__$name"),
           defaults = f.defaults - name)
       }
-      SnapshotMeta(
-        snapshotId = prev.snapshotId + 1,
-        timestampMs = clock(),
-        parentId = Some(prev.snapshotId),
-        schemaJson = StructType(sch.fields.filterNot(_.name == name)).json,
-        files = files,
-        props = stickyRenamed(prev, name, None) ++ Map(
-          SnapshotCatalog.OperationProp -> SnapshotCatalog.OpSchemaEvolve,
-          SnapshotCatalog.DropProp -> name),
-        deleteFiles = prev.deleteFiles)
+      schemaEvolved(sch.fields.filterNot(_.name == name), Some(files),
+        stickyRenamed(prev, name, None) + (SnapshotCatalog.DropProp -> name))
+        .copy(unset = SnapshotCatalog.StickyProps)
     }
   }
 
@@ -1985,9 +1970,7 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
         s"NOT NULL on ${dataType.catalogString} cannot be enforced from commit " +
           "stats; supported: numeric, string, date, timestamp")
     }
-    publish(table) { prevOpt =>
-      val prev = prevOpt.getOrElse(
-        throw new IllegalArgumentException(s"No snapshots for table $table"))
+    publishOn(table) { prev =>
       require(!prev.schema.fieldNames.exists(_.equalsIgnoreCase(name)),
         s"column $name already exists on $table")
       val meta = rendered.map { r =>
@@ -2002,19 +1985,8 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
         case Some(r) => prev.files.map(f => f.copy(defaults = f.defaults + (name -> r)))
         case None => prev.files
       }
-      val sticky = SnapshotCatalog.StickyProps
-        .flatMap(k => prev.props.get(k).map(k -> _)).toMap
-      SnapshotMeta(
-        snapshotId = prev.snapshotId + 1,
-        timestampMs = clock(),
-        parentId = Some(prev.snapshotId),
-        schemaJson = StructType(prev.schema.fields :+
-          org.apache.spark.sql.types.StructField(name, dataType, nullable = nullable,
-            metadata = meta)).json,
-        files = files,
-        props = sticky ++ Map(
-          SnapshotCatalog.OperationProp -> SnapshotCatalog.OpSchemaEvolve),
-        deleteFiles = prev.deleteFiles)
+      schemaEvolved(prev.schema.fields :+ org.apache.spark.sql.types.StructField(
+        name, dataType, nullable = nullable, metadata = meta), Some(files))
     }
   }
 
@@ -2040,20 +2012,11 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
     require(SnapshotCatalog.StickyValueProps.contains(key),
       s"not a sticky table-level value prop: $key " +
         s"(owned: ${SnapshotCatalog.StickyValueProps.mkString(", ")})")
-    publish(table) { prevOpt =>
-      val prev = prevOpt.getOrElse(
-        throw new IllegalArgumentException(s"No snapshots for table $table"))
-      val sticky = SnapshotCatalog.StickyProps.filterNot(_ == key)
-        .flatMap(k => prev.props.get(k).map(k -> _)).toMap
-      SnapshotMeta(
-        snapshotId = prev.snapshotId + 1,
-        timestampMs = clock(),
-        parentId = Some(prev.snapshotId),
-        schemaJson = prev.schemaJson,
-        files = prev.files,
-        props = sticky ++ value.map(key -> _) +
+    publishOn(table) { prev =>
+      SnapshotChange(
+        props = value.map(key -> _).toMap +
           (SnapshotCatalog.OperationProp -> SnapshotCatalog.OpSchemaEvolve),
-        deleteFiles = prev.deleteFiles)
+        unset = Seq(key))
     }
   }
 
@@ -2063,34 +2026,20 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
     * and renders wherever Spark renders comments. Metadata-only. */
   def setColumnComment(table: String, name: String,
       comment: Option[String]): SnapshotMeta =
-    publish(table) { prevOpt =>
-      val prev = prevOpt.getOrElse(
-        throw new IllegalArgumentException(s"No snapshots for table $table"))
+    publishOn(table) { prev =>
       val field = prev.schema.fields.find(_.name == name).getOrElse(
         throw new IllegalArgumentException(s"no column $name on $table"))
       val mb = new org.apache.spark.sql.types.MetadataBuilder()
         .withMetadata(field.metadata)
         .remove("comment")
       comment.foreach(mb.putString("comment", _))
-      val sticky = SnapshotCatalog.StickyProps
-        .flatMap(k => prev.props.get(k).map(k -> _)).toMap
-      SnapshotMeta(
-        snapshotId = prev.snapshotId + 1,
-        timestampMs = clock(),
-        parentId = Some(prev.snapshotId),
-        schemaJson = StructType(prev.schema.fields.map(f =>
-          if (f.name == name) f.copy(metadata = mb.build()) else f)).json,
-        files = prev.files,
-        props = sticky ++ Map(
-          SnapshotCatalog.OperationProp -> SnapshotCatalog.OpSchemaEvolve),
-        deleteFiles = prev.deleteFiles)
+      schemaEvolved(prev.schema.fields.map(f =>
+        if (f.name == name) f.copy(metadata = mb.build()) else f))
     }
 
   def setColumnDefault(table: String, name: String,
       defaultSql: Option[String]): SnapshotMeta =
-    publish(table) { prevOpt =>
-      val prev = prevOpt.getOrElse(
-        throw new IllegalArgumentException(s"No snapshots for table $table"))
+    publishOn(table) { prev =>
       val field = prev.schema.fields.find(_.name == name).getOrElse(
         throw new IllegalArgumentException(s"no column $name on $table"))
       val rendered = defaultSql.map(
@@ -2102,18 +2051,8 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
         .withMetadata(field.metadata)
         .remove(SnapshotCatalog.WriteDefaultMetaKey)
       rendered.foreach(mb.putString(SnapshotCatalog.WriteDefaultMetaKey, _))
-      val sticky = SnapshotCatalog.StickyProps
-        .flatMap(k => prev.props.get(k).map(k -> _)).toMap
-      SnapshotMeta(
-        snapshotId = prev.snapshotId + 1,
-        timestampMs = clock(),
-        parentId = Some(prev.snapshotId),
-        schemaJson = StructType(prev.schema.fields.map(f =>
-          if (f.name == name) f.copy(metadata = mb.build()) else f)).json,
-        files = prev.files,
-        props = sticky ++ Map(
-          SnapshotCatalog.OperationProp -> SnapshotCatalog.OpSchemaEvolve),
-        deleteFiles = prev.deleteFiles)
+      schemaEvolved(prev.schema.fields.map(f =>
+        if (f.name == name) f.copy(metadata = mb.build()) else f))
     }
 
   /** Tighten or relax a column's nullability (`ALTER COLUMN c SET NOT
@@ -2126,9 +2065,7 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
     * it already runs — a violating write aborts before publish. */
   def setColumnNullability(spark: SparkSession, table: String, name: String,
       nullable: Boolean): SnapshotMeta =
-    publish(table) { prevOpt =>
-      val prev = prevOpt.getOrElse(
-        throw new IllegalArgumentException(s"No snapshots for table $table"))
+    publishOn(table) { prev =>
       val field = prev.schema.fields.find(_.name == name).getOrElse(
         throw new IllegalArgumentException(s"no column $name on $table"))
       if (!nullable) {
@@ -2156,18 +2093,8 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
               s"(checked ${unproven.size} file(s) without a manifest proof)")
         }
       }
-      val sticky = SnapshotCatalog.StickyProps
-        .flatMap(k => prev.props.get(k).map(k -> _)).toMap
-      SnapshotMeta(
-        snapshotId = prev.snapshotId + 1,
-        timestampMs = clock(),
-        parentId = Some(prev.snapshotId),
-        schemaJson = StructType(prev.schema.fields.map(f =>
-          if (f.name == name) f.copy(nullable = nullable) else f)).json,
-        files = prev.files,
-        props = sticky ++ Map(
-          SnapshotCatalog.OperationProp -> SnapshotCatalog.OpSchemaEvolve),
-        deleteFiles = prev.deleteFiles)
+      schemaEvolved(prev.schema.fields.map(f =>
+        if (f.name == name) f.copy(nullable = nullable) else f))
     }
 
   /** Widen a column's type along the Iceberg promotion lattice
@@ -2185,9 +2112,7 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
     * (its stored key tuples would compare under a different type). */
   def widenColumn(table: String, name: String,
       to: org.apache.spark.sql.types.DataType): SnapshotMeta =
-    publish(table) { prevOpt =>
-      val prev = prevOpt.getOrElse(
-        throw new IllegalArgumentException(s"No snapshots for table $table"))
+    publishOn(table) { prev =>
       val sch = prev.schema
       val field = sch.fields.find(_.name == name).getOrElse(
         throw new IllegalArgumentException(s"no column $name on $table"))
@@ -2203,21 +2128,17 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
         if (f.physTypes.contains(phys)) f // bytes unchanged since first widen
         else f.copy(physTypes = f.physTypes + (phys -> from.catalogString))
       }
-      val sticky = SnapshotCatalog.StickyProps
-        .flatMap(k => prev.props.get(k).map(k -> _)).toMap
-      SnapshotMeta(
-        snapshotId = prev.snapshotId + 1,
-        timestampMs = clock(),
-        parentId = Some(prev.snapshotId),
-        schemaJson = StructType(sch.fields.map(f =>
-          if (f.name == name) f.copy(dataType = to) else f)).json,
-        files = files,
-        props = sticky ++ Map(
-          SnapshotCatalog.OperationProp -> SnapshotCatalog.OpSchemaEvolve,
-          SnapshotCatalog.WidenProp ->
-            s"$name:${from.catalogString}->${to.catalogString}"),
-        deleteFiles = prev.deleteFiles)
+      schemaEvolved(sch.fields.map(f => if (f.name == name) f.copy(dataType = to) else f),
+        Some(files),
+        Map(SnapshotCatalog.WidenProp -> s"$name:${from.catalogString}->${to.catalogString}"))
     }
+
+  /** A schema change to `fields`, labeled schema-evolve, with `extra`
+    * commit props; files default to the parent's. */
+  private def schemaEvolved(fields: Seq[StructField], files: Option[Seq[FileMeta]] = None,
+      extra: Map[String, String] = Map.empty): SnapshotChange =
+    SnapshotChange(files, schemaJson = Some(StructType(fields).json),
+      props = extra + (SnapshotCatalog.OperationProp -> SnapshotCatalog.OpSchemaEvolve))
 
   /** Sticky bloom/sketch column props with `from` renamed to `to`
     * (dropped when `to` is None); the table comment rides verbatim —
@@ -2292,27 +2213,18 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
       table: String,
       name: String,
       fromSnapshotId: Option[Long] = None): SnapshotMeta = {
-    val src = fromSnapshotId.map(id => snapshotById(table, id).getOrElse(
-        throw new IllegalArgumentException(s"Snapshot $id not found for $table")))
-      .orElse(currentSnapshot(table))
-      .getOrElse(throw new IllegalArgumentException(s"No snapshots for table $table"))
+    val src = resolveSnapshot(table, fromSnapshotId)
     val ref = branchRef(table, name)
     val sticky = src.props.filter { case (k, _) =>
       SnapshotCatalog.StickyProps.contains(k) }
     publish(ref) { prev =>
       if (prev.isDefined)
         throw new IllegalStateException(s"branch $name already exists on $table")
-      SnapshotMeta(
-        snapshotId = 1L,
-        timestampMs = clock(),
-        parentId = None,
-        schemaJson = src.schemaJson,
-        files = src.files,
-        props = sticky ++ Map(
+      SnapshotChange(Some(src.files), Some(src.deleteFiles), Some(src.schemaJson),
+        sticky ++ Map(
           SnapshotCatalog.OperationProp -> SnapshotCatalog.OpAppend,
           SnapshotCatalog.ForkTableProp -> table,
-          SnapshotCatalog.ForkIdProp -> src.snapshotId.toString),
-        deleteFiles = src.deleteFiles)
+          SnapshotCatalog.ForkIdProp -> src.snapshotId.toString))
     }
   }
 
@@ -2338,26 +2250,17 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
     * the source's retention window, or `compact` the clone (rewrites
     * its live rows into its own directories) to sever the tie. */
   def cloneTable(src: String, dst: String, fromSnapshotId: Option[Long] = None): SnapshotMeta = {
-    val s = fromSnapshotId.map(id => snapshotById(src, id).getOrElse(
-        throw new IllegalArgumentException(s"Snapshot $id not found for $src")))
-      .orElse(currentSnapshot(src))
-      .getOrElse(throw new IllegalArgumentException(s"No snapshots for table $src"))
+    val s = resolveSnapshot(src, fromSnapshotId)
     val sticky = s.props.filter { case (k, _) =>
       SnapshotCatalog.StickyProps.contains(k) }
     publish(dst) { prev =>
       if (prev.isDefined)
         throw new IllegalStateException(s"table $dst already exists; clone targets must be new")
-      SnapshotMeta(
-        snapshotId = 1L,
-        timestampMs = clock(),
-        parentId = None,
-        schemaJson = s.schemaJson,
-        files = s.files,
-        props = sticky ++ Map(
+      SnapshotChange(Some(s.files), Some(s.deleteFiles), Some(s.schemaJson),
+        sticky ++ Map(
           SnapshotCatalog.OperationProp -> SnapshotCatalog.OpAppend,
           SnapshotCatalog.ForkTableProp -> src,
-          SnapshotCatalog.ForkIdProp -> s.snapshotId.toString),
-        deleteFiles = s.deleteFiles)
+          SnapshotCatalog.ForkIdProp -> s.snapshotId.toString))
     }
   }
 
@@ -2404,24 +2307,18 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
     var head = cur
     chain.tail.foreach { bs =>
       val expectedParent = head.snapshotId
-      head = publish(table) { prevOpt =>
-        val prev = prevOpt.getOrElse(throw new IllegalStateException(
-          s"table $table vanished mid-fast-forward"))
+      head = publishOn(table) { prev =>
         // a concurrent committer interleaving mid-publish would silently
         // reorder history — abort instead (the branch is untouched)
         if (prev.snapshotId != expectedParent)
           throw new IllegalStateException(
             s"concurrent commit on $table during fast-forward of $name " +
               s"(expected head $expectedParent, found ${prev.snapshotId})")
-        SnapshotMeta(
-          snapshotId = prev.snapshotId + 1,
-          timestampMs = clock(),
-          parentId = Some(prev.snapshotId),
-          schemaJson = bs.schemaJson,
-          files = bs.files,
-          props = bs.props - SnapshotCatalog.ForkTableProp - SnapshotCatalog.ForkIdProp +
+        // the branch commit's props replace the head's, table props too
+        SnapshotChange(Some(bs.files), Some(bs.deleteFiles), Some(bs.schemaJson),
+          bs.props - SnapshotCatalog.ForkTableProp - SnapshotCatalog.ForkIdProp +
             (SnapshotCatalog.FastForwardOfProp -> s"$name@${bs.snapshotId}"),
-          deleteFiles = bs.deleteFiles)
+          unset = SnapshotCatalog.TableProps)
       }
     }
     head
@@ -2531,9 +2428,7 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
       table: String,
       column: String,
       snapshotId: Option[Long] = None): Option[Long] = {
-    val snap = snapshotId.flatMap(snapshotById(table, _))
-      .orElse(currentSnapshot(table))
-      .getOrElse(throw new IllegalArgumentException(s"No snapshots for table $table"))
+    val snap = resolveSnapshot(table, snapshotId)
     if (snap.files.exists(f => f.rowCount > 0 && !f.sketches.contains(column))) None
     else {
       // a sidecar another catalog dropped/vacuumed makes the estimate
@@ -2558,7 +2453,10 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
     * are checked first — exact, no footer or stats needed — then column
     * stats and blooms. */
   private[meta] def fileMatches(f: FileMeta, filters: Seq[PruneFilter]): Boolean =
-    filters.forall {
+    filters.forall(matches(f, _))
+
+  private def matches(f: FileMeta, filter: PruneFilter): Boolean =
+    filter match {
       case EqString(c, v) =>
         f.partitionValues.get(c) match {
           case Some(pv) => pv == v
@@ -2594,20 +2492,7 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
               }
             }
         }
-      case InString(c, vs) =>
-        f.partitionValues.get(c) match {
-          case Some(pv) => vs.contains(pv)
-          case None => vs.exists { v =>
-            val rangeOk = f.stats.get(c).forall { st =>
-              (st.minS, st.maxS) match {
-                case (Some(mi), Some(ma)) => mi <= v && v <= ma
-                case _ => true
-              }
-            }
-            val bloomOk = f.bloomFor(c).forall(_.mightContainString(v))
-            rangeOk && bloomOk
-          }
-        }
+      case InString(c, vs) => vs.exists(v => matches(f, EqString(c, v)))
     }
 
   /** Project `df` into `target`'s columns and order: missing columns
@@ -2630,15 +2515,25 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
       table: String,
       filters: Seq[PruneFilter] = Nil,
       snapshotId: Option[Long] = None,
-      asOfTimestampMs: Option[Long] = None): Seq[FileMeta] = {
-    val snap = snapshotId.map(id =>
-        snapshotById(table, id).getOrElse(throw new IllegalArgumentException(
-          s"Snapshot $id not found for table $table")))
-      .orElse(asOfTimestampMs.flatMap(snapshotAsOf(table, _)))
-      .orElse(currentSnapshot(table))
-      .getOrElse(throw new IllegalArgumentException(s"No snapshots for table $table"))
-    snap.files.filter(fileMatches(_, filters))
-  }
+      asOfTimestampMs: Option[Long] = None): Seq[FileMeta] =
+    resolveSnapshot(table, snapshotId, asOfTimestampMs).files.filter(fileMatches(_, filters))
+
+  /** The snapshot a read names: `snapshotId` if given, else the one
+    * current at `asOfTimestampMs` if given, else the head. Throws when
+    * the named snapshot does not exist — a reader that asked for a
+    * version never silently gets another one. */
+  private[graft] def resolveSnapshot(
+      table: String,
+      snapshotId: Option[Long] = None,
+      asOfTimestampMs: Option[Long] = None): SnapshotMeta =
+    (snapshotId, asOfTimestampMs) match {
+      case (Some(id), _) => snapshotById(table, id).getOrElse(
+        throw new IllegalArgumentException(s"Snapshot $id not found for table $table"))
+      case (None, Some(ts)) => snapshotAsOf(table, ts).getOrElse(
+        throw new IllegalArgumentException(s"No snapshot of $table at or before $ts ms"))
+      case _ => currentSnapshot(table).getOrElse(
+        throw new IllegalArgumentException(s"No snapshots for table $table"))
+    }
 
   /** Incremental read: rows APPENDED between `fromSnapshotId`
     * (exclusive) and `toSnapshotId` (inclusive; default current) — the
@@ -3137,15 +3032,6 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
     if (dryRun) doomed else doomed.filter(p => Files.deleteIfExists(Paths.get(p)))
   }
 
-  /** GC orphan bloom/sketch SIDECARS: every rewrite retires its inputs'
-    * index files, and after the inputs' snapshots expire nothing
-    * references those sidecars — on a streaming table (a commit per
-    * micro-batch, sticky indexing) they otherwise accumulate forever.
-    * A sidecar is live iff ANY surviving snapshot of the table or its
-    * branches references it (legacy inline-base64 bloom values are not
-    * paths and are skipped). Same grace window as the data vacuum so a
-    * mid-commit sidecar written before its manifest survives. Returns
-    * deleted paths. */
   // ---- committed vector index accessors (r17, [[VectorIndex]]) ---------
 
   /** Sidecar dir of the committed vector index (model JSONs + per-commit
@@ -3160,30 +3046,15 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
       spark: SparkSession, snap: SnapshotMeta, paths: Seq[String]): DataFrame =
     readLogical(spark, snap.schema, snap, paths, withLineage = true)
 
-  /** Metadata-only index commit (the [[indexColumns]] publish shape,
-    * parameterized): `fn` maps the ACTUAL parent at publish time to the
-    * replacement file list + the index props to (re)state; every other
-    * sticky prop carries, the file SET is unchanged so CDC/incremental
-    * readers see nothing, and the commit is labeled [[SnapshotCatalog.OpIndex]]. */
-  private[meta] def publishIndexCommit(table: String)(
-      fn: SnapshotMeta => (Seq[FileMeta], Map[String, String])): SnapshotMeta =
-    publish(table) { prevOpt =>
-      val prev = prevOpt.getOrElse(throw new IllegalStateException(
-        s"table $table vanished during index build"))
-      val (files, extra) = fn(prev)
-      val sticky = SnapshotCatalog.StickyProps
-        .flatMap(k => prev.props.get(k).map(k -> _)).toMap
-      SnapshotMeta(
-        snapshotId = prev.snapshotId + 1,
-        timestampMs = clock(),
-        parentId = Some(prev.snapshotId),
-        schemaJson = prev.schemaJson,
-        files = files,
-        props = sticky ++ extra +
-          (SnapshotCatalog.OperationProp -> SnapshotCatalog.OpIndex),
-        deleteFiles = prev.deleteFiles)
-    }
-
+  /** GC orphan bloom/sketch SIDECARS: every rewrite retires its inputs'
+    * index files, and after the inputs' snapshots expire nothing
+    * references those sidecars — on a streaming table (a commit per
+    * micro-batch, sticky indexing) they otherwise accumulate forever.
+    * A sidecar is live iff ANY surviving snapshot of the table or its
+    * branches references it (legacy inline-base64 bloom values are not
+    * paths and are skipped). Same grace window as the data vacuum so a
+    * mid-commit sidecar written before its manifest survives. Returns
+    * deleted paths. */
   def vacuumSidecars(table: String, graceMs: Long = 3600 * 1000L,
       dryRun: Boolean = false): Seq[String] = {
     def refsOf(chain: Seq[SnapshotMeta]): Seq[String] =
@@ -3442,20 +3313,15 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
     * `time_travel_scan`). Returns an empty frame with the snapshot schema
     * when every file is pruned. Outstanding MoR position deletes are
     * applied (see [[visibleRows]]); min/max/bloom pruning stays sound
-    * because a file's visible rows are a subset of its raw rows. */
+    * because a file's visible rows are a subset of its raw rows. A
+    * snapshot id or as-of time that names no snapshot throws. */
   def read(
       spark: SparkSession,
       table: String,
       filters: Seq[PruneFilter] = Nil,
       snapshotId: Option[Long] = None,
-      asOfTimestampMs: Option[Long] = None): DataFrame = {
-    val snap = snapshotId.flatMap(snapshotById(table, _))
-      .orElse(asOfTimestampMs.flatMap(snapshotAsOf(table, _)))
-      .orElse(currentSnapshot(table))
-      .getOrElse(throw new IllegalArgumentException(s"No snapshots for table $table"))
-    val files = snap.files.filter(fileMatches(_, filters))
-    visibleRows(spark, snap, files.map(_.path))
-  }
+      asOfTimestampMs: Option[Long] = None): DataFrame =
+    readSnapshot(spark, resolveSnapshot(table, snapshotId, asOfTimestampMs), filters)
 
   /** Read an already-RESOLVED snapshot — no name re-resolution and no
     * current-head fallback: the caller pinned the state, and a reader
@@ -3489,9 +3355,7 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
       smallest: Boolean = false,
       snapshotId: Option[Long] = None): Seq[FileMeta] = {
     require(k > 0, "k must be positive")
-    val snap = snapshotId.flatMap(snapshotById(table, _))
-      .orElse(currentSnapshot(table))
-      .getOrElse(throw new IllegalArgumentException(s"No snapshots for table $table"))
+    val snap = resolveSnapshot(table, snapshotId)
     val masked: Set[String] = snap.deleteFiles.flatMap(_.dataPaths).toSet
     // (guaranteedValue, bestValue, guaranteedRows) per file, numeric or
     // lexicographic — None when the file can't participate in bounding
@@ -3548,9 +3412,7 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
       smallest: Boolean = false,
       extraOrder: Seq[Column] = Nil,
       snapshotId: Option[Long] = None): DataFrame = {
-    val snap = snapshotId.flatMap(snapshotById(table, _))
-      .orElse(currentSnapshot(table))
-      .getOrElse(throw new IllegalArgumentException(s"No snapshots for table $table"))
+    val snap = resolveSnapshot(table, snapshotId)
     val kept = topKFiles(table, column, k, smallest, Some(snap.snapshotId))
     val key = if (smallest) asc_nulls_last(column) else desc_nulls_last(column)
     visibleRows(spark, snap, kept.map(_.path))
@@ -3770,17 +3632,18 @@ object SnapshotCatalog {
   val StickyColumnProps: Seq[String] = Seq(BloomColumnsProp, SketchColumnsProp)
 
   /** Value-shaped sticky props carried VERBATIM by every commit unless
-    * the commit restates them (table comment, retention policy). Any
-    * new table-level metadata belongs here — the carry sites iterate
-    * this list, so a prop added here is automatically kept by every
-    * commit path (the r13 comment-dropping bug class can't recur). */
+    * the commit restates or clears them (table comment, retention
+    * policy). Any new user-facing table-level metadata belongs here —
+    * publish carries it, so a prop added here is kept by every commit
+    * path (the r13 comment-dropping bug class can't recur). */
   val StickyValueProps: Seq[String] = Seq(
     CommentProp, RetentionSnapshotsProp, RetentionAgeMsProp,
     RetentionRowsColumnProp, RetentionRowsMsProp,
     PqColumnsProp, PqModelProp, PqGenerationProp)
 
   /** Every sticky table-level prop: carried by commits, branch forks,
-    * clones and renames; restated only by its owning DDL. */
+    * clones and renames; restated only by its owning DDL. The SQL
+    * surface (TBLPROPERTIES, SHOW CREATE TABLE) takes exactly these. */
   val StickyProps: Seq[String] = StickyColumnProps ++ StickyValueProps
 
   /** Is `t` a safe table ref: `<name>` or `<name>/branches/<name>…`
@@ -3800,6 +3663,22 @@ object SnapshotCatalog {
     * SOURCE table ([[graft.sinks.MaterializedAgg]] writes it; DDL's
     * dependent-MV arbitration reads it). */
   val MvSrcProp = "graft.view.src"
+
+  /** A materialized aggregate view's definition: source table, key and
+    * aggregate columns, optional predicate. One unit — a commit stating
+    * [[MvSrcProp]] restates it all, and the keys it omits are cleared. */
+  val MvSpecProps: Seq[String] = MvSrcProp +:
+    Seq("keys", "sums", "avgs", "mins", "maxs", "nds", "where").map(k => s"graft.view.$k")
+
+  /** A materialized view's watermark: the source snapshot it equals. */
+  val MvRefreshedAtProp = "graft.view.refreshed_at"
+
+  /** Table-level props: what publish carries from a commit's parent
+    * unless the commit sets or clears them. Every other prop is the
+    * commit's own (operation, lineage, streaming batch ids) and never
+    * carries — sink idempotence depends on that. The engine-internal
+    * view props are not settable through TBLPROPERTIES. */
+  val TableProps: Seq[String] = StickyProps ++ MvSpecProps :+ MvRefreshedAtProp
 
   /** Rename-protocol markers ([[SnapshotCatalog.renameTable]]): a table
     * dir carrying either reads as absent — `.rename-pending` gates the

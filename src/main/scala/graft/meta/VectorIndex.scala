@@ -198,7 +198,7 @@ object VectorIndex {
         Some(writeCodes(scan, idCol, vecCol, model, out))
       }
 
-    catalog.publishIndexCommit(table) { prev =>
+    catalog.publishOn(table) { prev =>
       // stamp ONLY the files this build actually encoded: a file
       // committed concurrently between the scan above and this publish
       // carries no codes yet — leaving it unstamped makes [[search]]
@@ -211,10 +211,11 @@ object VectorIndex {
         else if (f.rowCount == 0) f.copy(pqCodes = None)
         else f
       }
-      (files, Map(
+      SnapshotChange(Some(files), props = Map(
         SnapshotCatalog.PqColumnsProp -> s"$idCol:$vecCol",
         SnapshotCatalog.PqModelProp -> modelRef,
-        SnapshotCatalog.PqGenerationProp -> gen.toString))
+        SnapshotCatalog.PqGenerationProp -> gen.toString,
+        SnapshotCatalog.OperationProp -> SnapshotCatalog.OpIndex))
     }
   }
 
@@ -258,9 +259,7 @@ object VectorIndex {
       catalog: SnapshotCatalog,
       table: String,
       snapshotId: Option[Long] = None): (VecModel, DataFrame) = {
-    val snap = snapshotId.flatMap(catalog.snapshotById(table, _))
-      .orElse(catalog.currentSnapshot(table))
-      .getOrElse(throw new IllegalArgumentException(s"No snapshots for table $table"))
+    val snap = catalog.resolveSnapshot(table, snapshotId)
     require(snap.deleteFiles.isEmpty,
       s"PQ search on $table: snapshot ${snap.snapshotId} has outstanding MoR/equality " +
         "deletes — a masked row's committed codes would resurface as a phantom " +

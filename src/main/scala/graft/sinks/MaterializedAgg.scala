@@ -57,13 +57,15 @@ import org.apache.spark.sql.functions._
 object MaterializedAgg {
 
   /** Prop on the view's snapshots: the source snapshot the view equals. */
-  val RefreshedAtProp = "graft.view.refreshed_at"
+  val RefreshedAtProp = SnapshotCatalog.MvRefreshedAtProp
 
   /** Props on the view's snapshots recording its own definition (source
-    * table, key columns, aggregate columns, optional predicate) —
-    * written by [[build]] and carried by every [[refresh]], so a
-    * scheduled maintenance job can drive a refresh from the VIEW NAME
-    * ALONE ([[refreshByName]], the `CALL graft.refresh_mv` surface). */
+    * table, key columns, aggregate columns, optional predicate; the
+    * catalog's [[SnapshotCatalog.MvSpecProps]]) — written by [[build]]
+    * and carried by every later commit of the view (refreshes,
+    * compactions, DDL), so a scheduled maintenance job can drive a
+    * refresh from the VIEW NAME ALONE ([[refreshByName]], the
+    * `CALL graft.refresh_mv` surface). */
   val SrcProp = SnapshotCatalog.MvSrcProp
   val KeysProp = "graft.view.keys"
   val SumsProp = "graft.view.sums"
@@ -420,7 +422,8 @@ object MaterializedAgg {
         spec)
     }
 
-    val newProps = specProps(spec) + (RefreshedAtProp -> srcSnap.snapshotId.toString)
+    // the definition carries; a refresh states only its new watermark
+    val newProps = Map(RefreshedAtProp -> srcSnap.snapshotId.toString)
     if (useMerge) {
       // DELTA-MERGE refresh (the large-view shape): commit cost ∝ the
       // TOUCHED keys, never the view — new state for touched surviving

@@ -206,24 +206,43 @@ private[sql] trait GraftResolutionSupport { self: Rule[LogicalPlan] =>
   import GraftSqlResolution._
   def session: SparkSession
 
-  /** Resolve `table` (optionally AS OF) to the analyzed plan of a
-    * pruned catalog read, translating `cond` (the WHERE directly above
-    * the relation, when present) into manifest prune filters. */
+  /** Resolve `table`'s head (or `at`, a snapshot already resolved) to
+    * the analyzed plan of a pruned catalog read, translating `cond` (the
+    * WHERE directly above the relation, when present) into manifest
+    * prune filters. */
   protected def readPlan(
       cat: SnapshotCatalog,
       table: String,
       cond: Option[Expression],
-      snapshotId: Option[Long] = None,
-      asOfMs: Option[Long] = None,
-      branch: Option[String] = None,
+      at: Option[graft.meta.SnapshotMeta] = None,
       qualifiers: Set[String] = Set.empty): LogicalPlan = {
-    val ref = branch.map(cat.branchRef(table, _)).getOrElse(table)
-    val schema = snapshotId.flatMap(cat.snapshotById(ref, _)).map(_.schema)
-      .orElse(cat.schema(ref)).getOrElse(StructType(Nil))
+    val snap = at.getOrElse(cat.resolveSnapshot(table))
     val filters = cond
-      .map(pruneFiltersFrom(_, schema, qualifiers + table.toLowerCase)).getOrElse(Nil)
-    cat.read(session, ref, filters = filters, snapshotId = snapshotId,
-      asOfTimestampMs = asOfMs).queryExecution.analyzed
+      .map(pruneFiltersFrom(_, snap.schema, qualifiers + table.toLowerCase)).getOrElse(Nil)
+    cat.readSnapshot(session, snap, filters).queryExecution.analyzed
+  }
+
+  /** The snapshot a VERSION/TIMESTAMP AS OF spec denotes: a snapshot id,
+    * a tag, a branch's head, or the snapshot current at a time. Throws
+    * when the spec names none. */
+  protected def snapshotFor(
+      cat: SnapshotCatalog,
+      table: String,
+      ts: Option[Expression],
+      ver: Option[String]): graft.meta.SnapshotMeta = (ts, ver) match {
+    case (Some(expr), None) =>
+      cat.resolveSnapshot(table, asOfTimestampMs = Some(evalAsOfMillis(session, expr)))
+    case (None, Some(v)) =>
+      v.toLongOption match {
+        case Some(id) => cat.resolveSnapshot(table, Some(id))
+        case None => cat.snapshotByTag(table, v).getOrElse {
+          if (cat.branches(table).contains(v)) cat.resolveSnapshot(cat.branchRef(table, v))
+          else throw new IllegalArgumentException(
+            s"VERSION AS OF '$v': no snapshot id, tag or branch of that name on $table")
+        }
+      }
+    case _ => throw new IllegalArgumentException(
+      "time travel needs exactly one of VERSION AS OF / TIMESTAMP AS OF")
   }
 
   /** Resolve a time-travel spec against the catalog. */
@@ -233,27 +252,8 @@ private[sql] trait GraftResolutionSupport { self: Rule[LogicalPlan] =>
       ts: Option[Expression],
       ver: Option[String],
       cond: Option[Expression],
-      qualifiers: Set[String] = Set.empty): LogicalPlan = (ts, ver) match {
-    case (Some(expr), None) =>
-      readPlan(cat, table, cond, asOfMs = Some(evalAsOfMillis(session, expr)),
-        qualifiers = qualifiers)
-    case (None, Some(v)) =>
-      v.toLongOption match {
-        case Some(id) =>
-          readPlan(cat, table, cond, snapshotId = Some(id), qualifiers = qualifiers)
-        case None =>
-          cat.snapshotByTag(table, v) match {
-            case Some(snap) => readPlan(cat, table, cond,
-              snapshotId = Some(snap.snapshotId), qualifiers = qualifiers)
-            case None if cat.branches(table).contains(v) =>
-              readPlan(cat, table, cond, branch = Some(v), qualifiers = qualifiers)
-            case None => throw new IllegalArgumentException(
-              s"VERSION AS OF '$v': no snapshot id, tag or branch of that name on $table")
-          }
-      }
-    case _ => throw new IllegalArgumentException(
-      "time travel needs exactly one of VERSION AS OF / TIMESTAMP AS OF")
-  }
+      qualifiers: Set[String] = Set.empty): LogicalPlan =
+    readPlan(cat, table, cond, Some(snapshotFor(cat, table, ts, ver)), qualifiers)
 }
 
 /** Resolves `FROM t VERSION/TIMESTAMP AS OF ...` against the snapshot
@@ -266,26 +266,6 @@ class GraftTimeTravelRule(val session: SparkSession)
     extends Rule[LogicalPlan] with GraftResolutionSupport {
   import GraftSqlResolution._
   import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Project}
-
-  /** The snapshot a VERSION/TIMESTAMP AS OF spec denotes — used for
-    * metadata-only COUNT folding; read resolution has its own path. */
-  private def snapshotFor(
-      cat: SnapshotCatalog, table: String,
-      ts: Option[Expression], ver: Option[String]): Option[graft.meta.SnapshotMeta] =
-    (ts, ver) match {
-      case (Some(expr), None) =>
-        scala.util.Try(evalAsOfMillis(session, expr)).toOption
-          .flatMap(cat.snapshotAsOf(table, _))
-      case (None, Some(v)) => v.toLongOption match {
-        case Some(id) => cat.snapshotById(table, id)
-        case None => cat.snapshotByTag(table, v).orElse {
-          if (cat.branches(table).contains(v))
-            cat.currentSnapshot(cat.branchRef(table, v))
-          else None
-        }
-      }
-      case _ => None
-    }
 
   override def apply(plan: LogicalPlan): LogicalPlan = rootOf(session) match {
     case None => plan
@@ -343,7 +323,7 @@ class GraftTimeTravelRule(val session: SparkSession)
           case other => other
         }
         claimedTT(unaliased).flatMap { case (t, ts, ver) =>
-          snapshotFor(cat, t, ts, ver).flatMap(GraftMetaCount.fold(session, _, projList))
+          GraftMetaCount.fold(session, snapshotFor(cat, t, ts, ver), projList)
         }
       }
       // top-down so the Filter-above-relation shape is seen before the

@@ -3,7 +3,6 @@ package graft.meta
 import java.nio.file.Files
 
 import graft.SparkSpec
-import graft.serve.PublishRace
 import graft.sinks.Writers
 import org.apache.spark.sql.functions._
 
@@ -98,6 +97,34 @@ class CommitConflictSpec extends SparkSpec {
     val keys = cat.read(spark, "cust").select(col("c_custkey").cast("long"))
       .collect().map(_.getLong(0)).toSeq.sorted
     assert(keys == (6L to 50L), "rewrite and append must both be visible, once each")
+  }
+
+  test("table props set by a commit landing inside an append's publish survive it") {
+    val root = Files.createTempDirectory("graft-ccr-props-").toString
+    val dataDir = Files.createTempDirectory("graft-ccr-props-data-").toString
+    val race = new PublishRace
+    val cat = new SnapshotCatalog(root, race.clock)
+    val other = new SnapshotCatalog(root)
+    Writers.writeSnapshot(cat, "cust", customers.filter(col("c_custkey") <= 20), dataDir)
+    // (a) a table comment
+    race.arm { other.setTableComment("cust", Some("audited")) }
+    Writers.writeSnapshot(cat, "cust", customers.filter(col("c_custkey").between(21, 30)), dataDir)
+    assert(race.fired)
+    assert(cat.currentSnapshot("cust").get.props.get(SnapshotCatalog.CommentProp)
+      .contains("audited"), "the racing comment must survive the append's retry")
+    // (b) a bloom index
+    race.arm { other.indexColumns(spark, "cust", bloomColumns = Seq("c_name")) }
+    val raced = Writers.writeSnapshot(cat, "cust",
+      customers.filter(col("c_custkey").between(31, 40)), dataDir)
+    assert(race.fired)
+    assert(raced.props.get(SnapshotCatalog.BloomColumnsProp).contains("c_name"),
+      "the racing bloom set must survive the append's retry")
+    assert(raced.props.get(SnapshotCatalog.CommentProp).contains("audited"))
+    val later = Writers.writeSnapshot(cat, "cust",
+      customers.filter(col("c_custkey").between(41, 50)), dataDir)
+    val added = later.files.filterNot(f => raced.files.exists(_.path == f.path))
+    assert(added.nonEmpty && added.forall(_.blooms.contains("c_name")),
+      "a later append must bloom-index the raced column")
   }
 
   test("two COW rewrites of the same files: first lands, second conflicts") {

@@ -1,4 +1,4 @@
-package graft.serve
+package graft.meta
 
 import java.util.concurrent.atomic.AtomicReference
 

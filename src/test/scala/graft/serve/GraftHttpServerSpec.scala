@@ -331,6 +331,9 @@ class GraftHttpServerSpec extends SparkSpec {
       // time travel: the pre-delete snapshot shows no masks
       val (c2, b2) = get(s"$base/stats?table=cust&snapshot=1")
       assert(c2 == 200 && b2.contains("\"delete_file_count\":0"), b2)
+      // a snapshot that does not exist is an error, never the head's stats
+      val (c3, b3) = get(s"$base/stats?table=cust&snapshot=99")
+      assert(c3 != 200, b3)
     } finally srv.stop()
   }
 

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import graft.{SparkSpec, Tables}
 import graft.meta.{CommitIntent, SnapshotCatalog, SnapshotMeta}
-import graft.serve.PublishRace
+import graft.meta.PublishRace
 import org.apache.spark.sql.functions._
 
 /** Incremental aggregate views: after every refresh the view must equal
@@ -489,6 +489,41 @@ class MaterializedAggSpec extends SparkSpec {
     assert(head.props(MaterializedAgg.RefreshedAtProp).toLong ==
       cat.currentSnapshot("race_src").get.snapshotId)
     assert(MaterializedAgg.readRendered(spark, cat, "race_view").collect().toSet == rendered)
+  }
+
+  test("the view definition survives compaction, a table comment and an index commit") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft-mv-keep-").toString
+    val cat = new SnapshotCatalog(s"$base/cat")
+    Writers.writeSnapshot(cat, "keep_src",
+      (1 to 40).map(k => (k.toLong, k * 1.0)).toDF("k", "v"), s"$base/data")
+    val spec = MaterializedAgg.MvSpec("keep_src", Seq("k"), sums = Seq("v"))
+    MaterializedAgg.build(spark, cat, spec, "keep_view", s"$base/view")
+    // re-lay the view as two files, definition props restated, so the
+    // compaction below has something to fold
+    val snap0 = cat.currentSnapshot("keep_view").get
+    val state = cat.read(spark, "keep_view")
+    val dirA = java.nio.file.Paths.get(base, "viewA")
+    val dirB = java.nio.file.Paths.get(base, "viewB")
+    state.filter(col("k") <= 20).coalesce(1).write.parquet(dirA.toString)
+    state.filter(col("k") > 20).coalesce(1).write.parquet(dirB.toString)
+    cat.commit(spark, "keep_view",
+      Writers.listParquetIn(dirA) ++ Writers.listParquetIn(dirB),
+      props = snap0.props + (SnapshotCatalog.OperationProp -> SnapshotCatalog.OpRewrite),
+      intent = CommitIntent(Some(snap0.snapshotId), removedPaths = snap0.files.map(_.path)))
+    def rows(t: String) = cat.read(spark, t).collect().map(_.toSeq).toSet
+    val ops: Seq[(String, () => Unit)] = Seq(
+      "compact" -> (() => assert(Writers.compact(spark, cat, "keep_view", s"$base/view").nonEmpty)),
+      "table comment" -> (() => { cat.setTableComment("keep_view", Some("state")); () }),
+      "index" -> (() => { cat.indexColumns(spark, "keep_view", bloomColumns = Seq("k")); () }))
+    ops.zipWithIndex.foreach { case ((what, op), i) =>
+      op()
+      Writers.writeSnapshot(cat, "keep_src", Seq((i + 1L, 100.0)).toDF("k", "v"), s"$base/data")
+      MaterializedAgg.refreshByName(spark, cat, "keep_view", s"$base/view")
+      assert(MaterializedAgg.views(cat).contains("keep_view"), s"after $what")
+      MaterializedAgg.build(spark, cat, spec, s"keep_fresh_$i", s"$base/fresh$i")
+      assert(rows("keep_view") == rows(s"keep_fresh_$i"), s"after $what")
+    }
   }
 
   test("a key whose rows all vanish leaves the view; no-op refresh commits nothing") {

@@ -792,6 +792,13 @@ class GraftDmlSpec extends SparkSpec {
     val vddl = ext.sql("SHOW CREATE TABLE disco_v").head().getString(0)
     assert(vddl.startsWith("CREATE VIEW graft.disco_v AS") &&
       vddl.contains("SELECT id"))
+    // a materialized view's state table renders no engine-internal prop
+    if (!cat.tables().contains("disco_mv"))
+      graft.sinks.MaterializedAgg.build(spark, cat, graft.sinks.MaterializedAgg.MvSpec(
+        freshTable("disco_mv_src", 1 to 4), Seq("c_custkey"), sums = Seq("c_acctbal")),
+        "disco_mv", dataDir)
+    val mvddl = ext.sql("SHOW CREATE TABLE disco_mv").head().getString(0)
+    assert(!mvddl.contains("graft.view."), mvddl)
   }
 
   test("discovery launches ZERO Spark jobs — the metadata-sized claim, listener-proven") {
@@ -928,6 +935,11 @@ class GraftDmlSpec extends SparkSpec {
       ext.sql(s"ALTER TABLE $t SET TBLPROPERTIES ('team' = 'data-eng')")
     }
     assert(e2.getMessage.contains("engine-owned"))
+    // so do the engine-internal materialized-view props
+    val e2v = intercept[Exception] {
+      ext.sql(s"ALTER TABLE $t SET TBLPROPERTIES ('graft.view.src' = 'x')")
+    }
+    assert(e2v.getMessage.contains("engine-owned"))
     // UNSET is kind-scoped: dropping the bloom prop keeps the same
     // column's sketches (and their prop) intact
     ext.sql(s"ALTER TABLE $t SET TBLPROPERTIES ('graft.sketch.columns' = 'c_custkey')")

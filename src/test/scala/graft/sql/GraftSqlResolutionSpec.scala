@@ -127,6 +127,19 @@ class GraftSqlResolutionSpec extends SparkSpec {
       .head().getLong(0) == 25)
   }
 
+  test("a version or time that names no snapshot throws instead of serving the head") {
+    setup()
+    val noId = intercept[IllegalArgumentException] {
+      ext.sql("SELECT * FROM cust VERSION AS OF 99").collect()
+    }
+    assert(noId.getMessage.contains("Snapshot 99 not found"), noId.getMessage)
+    // t=600s: before the first commit
+    val noTs = intercept[IllegalArgumentException] {
+      ext.sql("SELECT * FROM cust TIMESTAMP AS OF '1970-01-01 00:10:00'").collect()
+    }
+    assert(noTs.getMessage.contains("No snapshot of cust at or before"), noTs.getMessage)
+  }
+
   test("a temp view shadows the plain name but never the time travel") {
     setup()
     ext.sql("SELECT * FROM cust LIMIT 3").createOrReplaceTempView("cust")

@@ -66,5 +66,10 @@ class SnapshotSinkSpec extends SparkSpec {
 
     // a DIFFERENT checkpoint (fresh stream) has its own batch-id space
     assert(SnapshotSink.lastCommittedBatch(cat, "ev", s"$tmp/other-chk") == -1L)
+
+    // the batch and checkpoint ids are the batch commit's own props: a
+    // plain write after it carries neither
+    val plain = graft.sinks.Writers.writeSnapshot(cat, "ev", batch, s"$tmp/data")
+    assert(!plain.props.keys.exists(_.startsWith("graft.ingest.")), plain.props)
   }
 }
