@@ -34,26 +34,30 @@ object StreamProbe {
       .select(col("doc_id"), col("text")).collect()
       .map(r => (r.getLong(0), r.getString(1)))
 
+    // each run's catalog and data (a seeded copy of the whole corpus)
+    // share one root, removed when the run ends
     def run(corpusDir: String, tag: String): Seq[Double] = {
       import spark.implicits._
-      val cat = new graft.meta.SnapshotCatalog(
-        Files.createTempDirectory(s"graft-sprobe-$tag-").toString)
-      val dataDir = Files.createTempDirectory(s"graft-sprobe-data-$tag-").toString
-      val ckpt = s"probe-$tag"
-      def ingest(df: org.apache.spark.sql.DataFrame, id: Long): Unit =
-        graft.streaming.IngestDedupSink.ingestBatch(
-          cat, "sp", "doc_id", "text", dataDir, ckpt)(df, id)
-      val corpus = Tables.documents(spark, corpusDir).select("doc_id", "text")
-      val nCorpus = corpus.count()
-      ingest(corpus, 0L) // seed: the index now covers the whole corpus
-      println(f"[sprobe] $tag: corpus seeded, $nCorpus%d docs")
-      (1 to 3).map { b =>
-        val batch = batchSrc.map { case (id, t) =>
-          (id + 1000000L * b, s"$t novel$tag$b") }.toSeq.toDF("doc_id", "text")
-        val sec = Measure.bestOf(1)(ingest(batch, b.toLong))
-        println(f"[sprobe] $tag batch $b%d: $sec%.3f s")
-        sec
-      }
+      val root = Files.createTempDirectory(s"graft-sprobe-$tag-")
+      try {
+        val cat = new graft.meta.SnapshotCatalog(root.resolve("cat").toString)
+        val dataDir = root.resolve("data").toString
+        val ckpt = s"probe-$tag"
+        def ingest(df: org.apache.spark.sql.DataFrame, id: Long): Unit =
+          graft.streaming.IngestDedupSink.ingestBatch(
+            cat, "sp", "doc_id", "text", dataDir, ckpt)(df, id)
+        val corpus = Tables.documents(spark, corpusDir).select("doc_id", "text")
+        val nCorpus = corpus.count()
+        ingest(corpus, 0L) // seed: the index now covers the whole corpus
+        println(f"[sprobe] $tag: corpus seeded, $nCorpus%d docs")
+        (1 to 3).map { b =>
+          val batch = batchSrc.map { case (id, t) =>
+            (id + 1000000L * b, s"$t novel$tag$b") }.toSeq.toDF("doc_id", "text")
+          val sec = Measure.bestOf(1)(ingest(batch, b.toLong))
+          println(f"[sprobe] $tag batch $b%d: $sec%.3f s")
+          sec
+        }
+      } finally graft.meta.SnapshotCatalog.deleteRecursively(root)
     }
 
     val b1 = run(sfDir, "1x")

@@ -34,12 +34,6 @@ object Tables {
     spark.read.parquet(path(dir, "events"))
   }
 
-  /** Register every table as a temp view (the analogue of the reference
-    * SQL engine registering each cached Arrow table as a view —
-    * reference: src/sql/engine.py:66 `execute_query`). */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
-
   def region(s: SparkSession, d: String): DataFrame = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = load(s, d, "nation")
   def customer(s: SparkSession, d: String): DataFrame = load(s, d, "customer")

@@ -1053,9 +1053,6 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
     }
   }
 
-  /** Reference: metadata.py:319 `clear_cache`. */
-  def clearMetaCache(): Unit = manifestCache.clear()
-
   /** Reference: metadata.py:324 `get_cache_stats`. */
   def metaCacheStats: Map[String, Long] = Map(
     "cached_manifests" -> manifestCache.size.toLong,
@@ -3075,14 +3072,6 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
     // `pqindex` entries can be DIRECTORIES (per-commit codes parquet
     // dirs) as well as files (model JSONs) — an unreferenced dir
     // removes recursively
-    def deleteRecursively(p: java.nio.file.Path): Boolean =
-      scala.util.Try {
-        val stream = Files.walk(p)
-        try stream.sorted(java.util.Comparator.reverseOrder())
-          .forEach(f => { Files.deleteIfExists(f); () })
-        finally stream.close()
-        true
-      }.getOrElse(false)
     Seq("blooms", "sketches", "pqindex").flatMap { kind =>
       val dir = tableDir(table).resolve(kind)
       if (!Files.isDirectory(dir)) Nil
@@ -3099,7 +3088,7 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
         if (dryRun) doomed
         else doomed.filter { p =>
           val path = Paths.get(p)
-          if (Files.isDirectory(path)) deleteRecursively(path)
+          if (Files.isDirectory(path)) SnapshotCatalog.deleteRecursively(path)
           else Files.deleteIfExists(path)
         }
       }
@@ -3422,6 +3411,17 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
 }
 
 object SnapshotCatalog {
+  /** Delete `p` and everything under it, children first. False when `p`
+    * does not exist or any part of it could not be deleted. */
+  def deleteRecursively(p: Path): Boolean =
+    scala.util.Try {
+      val stream = Files.walk(p)
+      try stream.sorted(java.util.Comparator.reverseOrder())
+        .forEach(f => { Files.deleteIfExists(f); () })
+      finally stream.close()
+      true
+    }.getOrElse(false)
+
   /** `file:` URI → plain path, shared by the driver-side manifest layer
     * and the executor-side bloom sizing (one definition, so the
     * rowsByFile lookup can never silently diverge from commit's keys). */

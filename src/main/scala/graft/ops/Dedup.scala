@@ -29,10 +29,6 @@ object Dedup {
         sequence(lit(0), size(words) - n),
         i => concat_ws(" ", slice(words, i + 1, lit(n))))))
 
-  /** Convenience: shingles straight from a text expression. */
-  def shingleExpr(textExpr: String, n: Int = 3): Column =
-    shinglesFromWords(split(lower(expr(textExpr)), " "), n)
-
   /** doc_id + shingle array, word split materialized once. */
   private def withShingles(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     docs.select(col(idCol).as("id"), split(lower(col(textCol)), " ").as("__w"))

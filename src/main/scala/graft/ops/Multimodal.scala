@@ -1,6 +1,5 @@
 package graft.ops
 
-import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
@@ -114,6 +113,4 @@ object Multimodal {
         height = math.max(1, (f.height * scale).toInt))
     }
   }
-
-  private[ops] def utf8(s: String): Array[Byte] = s.getBytes(StandardCharsets.UTF_8)
 }

@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import graft.Tables
 import graft.cache.{CacheKey, LruPolicy, TableCache}
 import graft.functions.Exact._
@@ -11,65 +9,62 @@ import graft.sql.QueryEngine
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import scala.collection.concurrent.TrieMap
+import scala.collection.mutable
 
 /** Oracle-checked queries that run through the engine's cache, snapshot
   * and SQL layers — each must produce byte-identical results to the
   * plain-scan oracle, proving the layers are transparent.
+  *
+  * The catalogs, SQL roots, caches and sessions these queries read are
+  * [[Fixtures]] entries: table maintenance (commits, merges, DDL) done
+  * once per key per JVM, so the query measures the read.
   */
 object Engine {
 
-  /** Lock-free hit path, at-most-once build: TrieMap.getOrElseUpdate is
-    * NOT atomic for the thunk, so two concurrent first callers for the
-    * same key would both run the builder — for the fixture memos below
-    * that means double snapshot-commit work and a leaked unreferenced
-    * temp directory. Every memo routes through this helper, which takes
-    * the map's monitor only on a miss, preserving the deterministic
-    * single-build each memo's comment promises. */
-  private def memo[K, V](m: TrieMap[K, V], k: K, build: => V): V =
-    m.get(k).getOrElse(m.synchronized(m.getOrElseUpdate(k, build)))
-
-  private val caches = TrieMap.empty[String, TableCache]
   private def cacheFor(sessionDir: String): TableCache =
-    memo(caches, sessionDir, new TableCache(policy = LruPolicy))
+    Fixtures("cache", sessionDir)(new TableCache(policy = LruPolicy))
 
   // Memoized QueryEngine per (session, dir): registration loads 10 tables
   // and binds temp views, a per-call cost a long-lived engine pays once.
   // Temp views are session-global, so when a DIFFERENT dir was registered
   // last on the same session the engine re-registers before serving.
-  private val engines = TrieMap.empty[(Int, String), QueryEngine]
-  private val activeDir = TrieMap.empty[Int, String]
+  private val activeDir = mutable.Map.empty[SparkSession, String]
   private[graft] def engineFor(s: SparkSession, dir: String): QueryEngine = {
-    val sid = System.identityHashCode(s)
-    val eng = memo(engines, (sid, dir), new QueryEngine(s, dir))
+    val eng = Fixtures("engine", (s, dir))(new QueryEngine(s, dir))
     activeDir.synchronized {
-      if (!activeDir.get(sid).contains(dir)) {
+      if (!activeDir.get(s).contains(dir)) {
         eng.registerFresh()
-        activeDir.put(sid, dir)
+        activeDir.put(s, dir)
       }
     }
     eng
   }
 
+  /** `s`'s extensions-enabled sibling session (one per base session —
+    * the `spark.sql.extensions` deployment a SQL-only user runs),
+    * pointed at the catalog under `root`. */
+  private def sqlAt(s: SparkSession, root: String): SparkSession = {
+    val es = Fixtures("ext", s)(org.apache.spark.sql.GraftColumnShim.sessionWithExtensions(
+      s, e => new graft.GraftExtensions().apply(e)))
+    es.conf.set(graft.sql.GraftSqlResolution.RootConf, root)
+    es
+  }
+
   // Memoized snapshot-catalog commit per sf-dir: the commit (full stats
   // scan) is table maintenance, not the read path; a real deployment
   // commits once per ingest, then serves many pruned reads.
-  private val snapCats = TrieMap.empty[String, SnapshotCatalog]
   private def snapCatFor(s: SparkSession, dir: String): SnapshotCatalog =
-    memo(snapCats, dir, {
-      val tmp = Files.createTempDirectory("graft-snap-").toString
+    Fixtures.rooted("snap", dir) { tmp =>
       val cat = new SnapshotCatalog(tmp)
       cat.commit(s, "lineitem", Seq(Tables.path(dir, "lineitem")))
       cat
-    })
+    }
 
   // Memoized merged-orders catalog per sf-dir: the snapshot build + MERGE
   // INTO are table maintenance (a deployment merges once per upsert
   // batch); the benched/verified path is the read of the merged state.
-  private val mergedCats = TrieMap.empty[String, SnapshotCatalog]
   private def mergedCatFor(s: SparkSession, dir: String): SnapshotCatalog =
-    memo(mergedCats, dir, {
-      val tmp = Files.createTempDirectory("graft-merge-").toString
+    Fixtures.rooted("merge", dir) { tmp =>
       val cat = new SnapshotCatalog(tmp)
       val orders = Tables.orders(s, dir)
       // 4 range-partitioned files so the merge's key-bound pruning has
@@ -85,15 +80,13 @@ object Engine {
       Writers.mergeInto(s, cat, "orders", updates.unionByName(inserts),
         Seq("o_orderkey"), tmp)
       cat
-    })
+    }
 
   // Memoized MoR-deleted customer catalog per sf-dir: the ranged write +
   // two stacked position-delete commits are table maintenance; the
   // benched/verified path is the masked read (broadcast anti-join apply).
-  private val morCats = TrieMap.empty[String, SnapshotCatalog]
   private def morCatFor(s: SparkSession, dir: String): SnapshotCatalog =
-    memo(morCats, dir, {
-      val tmp = Files.createTempDirectory("graft-mor-").toString
+    Fixtures.rooted("mor", dir) { tmp =>
       val cat = new SnapshotCatalog(tmp)
       Writers.writeRangedSnapshot(cat, "customer", Tables.customer(s, dir),
         tmp, "c_custkey", 4)
@@ -104,7 +97,7 @@ object Engine {
         col("c_custkey").between(100, 200),
         Seq(RangeNum("c_custkey", 100.0, 200.0)), tmp)
       cat
-    })
+    }
 
   /** Read the table state under outstanding merge-on-read position
     * deletes (SURVEY §2 S40): two stacked delete files mask rows with
@@ -121,16 +114,14 @@ object Engine {
   // Memoized TTL-swept events catalog per sf-dir: the ranged write + the
   // retention sweep are maintenance; the benched/verified path is the
   // masked read of the surviving (recent) rows.
-  private val ttlCats = TrieMap.empty[String, SnapshotCatalog]
   private val TtlCutoffMs = java.sql.Timestamp.valueOf("2024-01-08 00:00:00").getTime
   private def ttlCatFor(s: SparkSession, dir: String): SnapshotCatalog =
-    memo(ttlCats, dir, {
-      val tmp = Files.createTempDirectory("graft-ttl-").toString
+    Fixtures.rooted("ttl", dir) { tmp =>
       val cat = new SnapshotCatalog(tmp)
       Writers.writeRangedSnapshot(cat, "events", Tables.events(s, dir), tmp, "ts", 4)
       Writers.expireRowsOlderThan(s, cat, "events", "ts", TtlCutoffMs, tmp)
       cat
-    })
+    }
 
   /** Read an events table after a TTL retention sweep (SURVEY §2 S40's
     * `expireRowsOlderThan`): rows before the cutoff are MoR-masked (zero
@@ -146,9 +137,8 @@ object Engine {
   // Memoized co-bucketed lineitem/orders tables per (session, dir): the
   // bucketed write is the one-time layout investment (like an ingest
   // repartition); the benched/verified path is the exchange-free join.
-  private val bucketedTabs = TrieMap.empty[(Int, String), (String, String)]
   private def bucketedFor(s: SparkSession, dir: String): (String, String) =
-    memo(bucketedTabs, (System.identityHashCode(s), dir), {
+    Fixtures("bucketed", (s, dir)) {
       val tag = Integer.toHexString(dir.hashCode).takeWhile(_ != '-')
       val lt = s"graft_bkt_l_$tag"
       val ot = s"graft_bkt_o_$tag"
@@ -159,13 +149,7 @@ object Engine {
         if (!s.catalog.tableExists(name)) {
           s.sql(s"DROP TABLE IF EXISTS $name")
           val wh = new java.net.URI(s.conf.get("spark.sql.warehouse.dir")).getPath
-          val loc = java.nio.file.Paths.get(wh, name)
-          if (java.nio.file.Files.isDirectory(loc)) {
-            val stream = java.nio.file.Files.walk(loc)
-            try stream.sorted(java.util.Comparator.reverseOrder())
-              .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-            finally stream.close()
-          }
+          SnapshotCatalog.deleteRecursively(java.nio.file.Paths.get(wh, name))
           write
         }
       fresh(lt)(Writers.writeBucketed(Tables.lineitem(s, dir)
@@ -173,7 +157,7 @@ object Engine {
       fresh(ot)(Writers.writeBucketed(Tables.orders(s, dir)
         .select(col("o_orderkey"), col("o_orderpriority")), ot, 8, "o_orderkey"))
       (lt, ot)
-    })
+    }
 
   /** Join two CO-BUCKETED tables on their bucket key (SURVEY §2 S22 at
     * the query level): both sides were pre-shuffled once at write time,
@@ -226,10 +210,8 @@ object Engine {
   // Memoized bloom-indexed customer catalog per sf-dir, one file per
   // market segment: the split + bloom commit is the one-time layout
   // investment; the benched/verified path is the IN-list pruned read.
-  private val inlistCats = TrieMap.empty[String, SnapshotCatalog]
   private def inlistCatFor(s: SparkSession, dir: String): SnapshotCatalog =
-    memo(inlistCats, dir, {
-      val tmp = Files.createTempDirectory("graft-inlist-").toString
+    Fixtures.rooted("inlist", dir) { tmp =>
       val cat = new SnapshotCatalog(tmp)
       val c = Tables.customer(s, dir)
       val segs = c.select(col("c_mktsegment")).distinct()
@@ -242,7 +224,7 @@ object Engine {
       }
       cat.commit(s, "customer", paths.toSeq, bloomColumns = Seq("c_mktsegment"))
       cat
-    })
+    }
 
   /** IN-list pruned read (SURVEY §2 S4/S13 at the query level): the
     * multi-tenant id-list scan — `InString` keeps only the files whose
@@ -262,16 +244,14 @@ object Engine {
   // Memoized days(ts)-partitioned events catalog per sf-dir: the
   // transform-partitioned layout is the one-time investment; the benched/
   // verified path is the hidden-partition-pruned time-range read.
-  private val daysCats = TrieMap.empty[String, SnapshotCatalog]
   private val daysSpec = Seq(DaysTransform("ts"))
   private def daysCatFor(s: SparkSession, dir: String): SnapshotCatalog =
-    memo(daysCats, dir, {
-      val tmp = Files.createTempDirectory("graft-days-").toString
+    Fixtures.rooted("days", dir) { tmp =>
       val cat = new SnapshotCatalog(tmp)
       Writers.writeTransformedSnapshot(cat, "events", Tables.events(s, dir),
         s"$tmp/data", daysSpec)
       cat
-    })
+    }
 
   /** Hidden-partition-pruned time-range read (SURVEY §2 S35 at the query
     * level): the reader states an epoch-millis range on RAW `ts`; the
@@ -294,15 +274,13 @@ object Engine {
   // Memoized z-order-clustered orders catalog per sf-dir: the morton
   // layout on (o_totalprice, o_custkey) is the one-time investment; the
   // benched/verified path is the two-dimensional stats-pruned read.
-  private val zorderCats = TrieMap.empty[String, SnapshotCatalog]
   private def zorderCatFor(s: SparkSession, dir: String): SnapshotCatalog =
-    memo(zorderCats, dir, {
-      val tmp = Files.createTempDirectory("graft-zorder-").toString
+    Fixtures.rooted("zorder", dir) { tmp =>
       val cat = new SnapshotCatalog(tmp)
       Writers.writeZOrderedSnapshot(cat, "orders", Tables.orders(s, dir),
         s"$tmp/data", Seq("o_totalprice", "o_custkey"), nFiles = 16)
       cat
-    })
+    }
 
   /** Z-order-pruned two-dimensional range read (SURVEY §2 at the query
     * level, on the S-layer morton layout): after clustering on
@@ -330,21 +308,18 @@ object Engine {
   // two-dimensionally pruned range read: the day predicate prunes via
   // partition values (which the partition-aware rewrite PRESERVES) and
   // the value predicate prunes via the restored per-file min/max.
-  private val sortedCats = TrieMap.empty[String, SnapshotCatalog]
   private def sortedCatFor(s: SparkSession, dir: String): SnapshotCatalog =
-    memo(sortedCats, dir, {
-      val tmp = Files.createTempDirectory("graft-sorted-").toString
+    Fixtures.rooted("sorted", dir) { tmp =>
       val cat = new SnapshotCatalog(tmp)
       val ev = Tables.events(s, dir)
       (0 until 3).foreach { i =>
         Writers.writeTransformedSnapshot(cat, "events",
           ev.filter(pmod(col("event_id"), lit(3)) === i), s"$tmp/append$i", daysSpec)
       }
-      val es = extSessionFor(s)
-      es.conf.set(graft.sql.GraftSqlResolution.RootConf, tmp)
+      val es = sqlAt(s, tmp)
       es.sql("CALL graft.rewrite_sorted('events', 'value', files => 60)")
       cat
-    })
+    }
 
   /** Range read over a `CALL graft.rewrite_sorted` re-clustered layout
     * (SURVEY §2 S59 at the query level): after the partition-aware
@@ -367,18 +342,16 @@ object Engine {
   }
 
   // Memoized sketch-indexed customer catalog per sf-dir (SURVEY §2 S37).
-  private val sketchCats = TrieMap.empty[String, SnapshotCatalog]
   private val sketchedCols =
     Seq("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment")
   private def sketchCatFor(s: SparkSession, dir: String): SnapshotCatalog =
-    memo(sketchCats, dir, {
-      val tmp = Files.createTempDirectory("graft-sketch-").toString
+    Fixtures.rooted("sketch", dir) { tmp =>
       val cat = new SnapshotCatalog(tmp)
       Writers.writeSnapshot(cat, "customer",
         Tables.customer(s, dir).repartition(8), s"$tmp/data",
         sketchColumns = sketchedCols)
       cat
-    })
+    }
 
   /** Metadata-only table profile (SURVEY §2 S37 at the query level): per
     * column, the NDV estimate from merged manifest HLL sketches plus the
@@ -403,10 +376,8 @@ object Engine {
   // sticky-metadata path, and approxCountDistinct REFUSES (None → -1,
   // an instant hash mismatch) if any non-empty file lacks a sketch, so
   // the oracle also proves index maintenance across commits.
-  private val metaExactCats = TrieMap.empty[String, SnapshotCatalog]
   private def metaExactCatFor(s: SparkSession, dir: String): SnapshotCatalog =
-    memo(metaExactCats, dir, {
-      val tmp = Files.createTempDirectory("graft-metaexact-").toString
+    Fixtures.rooted("metaexact", dir) { tmp =>
       val cat = new SnapshotCatalog(tmp)
       val o = Tables.orders(s, dir)
       Writers.writeSnapshot(cat, "orders",
@@ -415,7 +386,7 @@ object Engine {
       Writers.writeSnapshot(cat, "orders",
         o.filter(col("o_orderkey") % 2 =!= 0).repartition(4), s"$tmp/data")
       cat
-    })
+    }
 
   /** Metadata-only NDV profile on an EXACT grid (the oracle twin of
     * [[qMetaProfile]]'s rows-only claim): merged manifest HLL sketches
@@ -436,10 +407,8 @@ object Engine {
   // base commit + append + CDC-folded refresh happen once; the benched/
   // verified path reads the view — which must equal a from-scratch
   // aggregate of the WHOLE source (the oracle's plain GROUP BY).
-  private val mvCats = TrieMap.empty[String, SnapshotCatalog]
   private def mvCatFor(s: SparkSession, dir: String): SnapshotCatalog =
-    memo(mvCats, dir, {
-      val tmp = Files.createTempDirectory("graft-mv-").toString
+    Fixtures.rooted("mv", dir) { tmp =>
       val cat = new SnapshotCatalog(tmp)
       val o = Tables.orders(s, dir)
       Writers.writeSnapshot(cat, "orders", o.filter(col("o_orderkey") % 2 === 0), s"$tmp/data")
@@ -449,7 +418,7 @@ object Engine {
       graft.sinks.MaterializedAgg.refresh(s, cat, "orders", "orders_mv",
         Seq("o_orderstatus"), Seq("o_totalprice"), s"$tmp/view")
       cat
-    })
+    }
 
   /** Incrementally-maintained aggregate view read (SURVEY §2 S39 at the
     * query level): the view was built on half the source and refreshed
@@ -465,10 +434,8 @@ object Engine {
   // Memoized partition-overwritten orders catalog per sf-dir: the
   // partitioned write + the dynamic overwrite are table maintenance;
   // the benched/verified path is the read of the restated state.
-  private val owCats = TrieMap.empty[String, SnapshotCatalog]
   private def owCatFor(s: SparkSession, dir: String): SnapshotCatalog =
-    memo(owCats, dir, {
-      val tmp = Files.createTempDirectory("graft-ow-").toString
+    Fixtures.rooted("ow", dir) { tmp =>
       val cat = new SnapshotCatalog(tmp)
       // partition column duplicated into a derived `p_pri` (the hidden-
       // partitioning idiom: the path segment carries p_pri, the data
@@ -483,7 +450,7 @@ object Engine {
         .withColumn("o_totalprice", col("o_totalprice") + lit(100.0))
       Writers.overwritePartitions(cat, "orders", restated, s"$tmp/ow1", Seq("p_pri"))
       cat
-    })
+    }
 
   /** Read after a dynamic partition overwrite (SURVEY §2 S46): the
     * `1-URGENT` partition was replaced wholesale by a restated subset
@@ -500,15 +467,13 @@ object Engine {
   // Memoized range-clustered orders catalog per sf-dir: the clustered
   // write is table maintenance; the benched/verified path is the
   // stats-pruned top-k read.
-  private val topkCats = TrieMap.empty[String, SnapshotCatalog]
   private def topkCatFor(s: SparkSession, dir: String): SnapshotCatalog =
-    memo(topkCats, dir, {
-      val tmp = Files.createTempDirectory("graft-topk-").toString
+    Fixtures.rooted("topk", dir) { tmp =>
       val cat = new SnapshotCatalog(tmp)
       Writers.writeRangedSnapshot(cat, "orders", Tables.orders(s, dir),
         tmp, "o_totalprice", 8)
       cat
-    })
+    }
 
   /** ORDER BY ... LIMIT k as a METADATA operation (SURVEY §2 S47): on
     * the range-clustered layout, manifest min/max + null counts prove
@@ -526,10 +491,8 @@ object Engine {
   // written under the ORIGINAL column names, then a metadata-only
   // rename + drop, then the other half under the NEW names — the read
   // must stitch both physical eras into one logical schema.
-  private val sevCats = TrieMap.empty[String, SnapshotCatalog]
   private def sevCatFor(s: SparkSession, dir: String): SnapshotCatalog =
-    memo(sevCats, dir, {
-      val tmp = Files.createTempDirectory("graft-sev-").toString
+    Fixtures.rooted("sev", dir) { tmp =>
       val cat = new SnapshotCatalog(tmp)
       val orders = Tables.orders(s, dir)
       Writers.writeSnapshot(cat, "orders", orders.filter(col("o_orderkey") % 2 === 0), tmp)
@@ -539,7 +502,7 @@ object Engine {
         orders.filter(col("o_orderkey") % 2 === 1)
           .withColumnRenamed("o_totalprice", "total_price").drop("o_orderpriority"), tmp)
       cat
-    })
+    }
 
   // Memoized widen-era catalog per sf-dir: era 1 holds even orders
   // under an INT key (kept in range via pmod so the 100x scale-ups
@@ -547,10 +510,8 @@ object Engine {
   // shifted past the int range — so the query only matches the oracle
   // if old files cast up exactly AND post-widen values really use the
   // wide type.
-  private val widenCats = TrieMap.empty[String, SnapshotCatalog]
   private def widenCatFor(s: SparkSession, dir: String): SnapshotCatalog =
-    memo(widenCats, dir, {
-      val tmp = Files.createTempDirectory("graft-widen-").toString
+    Fixtures.rooted("widen", dir) { tmp =>
       val cat = new SnapshotCatalog(tmp)
       val o = Tables.orders(s, dir)
       Writers.writeSnapshot(cat, "orders",
@@ -563,7 +524,7 @@ object Engine {
           .select((pmod(col("o_orderkey"), lit(1000000000L)) + 5000000000L).as("wkey"),
             col("o_orderstatus")), tmp)
       cat
-    })
+    }
 
   /** Read across a type-widening evolution (int→long, Iceberg type
     * promotion): era-1 files scan under their stored INT type and cast
@@ -585,17 +546,14 @@ object Engine {
   // bytes), era 3 writes explicit values. Both DDLs go through the SQL
   // surface. The aggregate only matches the oracle if each era serves
   // ITS literal — a null fill or a wrong-era default breaks the sum.
-  private val defCats = TrieMap.empty[String, SnapshotCatalog]
   private def defCatFor(s: SparkSession, dir: String): SnapshotCatalog =
-    memo(defCats, dir, {
-      val tmp = Files.createTempDirectory("graft-def-").toString
+    Fixtures.rooted("def", dir) { tmp =>
       val cat = new SnapshotCatalog(tmp)
       val o = Tables.orders(s, dir)
         .select(col("o_orderkey"), col("o_orderpriority"), col("o_totalprice"))
       Writers.writeSnapshot(cat, "orders",
         o.filter(pmod(col("o_orderkey"), lit(2)) === 0), tmp)
-      val es = extSessionFor(s)
-      es.conf.set(graft.sql.GraftSqlResolution.RootConf, tmp)
+      val es = sqlAt(s, tmp)
       es.sql("ALTER TABLE orders ADD COLUMNS (o_disc DOUBLE DEFAULT 0.05)")
       es.sql("ALTER TABLE orders ALTER COLUMN o_disc SET DEFAULT 0.10")
       Writers.writeSnapshot(cat, "orders",
@@ -604,7 +562,7 @@ object Engine {
         o.filter(pmod(col("o_orderkey"), lit(4)) === 3)
           .withColumn("o_disc", lit(0.02)), tmp)
       cat
-    })
+    }
 
   /** Read across column-default eras (SURVEY §2 S61 at the query
     * level): pre-add rows serve the initial-default, omitted-column
@@ -651,28 +609,19 @@ object Engine {
   }
 
   // Memoized time-travel catalog per sf-dir (two snapshots of orders:
-  // even keys, then odd keys appended; snapshot 1 tagged 'v1') plus ONE
-  // extensions-enabled sibling session per base session — the
-  // spark.sql.extensions deployment a SQL-only user runs. The benched
-  // path is the SQL itself; layout cost is one-time, like the other
-  // *_read queries.
-  private val ttRoots = TrieMap.empty[String, String]
+  // even keys, then odd keys appended; snapshot 1 tagged 'v1'). The
+  // benched path is the SQL itself; layout cost is one-time, like the
+  // other *_read queries.
   private def ttRootFor(s: SparkSession, dir: String): String =
-    memo(ttRoots, dir, {
-      val root = Files.createTempDirectory("graft-ttsql-").toString
-      val dataDir = Files.createTempDirectory("graft-ttsql-data-").toString
+    Fixtures.rooted("ttsql", dir) { root =>
+      val dataDir = s"$root/data"
       val cat = new SnapshotCatalog(root)
       val o = Tables.orders(s, dir)
       Writers.writeSnapshot(cat, "orders", o.filter(expr("o_orderkey % 2 = 0")), dataDir)
       cat.tag("orders", "v1", 1L)
       Writers.writeSnapshot(cat, "orders", o.filter(expr("o_orderkey % 2 <> 0")), dataDir)
       root
-    })
-  private val extSessions = TrieMap.empty[Int, SparkSession]
-  private def extSessionFor(s: SparkSession): SparkSession =
-    memo(extSessions, System.identityHashCode(s),
-      org.apache.spark.sql.GraftColumnShim.sessionWithExtensions(
-        s, e => new graft.GraftExtensions().apply(e)))
+    }
 
   /** SQL time travel through SparkSessionExtensions (SURVEY §2 S50 at
     * the query level): `VERSION AS OF` a TAG and the current head, in
@@ -680,10 +629,8 @@ object Engine {
     * `spark.sql.extensions` + `spark.graft.catalog.root` — no code API.
     * The tagged epoch must equal the oracle's even-key slice and the
     * head the whole table. */
-  def qSqlTimetravel(s: SparkSession, dir: String): DataFrame = {
-    val es = extSessionFor(s)
-    es.conf.set(graft.sql.GraftSqlResolution.RootConf, ttRootFor(s, dir))
-    es.sql(
+  def qSqlTimetravel(s: SparkSession, dir: String): DataFrame =
+    sqlAt(s, ttRootFor(s, dir)).sql(
       """SELECT 'v1' AS epoch, o_orderstatus AS status, COUNT(*) AS n_orders,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(15,4))) AS DOUBLE) AS sum_price
         |FROM orders VERSION AS OF 'v1'
@@ -693,24 +640,20 @@ object Engine {
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(15,4))) AS DOUBLE) AS sum_price
         |FROM orders
         |GROUP BY o_orderstatus""".stripMargin)
-  }
 
   // Memoized view catalog per sf-dir (SURVEY §2 S62): orders committed,
   // then TWO stacked views created through SQL DDL — an aggregate view
   // over the table and a view over that view. The benched/verified path
   // reads the TOP view, so resolution must expand both stored
   // definitions and still push the table read through the catalog scan.
-  private val viewRoots = TrieMap.empty[String, String]
   private def viewRootFor(s: SparkSession, dir: String): String =
-    memo(viewRoots, dir, {
-      val root = Files.createTempDirectory("graft-views-").toString
+    Fixtures.rooted("views", dir) { root =>
       val cat = new SnapshotCatalog(root)
       Writers.writeSnapshot(cat, "vorders",
         Tables.orders(s, dir)
           .select(col("o_orderkey"), col("o_orderpriority"), col("o_totalprice")),
-        Files.createTempDirectory("graft-views-data-").toString)
-      val es = extSessionFor(s)
-      es.conf.set(graft.sql.GraftSqlResolution.RootConf, root)
+        s"$root/data")
+      val es = sqlAt(s, root)
       es.sql("CREATE VIEW graft.pri_sum AS " +
         "SELECT o_orderpriority, count(*) AS n_orders, " +
         "CAST(SUM(CAST(o_totalprice AS DECIMAL(15,4))) AS DOUBLE) AS sum_price " +
@@ -726,17 +669,14 @@ object Engine {
       es.sql("CREATE OR REPLACE VIEW graft.pri_ver AS " +
         "SELECT 'replaced' AS marker")
       root
-    })
+    }
 
   /** Stored-SQL-view read (SURVEY §2 S62 at the query level): the query
     * names only the TOP view of a two-view stack; both definitions
     * expand at resolution time and the result equals the oracle's
     * inline SQL over the raw table. */
-  def qViewRead(s: SparkSession, dir: String): DataFrame = {
-    val es = extSessionFor(s)
-    es.conf.set(graft.sql.GraftSqlResolution.RootConf, viewRootFor(s, dir))
-    es.sql("SELECT o_orderpriority, n_orders, sum_price FROM pri_top")
-  }
+  def qViewRead(s: SparkSession, dir: String): DataFrame =
+    sqlAt(s, viewRootFor(s, dir)).sql("SELECT o_orderpriority, n_orders, sum_price FROM pri_top")
 
   // Memoized changelog catalog per sf-dir: orders committed RANGED on
   // o_orderkey (s1), then a COW update (price bump, k <= 2000 ∧ k%7=0)
@@ -747,12 +687,10 @@ object Engine {
   // inherently O(2·table) (before EXCEPT after over everything) — the
   // bounded form keeps serve cost ∝ the mutated slice, which is the
   // scale property worth gating.
-  private val changelogRoots = TrieMap.empty[String, SnapshotCatalog]
   private def changelogCatFor(s: SparkSession, dir: String): SnapshotCatalog =
-    memo(changelogRoots, dir, {
-      val root = Files.createTempDirectory("graft-changelog-").toString
+    Fixtures.rooted("changelog", dir) { root =>
       val cat = new SnapshotCatalog(root)
-      val dd = Files.createTempDirectory("graft-changelog-data-").toString
+      val dd = s"$root/data"
       Writers.writeRangedSnapshot(cat, "chorders",
         Tables.orders(s, dir).select(col("o_orderkey"), col("o_totalprice")),
         dd, "o_orderkey", 16)
@@ -765,7 +703,7 @@ object Engine {
           pmod(col("o_orderkey"), lit(11)) === 0,
         Seq(RangeNum("o_orderkey", 2000.0, 4000.0)), dd)
       cat
-    })
+    }
 
   /** NET row-level change feed (S25/S56 `changelog` at the query level):
     * the feed from the first snapshot to current must equal the pure
@@ -788,59 +726,48 @@ object Engine {
     * data I/O. The oracle pins the exact rendering with a literal
     * VALUES relation (a schema surface has no algebra to replay; the
     * pin is the regression gate). */
-  def qSqlDiscovery(s: SparkSession, dir: String): DataFrame = {
-    val es = extSessionFor(s)
-    es.conf.set(graft.sql.GraftSqlResolution.RootConf, viewRootFor(s, dir))
-    es.sql("DESCRIBE TABLE graft.vorders")
-  }
+  def qSqlDiscovery(s: SparkSession, dir: String): DataFrame =
+    sqlAt(s, viewRootFor(s, dir)).sql("DESCRIBE TABLE graft.vorders")
 
   /** Historical view definition (S62, the Iceberg view-spec version
     * list): `VERSION AS OF 1` must serve the ORIGINAL definition over
     * CURRENT table data even though the current version was replaced
     * with an entirely different shape. The oracle replays version 1's
     * SQL inline over the raw table. */
-  def qViewVersion(s: SparkSession, dir: String): DataFrame = {
-    val es = extSessionFor(s)
-    es.conf.set(graft.sql.GraftSqlResolution.RootConf, viewRootFor(s, dir))
-    es.sql("SELECT o_orderpriority, n_orders FROM pri_ver VERSION AS OF 1")
-  }
+  def qViewVersion(s: SparkSession, dir: String): DataFrame =
+    sqlAt(s, viewRootFor(s, dir))
+      .sql("SELECT o_orderpriority, n_orders FROM pri_ver VERSION AS OF 1")
 
   // Memoized rename catalog per sf-dir: orders committed under one name,
   // mutated (so the read crosses a rewrite era), tagged, then RENAMED —
   // all through SQL. The rename is a metadata-only move (data files are
   // path-addressed and stay put); the benched/verified path is the read
   // under the NEW name, which must serve the same bytes.
-  private val renameTblRoots = TrieMap.empty[String, String]
   private def renameTblRootFor(s: SparkSession, dir: String): String =
-    memo(renameTblRoots, dir, {
-      val root = Files.createTempDirectory("graft-rentbl-").toString
+    Fixtures.rooted("rentbl", dir) { root =>
       val cat = new SnapshotCatalog(root)
-      val dd = Files.createTempDirectory("graft-rentbl-data-").toString
+      val dd = s"$root/data"
       Writers.writeRangedSnapshot(cat, "renorders",
         Tables.orders(s, dir)
           .select(col("o_orderkey"), col("o_orderpriority"), col("o_totalprice")),
         dd, "o_orderkey", 8)
-      val es = extSessionFor(s)
-      es.conf.set(graft.sql.GraftSqlResolution.RootConf, root)
+      val es = sqlAt(s, root)
       // a key-bounded COW update so the renamed read crosses a rewrite
       // era (rename must preserve operation lineage, not just files)
       es.sql("UPDATE renorders SET o_totalprice = o_totalprice + 25.0 " +
         "WHERE o_orderkey <= 1000")
       es.sql("ALTER TABLE renorders RENAME TO renamed_orders")
       root
-    })
+    }
 
   /** Table rename (S64, r13): the read under the NEW name must equal the
     * oracle's replay of the pre-rename state — same rows, same mutation
     * era, zero data movement (the rename moved metadata only). */
-  def qTableRenameRead(s: SparkSession, dir: String): DataFrame = {
-    val es = extSessionFor(s)
-    es.conf.set(graft.sql.GraftSqlResolution.RootConf, renameTblRootFor(s, dir))
-    es.sql(
+  def qTableRenameRead(s: SparkSession, dir: String): DataFrame =
+    sqlAt(s, renameTblRootFor(s, dir)).sql(
       """SELECT o_orderpriority, COUNT(*) AS n_orders,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(15,4))) AS DOUBLE) AS sum_price
         |FROM renamed_orders GROUP BY o_orderpriority""".stripMargin)
-  }
 
   // Memoized WAP-SQL catalog per sf-dir: the whole write-audit-publish
   // loop driven from PURE SQL — a clean batch staged and gate-published,
@@ -849,18 +776,15 @@ object Engine {
   // (one batch write + metadata commits); the benched/verified path is
   // the read of the published state, which must show the clean batch
   // and never the dirty one.
-  private val wapRoots = TrieMap.empty[String, String]
   private def wapRootFor(s: SparkSession, dir: String): String =
-    memo(wapRoots, dir, {
-      val root = Files.createTempDirectory("graft-wapsql-").toString
+    Fixtures.rooted("wapsql", dir) { root =>
       val cat = new SnapshotCatalog(root)
-      val dd = Files.createTempDirectory("graft-wapsql-data-").toString
+      val dd = s"$root/data"
       Writers.writeRangedSnapshot(cat, "waporders",
         Tables.orders(s, dir)
           .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice")),
         dd, "o_orderkey", 8)
-      val es = extSessionFor(s)
-      es.conf.set(graft.sql.GraftSqlResolution.RootConf, root)
+      val es = sqlAt(s, root)
       val clean = es.sql("CALL graft.stage('waporders', " +
         "'SELECT o_orderkey + 10000000, o_orderstatus, o_totalprice + 0.5 " +
         "FROM waporders WHERE o_orderkey <= 800')").head().getString(0)
@@ -874,23 +798,20 @@ object Engine {
         "'o_orderstatus IS NOT NULL')").collect()
       require(refused.forall(!_.getBoolean(2)), "dirty WAP batch must refuse")
       root
-    })
+    }
 
   /** SQL write-audit-publish (S38+S45+S56 closed from pure SQL, r13):
     * the published state equals base rows plus the gate-passed batch —
     * and NOTHING of the refused batch (its NULL statuses would surface
     * as an extra group and fail the hash). The oracle replays the clean
     * publish as set algebra over the raw table. */
-  def qWapSql(s: SparkSession, dir: String): DataFrame = {
-    val es = extSessionFor(s)
-    es.conf.set(graft.sql.GraftSqlResolution.RootConf, wapRootFor(s, dir))
-    es.sql(
+  def qWapSql(s: SparkSession, dir: String): DataFrame =
+    sqlAt(s, wapRootFor(s, dir)).sql(
       """SELECT o_orderstatus AS status, COUNT(*) AS n_orders,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(15,4))) AS DOUBLE) AS sum_price,
         |  CAST(SUM(CASE WHEN o_orderkey >= 10000000 THEN 1 ELSE 0 END) AS BIGINT)
         |    AS n_published
         |FROM waporders GROUP BY o_orderstatus""".stripMargin)
-  }
 
   // Memoized SQL-MV catalog per sf-dir: the S39 incremental aggregate
   // view driven ENTIRELY from SQL (r14) — create_mv on the even-key
@@ -898,17 +819,14 @@ object Engine {
   // then refresh_mv BY VIEW NAME ALONE folds the change feed (the
   // definition rides the view's own snapshot props). Build + refresh
   // are maintenance; the benched/verified path reads the view table.
-  private val mvSqlRoots = TrieMap.empty[String, String]
   private def mvSqlRootFor(s: SparkSession, dir: String): String =
-    memo(mvSqlRoots, dir, {
-      val root = Files.createTempDirectory("graft-mvsql-").toString
+    Fixtures.rooted("mvsql", dir) { root =>
       val cat = new SnapshotCatalog(root)
       Writers.writeSnapshot(cat, "mvsqlorders",
         Tables.orders(s, dir).filter(expr("o_orderkey % 2 = 0"))
           .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice")),
-        Files.createTempDirectory("graft-mvsql-data-").toString)
-      val es = extSessionFor(s)
-      es.conf.set(graft.sql.GraftSqlResolution.RootConf, root)
+        s"$root/data")
+      val es = sqlAt(s, root)
       es.sql("CALL graft.create_mv('mvsql_view', 'mvsqlorders', " +
         "'o_orderstatus', 'o_totalprice')")
       val src = s"parquet.`$dir/orders.parquet`"
@@ -917,20 +835,17 @@ object Engine {
       es.sql("DELETE FROM mvsqlorders WHERE o_orderkey % 11 = 3")
       es.sql("CALL graft.refresh_mv('mvsql_view')")
       root
-    })
+    }
 
   /** Incremental MV from pure SQL (S39's last seam, r14): the view was
     * built on half the source and refreshed — by name alone — from the
     * SQL-mutated other half's change feed; reading it must equal the
     * oracle's from-scratch GROUP BY of the final source state. */
-  def qMvSql(s: SparkSession, dir: String): DataFrame = {
-    val es = extSessionFor(s)
-    es.conf.set(graft.sql.GraftSqlResolution.RootConf, mvSqlRootFor(s, dir))
-    es.sql(
+  def qMvSql(s: SparkSession, dir: String): DataFrame =
+    sqlAt(s, mvSqlRootFor(s, dir)).sql(
       """SELECT o_orderstatus, n_rows,
         |  CAST(sum_o_totalprice AS DOUBLE) AS sum_price
         |FROM mvsql_view""".stripMargin)
-  }
 
   // Memoized min/max/avg MV catalog per sf-dir: the generalized
   // aggregate set (r15) — built on half the source with MIN/MAX/AVG
@@ -938,17 +853,14 @@ object Engine {
   // big group's current extrema (top tail + bottom tail), refreshed by
   // name. The delete forces the key-scoped recompute path; the hash
   // against DuckDB's from-scratch GROUP BY proves it exact.
-  private val mvMmRoots = TrieMap.empty[String, String]
   private def mvMmRootFor(s: SparkSession, dir: String): String =
-    memo(mvMmRoots, dir, {
-      val root = Files.createTempDirectory("graft-mvmm-").toString
+    Fixtures.rooted("mvmm", dir) { root =>
       val cat = new SnapshotCatalog(root)
       Writers.writeSnapshot(cat, "mvmmorders",
         Tables.orders(s, dir).filter(expr("o_orderkey % 2 = 0"))
           .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice")),
-        Files.createTempDirectory("graft-mvmm-data-").toString)
-      val es = extSessionFor(s)
-      es.conf.set(graft.sql.GraftSqlResolution.RootConf, root)
+        s"$root/data")
+      val es = sqlAt(s, root)
       es.sql("CALL graft.create_mv('mvmm_view', 'mvmmorders', " +
         "'o_orderstatus', 'o_totalprice', avg_columns => 'o_totalprice', " +
         "min_columns => 'o_totalprice', max_columns => 'o_totalprice')")
@@ -962,24 +874,21 @@ object Engine {
         "WHERE o_totalprice > 400000.0 OR o_totalprice < 5000.0")
       es.sql("CALL graft.refresh_mv('mvmm_view')")
       root
-    })
+    }
 
   /** Generalized MV aggregates from SQL (r15): COUNT/SUM fold
     * additively, AVG renders from (sum, cnt) state, MIN/MAX survive an
     * extremum-killing delete via the key-scoped recompute — the view
     * must hash-equal the oracle's from-scratch GROUP BY with
     * MIN/MAX/AVG over the final state. */
-  def qMvMinmax(s: SparkSession, dir: String): DataFrame = {
-    val es = extSessionFor(s)
-    es.conf.set(graft.sql.GraftSqlResolution.RootConf, mvMmRootFor(s, dir))
-    es.sql(
+  def qMvMinmax(s: SparkSession, dir: String): DataFrame =
+    sqlAt(s, mvMmRootFor(s, dir)).sql(
       """SELECT o_orderstatus, n_rows,
         |  CAST(sum_o_totalprice AS DOUBLE) AS sum_price,
         |  CAST(sum_o_totalprice AS DOUBLE) / cnt_o_totalprice AS avg_price,
         |  min_o_totalprice AS min_price,
         |  max_o_totalprice AS max_price
         |FROM mvmm_view""".stripMargin)
-  }
 
   // Memoized approx-ND MV catalog per sf-dir: HLL COUNT DISTINCT state
   // (r15) — the nd column is LOW-cardinality (o_orderpriority, 5
@@ -987,18 +896,15 @@ object Engine {
   // estimate hash-matches DuckDB's exact COUNT(DISTINCT) — and the
   // DELETE forces the sketch-invalidation recompute path (HLL is not
   // retractable), proving it end-to-end through SQL.
-  private val mvNdRoots = TrieMap.empty[String, String]
   private def mvNdRootFor(s: SparkSession, dir: String): String =
-    memo(mvNdRoots, dir, {
-      val root = Files.createTempDirectory("graft-mvnd-").toString
+    Fixtures.rooted("mvnd", dir) { root =>
       val cat = new SnapshotCatalog(root)
       Writers.writeSnapshot(cat, "mvndorders",
         Tables.orders(s, dir).filter(expr("o_orderkey % 2 = 0"))
           .select(col("o_orderkey"), col("o_orderstatus"),
             col("o_orderpriority"), col("o_totalprice")),
-        Files.createTempDirectory("graft-mvnd-data-").toString)
-      val es = extSessionFor(s)
-      es.conf.set(graft.sql.GraftSqlResolution.RootConf, root)
+        s"$root/data")
+      val es = sqlAt(s, root)
       es.sql("CALL graft.create_mv('mvnd_view', 'mvndorders', " +
         "'o_orderstatus', nd_columns => 'o_orderpriority')")
       val src = s"parquet.`$dir/orders.parquet`"
@@ -1010,20 +916,17 @@ object Engine {
       es.sql("DELETE FROM mvndorders WHERE o_orderpriority IN ('5-LOW', '4-NOT SPECIFIED')")
       es.sql("CALL graft.refresh_mv('mvnd_view')")
       root
-    })
+    }
 
   /** HLL approx COUNT DISTINCT in an MV (r15): at this cardinality the
     * sparse sketch is exact, so the maintained estimate — THROUGH an
     * invalidating delete and the key-scoped recompute — hash-equals
     * the oracle's exact COUNT(DISTINCT) of the final state. */
-  def qMvNd(s: SparkSession, dir: String): DataFrame = {
-    val es = extSessionFor(s)
-    es.conf.set(graft.sql.GraftSqlResolution.RootConf, mvNdRootFor(s, dir))
-    es.sql(
+  def qMvNd(s: SparkSession, dir: String): DataFrame =
+    sqlAt(s, mvNdRootFor(s, dir)).sql(
       """SELECT o_orderstatus, n_rows,
         |  hll_sketch_estimate(nd_o_orderpriority) AS nd_priority
         |FROM mvnd_view""".stripMargin)
-  }
 
   // Memoized full-aggregate MV catalog per sf-dir for the RENDERED read
   // (r16): every aggregate class in one view — additive SUM, derived
@@ -1031,18 +934,15 @@ object Engine {
   // DELETE that both kills stored extrema AND removes a whole priority
   // class (forcing the key-scoped recompute on BOTH invalidation
   // shapes), refreshed by name.
-  private val mvRenderRoots = TrieMap.empty[String, String]
   private def mvRenderRootFor(s: SparkSession, dir: String): String =
-    memo(mvRenderRoots, dir, {
-      val root = Files.createTempDirectory("graft-mvrender-").toString
+    Fixtures.rooted("mvrender", dir) { root =>
       val cat = new SnapshotCatalog(root)
       Writers.writeSnapshot(cat, "mvrorders",
         Tables.orders(s, dir).filter(expr("o_orderkey % 2 = 0"))
           .select(col("o_orderkey"), col("o_orderstatus"),
             col("o_orderpriority"), col("o_totalprice")),
-        Files.createTempDirectory("graft-mvrender-data-").toString)
-      val es = extSessionFor(s)
-      es.conf.set(graft.sql.GraftSqlResolution.RootConf, root)
+        s"$root/data")
+      val es = sqlAt(s, root)
       es.sql("CALL graft.create_mv('mvr_view', 'mvrorders', " +
         "'o_orderstatus', 'o_totalprice', avg_columns => 'o_totalprice', " +
         "min_columns => 'o_totalprice', max_columns => 'o_totalprice', " +
@@ -1054,7 +954,7 @@ object Engine {
         "OR o_totalprice < 5000.0 OR o_orderpriority = '5-LOW'")
       es.sql("CALL graft.refresh_mv('mvr_view')")
       root
-    })
+    }
 
   /** The SQL-rendered MV read (r16): `mvr_view__rendered` serves every
     * derived aggregate COMPUTED — `avg_c` as a double, `approx_nd_c` as
@@ -1063,10 +963,8 @@ object Engine {
     * cardinality the sparse sketch is exact, so the whole rendered row
     * set hash-equals DuckDB's from-scratch GROUP BY with AVG + exact
     * COUNT DISTINCT over the final source state. */
-  def qMvRendered(s: SparkSession, dir: String): DataFrame = {
-    val es = extSessionFor(s)
-    es.conf.set(graft.sql.GraftSqlResolution.RootConf, mvRenderRootFor(s, dir))
-    es.sql(
+  def qMvRendered(s: SparkSession, dir: String): DataFrame =
+    sqlAt(s, mvRenderRootFor(s, dir)).sql(
       """SELECT o_orderstatus, n_rows,
         |  CAST(sum_o_totalprice AS DOUBLE) AS sum_price,
         |  avg_o_totalprice AS avg_price,
@@ -1074,24 +972,20 @@ object Engine {
         |  max_o_totalprice AS max_price,
         |  approx_nd_o_orderpriority AS nd_priority
         |FROM mvr_view__rendered""".stripMargin)
-  }
 
   // Memoized where-scoped MV catalog per sf-dir: an MV over a DERIVED
   // relation (r15) — the definition carries a predicate; UPDATEs move
   // rows INTO and OUT OF the predicate set, and the refresh folds the
   // filtered feed one-sided (insert-without-delete entering, delete-
   // without-insert leaving).
-  private val mvWhereRoots = TrieMap.empty[String, String]
   private def mvWhereRootFor(s: SparkSession, dir: String): String =
-    memo(mvWhereRoots, dir, {
-      val root = Files.createTempDirectory("graft-mvwhere-").toString
+    Fixtures.rooted("mvwhere", dir) { root =>
       val cat = new SnapshotCatalog(root)
       Writers.writeSnapshot(cat, "mvworders",
         Tables.orders(s, dir)
           .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice")),
-        Files.createTempDirectory("graft-mvwhere-data-").toString)
-      val es = extSessionFor(s)
-      es.conf.set(graft.sql.GraftSqlResolution.RootConf, root)
+        s"$root/data")
+      val es = sqlAt(s, root)
       es.sql("CALL graft.create_mv('mvw_view', 'mvworders', " +
         "'o_orderstatus', 'o_totalprice', where => 'o_totalprice > 150000.0')")
       // INTO the set: cheap rows bumped over the threshold (their
@@ -1103,78 +997,66 @@ object Engine {
         "WHERE o_totalprice > 250000.0 AND o_orderkey % 3 = 0")
       es.sql("CALL graft.refresh_mv('mvw_view')")
       root
-    })
+    }
 
   /** Predicate-scoped MV from SQL (r15): the filtered fold must equal
     * the oracle's replay of both UPDATEs followed by a from-scratch
     * filtered GROUP BY. */
-  def qMvWhere(s: SparkSession, dir: String): DataFrame = {
-    val es = extSessionFor(s)
-    es.conf.set(graft.sql.GraftSqlResolution.RootConf, mvWhereRootFor(s, dir))
-    es.sql(
+  def qMvWhere(s: SparkSession, dir: String): DataFrame =
+    sqlAt(s, mvWhereRootFor(s, dir)).sql(
       """SELECT o_orderstatus, n_rows,
         |  CAST(sum_o_totalprice AS DOUBLE) AS sum_price
         |FROM mvw_view""".stripMargin)
-  }
 
   // Memoized GDPR-delete catalog per sf-dir: the zero-scan equality-
   // delete path from SQL (S41, r14) — the five lowest order keys masked
   // via CALL graft.delete_by_keys (O(|keys|) driver work, no table
   // scan), then ONE of them re-appended (a fresh row stays visible; the
   // mask scopes to files existing at delete time).
-  private val gdprRoots = TrieMap.empty[String, String]
   private def gdprRootFor(s: SparkSession, dir: String): String =
-    memo(gdprRoots, dir, {
-      val root = Files.createTempDirectory("graft-gdpr-").toString
+    Fixtures.rooted("gdpr", dir) { root =>
       val cat = new SnapshotCatalog(root)
       Writers.writeSnapshot(cat, "gdprorders",
         Tables.orders(s, dir)
           .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice")),
-        Files.createTempDirectory("graft-gdpr-data-").toString)
+        s"$root/data")
       val keys = Tables.orders(s, dir).select(col("o_orderkey"))
         .orderBy(col("o_orderkey")).limit(5).collect().map(_.getLong(0))
-      val es = extSessionFor(s)
-      es.conf.set(graft.sql.GraftSqlResolution.RootConf, root)
+      val es = sqlAt(s, root)
       es.sql(s"CALL graft.delete_by_keys('gdprorders', 'o_orderkey', " +
         s"'${keys.mkString(",")}')")
       es.sql(s"INSERT INTO gdprorders VALUES (${keys.head}, 'R', 123.75)")
       root
-    })
+    }
 
   /** Zero-scan equality delete from SQL (S41's last seam, r14): the
     * visible state must equal the oracle's NOT-IN replay plus the
     * re-appended row — erasure by mask, re-ingest stays visible. */
-  def qDeleteKeysSql(s: SparkSession, dir: String): DataFrame = {
-    val es = extSessionFor(s)
-    es.conf.set(graft.sql.GraftSqlResolution.RootConf, gdprRootFor(s, dir))
-    es.sql(
+  def qDeleteKeysSql(s: SparkSession, dir: String): DataFrame =
+    sqlAt(s, gdprRootFor(s, dir)).sql(
       """SELECT o_orderstatus AS status, COUNT(*) AS n_orders,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(15,4))) AS DOUBLE) AS sum_price
         |FROM gdprorders GROUP BY o_orderstatus""".stripMargin)
-  }
 
   // Memoized per-commit CDF catalog per sf-dir: three commits — even-key
   // base (s1), odd-key SQL INSERT (s2), a key-prefix SQL DELETE (s3) —
   // whose intra-range churn (rows inserted at s2 AND deleted at s3) the
   // per-commit feed must PRESERVE with commit attribution, where the
   // net feed would cancel it.
-  private val cdfRoots = TrieMap.empty[String, String]
   private def cdfRootFor(s: SparkSession, dir: String): String =
-    memo(cdfRoots, dir, {
-      val root = Files.createTempDirectory("graft-cdfsql-").toString
+    Fixtures.rooted("cdfsql", dir) { root =>
       val cat = new SnapshotCatalog(root)
       Writers.writeSnapshot(cat, "cdforders",
         Tables.orders(s, dir).filter(expr("o_orderkey % 2 = 0 AND o_orderkey <= 4000"))
           .select(col("o_orderkey"), col("o_totalprice")),
-        Files.createTempDirectory("graft-cdfsql-data-").toString)
-      val es = extSessionFor(s)
-      es.conf.set(graft.sql.GraftSqlResolution.RootConf, root)
+        s"$root/data")
+      val es = sqlAt(s, root)
       val src = s"parquet.`$dir/orders.parquet`"
       es.sql(s"INSERT INTO cdforders SELECT o_orderkey, o_totalprice FROM $src " +
         "WHERE o_orderkey % 2 = 1 AND o_orderkey <= 1000")
       es.sql("DELETE FROM cdforders WHERE o_orderkey <= 500")
       root
-    })
+    }
 
   /** Per-commit change feed from SQL (S43's last seam, r14):
     * `CALL graft.changelog(..., mode => 'percommit')` must attribute
@@ -1183,8 +1065,7 @@ object Engine {
     * same algebra with literal commit ids (fresh catalog: s1=1, s2=2,
     * s3=3). */
   def qCdfPercommit(s: SparkSession, dir: String): DataFrame = {
-    val es = extSessionFor(s)
-    es.conf.set(graft.sql.GraftSqlResolution.RootConf, cdfRootFor(s, dir))
+    val es = sqlAt(s, cdfRootFor(s, dir))
     es.sql("CALL graft.changelog('cdforders', 1, mode => 'percommit', " +
       "view => 'cdforders_cdf')")
     es.sql(
@@ -1198,25 +1079,22 @@ object Engine {
   // projection under its query-shaped key and serves it as a view; the
   // benched path re-issues the CALL (a HIT after the first run — the
   // persisted plan, no re-scan) and aggregates through the view.
-  private val cacheSqlRoots = TrieMap.empty[String, String]
   private def cacheSqlRootFor(s: SparkSession, dir: String): String =
-    memo(cacheSqlRoots, dir, {
-      val root = Files.createTempDirectory("graft-cachesql-").toString
+    Fixtures.rooted("cachesql", dir) { root =>
       val cat = new SnapshotCatalog(root)
       Writers.writeSnapshot(cat, "cachedorders",
         Tables.orders(s, dir)
           .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice")),
-        Files.createTempDirectory("graft-cachesql-data-").toString)
+        s"$root/data")
       root
-    })
+    }
 
   /** Keyed-cache read from SQL (S5–S12's SQL surface, r14): the entry
     * pins a filtered projection under `(table, predicate, columns)`;
     * the aggregate through the cached view must equal the oracle's
     * plain-WHERE form. */
   def qCacheSql(s: SparkSession, dir: String): DataFrame = {
-    val es = extSessionFor(s)
-    es.conf.set(graft.sql.GraftSqlResolution.RootConf, cacheSqlRootFor(s, dir))
+    val es = sqlAt(s, cacheSqlRootFor(s, dir))
     es.sql("CALL graft.cache('cachedorders', " +
       "predicate => 'o_totalprice > 100000', " +
       "columns => 'o_orderstatus,o_totalprice', view => 'cachedorders_v')")
@@ -1231,17 +1109,15 @@ object Engine {
   // between them — the final hash equality against the plain orders
   // table PROVES the idempotence (a double-load would double every
   // count) and the incremental pickup (drop 2 loads alone over drop 1's
-  // skip) in one oracle.
-  private val ingestRoots = TrieMap.empty[String, String]
+  // skip) in one oracle. The catalog sits beside the landing zone:
+  // `graft.ingest` refuses a source inside the catalog root.
   private def ingestRootFor(s: SparkSession, dir: String): String =
-    memo(ingestRoots, dir, {
-      val root = Files.createTempDirectory("graft-ingsql-").toString
-      val landing = Files.createTempDirectory("graft-ingsql-landing-").toString
+    Fixtures.rooted("ingsql", dir) { base =>
+      val (root, landing) = (s"$base/cat", s"$base/landing")
       val slice = Tables.orders(s, dir)
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
       slice.filter(expr("o_orderkey % 2 = 0")).write.mode("overwrite").csv(landing)
-      val es = extSessionFor(s)
-      es.conf.set(graft.sql.GraftSqlResolution.RootConf, root)
+      val es = sqlAt(s, root)
       es.sql("CREATE TABLE graft.ingorders " +
         "(o_orderkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE)")
       es.sql(s"CALL graft.ingest('ingorders', '$landing', format => 'csv')").collect()
@@ -1251,42 +1127,38 @@ object Engine {
       slice.filter(expr("o_orderkey % 2 = 1")).write.mode("append").csv(landing)
       es.sql(s"CALL graft.ingest('ingorders', '$landing', format => 'csv')").collect()
       root
-    })
+    }
 
   /** Idempotent landing-zone ingest from SQL (S66, r14): two CSV drops +
     * one redundant re-run through `CALL graft.ingest` must reassemble
     * EXACTLY the source table — skipped files skip, fresh files load
     * once, types ride the declared schema (no inference). */
-  def qIngestSql(s: SparkSession, dir: String): DataFrame = {
-    val es = extSessionFor(s)
-    es.conf.set(graft.sql.GraftSqlResolution.RootConf, ingestRootFor(s, dir))
-    es.sql(
+  def qIngestSql(s: SparkSession, dir: String): DataFrame =
+    sqlAt(s, ingestRootFor(s, dir)).sql(
       """SELECT o_orderstatus AS status, COUNT(*) AS n_orders,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(15,4))) AS DOUBLE) AS sum_price
         |FROM ingorders GROUP BY o_orderstatus""".stripMargin)
-  }
 
   // Memoized export catalog per sf-dir: orders committed, a key-range
   // COW delete applied, then the VISIBLE state exported to an external
   // parquet directory through CALL graft.export — the read-back
   // aggregate must hash-equal DuckDB's replay of the mutated state
   // (an export that leaks masked rows or drops files breaks the hash).
-  private val exportRoots = TrieMap.empty[String, String]
+  // The export target sits beside the catalog: `graft.export` refuses a
+  // destination inside the catalog root.
   private def exportDirFor(s: SparkSession, dir: String): String =
-    memo(exportRoots, dir, {
-      val root = Files.createTempDirectory("graft-expsql-").toString
-      val cat = new SnapshotCatalog(root)
-      Writers.writeSnapshot(cat, "exporders",
+    Fixtures.rooted("expsql", dir) { base =>
+      val root = s"$base/cat"
+      Writers.writeSnapshot(new SnapshotCatalog(root), "exporders",
         Tables.orders(s, dir)
           .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice")),
-        Files.createTempDirectory("graft-expsql-data-").toString)
-      val es = extSessionFor(s)
-      es.conf.set(graft.sql.GraftSqlResolution.RootConf, root)
+        s"$base/data")
+      val es = sqlAt(s, root)
       es.sql("DELETE FROM exporders WHERE o_orderkey <= 700")
-      val out = Files.createTempDirectory("graft-expsql-out-").toString + "/shards"
+      val out = s"$base/out/shards"
       es.sql(s"CALL graft.export('exporders', '$out')").collect()
       out
-    })
+    }
 
   /** External-file export (S68, r14): the exported shards, read back as
     * plain parquet, must reproduce the table's visible state exactly. */
@@ -1298,40 +1170,33 @@ object Engine {
 
   // Memoized metadata-count catalog per sf-dir: full orders committed
   // once; the benched/verified path is the manifest-answered COUNT.
-  private val metaCountRoots = TrieMap.empty[String, String]
   private def metaCountRootFor(s: SparkSession, dir: String): String =
-    memo(metaCountRoots, dir, {
-      val root = Files.createTempDirectory("graft-metacount-").toString
+    Fixtures.rooted("metacount", dir) { root =>
       val cat = new SnapshotCatalog(root)
       Writers.writeSnapshot(cat, "countorders", Tables.orders(s, dir),
-        Files.createTempDirectory("graft-metacount-data-").toString)
+        s"$root/data")
       root
-    })
+    }
 
   /** Metadata-only aggregates (SURVEY §2 S52): a global COUNT(*) /
     * COUNT(col) / MIN(col) / MAX(col) over a catalog table folds to the
     * snapshot's manifest row counts and per-file bounds — zero data
     * files opened (plan-asserted in `GraftSqlResolutionSpec`); the
     * values must equal the oracle's real scan. */
-  def qMetaCount(s: SparkSession, dir: String): DataFrame = {
-    val es = extSessionFor(s)
-    es.conf.set(graft.sql.GraftSqlResolution.RootConf, metaCountRootFor(s, dir))
-    es.sql(
+  def qMetaCount(s: SparkSession, dir: String): DataFrame =
+    sqlAt(s, metaCountRootFor(s, dir)).sql(
       """SELECT COUNT(*) AS n_rows, COUNT(o_orderkey) AS n_keys,
         |  MIN(o_orderkey) AS min_key, MAX(o_orderkey) AS max_key,
         |  MIN(o_totalprice) AS min_price, MAX(o_orderstatus) AS max_status
         |FROM countorders""".stripMargin)
-  }
 
   // Memoized clone catalog per sf-dir: orders committed, shallow-cloned,
   // then BOTH sides mutated — the source takes an append the clone must
   // not see, the clone takes a MoR delete the source must not feel. The
   // benched/verified path is the clone read; independence of the source
   // side is spec-asserted (CloneSpec).
-  private val cloneCats = TrieMap.empty[String, SnapshotCatalog]
   private def cloneCatFor(s: SparkSession, dir: String): SnapshotCatalog =
-    memo(cloneCats, dir, {
-      val tmp = Files.createTempDirectory("graft-clone-").toString
+    Fixtures.rooted("clone", dir) { tmp =>
       val cat = new SnapshotCatalog(tmp)
       val orders = Tables.orders(s, dir)
       Writers.writeRangedSnapshot(cat, "orders", orders, tmp, "o_orderkey", 4)
@@ -1345,7 +1210,7 @@ object Engine {
         col("o_totalprice") < 30000.0,
         Seq(RangeNum("o_totalprice", Double.NegativeInfinity, 30000.0)), tmp)
       cat
-    })
+    }
 
   /** Read through a zero-copy clone (SURVEY §2 S51): the clone pinned
     * the source's snapshot by REFERENCE (no data copied), then both
@@ -1366,16 +1231,13 @@ object Engine {
   // DELETE FROM (cheap totalprice cut, MoR position delete), MERGE INTO
   // (restating every %10=3 key at +100000). The benched query reads the
   // final state; the oracle replays the same algebra over raw parquet.
-  private val dmlRoots = TrieMap.empty[String, String]
   private def dmlRootFor(s: SparkSession, dir: String): String =
-    memo(dmlRoots, dir, {
-      val root = Files.createTempDirectory("graft-dmlsql-").toString
+    Fixtures.rooted("dmlsql", dir) { root =>
       val cat = new SnapshotCatalog(root)
       Writers.writeSnapshot(cat, "dmlorders",
         Tables.orders(s, dir).filter(expr("o_orderkey % 2 = 0")),
-        Files.createTempDirectory("graft-dmlsql-data-").toString)
-      val es = extSessionFor(s)
-      es.conf.set(graft.sql.GraftSqlResolution.RootConf, root)
+        s"$root/data")
+      val es = sqlAt(s, root)
       val src = s"parquet.`$dir/orders.parquet`"
       es.sql(s"INSERT INTO dmlorders SELECT * FROM $src WHERE o_orderkey % 2 = 1")
       es.sql("DELETE FROM dmlorders WHERE o_totalprice < 50000")
@@ -1388,7 +1250,7 @@ object Engine {
            |WHEN MATCHED THEN UPDATE SET *
            |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
       root
-    })
+    }
 
   /** SQL DML end-to-end (SURVEY §2 S50, write half): a table seeded by
     * the API then INSERTed, DELETEd and MERGEd purely through
@@ -1396,30 +1258,24 @@ object Engine {
     * equal the oracle's replay of the same algebra over raw parquet.
     * Covers append commits, MoR position deletes and key-merge rewrites
     * all reached from SQL. */
-  def qSqlDml(s: SparkSession, dir: String): DataFrame = {
-    val es = extSessionFor(s)
-    es.conf.set(graft.sql.GraftSqlResolution.RootConf, dmlRootFor(s, dir))
-    es.sql(
+  def qSqlDml(s: SparkSession, dir: String): DataFrame =
+    sqlAt(s, dmlRootFor(s, dir)).sql(
       """SELECT o_orderstatus AS status, COUNT(*) AS n_orders,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(15,4))) AS DOUBLE) AS sum_price
         |FROM dmlorders
         |GROUP BY o_orderstatus""".stripMargin)
-  }
 
   // Memoized SQL-UPDATE catalog per sf-dir: seeded with all orders, then
   // two UPDATE mutations purely through SQL — a pruned
   // multi-column update whose SET reads the OLD row (decimal-exact price
   // bump), and an alias-qualified single-column update on a different
   // predicate. The oracle replays both as nested CASE over raw parquet.
-  private val updRoots = TrieMap.empty[String, String]
   private def updRootFor(s: SparkSession, dir: String): String =
-    memo(updRoots, dir, {
-      val root = Files.createTempDirectory("graft-updsql-").toString
+    Fixtures.rooted("updsql", dir) { root =>
       val cat = new SnapshotCatalog(root)
       Writers.writeSnapshot(cat, "updorders", Tables.orders(s, dir),
-        Files.createTempDirectory("graft-updsql-data-").toString)
-      val es = extSessionFor(s)
-      es.conf.set(graft.sql.GraftSqlResolution.RootConf, root)
+        s"$root/data")
+      val es = sqlAt(s, root)
       es.sql(
         """UPDATE updorders SET o_orderstatus = 'U',
           |  o_totalprice = CAST(CAST(o_totalprice AS DECIMAL(15,4))
@@ -1429,39 +1285,32 @@ object Engine {
         """UPDATE updorders u SET u.o_orderpriority = '0-UPDATED'
           |WHERE u.o_custkey % 7 = 0""".stripMargin)
       root
-    })
+    }
 
   /** SQL UPDATE end-to-end (S53's fourth DML verb): COW self-merge
     * updates reached purely from SQL — SET expressions read the old
     * row, the WHERE prunes the rewrite set, and the final state must
     * equal the oracle's CASE-replay over raw parquet. */
-  def qSqlUpdate(s: SparkSession, dir: String): DataFrame = {
-    val es = extSessionFor(s)
-    es.conf.set(graft.sql.GraftSqlResolution.RootConf, updRootFor(s, dir))
-    es.sql(
+  def qSqlUpdate(s: SparkSession, dir: String): DataFrame =
+    sqlAt(s, updRootFor(s, dir)).sql(
       """SELECT o_orderstatus AS status, o_orderpriority AS priority,
         |  COUNT(*) AS n_orders,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(15,4))) AS DOUBLE) AS sum_price
         |FROM updorders
         |GROUP BY o_orderstatus, o_orderpriority""".stripMargin)
-  }
 
   // Memoized CTAS catalog per sf-dir: the table is CREATED through SQL
   // (graft.<name> CTAS) from raw parquet — zero code-API writes.
-  private val ctasRoots = TrieMap.empty[String, String]
   private def ctasRootFor(s: SparkSession, dir: String): String =
-    memo(ctasRoots, dir, {
-      val root = Files.createTempDirectory("graft-ctassql-").toString
-      val es = extSessionFor(s)
-      es.conf.set(graft.sql.GraftSqlResolution.RootConf, root)
-      es.conf.set(graft.sql.GraftDml.DataDirConf,
-        Files.createTempDirectory("graft-ctassql-data-").toString)
+    Fixtures.rooted("ctassql", dir) { root =>
+      val es = sqlAt(s, root)
+      es.conf.set(graft.sql.GraftDml.DataDirConf, s"$root/data")
       try es.sql(
         s"""CREATE TABLE graft.ctasorders AS
            |SELECT * FROM parquet.`$dir/orders.parquet` WHERE o_totalprice >= 80000""".stripMargin)
       finally es.conf.unset(graft.sql.GraftDml.DataDirConf)
       root
-    })
+    }
 
   // Memoized SQL-maintenance catalog per sf-dir: seed + two SQL
   // INSERTs build a 3-snapshot, many-small-files table, then the
@@ -1469,16 +1318,13 @@ object Engine {
   // (row-preserving rewrite) and CALL graft.expire_snapshots
   // (metadata-only history trim). Neither may change a single visible
   // row: the oracle replays only the DATA algebra over raw parquet.
-  private val maintRoots = TrieMap.empty[String, String]
   private def maintRootFor(s: SparkSession, dir: String): String =
-    memo(maintRoots, dir, {
-      val root = Files.createTempDirectory("graft-maintsql-").toString
+    Fixtures.rooted("maintsql", dir) { root =>
       val cat = new SnapshotCatalog(root)
       Writers.writeSnapshot(cat, "maintorders",
         Tables.orders(s, dir).filter(expr("o_orderkey % 4 = 1")),
-        Files.createTempDirectory("graft-maintsql-data-").toString)
-      val es = extSessionFor(s)
-      es.conf.set(graft.sql.GraftSqlResolution.RootConf, root)
+        s"$root/data")
+      val es = sqlAt(s, root)
       val src = s"parquet.`$dir/orders.parquet`"
       es.sql(s"INSERT INTO maintorders SELECT * FROM $src WHERE o_orderkey % 4 = 2")
       es.sql(s"INSERT INTO maintorders SELECT * FROM $src WHERE o_orderkey % 4 = 3")
@@ -1488,50 +1334,41 @@ object Engine {
         "CALL graft.expire_snapshots('maintorders', retain_last => 1)").head().getLong(0)
       require(expired == 3, s"expected 3 expired snapshots, got $expired")
       root
-    })
+    }
 
   /** SQL maintenance end-to-end (S56): after compaction + expiration
     * ran purely through `CALL graft.*`, the visible data must be
     * EXACTLY the union of the seed and the two inserts — maintenance
     * that leaks into query results is corruption, so the oracle knows
     * nothing about it. */
-  def qSqlMaintenance(s: SparkSession, dir: String): DataFrame = {
-    val es = extSessionFor(s)
-    es.conf.set(graft.sql.GraftSqlResolution.RootConf, maintRootFor(s, dir))
-    es.sql(
+  def qSqlMaintenance(s: SparkSession, dir: String): DataFrame =
+    sqlAt(s, maintRootFor(s, dir)).sql(
       """SELECT o_orderstatus AS status, COUNT(*) AS n_orders,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(15,4))) AS DOUBLE) AS sum_price
         |FROM maintorders
         |GROUP BY o_orderstatus""".stripMargin)
-  }
 
   /** SQL-only table CREATION (the CTAS half of the S50 lifecycle): a
     * table that exists only because `CREATE TABLE graft.t AS SELECT`
     * ran, then aggregated through the same SQL surface. The oracle
     * replays the CTAS predicate over raw parquet. */
-  def qCtasRead(s: SparkSession, dir: String): DataFrame = {
-    val es = extSessionFor(s)
-    es.conf.set(graft.sql.GraftSqlResolution.RootConf, ctasRootFor(s, dir))
-    es.sql(
+  def qCtasRead(s: SparkSession, dir: String): DataFrame =
+    sqlAt(s, ctasRootFor(s, dir)).sql(
       """SELECT o_orderstatus AS status, COUNT(*) AS n_orders,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(15,4))) AS DOUBLE) AS sum_price
         |FROM ctasorders
         |GROUP BY o_orderstatus""".stripMargin)
-  }
 
   // Memoized clause-merge catalog per sf-dir: even-key seed, then ONE
   // conditional MERGE applies a CDC batch (delete / update / gated
   // insert) through SQL.
-  private val mergeClauseRoots = TrieMap.empty[String, String]
   private def mergeClauseRootFor(s: SparkSession, dir: String): String =
-    memo(mergeClauseRoots, dir, {
-      val root = Files.createTempDirectory("graft-mrgcl-").toString
+    Fixtures.rooted("mrgcl", dir) { root =>
       val cat = new SnapshotCatalog(root)
       Writers.writeSnapshot(cat, "cdcorders",
         Tables.orders(s, dir).filter(expr("o_orderkey % 2 = 0")),
-        Files.createTempDirectory("graft-mrgcl-data-").toString)
-      val es = extSessionFor(s)
-      es.conf.set(graft.sql.GraftSqlResolution.RootConf, root)
+        s"$root/data")
+      val es = sqlAt(s, root)
       val src = s"parquet.`$dir/orders.parquet`"
       // op and the restated price both derive from the ORIGINAL price in
       // an inner select — no same-SELECT alias reuse (lateral-alias
@@ -1549,22 +1386,19 @@ object Engine {
            |WHEN MATCHED THEN UPDATE SET *
            |WHEN NOT MATCHED AND s.op <> 'D' THEN INSERT *""".stripMargin)
       root
-    })
+    }
 
   // Explicit-SET merge layout: the source carries ONLY (key, delta) —
   // no full target schema — and the SET expressions read BOTH pair
   // sides; the insert clause names explicit columns with NULL fill.
-  private val mergeSetRoots = TrieMap.empty[String, String]
   private def mergeSetRootFor(s: SparkSession, dir: String): String =
-    memo(mergeSetRoots, dir, {
-      val root = Files.createTempDirectory("graft-mrgset-").toString
+    Fixtures.rooted("mrgset", dir) { root =>
       val cat = new SnapshotCatalog(root)
       Writers.writeSnapshot(cat, "setorders",
         Tables.orders(s, dir).filter(expr("o_orderkey % 2 = 0"))
           .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice")),
-        Files.createTempDirectory("graft-mrgset-data-").toString)
-      val es = extSessionFor(s)
-      es.conf.set(graft.sql.GraftSqlResolution.RootConf, root)
+        s"$root/data")
+      val es = sqlAt(s, root)
       val src = s"parquet.`$dir/orders.parquet`"
       es.sql(
         s"""MERGE INTO setorders t USING (
@@ -1577,37 +1411,31 @@ object Engine {
            |WHEN NOT MATCHED THEN INSERT (o_orderkey, o_orderstatus)
            |  VALUES (s.o_orderkey, 'N')""".stripMargin)
       root
-    })
+    }
 
   /** Explicit matched UPDATE SET (both pair sides) + INSERT (cols)
     * through SQL MERGE; the oracle replays the pair algebra with a
     * CASE over the key join. */
-  def qMergeUpdSet(s: SparkSession, dir: String): DataFrame = {
-    val es = extSessionFor(s)
-    es.conf.set(graft.sql.GraftSqlResolution.RootConf, mergeSetRootFor(s, dir))
-    es.sql(
+  def qMergeUpdSet(s: SparkSession, dir: String): DataFrame =
+    sqlAt(s, mergeSetRootFor(s, dir)).sql(
       """SELECT o_orderstatus AS status, COUNT(*) AS n_orders,
         |  CAST(SUM(CAST(coalesce(o_totalprice, 0) AS DECIMAL(18,4))) AS DOUBLE) AS sum_price
         |FROM setorders
         |GROUP BY o_orderstatus""".stripMargin)
-  }
 
   // By-source merge layout (full-sync apply): matched rows take the
   // source's restated price; unmatched target rows either drop (cheap
   // rows) or get flagged STALE — the Delta/Iceberg WHEN NOT MATCHED BY
   // SOURCE surface exercised end-to-end through SQL.
-  private val mergeBsRoots = TrieMap.empty[String, String]
   private def mergeBsRootFor(s: SparkSession, dir: String): String =
-    memo(mergeBsRoots, dir, {
-      val root = Files.createTempDirectory("graft-mrgbs-").toString
+    Fixtures.rooted("mrgbs", dir) { root =>
       val cat = new SnapshotCatalog(root)
       Writers.writeSnapshot(cat, "bsorders",
         Tables.orders(s, dir).filter(expr("o_orderkey % 2 = 0"))
           .select(col("o_orderkey"), col("o_orderstatus"),
             col("o_totalprice"), col("o_orderpriority")),
-        Files.createTempDirectory("graft-mrgbs-data-").toString)
-      val es = extSessionFor(s)
-      es.conf.set(graft.sql.GraftSqlResolution.RootConf, root)
+        s"$root/data")
+      val es = sqlAt(s, root)
       val src = s"parquet.`$dir/orders.parquet`"
       es.sql(
         s"""MERGE INTO bsorders t USING (
@@ -1620,36 +1448,30 @@ object Engine {
            |WHEN NOT MATCHED BY SOURCE
            |  THEN UPDATE SET o_orderpriority = 'STALE'""".stripMargin)
       root
-    })
+    }
 
   /** MERGE WHEN NOT MATCHED BY SOURCE end-to-end through SQL; the
     * oracle replays the three-way split (replaced / deleted / flagged)
     * over the raw table. */
-  def qMergeBySource(s: SparkSession, dir: String): DataFrame = {
-    val es = extSessionFor(s)
-    es.conf.set(graft.sql.GraftSqlResolution.RootConf, mergeBsRootFor(s, dir))
-    es.sql(
+  def qMergeBySource(s: SparkSession, dir: String): DataFrame =
+    sqlAt(s, mergeBsRootFor(s, dir)).sql(
       """SELECT o_orderstatus AS status, o_orderpriority = 'STALE' AS stale,
         |  COUNT(*) AS n_orders,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price
         |FROM bsorders
         |GROUP BY 1, 2""".stripMargin)
-  }
 
   /** Conditional multi-clause MERGE end-to-end through SQL (the
     * CDC-apply idiom: matched-delete, matched-update, gated insert —
     * first clause wins). The oracle replays the clause algebra over raw
     * parquet; any mis-routing of a row between delete/update/insert
     * shifts the aggregate and fails the hash. */
-  def qMergeClauses(s: SparkSession, dir: String): DataFrame = {
-    val es = extSessionFor(s)
-    es.conf.set(graft.sql.GraftSqlResolution.RootConf, mergeClauseRootFor(s, dir))
-    es.sql(
+  def qMergeClauses(s: SparkSession, dir: String): DataFrame =
+    sqlAt(s, mergeClauseRootFor(s, dir)).sql(
       """SELECT o_orderstatus AS status, COUNT(*) AS n_orders,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(15,4))) AS DOUBLE) AS sum_price
         |FROM cdcorders
         |GROUP BY o_orderstatus""".stripMargin)
-  }
 
   /** Arbitrary SQL through QueryEngine's registered corpus (SURVEY §2
     * S18) — the reference's `execute_query` path (src/sql/engine.py:66). */

@@ -317,12 +317,6 @@ object Pipeline {
     graft.ops.LmScore.score(docs, "doc_id", "text", m)
   }
 
-  // Memoized per sf-dir: the classifier trains ONCE on the even-id half
-  // (bench-the-score-not-the-build, like the ANN indexes); scoring is
-  // map-side under broadcast coefficients.
-  private val qcModels =
-    scala.collection.concurrent.TrieMap.empty[String, graft.ops.QualityClassifier.Model]
-
   /** Quality classifier (L45, GPT-3-style tf-idf logistic regression):
     * train on the even-id half labeled lang=='en', score the held-out
     * odd-id half, roll up predicted-vs-true counts per lang (rows-only
@@ -330,12 +324,15 @@ object Pipeline {
     * gates held-out separation ≥96% on separable corpora). */
   def qQualityClassifier(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
-    val m = qcModels.getOrElseUpdate(dir, {
+    // a fixture per sf-dir: the classifier trains ONCE on the even-id
+    // half (bench-the-score-not-the-build, like the ANN indexes);
+    // scoring is map-side under broadcast coefficients
+    val m = Fixtures("qc_model", dir) {
       graft.ops.QualityClassifier.train(
         docs.filter(col("doc_id") % 2 === 0)
           .withColumn("label", (col("lang") === "en").cast("double")),
         "text", "label", numFeatures = 1 << 16, maxIter = 30)
-    })
+    }
     graft.ops.QualityClassifier.score(docs.filter(col("doc_id") % 2 === 1), "text", m)
       .groupBy(col("lang"), (col("quality_prob") > 0.5).as("predicted_en"))
       .agg(count(lit(1)).as("n"))

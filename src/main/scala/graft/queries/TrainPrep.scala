@@ -254,12 +254,11 @@ object TrainPrep {
       .select(col("w1"), col("w2"), col("c12"), col("lift"))
   }
 
-  // Memoized BPE model per dir (ONE corpus scan → word counts, then
+  // BPE model fixture per dir (ONE corpus scan → word counts, then
   // the driver-side merge loop) — train is the one-time build, the
   // benched path is map-side ENCODE of the whole corpus.
-  private val bpeModels = scala.collection.concurrent.TrieMap.empty[String, graft.ops.Bpe.BpeModel]
   private def bpeModelFor(s: SparkSession, dir: String): graft.ops.Bpe.BpeModel =
-    bpeModels.getOrElseUpdate(dir,
+    Fixtures("bpe_model", dir)(
       graft.ops.Bpe.train(
         graft.ops.Bpe.wordCounts(Tables.documents(s, dir), "text"),
         numMerges = 200, maxWords = 50000))

@@ -68,30 +68,22 @@ object Vectors {
       .select(col("vec_id"), col("sub"), col("cid").cast("long").as("code"))
   }
 
-  // Memoized COMMITTED index catalog per (session, dir) — r17: train
+  // COMMITTED index catalog per (session, dir) — r17: train
   // (m=8 × Lloyd) + encode happen once and land as TABLE SIDECARS
   // ([[graft.meta.VectorIndex]]: model JSON + per-commit codes parquet,
   // refs on every FileMeta), so the benched path is SEARCH OVER THE
   // COMMITTED INDEX — what a fresh session or another node would run,
-  // with no session-memo retrain. The memo here only avoids re-COMMITTING
-  // the fixture per call; the search reads nothing from it but the root.
-  private val pqCats = scala.collection.concurrent.TrieMap
-    .empty[(Int, String), (SparkSession, graft.meta.SnapshotCatalog)]
-  private[queries] def pqCatFor(s: SparkSession, dir: String): graft.meta.SnapshotCatalog = {
-    def build() = {
-      val root = java.nio.file.Files.createTempDirectory("graft-pqidx-").toString
+  // with no session-memo retrain. The fixture here only avoids
+  // re-COMMITTING per call; the search reads nothing from it but the root.
+  private[queries] def pqCatFor(s: SparkSession, dir: String): graft.meta.SnapshotCatalog =
+    Fixtures.rooted("pqidx", (s, dir)) { root =>
       val cat = new graft.meta.SnapshotCatalog(root)
       graft.sinks.Writers.writeSnapshot(cat, "embeddings",
         Tables.embeddings(s, dir), s"$root/data")
       graft.meta.VectorIndex.indexVectors(s, cat, "embeddings", "vec_id", "embedding",
         m = 8, k = 16, nCells = 32, maxIters = 4)
-      (s, cat)
+      cat
     }
-    val key = (System.identityHashCode(s), dir)
-    val (owner, c0) = pqCats.getOrElseUpdate(key, build())
-    if (owner eq s) c0
-    else { val fresh = build(); pqCats.put(key, fresh); fresh._2 }
-  }
 
   private def queryVecs(s: SparkSession, dir: String): Seq[(String, Seq[Double])] =
     Tables.embeddings(s, dir).filter(col("vec_id") < 10)

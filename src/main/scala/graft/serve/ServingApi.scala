@@ -2,30 +2,22 @@ package graft.serve
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-import scala.jdk.CollectionConverters._
-
-/** Batched result serving — the zero-egress analogue of the reference's
-  * Arrow Flight `do_get` (reference: src/flight_server/server.py:41
-  * streams a table in 10k-row record batches).
+/** The catalog side of result serving — the zero-egress analogue of the
+  * reference's Arrow Flight service (reference:
+  * src/flight_server/server.py): the record-batch size, schema lookup
+  * and table listing.
   *
-  * Scale: `stream` pulls rows with `toLocalIterator`, one Spark job per
-  * partition, so the driver holds one partition of rows at a time and
-  * a result far larger than the driver streams through it; batches
-  * bound the consumer's working set exactly like Flight's stream chunks.
-  * The HTTP server's wire formats take [[OrderedPartitions]] instead.
+  * Scale: nothing here pulls rows. Results stream from
+  * [[GraftHttpServer]], which runs them through [[OrderedPartitions]]
+  * and writes `DefaultBatchSize`-row Arrow record batches, the chunking
+  * of Flight's `do_get` (server.py:41 streams a table in 10k-row
+  * batches).
   */
 object ServingApi {
   val DefaultBatchSize = 10000
-
-  final case class ResultStream(schema: StructType, batches: Iterator[Seq[Row]])
-
-  /** Stream a DataFrame as size-bounded row batches (reference:
-    * server.py:52 `_table_generator`). */
-  def stream(df: DataFrame, batchSize: Int = DefaultBatchSize): ResultStream =
-    ResultStream(df.schema, df.toLocalIterator().asScala.grouped(batchSize))
 
   /** Schema lookup without executing — the analogue of
     * `get_flight_info` (reference: server.py:19). */

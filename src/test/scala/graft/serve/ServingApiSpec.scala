@@ -4,16 +4,6 @@ import graft.{SparkSpec, Tables}
 
 class ServingApiSpec extends SparkSpec {
 
-  test("stream yields size-bounded batches covering all rows") {
-    val df = Tables.lineitem(spark, sfDir)
-    val total = df.count()
-    val rs = ServingApi.stream(df, batchSize = 997)
-    assert(rs.schema.fieldNames.contains("l_orderkey"))
-    val sizes = rs.batches.map(_.size).toList
-    assert(sizes.sum == total)
-    assert(sizes.dropRight(1).forall(_ == 997))
-  }
-
   test("flightInfo returns schema without executing") {
     val df = Tables.orders(spark, sfDir)
     assert(ServingApi.flightInfo(df).fieldNames.toSet.contains("o_orderkey"))
