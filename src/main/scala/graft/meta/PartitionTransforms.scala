@@ -1,6 +1,6 @@
 package graft.meta
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import java.time.{Instant, ZoneOffset}
 
@@ -71,6 +71,11 @@ final case class BucketTransform(source: String, n: Int) extends PartTransform {
 }
 
 object PartitionTransforms {
+
+  /** `df` with each transform's hidden partition column materialized —
+    * the frame a transform-partitioned write hands to `partitionBy`. */
+  def withPartitionColumns(df: DataFrame, spec: Seq[PartTransform]): DataFrame =
+    spec.foldLeft(df)((d, t) => d.withColumn(t.partCol, t.colExpr))
 
   /** Map raw-column prune filters through the spec into partition-column
     * filters. A filter whose shape a transform cannot invert contributes

@@ -7,6 +7,7 @@ import java.nio.file.attribute.BasicFileAttributes
 import java.util.Base64
 
 import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -340,11 +341,6 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
 
   private def normalize(p: String): String = SnapshotCatalog.normalizePath(p)
 
-  /** Hive-style `k=v` directory segments of a file path, URL-decoded the
-    * way Spark's partitioned writer escapes them. */
-  private[meta] def parsePartitionValues(path: String): Map[String, String] =
-    SnapshotCatalog.partitionValuesOf(path)
-
   // ---- commit ----------------------------------------------------------
 
   /** Commit a new snapshot that adds `added`, the data files this commit
@@ -586,7 +582,7 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
         sizeBytes = fileSizes.getOrElse(path, 0L),
         stats = stats,
         blooms = blooms.getOrElse(path, Map.empty),
-        partitionValues = parsePartitionValues(path).filter {
+        partitionValues = SnapshotCatalog.partitionValuesOf(path).filter {
           case (k, _) => !bytesCarry(k)
         },
         sketches = sketchRefs.getOrElse(path, Map.empty),
@@ -781,9 +777,7 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
       bloomFpp: Double = 0.03): SnapshotMeta = {
     require(bloomColumns.nonEmpty || sketchColumns.nonEmpty,
       s"indexColumns on $table: pass at least one column")
-    val fields0 = currentSnapshot(table).getOrElse(
-      throw new IllegalArgumentException(s"No snapshots for table $table"))
-      .schema.fieldNames.toSet
+    val fields0 = resolveSnapshot(table).schema.fieldNames.toSet
     (bloomColumns ++ sketchColumns).foreach(c =>
       require(fields0.contains(c), s"no column $c on $table"))
 
@@ -1063,13 +1057,8 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
   /** Last-writer-wins pointer update; a racing slower committer leaving
     * it stale is healed by the forward probe in [[currentSnapshot]]. */
   private def writePointer(table: String, id: Long): Unit =
-    try {
-      val tmp = Files.createTempFile(tableDir(table), ".current-", ".tmp")
-      Files.write(tmp, id.toString.getBytes(StandardCharsets.UTF_8))
-      Files.move(tmp, pointerPath(table), java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      ()
-    } catch { case _: Exception => () } // the pointer is an optimization only
+    try replaceAtomically(pointerPath(table), id.toString)
+    catch { case _: Exception => () } // the pointer is an optimization only
 
   /** All snapshots, oldest first (reference: metadata.py:222
     * `list_snapshots`). One directory listing; parses only manifests
@@ -1297,10 +1286,7 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
     val meta = ViewMeta(name, nextId,
       existing.map(_.versions).getOrElse(Nil) :+ ViewVersion(nextId, clock(), sql))
     Files.createDirectories(viewsDir)
-    val tmp = Files.createTempFile(viewsDir, s".$name-", ".tmp")
-    Files.write(tmp, Serialization.writePretty(meta).getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, viewPath(name), java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    replaceAtomically(viewPath(name), Serialization.writePretty(meta))
     meta
   }
 
@@ -1440,12 +1426,12 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
     if (renameMarker(newName, SnapshotCatalog.RenamePendingMarker).isDefined)
       deleteTableMeta(dst)
     Files.createDirectories(dst)
-    writeMarker(dst.resolve(SnapshotCatalog.RenamePendingMarker), table)
+    replaceAtomically(dst.resolve(SnapshotCatalog.RenamePendingMarker), table)
     copyTableMeta(src, dst)
     // COMMIT: one atomic delete makes the destination visible
     Files.delete(dst.resolve(SnapshotCatalog.RenamePendingMarker))
     // tombstone the source (one atomic write hides it), then delete
-    writeMarker(src.resolve(SnapshotCatalog.RenamedToMarker), newName)
+    replaceAtomically(src.resolve(SnapshotCatalog.RenamedToMarker), newName)
     finishRenameCleanup(src)
   }
 
@@ -1481,14 +1467,24 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
     else None
   }
 
-  /** Atomic single-file write (tmp + ATOMIC_MOVE in-directory). */
-  private def writeMarker(path: Path, content: String): Unit = {
-    val tmp = Files.createTempFile(path.getParent, ".marker-", ".tmp")
+  /** Replace `path` with `content` atomically: a temp file in the same
+    * directory, moved over the target — a reader sees the old bytes or
+    * the new, never a torn file. The one way a metadata file other than
+    * a snapshot manifest is written (pointer, view, tag, staged
+    * manifest, rename marker); a snapshot is link-created instead, so a
+    * taken id can never be overwritten. */
+  private def replaceAtomically(path: Path, content: String): Unit = {
+    val tmp = Files.createTempFile(path.getParent, SnapshotCatalog.ReplaceTmpPrefix, ".tmp")
     Files.write(tmp, content.getBytes(StandardCharsets.UTF_8))
     Files.move(tmp, path, java.nio.file.StandardCopyOption.ATOMIC_MOVE,
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     ()
   }
+
+  /** A table-dir file the rename protocol copies and deletes: not a
+    * rename marker, not an in-flight [[replaceAtomically]] temp. */
+  private def isTableMetaFile(name: String): Boolean =
+    !name.startsWith(".rename") && !name.startsWith(SnapshotCatalog.ReplaceTmpPrefix)
 
   /** Everything except the path-addressed payload dirs
     * (data/blooms/sketches) and rename markers copies; `branches/` (and
@@ -1503,7 +1499,7 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
       val n = p.getFileName.toString
       if (Files.isDirectory(p)) {
         if (!keep.contains(n)) copyTableMeta(p, dst.resolve(n))
-      } else if (!n.startsWith(".rename") && !n.startsWith(".marker-")) {
+      } else if (isTableMetaFile(n)) {
         Files.copy(p, dst.resolve(n),
           java.nio.file.StandardCopyOption.REPLACE_EXISTING)
         ()
@@ -1527,7 +1523,7 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
           try { Files.delete(p); () }
           catch { case _: java.nio.file.DirectoryNotEmptyException => () }
         }
-      } else if (!n.startsWith(".rename") && !n.startsWith(".marker-")) {
+      } else if (isTableMetaFile(n)) {
         Files.deleteIfExists(p)
         ()
       }
@@ -1627,11 +1623,7 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
     require(snapshotById(table, snapshotId).isDefined,
       s"cannot tag: snapshot $snapshotId not found for $table")
     Files.createDirectories(tagDir(table))
-    val tmp = Files.createTempFile(tagDir(table), ".tag-", ".tmp")
-    Files.write(tmp, snapshotId.toString.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, tagPath(table, name), java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    ()
+    replaceAtomically(tagPath(table, name), snapshotId.toString)
   }
 
   /** All tags of a table (name → snapshot id). */
@@ -2342,14 +2334,11 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
       timestampMs = clock(),
       paths = paths.map(SnapshotCatalog.normalizePath),
       props = props)
-    // temp + atomic rename, like every other metadata file: a racing
-    // reader (vacuum building its staged-live set, an audit listing)
-    // must see the whole manifest or none of it — a torn read here
-    // would drop the stage's files from the live set mid-sweep
-    val tmp = tableDir(table).resolve(s".staged-$stagedId.tmp")
-    Files.write(tmp, Serialization.writePretty(meta).getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, stagedPath(table, stagedId),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    // atomic, like every other metadata file: a racing reader (vacuum
+    // building its staged-live set, an audit listing) must see the whole
+    // manifest or none of it — a torn read here would drop the stage's
+    // files from the live set mid-sweep
+    replaceAtomically(stagedPath(table, stagedId), Serialization.writePretty(meta))
     stagedId
   }
 
@@ -2555,12 +2544,8 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
       table: String,
       fromSnapshotId: Long,
       toSnapshotId: Option[Long] = None): DataFrame = {
-    val from = snapshotById(table, fromSnapshotId).getOrElse(
-      throw new IllegalArgumentException(s"Snapshot $fromSnapshotId not found for $table"))
-    val to = toSnapshotId.map(id => snapshotById(table, id).getOrElse(
-        throw new IllegalArgumentException(s"Snapshot $id not found for $table")))
-      .orElse(currentSnapshot(table))
-      .get
+    val from = resolveSnapshot(table, Some(fromSnapshotId))
+    val to = resolveSnapshot(table, toSnapshotId)
     var prevPaths = from.files.map(_.path).toSet
     var prevSnap = from
     val added = scala.collection.mutable.LinkedHashSet[String]()
@@ -2687,12 +2672,8 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
       fromSnapshotId: Long,
       toSnapshotId: Option[Long] = None): DataFrame = {
     import org.apache.spark.sql.Row
-    val from = snapshotById(table, fromSnapshotId).getOrElse(
-      throw new IllegalArgumentException(s"Snapshot $fromSnapshotId not found for $table"))
-    val to = toSnapshotId.map(id => snapshotById(table, id).getOrElse(
-        throw new IllegalArgumentException(s"Snapshot $id not found for $table")))
-      .orElse(currentSnapshot(table))
-      .get
+    val from = resolveSnapshot(table, Some(fromSnapshotId))
+    val to = resolveSnapshot(table, toSnapshotId)
     var prevPaths = from.files.map(_.path).toSet
     var prevSnap = from
     val added = scala.collection.mutable.LinkedHashSet[String]()
@@ -2834,10 +2815,7 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
       table: String,
       fromSnapshotId: Long,
       toSnapshotId: Option[Long] = None): DataFrame = {
-    val to = toSnapshotId.map(id => snapshotById(table, id).getOrElse(
-        throw new IllegalArgumentException(s"Snapshot $id not found for $table")))
-      .orElse(currentSnapshot(table))
-      .getOrElse(throw new IllegalArgumentException(s"No snapshots for table $table"))
+    val to = resolveSnapshot(table, toSnapshotId)
     val ids = snapshots(table).map(_.snapshotId)
       .filter(id => id >= fromSnapshotId && id <= to.snapshotId).sorted
     val parts = ids.zip(ids.drop(1)).map { case (a, b) =>
@@ -2906,8 +2884,7 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
     * props) needs a data commit, so it lives in
     * `Writers.enforceRetention`, which composes both. */
   def enforceRetention(table: String, dryRun: Boolean = false): Int = {
-    val props = currentSnapshot(table).getOrElse(
-      throw new IllegalArgumentException(s"No snapshots for table $table")).props
+    val props = resolveSnapshot(table).props
     val keep = props.get(SnapshotCatalog.RetentionSnapshotsProp).map { v =>
       val n = v.toInt
       require(n >= 1, s"${SnapshotCatalog.RetentionSnapshotsProp} must be >= 1; got $v")
@@ -3444,8 +3421,8 @@ object SnapshotCatalog {
       // characters in on-disk names arrive percent-encoded (a literal
       // space as %20, a literal % as %25). Decode via URI so manifest
       // paths, Files.* calls and scan-captured paths agree
-      // byte-for-byte with the literal on-disk name — URLDecoder would
-      // corrupt a literal `+` to a space, URI.getPath does not. Raw FS
+      // byte-for-byte with the literal on-disk name — a form decoder
+      // would corrupt a literal `+` to a space, URI.getPath does not. Raw FS
       // paths (no scheme) pass through untouched, so a literal % in a
       // listed file name is never double-decoded.
       scala.util.Try(Option(new java.net.URI(p).getPath)).toOption.flatten
@@ -3687,6 +3664,10 @@ object SnapshotCatalog {
   val RenamePendingMarker = ".rename-pending"
   val RenamedToMarker = ".renamed-to"
 
+  /** Name prefix of the temp file an atomic metadata replace writes
+    * before moving it into place. */
+  private[meta] val ReplaceTmpPrefix = ".replace-"
+
   /** Set on a published snapshot to the staged id it came from —
     * the WAP audit trail (Iceberg's `wap.id` summary entry). */
   val WapIdProp = "graft.wap.id"
@@ -3706,14 +3687,21 @@ object SnapshotCatalog {
   /** Set on each table commit a fast-forward replayed: `branch@id`. */
   val FastForwardOfProp = "graft.fastforward.of"
 
-  /** Hive-style `k=v` directory segments of a file path, URL-decoded
-    * the way Spark's partitioned writer escapes them — the ONE parser
-    * both manifest building and dynamic-overwrite matching share. */
+  /** The hive `k=v` directory segment of one partition value, escaped
+    * exactly as Spark's own `partitionBy` writer escapes it — the ONE
+    * encoder; [[partitionValuesOf]] is its inverse. */
+  def partitionSegment(k: String, v: String): String =
+    ExternalCatalogUtils.getPartitionPathString(k, v)
+
+  /** Hive-style `k=v` directory segments of a file path, unescaped the
+    * way Spark's partitioned writer (and [[partitionSegment]]) escapes
+    * them — the ONE parser both manifest building and dynamic-overwrite
+    * matching share. */
   def partitionValuesOf(path: String): Map[String, String] =
     path.split('/').dropRight(1).collect {
       case seg if seg.count(_ == '=') == 1 && !seg.startsWith("=") && !seg.startsWith(".") =>
         val Array(k, v) = seg.split("=", 2)
-        k -> java.net.URLDecoder.decode(v, "UTF-8")
+        ExternalCatalogUtils.unescapePathName(k) -> ExternalCatalogUtils.unescapePathName(v)
     }.toMap
 
   val OperationProp = "operation"

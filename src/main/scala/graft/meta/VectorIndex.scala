@@ -171,8 +171,7 @@ object VectorIndex {
       k: Int = 16,
       nCells: Int = 32,
       maxIters: Int = 4): SnapshotMeta = {
-    val current = catalog.currentSnapshot(table).getOrElse(
-      throw new IllegalArgumentException(s"No snapshots for table $table"))
+    val current = catalog.resolveSnapshot(table)
     val fields = current.schema.fieldNames.toSet
     require(fields.contains(idCol) && fields.contains(vecCol),
       s"indexVectors on $table: need columns $idCol and $vecCol")

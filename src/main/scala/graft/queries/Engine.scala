@@ -348,7 +348,9 @@ object Engine {
     Fixtures.rooted("sketch", dir) { tmp =>
       val cat = new SnapshotCatalog(tmp)
       Writers.writeSnapshot(cat, "customer",
-        Tables.customer(s, dir).repartition(8), s"$tmp/data",
+        // hash-partitioned, not round-robin: which rows share a file (and
+        // so each merged per-file HLL sketch) is then the same every run
+        Tables.customer(s, dir).repartition(8, col("c_custkey")), s"$tmp/data",
         sketchColumns = sketchedCols)
       cat
     }

@@ -51,8 +51,7 @@ object Export {
     }.orElse(asOfMs.map { ts =>
       catalog.snapshotAsOf(table, ts).getOrElse(throw new IllegalArgumentException(
         s"export as_of_ms => $ts: no snapshot of $table at or before that time"))
-    }).getOrElse(catalog.currentSnapshot(table).getOrElse(
-      throw new IllegalArgumentException(s"No snapshots for table $table")))
+    }).getOrElse(catalog.resolveSnapshot(table))
   }
 
   /** Returns (files written, bytes written) — counted from one

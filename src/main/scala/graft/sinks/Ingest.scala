@@ -1,10 +1,7 @@
 package graft.sinks
 
-import java.nio.file.Paths
-import java.util.UUID
-
 import graft.meta.{BucketTransform, CommitConflictException, CommitIntent,
-  DaysTransform, PartTransform, SnapshotCatalog, TruncateTransform}
+  DaysTransform, PartTransform, PartitionTransforms, SnapshotCatalog, TruncateTransform}
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.spark.sql.SparkSession
 
@@ -235,7 +232,6 @@ object Ingest {
       val ready = catalog.schema(table).map(reader.schema).getOrElse(
         if (format == "csv") reader.option("inferSchema", "true") else reader)
       val df = ready.load(fresh.map(_.getPath.toString): _*)
-      val dir = Paths.get(dataDir, s"ingest-${UUID.randomUUID().toString.take(8)}")
       // partition-aware landing (the S21→S4 loop at ingest time): the
       // batch writes hive-partitioned — on raw columns and/or hidden
       // transforms (`days(ts)`: the canonical time-partitioned landing
@@ -244,20 +240,14 @@ object Ingest {
       // partitions' files from METADATA alone (transform layouts also
       // keep tight per-file stats on the SOURCE column, because only
       // the derived value moves into the directory name)
-      if (parts.nonEmpty) {
-        val named = parts.map { case Left(c) => c; case Right(t) => t.source }
-        val missing = named.filterNot(df.columns.contains)
-        require(missing.isEmpty,
-          s"ingest partition_by: unknown column(s) ${missing.mkString(", ")} " +
-            s"(batch has: ${df.columns.mkString(", ")})")
-        val frame = parts.foldLeft(df) {
-          case (d, Right(t)) => d.withColumn(t.partCol, t.colExpr)
-          case (d, Left(_)) => d
-        }
-        val partCols = parts.map { case Left(c) => c; case Right(t) => t.partCol }
-        frame.write.partitionBy(partCols: _*).parquet(dir.toString)
-      } else df.write.parquet(dir.toString)
-      val added = Writers.listParquetIn(dir, recursive = partitionBy.nonEmpty)
+      val missing = parts.map { case Left(c) => c; case Right(t) => t.source }
+        .filterNot(df.columns.contains)
+      require(missing.isEmpty,
+        s"ingest partition_by: unknown column(s) ${missing.mkString(", ")} " +
+          s"(batch has: ${df.columns.mkString(", ")})")
+      val added = Writers.writeFiles(
+        PartitionTransforms.withPartitionColumns(df, parts.collect { case Right(t) => t }),
+        dataDir, "ingest", parts.map { case Left(c) => c; case Right(t) => t.partCol })
       try {
         val snap = catalog.commit(spark, table, added,
           props = Map(

@@ -126,11 +126,9 @@ object MaterializedAgg {
       keys: Seq[String],
       dataDir: String,
       props: Map[String, String]): Unit = {
-    catalog.commit(df.sparkSession, table,
+    Writers.commitOp(catalog, df.sparkSession, table, basis, SnapshotCatalog.OpRewrite,
       Writers.writeFiles(df.repartitionByRange(keys.map(col): _*), dataDir, "view"),
-      props = Map(SnapshotCatalog.OperationProp -> SnapshotCatalog.OpRewrite) ++ props,
-      intent = CommitIntent(basis.map(_.snapshotId),
-        removedPaths = basis.map(_.files.map(_.path)).getOrElse(Nil)))
+      removed = basis.map(_.files.map(_.path)).getOrElse(Nil), props = props)
     ()
   }
 
@@ -189,8 +187,7 @@ object MaterializedAgg {
       spec: MvSpec,
       viewTable: String,
       dataDir: String): Long = {
-    val srcSnap = catalog.currentSnapshot(spec.src).getOrElse(
-      throw new IllegalArgumentException(s"No snapshots for table ${spec.src}"))
+    val srcSnap = catalog.resolveSnapshot(spec.src)
     validateAgainst(srcSnap.schema, spec)
     val viewSnap = catalog.currentSnapshot(viewTable)
     val agg = aggOf(
@@ -217,8 +214,7 @@ object MaterializedAgg {
     * aggregate view. Views built before the aggregate set widened
     * (sums only) read back with the newer prop groups empty. */
   def spec(catalog: SnapshotCatalog, viewTable: String): MvSpec = {
-    val props = catalog.currentSnapshot(viewTable).getOrElse(
-      throw new IllegalArgumentException(s"No snapshots for table $viewTable")).props
+    val props = catalog.resolveSnapshot(viewTable).props
     def req(k: String): String = props.getOrElse(k,
       throw new IllegalArgumentException(
         s"$viewTable is not a materialized aggregate view (no $k prop); " +

@@ -6,6 +6,7 @@ import java.util.UUID
 import graft.meta.{CommitIntent, DeleteFileMeta, PartTransform, PartitionTransforms, PruneFilter, RangeNum, RangeString, SnapshotCatalog, SnapshotMeta}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import scala.jdk.CollectionConverters._
 
@@ -25,10 +26,7 @@ object Writers {
   /** List .parquet leaves, closing the directory stream (Files.list/walk
     * leak an fd if abandoned — a long-lived committer driver cares). */
   private[sinks] def listParquetIn(
-      dir: java.nio.file.Path, recursive: Boolean = false): Seq[String] =
-    listParquet(dir, recursive)
-
-  private def listParquet(dir: java.nio.file.Path, recursive: Boolean = false): Seq[String] = {
+      dir: java.nio.file.Path, recursive: Boolean = false): Seq[String] = {
     val stream = if (recursive) Files.walk(dir) else Files.list(dir)
     try stream.iterator().asScala
       .filter(_.getFileName.toString.endsWith(".parquet"))
@@ -37,16 +35,65 @@ object Writers {
   }
 
   /** Write `df` as parquet under a fresh `dataDir/<prefix>-<id>`
-    * directory and list the files it produced. */
-  private[sinks] def writeFiles(df: DataFrame, dataDir: String, prefix: String): Seq[String] = {
+    * directory, hive-partitioned on `partitionBy` when given, and list
+    * every file it produced. The one place a committed data file is
+    * written: each call owns a new directory, so no write can clobber a
+    * file some snapshot still references. */
+  private[sinks] def writeFiles(
+      df: DataFrame, dataDir: String, prefix: String,
+      partitionBy: Seq[String] = Nil): Seq[String] = {
     val dir = Paths.get(dataDir, s"$prefix-${UUID.randomUUID().toString.take(8)}")
-    df.write.parquet(dir.toString)
-    listParquet(dir)
+    val w = df.write
+    (if (partitionBy.isEmpty) w else w.partitionBy(partitionBy: _*)).parquet(dir.toString)
+    listParquetIn(dir, recursive = true)
   }
 
-  /** An append planned against the table's current head. */
-  private def appendTo(catalog: SnapshotCatalog, table: String): CommitIntent =
-    CommitIntent(catalog.currentSnapshot(table).map(_.snapshotId))
+  /** The one commit step of a Writers op, planned against `basis`:
+    * `written` and `inserts` (outputs holding only net-new rows) are
+    * added, `removed` leave. Stamps the `operation` label, the merge
+    * label's `insert_files`, and `rewritten_from` from `removed`, so
+    * lineage and removal cannot disagree; `intent` carries any further
+    * intent fields. */
+  private[sinks] def commitOp(
+      catalog: SnapshotCatalog,
+      spark: SparkSession,
+      table: String,
+      basis: Option[SnapshotMeta],
+      op: String,
+      written: Seq[String],
+      removed: Seq[String] = Nil,
+      inserts: Seq[String] = Nil,
+      props: Map[String, String] = Map.empty,
+      intent: CommitIntent = CommitIntent(None),
+      bloomColumns: Seq[String] = Nil,
+      sketchColumns: Seq[String] = Nil,
+      declaredSchema: Option[StructType] = None): SnapshotMeta = {
+    val lineage =
+      (if (removed.isEmpty) Nil
+       else Seq(SnapshotCatalog.RewrittenFromProp -> removed.sorted.mkString(","))) ++
+      (if (op != SnapshotCatalog.OpMerge) Nil
+       else Seq(SnapshotCatalog.InsertFilesProp -> inserts.mkString(",")))
+    catalog.commit(spark, table, written ++ inserts, bloomColumns,
+      props = props + (SnapshotCatalog.OperationProp -> op) ++ lineage,
+      sketchColumns = sketchColumns,
+      intent = intent.copy(basisSnapshotId = basis.map(_.snapshotId), removedPaths = removed),
+      declaredSchema = declaredSchema)
+  }
+
+  /** `dataDir` extended by the hive `k=v` segments of `pv`, in key order —
+    * where a rewrite of one partition's files writes its outputs, so
+    * they parse back to the same manifest partition values. */
+  private def partitionDir(dataDir: String, pv: Map[String, String]): String =
+    pv.toSeq.sortBy(_._1).foldLeft(Paths.get(dataDir)) { case (p, (k, v)) =>
+      p.resolve(SnapshotCatalog.partitionSegment(k, v))
+    }.toString
+
+  /** An append of `files`, planned against the table's current head. */
+  private def append(
+      catalog: SnapshotCatalog, df: DataFrame, table: String, files: Seq[String],
+      props: Map[String, String]): SnapshotMeta =
+    commitOp(catalog, df.sparkSession, table, catalog.currentSnapshot(table),
+      SnapshotCatalog.OpAppend, files, props = props)
 
   /** Morton (z-order) value of the given columns under per-column sorted
     * bucket boundaries: bucket index = #boundaries strictly below the
@@ -87,16 +134,13 @@ object Writers {
       df: DataFrame,
       path: String,
       partitionCols: Seq[String],
-      props: Map[String, String] = Map.empty): SnapshotMeta = {
-    writePartitioned(df, path, partitionCols)
+      props: Map[String, String] = Map.empty): SnapshotMeta =
     // append semantics (the commit is labeled OpAppend): prior files
     // survive with their manifest metadata intact — each call writes to
-    // its own directory, so repeated appends accumulate partitions'
-    // files the way writeSnapshot accumulates unpartitioned ones
-    catalog.commit(df.sparkSession, table, listParquet(Paths.get(path), recursive = true),
-      props = Map(SnapshotCatalog.OperationProp -> SnapshotCatalog.OpAppend) ++ props,
-      intent = appendTo(catalog, table))
-  }
+    // its own fresh directory under `path`, so repeated appends into one
+    // path accumulate partitions' files the way writeSnapshot
+    // accumulates unpartitioned ones
+    append(catalog, df, table, writeFiles(df, path, "partitioned", partitionCols), props)
 
   /** Dynamic partition overwrite (SURVEY §2 S46 — the
     * `INSERT OVERWRITE` / Spark `partitionOverwriteMode=dynamic` /
@@ -133,8 +177,7 @@ object Writers {
       props: Map[String, String] = Map.empty): SnapshotMeta = {
     require(partitionCols.nonEmpty, "dynamic overwrite needs partition columns")
     val current = catalog.currentSnapshot(table)
-    writePartitioned(df, path, partitionCols)
-    val newFiles = listParquet(Paths.get(path), recursive = true)
+    val newFiles = writeFiles(df, path, "overwrite", partitionCols)
     val touched: Set[Map[String, String]] = newFiles
       .map(p => SnapshotCatalog.partitionValuesOf(p).filter(kv => partitionCols.contains(kv._1)))
       .toSet
@@ -150,14 +193,9 @@ object Writers {
             "(its rows may belong to a touched partition); use deleteWhere + append instead")
       touched.contains(vals)
     }
-    catalog.commit(df.sparkSession, table, newFiles,
-      props = Map(
-        SnapshotCatalog.OperationProp -> SnapshotCatalog.OpOverwrite,
-        SnapshotCatalog.RewrittenFromProp ->
-          replaced.map(_.path).sorted.mkString(",")) ++ props,
-      intent = CommitIntent(
-        basisSnapshotId = current.map(_.snapshotId),
-        removedPaths = replaced.map(_.path),
+    commitOp(catalog, df.sparkSession, table, current, SnapshotCatalog.OpOverwrite, newFiles,
+      removed = replaced.map(_.path), props = props,
+      intent = CommitIntent(None,
         // a concurrent append INTO a replaced partition has no
         // serializable order with the restatement (neither
         // append-then-overwrite nor overwrite-then-append yields the
@@ -185,16 +223,13 @@ object Writers {
       spec: Seq[PartTransform],
       props: Map[String, String] = Map.empty): SnapshotMeta = {
     require(spec.nonEmpty, "need at least one transform")
-    val withCols = spec.foldLeft(df)((d, t) => d.withColumn(t.partCol, t.colExpr))
-    writePartitioned(withCols, path, spec.map(_.partCol))
     // append semantics: prior files survive with their manifest metadata
     // intact — including files written under a DIFFERENT partition spec
     // (Iceberg partition evolution: each file prunes by its own layout's
     // partition values; filters mapped for a spec a file doesn't carry
     // fall back to its column stats and never mis-prune)
-    catalog.commit(df.sparkSession, table, listParquet(Paths.get(path), recursive = true),
-      props = Map(SnapshotCatalog.OperationProp -> SnapshotCatalog.OpAppend) ++ props,
-      intent = appendTo(catalog, table))
+    append(catalog, df, table, writeFiles(PartitionTransforms.withPartitionColumns(df, spec),
+      path, "transformed", spec.map(_.partCol)), props)
   }
 
   /** Read a transform-partitioned table with predicates stated on RAW
@@ -266,9 +301,7 @@ object Writers {
     // append semantics, like writeSnapshot: prior files survive with their
     // manifest metadata intact (a full OPTIMIZE-style recluster is
     // read-everything + deleteWhere, an explicit user choice)
-    catalog.commit(df.sparkSession, table, files,
-      props = Map(SnapshotCatalog.OperationProp -> SnapshotCatalog.OpAppend) ++ props,
-      intent = appendTo(catalog, table))
+    append(catalog, df, table, files, props)
   }
 
   /** Copy-on-write row-level delete (Iceberg COW DELETE semantics):
@@ -284,8 +317,7 @@ object Writers {
       rowPredicate: DataFrame => DataFrame,
       pruneFilters: Seq[graft.meta.PruneFilter],
       dataDir: String): SnapshotMeta = {
-    val current = catalog.currentSnapshot(table)
-      .getOrElse(throw new IllegalArgumentException(s"No snapshots for table $table"))
+    val current = catalog.resolveSnapshot(table)
     val affected = catalog.planFiles(table, pruneFilters).map(_.path).toSet
     // VISIBLE rows: a COW rewrite of files carrying outstanding MoR
     // position deletes must not resurrect the masked rows
@@ -298,13 +330,8 @@ object Writers {
     // props let incremental readers exclude rewrite outputs (surviving
     // rows of a COW delete are NOT new rows — see
     // SnapshotCatalog.readIncremental).
-    catalog.commit(spark, table, rewritten,
-      props = Map(
-        SnapshotCatalog.OperationProp -> SnapshotCatalog.OpDelete,
-        SnapshotCatalog.RewrittenFromProp -> affected.toSeq.sorted.mkString(",")),
-      intent = CommitIntent(
-        basisSnapshotId = Some(current.snapshotId),
-        removedPaths = affected.toSeq))
+    commitOp(catalog, spark, table, Some(current), SnapshotCatalog.OpDelete, rewritten,
+      removed = affected.toSeq)
   }
 
   /** Copy-on-write row-level UPDATE (Iceberg COW UPDATE semantics; the
@@ -339,8 +366,7 @@ object Writers {
       pruneFilters: Seq[graft.meta.PruneFilter],
       dataDir: String): SnapshotMeta = {
     require(assignments.nonEmpty, "UPDATE needs at least one SET assignment")
-    val current = catalog.currentSnapshot(table)
-      .getOrElse(throw new IllegalArgumentException(s"No snapshots for table $table"))
+    val current = catalog.resolveSnapshot(table)
     val schema = current.schema
     val byName = assignments.map { case (n, c) =>
       val f = schema.fields.find(_.name.equalsIgnoreCase(n)).getOrElse(
@@ -367,14 +393,8 @@ object Writers {
       return current
     }
     val survivorFiles = writeFiles(flagged.filter(!col("__upd")).drop("__upd"), dataDir, "upd-rw")
-    catalog.commit(spark, table, survivorFiles ++ insertFiles,
-      props = Map(
-        SnapshotCatalog.OperationProp -> SnapshotCatalog.OpMerge,
-        SnapshotCatalog.RewrittenFromProp -> affected.sorted.mkString(","),
-        SnapshotCatalog.InsertFilesProp -> insertFiles.mkString(",")),
-      intent = CommitIntent(
-        basisSnapshotId = Some(current.snapshotId),
-        removedPaths = affected))
+    commitOp(catalog, spark, table, Some(current), SnapshotCatalog.OpMerge, survivorFiles,
+      removed = affected, inserts = insertFiles)
   }
 
   /** Merge-on-read row-level delete (the Iceberg v2 position-delete
@@ -403,8 +423,7 @@ object Writers {
       deleteCond: Column,
       pruneFilters: Seq[graft.meta.PruneFilter],
       dataDir: String): SnapshotMeta = {
-    val current = catalog.currentSnapshot(table)
-      .getOrElse(throw new IllegalArgumentException(s"No snapshots for table $table"))
+    val current = catalog.resolveSnapshot(table)
     val affected = catalog.planFiles(table, pruneFilters).map(_.path)
     if (affected.isEmpty) return current
     val marked = catalog.visibleRowsLineage(spark, current, affected)
@@ -424,14 +443,11 @@ object Writers {
       rowCount = perFile.map(_.getLong(1)).sum,
       sizeBytes = Files.size(Paths.get(delPath)),
       dataPaths = perFile.map(r => SnapshotCatalog.normalizePath(r.getString(0))).toSeq.sorted)
-    catalog.commit(spark, table, Nil,
-      props = Map(SnapshotCatalog.OperationProp -> SnapshotCatalog.OpMorDelete),
+    commitOp(catalog, spark, table, Some(current), SnapshotCatalog.OpMorDelete, Nil,
       // intent, not a verbatim delete-file list: concurrent masks carry,
       // and a concurrent rewrite of a file this mask's positions index
       // conflicts (the row_index values are per-file)
-      intent = CommitIntent(
-        basisSnapshotId = Some(current.snapshotId),
-        addDeleteFiles = Seq(delMeta)))
+      intent = CommitIntent(None, addDeleteFiles = Seq(delMeta)))
   }
 
   /** Merge-on-read EQUALITY delete (the Iceberg v2 equality-delete file,
@@ -457,8 +473,7 @@ object Writers {
       keyCols: Seq[String],
       dataDir: String): SnapshotMeta = {
     require(keyCols.nonEmpty, "deleteByKeys needs at least one key column")
-    val current = catalog.currentSnapshot(table)
-      .getOrElse(throw new IllegalArgumentException(s"No snapshots for table $table"))
+    val current = catalog.resolveSnapshot(table)
     val src = keys.select(keyCols.map(col): _*).distinct()
     val affected = catalog.planFiles(table, keyBoundFilters(src, keyCols)).map(_.path)
     if (affected.isEmpty) return current
@@ -474,14 +489,11 @@ object Writers {
       sizeBytes = Files.size(Paths.get(delPath)),
       dataPaths = affected.sorted,
       equalityColumns = keyCols)
-    catalog.commit(spark, table, Nil,
-      props = Map(SnapshotCatalog.OperationProp -> SnapshotCatalog.OpMorDelete),
+    commitOp(catalog, spark, table, Some(current), SnapshotCatalog.OpMorDelete, Nil,
       // the equality mask scopes to `affected` (the files existing at
       // basis that could hold the keys) — a concurrent rewrite of one of
       // them conflicts rather than leaving a mask over dead paths
-      intent = CommitIntent(
-        basisSnapshotId = Some(current.snapshotId),
-        addDeleteFiles = Seq(delMeta)))
+      intent = CommitIntent(None, addDeleteFiles = Seq(delMeta)))
   }
 
   /** Row-retention maintenance (the compliance TTL sweep): expire every
@@ -527,8 +539,7 @@ object Writers {
       table: String,
       dataDir: String,
       dryRun: Boolean = false): (Int, Long) = {
-    val snap = catalog.currentSnapshot(table).getOrElse(
-      throw new IllegalArgumentException(s"No snapshots for table $table"))
+    val snap = catalog.resolveSnapshot(table)
     val props = snap.props
     val rowCol = props.get(SnapshotCatalog.RetentionRowsColumnProp)
     val rowMs = props.get(SnapshotCatalog.RetentionRowsMsProp).map(_.toLong)
@@ -585,28 +596,22 @@ object Writers {
       catalog: SnapshotCatalog,
       table: String,
       dataDir: String): Option[SnapshotMeta] = {
-    val current = catalog.currentSnapshot(table)
-      .getOrElse(throw new IllegalArgumentException(s"No snapshots for table $table"))
+    val current = catalog.resolveSnapshot(table)
     if (current.deleteFiles.isEmpty) return None
     val livePaths = current.files.map(_.path).toSet
     val masked = current.deleteFiles.flatMap(_.dataPaths).distinct
       .filter(livePaths.contains)
     if (masked.isEmpty) return None
     val outputs = writeFiles(catalog.visibleRows(spark, current, masked), dataDir, "mor-mat")
-    Some(catalog.commit(spark, table, outputs,
-      props = Map(
-        SnapshotCatalog.OperationProp -> SnapshotCatalog.OpCompact,
-        SnapshotCatalog.RewrittenFromProp -> masked.sorted.mkString(","),
-        SnapshotCatalog.MaterializedDeletesProp ->
-          current.deleteFiles.map(_.path).sorted.mkString(",")),
+    Some(commitOp(catalog, spark, table, Some(current), SnapshotCatalog.OpCompact, outputs,
+      removed = masked,
+      props = Map(SnapshotCatalog.MaterializedDeletesProp ->
+        current.deleteFiles.map(_.path).sorted.mkString(",")),
       // retire exactly the masks materialized into the outputs; a mask
       // landing concurrently on an untouched file carries forward, one
       // landing on a materialized file conflicts (its rows are baked
       // into outputs computed without it)
-      intent = CommitIntent(
-        basisSnapshotId = Some(current.snapshotId),
-        removedPaths = masked,
-        retireDeleteFiles = current.deleteFiles.map(_.path))))
+      intent = CommitIntent(None, retireDeleteFiles = current.deleteFiles.map(_.path))))
   }
 
   /** Range-partitioned snapshot write: one shuffle splits `df` into
@@ -624,9 +629,7 @@ object Writers {
     val files = writeFiles(
       df.repartitionByRange(nFiles, col(rangeCol)).sortWithinPartitions(rangeCol),
       dataDir, "ranged")
-    catalog.commit(df.sparkSession, table, files,
-      props = Map(SnapshotCatalog.OperationProp -> SnapshotCatalog.OpAppend) ++ props,
-      intent = appendTo(catalog, table))
+    append(catalog, df, table, files, props)
   }
 
   /** Per-key-column min/max of `source`, as manifest prune filters — ONE
@@ -688,8 +691,7 @@ object Writers {
       dataDir: String,
       props: Map[String, String] = Map.empty): SnapshotMeta = {
     require(keyCols.nonEmpty, "mergeInto needs at least one key column")
-    val current = catalog.currentSnapshot(table)
-      .getOrElse(throw new IllegalArgumentException(s"No snapshots for table $table"))
+    val current = catalog.resolveSnapshot(table)
     val targetCols = current.schema.fieldNames.toSeq
     require(targetCols.toSet.subsetOf(source.columns.toSet),
       s"source is missing target columns: ${targetCols.toSet.diff(source.columns.toSet).mkString(", ")}")
@@ -704,17 +706,11 @@ object Writers {
         dataDir, "merge-rw")
     val insertFiles = writeFiles(src, dataDir, "merge-ins")
 
-    catalog.commit(spark, table, survivorFiles ++ insertFiles,
-      props = props ++ Map(
-        SnapshotCatalog.OperationProp -> SnapshotCatalog.OpMerge,
-        SnapshotCatalog.RewrittenFromProp -> affected.sorted.mkString(","),
-        SnapshotCatalog.InsertFilesProp -> insertFiles.mkString(",")),
-      // a concurrent APPEND is serializable with a merge (equivalent to
-      // merge-then-append) and reconciles in; only a concurrent rewrite
-      // or mask of the files this merge read conflicts
-      intent = CommitIntent(
-        basisSnapshotId = Some(current.snapshotId),
-        removedPaths = affected))
+    // a concurrent APPEND is serializable with a merge (equivalent to
+    // merge-then-append) and reconciles in; only a concurrent rewrite
+    // or mask of the files this merge read conflicts
+    commitOp(catalog, spark, table, Some(current), SnapshotCatalog.OpMerge, survivorFiles,
+      removed = affected, inserts = insertFiles, props = props)
   }
 
   /** A MERGE WHEN clause (the Delta/Iceberg multi-clause surface).
@@ -812,8 +808,7 @@ object Writers {
         return mergeInto(spark, catalog, table, source, keyCols, dataDir, props)
       case _ =>
     }
-    val current = catalog.currentSnapshot(table)
-      .getOrElse(throw new IllegalArgumentException(s"No snapshots for table $table"))
+    val current = catalog.resolveSnapshot(table)
     val targetCols = current.schema.fieldNames.toSeq
     // star forms take whole rows from the source; explicit SET / INSERT
     // (cols) forms need only the key columns plus whatever they reference
@@ -986,14 +981,8 @@ object Writers {
         }
       }
 
-    catalog.commit(spark, table, survivorFiles ++ insertFiles,
-      props = props ++ Map(
-        SnapshotCatalog.OperationProp -> SnapshotCatalog.OpMerge,
-        SnapshotCatalog.RewrittenFromProp -> affected.sorted.mkString(","),
-        SnapshotCatalog.InsertFilesProp -> insertFiles.mkString(",")),
-      intent = CommitIntent(
-        basisSnapshotId = Some(current.snapshotId),
-        removedPaths = affected))
+    commitOp(catalog, spark, table, Some(current), SnapshotCatalog.OpMerge, survivorFiles,
+      removed = affected, inserts = insertFiles, props = props)
   }
 
   /** Small-file compaction (Iceberg rewrite_data_files bin-pack): files
@@ -1004,12 +993,12 @@ object Writers {
     *
     * PARTITION-AWARE: small files are binned WITHIN their partition
     * (identical `partitionValues`), and each bin's outputs are written
-    * under re-encoded `k=v` path segments — so compaction preserves
-    * partition pruning (incl. hidden-transform layouts) instead of
-    * collapsing pruned directories into unprunable mixed files. A
-    * partition with a single small file is left alone (nothing to pack
-    * with); unpartitioned tables degenerate to one bin, the old
-    * behavior.
+    * under re-encoded `k=v` path segments (Spark's own escaping) — so
+    * compaction preserves partition pruning (incl. hidden-transform
+    * layouts) instead of collapsing pruned directories into unprunable
+    * mixed files. A partition with a single small file is left alone
+    * (nothing to pack with); unpartitioned tables degenerate to one
+    * bin, the old behavior.
     *
     * Spark-first: ONE read + `coalesce` per bin (no shuffle — compaction
     * moves no rows between keys), one O(touched) metadata commit. The
@@ -1056,8 +1045,7 @@ object Writers {
       smallBytes: Long = 32L << 20,
       minFiles: Int = 2,
       scope: Seq[graft.meta.PruneFilter] = Nil): Option[SnapshotMeta] = {
-    val current = catalog.currentSnapshot(table)
-      .getOrElse(throw new IllegalArgumentException(s"No snapshots for table $table"))
+    val current = catalog.resolveSnapshot(table)
     // `scope` bounds the sweep to the files its manifest filters keep
     // (e.g. a partition predicate) — the partition-at-a-time nightly
     // shape at 100 TB; out-of-scope files keep their metadata untouched
@@ -1069,32 +1057,18 @@ object Writers {
     if (small.size < minFiles) return None
     val binned = small.groupBy(_.partitionValues).filter(_._2.size >= 2)
     if (binned.isEmpty || binned.values.map(_.size).sum < minFiles) return None
-    val base = Paths.get(dataDir, s"compact-${UUID.randomUUID().toString.take(8)}")
-    val outputs = perGroupJobs(binned.toSeq
-      .sortBy(_._1.toSeq.sorted.mkString(","))
-      .zipWithIndex) { case ((pv, fs), gi) =>
-        val sub = pv.toSeq.sortBy(_._1).foldLeft(base.resolve(s"g$gi")) {
-          case (p, (k, v)) =>
-            p.resolve(s"$k=${java.net.URLEncoder.encode(v, "UTF-8")}")
-        }
+    val outputs = perGroupJobs(binned.toSeq.sortBy(_._1.toSeq.sorted.mkString(","))) {
+      case (pv, fs) =>
         val totalBytes = fs.map(_.sizeBytes).sum
         val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
         // visible rows: compacting a file with outstanding MoR deletes
         // materializes them for that bin (row-preserving in VISIBLE
         // terms — the CDC contract this commit's `compact` label claims)
-        catalog.visibleRows(spark, current, fs.map(_.path))
-          .coalesce(nOut)
-          .write.parquet(sub.toString)
-        listParquet(sub)
+        writeFiles(catalog.visibleRows(spark, current, fs.map(_.path)).coalesce(nOut),
+          partitionDir(dataDir, pv), "compact")
       }.flatten
-    val rewritten = binned.values.flatten.map(_.path).toSeq
-    Some(catalog.commit(spark, table, outputs,
-      props = Map(
-        SnapshotCatalog.OperationProp -> SnapshotCatalog.OpCompact,
-        SnapshotCatalog.RewrittenFromProp -> rewritten.sorted.mkString(",")),
-      intent = CommitIntent(
-        basisSnapshotId = Some(current.snapshotId),
-        removedPaths = rewritten)))
+    Some(commitOp(catalog, spark, table, Some(current), SnapshotCatalog.OpCompact, outputs,
+      removed = binned.values.flatten.map(_.path).toSeq))
   }
 
   /** Sorted / z-order rewrite (Iceberg `rewrite_data_files` with a
@@ -1122,9 +1096,10 @@ object Writers {
     * columns' min/max inside every partition. (A flat write here would
     * silently downgrade a `bucket(n,col)` point lookup to
     * stats-can't-prune.) Unpartitioned tables degenerate to one group,
-    * the plain behavior. The hand-encoded segments round-trip exactly
-    * through the manifest parser (`URLDecoder(URLEncoder(v)) == v`), so
-    * new files prune under the same values the old ones did.
+    * the plain behavior. The segments are escaped by the encoder the
+    * manifest parser inverts ([[SnapshotCatalog.partitionSegment]],
+    * Spark's own `partitionBy` escaping), so new files prune under the
+    * same values the old ones did.
     *
     * Scale: reads the scoped files once; z-order bucket bounds come
     * from ONE multi-column `approxQuantile` pass (a single global
@@ -1150,8 +1125,7 @@ object Writers {
       "rewriteSorted needs 1..10 sort columns")
     require(!zorder || sortCols.size >= 2,
       "z-order needs at least 2 columns; one column is a plain sort")
-    val current = catalog.currentSnapshot(table)
-      .getOrElse(throw new IllegalArgumentException(s"No snapshots for table $table"))
+    val current = catalog.resolveSnapshot(table)
     sortCols.foreach(c => require(current.schema.fieldNames.contains(c),
       s"no column $c on $table"))
     if (zorder) sortCols.foreach { c =>
@@ -1176,12 +1150,7 @@ object Writers {
     val groups = scoped.groupBy(_.partitionValues).toSeq
       .sortBy(_._1.toSeq.sorted.mkString(","))
     val totalBytes = math.max(1L, scoped.map(_.sizeBytes).sum)
-    val base = Paths.get(dataDir, s"sorted-${UUID.randomUUID().toString.take(8)}")
-    val outputs = perGroupJobs(groups.zipWithIndex) { case ((pv, fs), gi) =>
-      val sub = pv.toSeq.sortBy(_._1).foldLeft(base.resolve(s"g$gi")) {
-        case (p, (k, v)) =>
-          p.resolve(s"$k=${java.net.URLEncoder.encode(v, "UTF-8")}")
-      }
+    val outputs = perGroupJobs(groups) { case (pv, fs) =>
       // output files proportional to the group's bytes (≥1 each):
       // partitions keep file counts that track their data volume
       val nOut = math.max(1, math.round(
@@ -1197,16 +1166,10 @@ object Writers {
             .sortWithinPartitions("__z")
             .drop("__z")
       }
-      clustered.write.parquet(sub.toString)
-      listParquet(sub)
+      writeFiles(clustered, partitionDir(dataDir, pv), "sorted")
     }.flatten
-    catalog.commit(spark, table, outputs,
-      props = Map(
-        SnapshotCatalog.OperationProp -> SnapshotCatalog.OpCompact,
-        SnapshotCatalog.RewrittenFromProp -> scopedPaths.sorted.mkString(",")),
-      intent = CommitIntent(
-        basisSnapshotId = Some(current.snapshotId),
-        removedPaths = scopedPaths))
+    commitOp(catalog, spark, table, Some(current), SnapshotCatalog.OpCompact, outputs,
+      removed = scopedPaths)
   }
 
   /** Write-audit-publish, stage step: `df`'s files are written and
@@ -1259,11 +1222,9 @@ object Writers {
       sketchColumns: Seq[String] = Nil,
       declaredSchema: Option[org.apache.spark.sql.types.StructType] = None): SnapshotMeta = {
     val files = writeFiles(df, dataDir, "commit")
-    catalog.commit(df.sparkSession, table, files, bloomColumns,
-      props = Map(SnapshotCatalog.OperationProp -> SnapshotCatalog.OpAppend) ++ props,
-      sketchColumns = sketchColumns,
-      intent = appendTo(catalog, table),
-      declaredSchema = declaredSchema)
+    commitOp(catalog, df.sparkSession, table, catalog.currentSnapshot(table),
+      SnapshotCatalog.OpAppend, files, props = props, bloomColumns = bloomColumns,
+      sketchColumns = sketchColumns, declaredSchema = declaredSchema)
   }
 
   /** Full-table replace (SQL `INSERT OVERWRITE` semantics): write `df`,
@@ -1281,15 +1242,9 @@ object Writers {
       props: Map[String, String] = Map.empty): SnapshotMeta = {
     val files = writeFiles(df, dataDir, "replace")
     val prev = catalog.currentSnapshot(table)
-    val prevPaths = prev.map(_.files.map(_.path)).getOrElse(Nil)
-    catalog.commit(df.sparkSession, table, files,
-      props = Map(
-        SnapshotCatalog.OperationProp -> SnapshotCatalog.OpOverwrite,
-        SnapshotCatalog.RewrittenFromProp -> prevPaths.sorted.mkString(",")) ++ props,
-      intent = CommitIntent(
-        basisSnapshotId = prev.map(_.snapshotId),
-        removedPaths = prevPaths,
-        // any concurrently added file is outside the restated state
-        conflictOnAdded = _ => true))
+    commitOp(catalog, df.sparkSession, table, prev, SnapshotCatalog.OpOverwrite, files,
+      removed = prev.map(_.files.map(_.path)).getOrElse(Nil), props = props,
+      // any concurrently added file is outside the restated state
+      intent = CommitIntent(None, conflictOnAdded = _ => true))
   }
 }

@@ -1189,8 +1189,7 @@ case class GraftShowTblPropsCommand(
 
   override def run(session: SparkSession): Seq[Row] = {
     val cat = GraftSqlResolution.catalogFor(root)
-    val props = cat.currentSnapshot(table).getOrElse(
-      throw new IllegalArgumentException(s"No snapshots for table $table")).props
+    val props = cat.resolveSnapshot(table).props
     key match {
       case Some(k) => Seq(Row(k, props.getOrElse(k,
         throw new IllegalArgumentException(
@@ -1236,8 +1235,7 @@ case class GraftTblPropsCommand(
         s"${owned.toSeq.sorted.mkString(", ")} (got ${(badSet ++ badUnset).mkString(", ")})")
     def cols(v: String): Seq[String] =
       v.split(",").toSeq.map(_.trim).filter(_.nonEmpty)
-    def currentProps: Map[String, String] = cat.currentSnapshot(table).getOrElse(
-      throw new IllegalArgumentException(s"No snapshots for table $table")).props
+    def currentProps: Map[String, String] = cat.resolveSnapshot(table).props
     // validate EVERY prop in the statement — values AND column lists —
     // BEFORE the first commit publishes: SET is one statement and must
     // apply all-or-nothing; committing prop-by-prop would let
@@ -1247,8 +1245,7 @@ case class GraftTblPropsCommand(
     // stored value must be exactly what enforcement later parses (a
     // ' 5' that validates at SET but throws at the scheduled sweep is
     // the bug this prevents).
-    val schema = cat.schema(table).getOrElse(
-      throw new IllegalArgumentException(s"No snapshots for table $table"))
+    val schema = cat.resolveSnapshot(table).schema
     val valueSets = set.toSeq.collect { case (k, v) if ValueProps.contains(k) =>
       k -> Some(GraftDml.normalizeSticky(k, v)).filter(_.nonEmpty)
     }
@@ -1276,8 +1273,7 @@ case class GraftTblPropsCommand(
       // TBLPROPERTIES after SET returns exactly what was set. Compute
       // the delta against the current sticky set — drop columns absent
       // from the new value, index the additions; '' clears the kind.
-      val snapProps = cat.currentSnapshot(table).getOrElse(
-        throw new IllegalArgumentException(s"No snapshots for table $table")).props
+      val snapProps = cat.resolveSnapshot(table).props
       def current(p: String): Seq[String] = snapProps.get(p).map(cols).getOrElse(Nil)
       val dropBloom =
         if (set.contains(BloomProp)) current(BloomProp).filterNot(bloom.contains) else Nil
@@ -1297,8 +1293,7 @@ case class GraftTblPropsCommand(
       ()
     }
     unset.filterNot(ValueProps.contains).foreach { p =>
-      val current = cat.currentSnapshot(table).getOrElse(
-        throw new IllegalArgumentException(s"No snapshots for table $table"))
+      val current = cat.resolveSnapshot(table)
         .props.get(p).map(cols).getOrElse(Nil)
       if (current.isEmpty) {
         if (!unsetIfExists) throw new IllegalArgumentException(
@@ -1332,8 +1327,7 @@ case class GraftShowPartitionsCommand(
 
   override def run(session: SparkSession): Seq[Row] = {
     val cat = GraftSqlResolution.catalogFor(root)
-    val snap = cat.currentSnapshot(table).getOrElse(
-      throw new IllegalArgumentException(s"No snapshots for table $table"))
+    val snap = cat.resolveSnapshot(table)
     // a spec key that is not a partition column refuses loudly (Spark's
     // AnalysisException contract) — a typo'd key must read as an error,
     // never as "no partitions"

@@ -44,12 +44,7 @@ object IngestDedupSink {
 
   private def lastCommitted(
       catalog: SnapshotCatalog, table: String, checkpointDir: String): Long =
-    catalog.snapshots(table)
-      .filter(_.props.get(CheckpointProp).contains(checkpointDir))
-      .flatMap(_.props.get(BatchIdProp))
-      .map(_.toLong)
-      .reduceOption(_ max _)
-      .getOrElse(-1L)
+    SnapshotSink.lastCommittedBatch(catalog, table, checkpointDir, BatchIdProp, CheckpointProp)
 
   private[graft] def ingestBatch(
       catalog: SnapshotCatalog,

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.meta.SnapshotCatalog
+import graft.meta.{SnapshotCatalog, SnapshotMeta}
 import graft.sinks.Writers
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -23,8 +23,10 @@ object SnapshotSink {
   private val CheckpointProp = "graft.ingest.checkpoint"
 
   /** Highest batch id this (table, checkpoint) pair has committed, read
-    * from snapshot props — the commit IS the record, so there is no
-    * window where data landed but the batch id didn't.
+    * from the `batchIdProp` / `checkpointProp` pair the sink stamps on
+    * each commit — the commit IS the record, so there is no window where
+    * data landed but the batch id didn't. The one exactly-once ledger
+    * every streaming sink reads, each under its own prop keys.
     *
     * Fast path: when the CURRENT snapshot belongs to this checkpoint
     * (the steady state for a single-writer stream), its batch id is the
@@ -34,19 +36,14 @@ object SnapshotSink {
   private[streaming] def lastCommittedBatch(
       catalog: SnapshotCatalog,
       table: String,
-      checkpointDir: String): Long = {
-    val current = catalog.currentSnapshot(table)
-    current.filter(_.props.get(CheckpointProp).contains(checkpointDir))
-      .flatMap(_.props.get(BatchIdProp))
-      .map(_.toLong)
-      .getOrElse {
-        catalog.snapshots(table)
-          .filter(_.props.get(CheckpointProp).contains(checkpointDir))
-          .flatMap(_.props.get(BatchIdProp))
-          .map(_.toLong)
-          .reduceOption(_ max _)
-          .getOrElse(-1L)
-      }
+      checkpointDir: String,
+      batchIdProp: String = BatchIdProp,
+      checkpointProp: String = CheckpointProp): Long = {
+    def batchOf(s: SnapshotMeta): Option[Long] =
+      s.props.get(batchIdProp).filter(_ => s.props.get(checkpointProp).contains(checkpointDir))
+        .map(_.toLong)
+    catalog.currentSnapshot(table).flatMap(batchOf).getOrElse(
+      catalog.snapshots(table).flatMap(batchOf).reduceOption(_ max _).getOrElse(-1L))
   }
 
   /** Commit one micro-batch exactly once: a batch re-delivered after a

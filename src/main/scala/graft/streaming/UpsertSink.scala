@@ -36,24 +36,6 @@ object UpsertSink {
   private val BatchIdProp = "graft.upsert.batchId"
   private val CheckpointProp = "graft.upsert.checkpoint"
 
-  private[streaming] def lastCommittedBatch(
-      catalog: SnapshotCatalog,
-      table: String,
-      checkpointDir: String): Long = {
-    val current = catalog.currentSnapshot(table)
-    current.filter(_.props.get(CheckpointProp).contains(checkpointDir))
-      .flatMap(_.props.get(BatchIdProp))
-      .map(_.toLong)
-      .getOrElse {
-        catalog.snapshots(table)
-          .filter(_.props.get(CheckpointProp).contains(checkpointDir))
-          .flatMap(_.props.get(BatchIdProp))
-          .map(_.toLong)
-          .reduceOption(_ max _)
-          .getOrElse(-1L)
-      }
-  }
-
   /** Merge one micro-batch exactly once. The FIRST batch against an
     * empty table bootstraps it as a plain snapshot append (a merge needs
     * a target); every later batch merges. */
@@ -64,7 +46,8 @@ object UpsertSink {
       dataDir: String,
       checkpointDir: String,
       versionCol: Option[String])(batch: DataFrame, batchId: Long): Unit = {
-    if (batch.isEmpty || batchId <= lastCommittedBatch(catalog, table, checkpointDir)) return
+    if (batch.isEmpty || batchId <= SnapshotSink.lastCommittedBatch(
+        catalog, table, checkpointDir, BatchIdProp, CheckpointProp)) return
     val deduped = versionCol match {
       case Some(v) =>
         val w = Window.partitionBy(keyCols.map(col): _*).orderBy(col(v).desc)

@@ -70,6 +70,48 @@ class WritersSpec extends SparkSpec {
     })
   }
 
+  test("partitioned appends into one path keep every snapshot readable") {
+    val base = Files.createTempDirectory("graft-papp-")
+    try {
+      val cat = new SnapshotCatalog(s"$base/cat")
+      val c = Tables.customer(spark, sfDir)
+      val s1 = Writers.writePartitionedSnapshot(
+        cat, "cust", c, s"$base/data", Seq("c_mktsegment"))
+      Writers.writePartitionedSnapshot(cat, "cust", c, s"$base/data", Seq("c_mktsegment"))
+      assert(cat.read(spark, "cust").count() == 2 * c.count())
+      assert(cat.read(spark, "cust", snapshotId = Some(s1.snapshotId)).count() == c.count())
+    } finally SnapshotCatalog.deleteRecursively(base)
+  }
+
+  test("partition values with path-special characters prune and survive compaction") {
+    val base = Files.createTempDirectory("graft-pesc-")
+    try {
+      val cat = new SnapshotCatalog(s"$base/cat")
+      val zones = Seq("a+b", "c d", "e%f", "x/y")
+      val s = spark
+      import s.implicits._
+      val df = zones.zipWithIndex.flatMap { case (z, i) => Seq((z, 2 * i), (z, 2 * i + 1)) }
+        .toDF("zone", "v").coalesce(1)
+      def zonesByFile: Seq[String] =
+        cat.currentSnapshot("t").get.files.map(_.partitionValues("zone")).sorted
+      def assertPrunes(perZone: Int): Unit = zones.foreach { z =>
+        val kept = cat.planFiles("t", Seq(graft.meta.EqString("zone", z)))
+        assert(kept.size == perZone && kept.forall(_.partitionValues("zone") == z),
+          s"'$z' keeps ${kept.size} of $perZone files")
+      }
+      Writers.writePartitionedSnapshot(cat, "t", df, s"$base/data1", Seq("zone"))
+      assertPrunes(1)
+      // a second append gives every partition two small files to pack
+      Writers.writePartitionedSnapshot(cat, "t", df, s"$base/data2", Seq("zone"))
+      assert(zonesByFile == (zones ++ zones).sorted)
+      assert(Writers.compact(spark, cat, "t", s"$base/compacted").nonEmpty)
+      assert(zonesByFile == zones.sorted)
+      assertPrunes(1)
+      assert(cat.read(spark, "t").as[Int].collect().sorted.toSeq ==
+        (0 until 8).flatMap(v => Seq(v, v)))
+    } finally SnapshotCatalog.deleteRecursively(base)
+  }
+
   test("co-bucketed tables join without an exchange") {
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force non-broadcast
     try {
