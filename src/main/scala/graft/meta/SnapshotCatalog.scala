@@ -480,40 +480,11 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
       .groupBy(col("__file"))
       .agg(count(lit(1)).as("__rows"), statAggs ++ cntAggs ++ sketchAggs: _*)
 
-    // sketch sidecars, like bloom sidecars: manifests stay stats-sized.
-    // Written EXECUTOR-side (each sk__ bytes column becomes its sidecar
-    // path before the collect) so the driver receives stats + path
-    // strings, never the serialized sketches — same scale rule as the
-    // bloom build. Orphans from task retries fall to vacuumSidecars.
-    val sketchDir = tableDir(table).resolve("sketches")
-    if (sketchCols.nonEmpty) Files.createDirectories(sketchDir)
+    // sketch sidecars, like bloom sidecars: manifests stay stats-sized
     val perFile: Array[Row] =
       if (sketchCols.isEmpty) perFileAgg.collect()
-      else {
-        val sketchDirStr = sketchDir.toAbsolutePath.toString
-        val outSchema = StructType(perFileAgg.schema.map(f =>
-          if (f.name.startsWith("sk__")) f.copy(dataType = StringType) else f))
-        val skIdx: Seq[(Int, String)] =
-          sketchCols.map(c => perFileAgg.schema.fieldIndex(s"sk__$c") -> c)
-        perFileAgg.map { row =>
-          val vals = row.toSeq.toArray
-          skIdx.foreach { case (i, c) =>
-            vals(i) = Option(row.getAs[Array[Byte]](i)).map { bytes =>
-              val sidecar = Paths.get(sketchDirStr,
-                s"hll-${java.util.UUID.randomUUID().toString.take(12)}-$c.bin")
-              Files.write(sidecar, bytes)
-              sidecar.toAbsolutePath.toString
-            }.orNull
-          }
-          Row.fromSeq(vals.toIndexedSeq)
-        }(org.apache.spark.sql.Encoders.row(outSchema)).collect()
-      }
-    val sketchRefs: Map[String, Map[String, String]] = perFile.map { row =>
-      val path = normalize(row.getAs[String]("__file"))
-      path -> sketchCols.flatMap { c =>
-        Option(row.getAs[String](s"sk__$c")).map(c -> _)
-      }.toMap
-    }.toMap
+      else collectSketchSidecars(table, perFileAgg, sketchCols)
+    val sketchRefs = sketchRefsOf(perFile, "__file", sketchCols)
 
     val fileSizes: Map[String, Long] = newPaths.map { p =>
       val f = Paths.get(p)
@@ -734,7 +705,7 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
       .select(col("f"), col("e.c").as("c"), col("e.v").as("v"))
       .as[(String, String, String)]
     val agg = new BloomColumnAgg(rowsByFile, fpp)
-    val bloomDir = tableDir(table).resolve("blooms")
+    val bloomDir = tableDir(table).resolve(SnapshotCatalog.BloomDir)
     Files.createDirectories(bloomDir)
     // sidecars are written EXECUTOR-side, on the reduce task that built
     // each bloom; only the path strings (KBs for a 100k-file commit)
@@ -756,6 +727,44 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
         file -> rows.map { case (_, c, sidecar) => c -> sidecar }.toMap
       }
   }
+
+  /** Collect `perFile`, each `sk__<col>` sketch column of `cols`
+    * rewritten to the path of an `hll-<uuid>-<col>.bin` sidecar under
+    * the table's sketch dir. The sidecars are written EXECUTOR-side, so
+    * the driver receives path strings, never serialized sketches — the
+    * bloom build's scale rule. A retried task leaves at most an
+    * unreferenced sidecar, which [[vacuumSidecars]] reclaims. Shared by
+    * the commit path and the [[indexColumns]] backfill. */
+  private def collectSketchSidecars(
+      table: String, perFile: DataFrame, cols: Seq[String]): Array[Row] = {
+    val dir = tableDir(table).resolve(SnapshotCatalog.SketchDir)
+    Files.createDirectories(dir)
+    val dirStr = dir.toAbsolutePath.toString
+    val outSchema = StructType(perFile.schema.map(f =>
+      if (f.name.startsWith("sk__")) f.copy(dataType = StringType) else f))
+    val skIdx = cols.map(c => perFile.schema.fieldIndex(s"sk__$c") -> c)
+    perFile.map { row =>
+      val vals = row.toSeq.toArray
+      skIdx.foreach { case (i, c) =>
+        vals(i) = Option(row.getAs[Array[Byte]](i)).map { bytes =>
+          val sidecar = Paths.get(dirStr,
+            s"hll-${java.util.UUID.randomUUID().toString.take(12)}-$c.bin")
+          Files.write(sidecar, bytes)
+          sidecar.toAbsolutePath.toString
+        }.orNull
+      }
+      Row.fromSeq(vals.toIndexedSeq)
+    }(org.apache.spark.sql.Encoders.row(outSchema)).collect()
+  }
+
+  /** Per-file sketch refs (file → column → sidecar path) of rows that
+    * [[collectSketchSidecars]] returned, keyed by `fileCol`. */
+  private def sketchRefsOf(rows: Array[Row], fileCol: String,
+      cols: Seq[String]): Map[String, Map[String, String]] =
+    rows.map { row =>
+      normalize(row.getAs[String](fileCol)) ->
+        cols.flatMap(c => Option(row.getAs[String](s"sk__$c")).map(c -> _)).toMap
+    }.toMap
 
   /** Enable index maintenance on columns of a LIVE table — the Delta
     * `CREATE BLOOMFILTER INDEX` surface generalized to both index
@@ -830,29 +839,7 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
           val base = readLogical(spark, sub, current, needSketchPaths, withLineage = true)
           val skAggs = sketchColumns.map(c => hll_sketch_agg(col(c).cast("string")).as(s"sk__$c"))
           val per = base.groupBy(col("_file")).agg(skAggs.head, skAggs.tail: _*)
-          val dir = tableDir(table).resolve("sketches")
-          Files.createDirectories(dir)
-          val dirStr = dir.toAbsolutePath.toString
-          val outSchema = StructType(per.schema.map(f =>
-            if (f.name.startsWith("sk__")) f.copy(dataType = StringType) else f))
-          val skIdx = sketchColumns.map(c => per.schema.fieldIndex(s"sk__$c") -> c)
-          per.map { row =>
-            val vals = row.toSeq.toArray
-            skIdx.foreach { case (i, c) =>
-              vals(i) = Option(row.getAs[Array[Byte]](i)).map { bytes =>
-                val sidecar = Paths.get(dirStr,
-                  s"hll-${java.util.UUID.randomUUID().toString.take(12)}-$c.bin")
-                Files.write(sidecar, bytes)
-                sidecar.toAbsolutePath.toString
-              }.orNull
-            }
-            Row.fromSeq(vals.toIndexedSeq)
-          }(org.apache.spark.sql.Encoders.row(outSchema)).collect()
-            .map { row =>
-              normalize(row.getAs[String]("_file")) ->
-                sketchColumns.flatMap(c =>
-                  Option(row.getAs[String](s"sk__$c")).map(c -> _)).toMap
-            }.toMap
+          sketchRefsOf(collectSketchSidecars(table, per, sketchColumns), "_file", sketchColumns)
         }
 
       last = publishOn(table) { prev =>
@@ -1302,16 +1289,6 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
       throw new IllegalArgumentException(s"no view $name in this catalog")
   }
 
-  /** Drop a table: its manifests, current pointer, tags, staged
-    * entries and bloom/sketch sidecars are deleted and the memoized
-    * parses purged. Data files in the CALLER'S data dir are untouched —
-    * vacuum BEFORE dropping if the bytes should go too, because
-    * liveness information dies with the metadata. `spareDataDir` keeps
-    * the table's own `<tableDir>/data` subtree as well (where SQL DML
-    * writes by default): a zero-copy clone may reference those files,
-    * so plain SQL DROP spares them and `DROP ... PURGE` is the explicit
-    * path that deletes bytes. Maintenance op: don't race it with
-    * in-flight commits on the same table. */
   /** Refuse-and-name when a materialized aggregate view's stored
     * definition ([[SnapshotCatalog.MvSrcProp]]) feeds from `table` —
     * the same Postgres discipline stored views get: a dropped or
@@ -1325,38 +1302,158 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
         s"${deps.sorted.mkString(", ")} (drop or rebuild them first)")
   }
 
-  def dropTable(table: String, spareDataDir: Boolean = false): Boolean = {
+  /** Drop a table or a branch ref: its manifests, current pointer,
+    * tags, staged entries and branch metadata are deleted, the memoized
+    * parses purged and the directories left empty removed. Payload
+    * ([[SnapshotCatalog.PayloadDirs]] of the table and of every branch
+    * directory) is never touched: manifests address those files by
+    * path, and a zero-copy clone or a branch may still read them. Bytes
+    * go only through the liveness-checked [[purgeTable]] and the
+    * vacuums — vacuum BEFORE dropping if they should go, because
+    * liveness information dies with the metadata. False when no
+    * metadata is left to drop. Maintenance op: don't race it with
+    * in-flight commits on the same table. */
+  def dropTable(table: String): Boolean = {
     val dir = tableDir(table)
     if (!Files.isDirectory(dir)) return false
     requireNoDependentViews(table, None, s"drop table $table")
     requireNoDependentMvs(table, s"drop table $table")
-    val spared = sparedSubtrees(table)
+    val spared = payloadDirs(table)
     val stream = Files.walk(dir)
-    val all = try stream.iterator().asScala.toList finally stream.close()
-    all.sortBy(-_.getNameCount)
-      .filterNot { p =>
-        val ap = p.toAbsolutePath
-        spareDataDir && (spared.exists(ap.startsWith) || ap == dir.toAbsolutePath ||
-          // keep the ancestor dirs of a spared branch subtree alive
-          spared.exists(_.startsWith(ap)))
-      }
-      .foreach(p => Files.deleteIfExists(p))
+    val all = try stream.iterator().asScala.map(_.toAbsolutePath).toList finally stream.close()
+    // a payload dir, anything under one and every ancestor of one stays
+    val (kept, doomed) = all.partition(p => spared.exists(s => p.startsWith(s) || s.startsWith(p)))
+    doomed.sortBy(-_.getNameCount).foreach(p => Files.deleteIfExists(p))
+    pruneEmptyDirs(kept.filter(Files.isDirectory(_)))
     val prefix = dir.toAbsolutePath.toString
     manifestCache.keySet.removeIf(_.startsWith(prefix))
-    true
+    doomed.nonEmpty
   }
 
-  /** The subtrees a metadata drop must never wipe: the table's own
-    * `data`/`blooms`/`sketches` dirs AND each branch's — a zero-copy
-    * clone (of the table or of a branch) references those files
-    * verbatim, so only the explicitly liveness-checked purge path may
-    * delete bytes there. Absolute paths. */
-  def sparedSubtrees(table: String): Seq[Path] = {
+  /** `DROP TABLE ... PURGE`: [[dropTable]], then delete the bytes the
+    * dropped histories reference (the Iceberg purge contract), bounded
+    * so it is safe among zero-copy clones and branches:
+    *   - the candidates are every path the dropped refs' snapshots
+    *     reference — main plus every branch of a base table, just the
+    *     branch for a branch ref — plus every file under the dropped
+    *     ref's payload dirs (failed-write orphans die with the table);
+    *   - a candidate another ref still references survives
+    *     ([[foreignWalkRefs]] bounds which refs are walked): a clone
+    *     lists its source's files verbatim, so purging either side must
+    *     spare the other's.
+    * The directories the deletions leave empty are removed up to the
+    * catalog root, so an unshared table vanishes whole. Deletion is
+    * best-effort, like a vacuum. */
+  def purgeTable(table: String): Unit = {
+    val dropped = if (table.contains("/branches/")) Seq(table) else refsOf(table)
+    val candidates = (dropped.flatMap(r => snapshots(r).flatMap(referencedPaths)) ++
+      payloadDirs(table).flatMap(filesUnder)).distinct
+    val foreign = liveSet(foreignWalkRefs(dropped.toSet, table, candidates))
+    val doomed = candidates.filterNot(isLive(foreign, _))
+    dropTable(table)
+    doomed.foreach(p => try deletePayload(p) catch { case _: IOException => false })
+    pruneEmptyDirs(doomed.flatMap(p => Option(Paths.get(p).getParent)).distinct)
+  }
+
+  /** Foreign refs whose FULL snapshot histories must be consulted before
+    * purging `candidates` — the bound that keeps a purge from parsing
+    * every other table's 10k-snapshot history on a large catalog. A
+    * foreign table can reference a candidate only through file sharing,
+    * and the supported sharing verbs (clone, branch) all surface the
+    * shared paths in a ref's FIRST (fork-point) or CURRENT snapshot, or
+    * place candidates under that table's own directory tree (the
+    * dropped table was cloned FROM it). So a table is walked iff any
+    * cheap probe hits: tree-prefix containment, or candidate membership
+    * in its refs' first/current snapshots (two memoized manifest parses
+    * per ref). If any candidate lies OUTSIDE every known table tree
+    * (external shared dataDir deployments), attribution is impossible
+    * and every ref is walked. Residual, accepted: a ref whose ONLY
+    * references to candidates sit in mid-history snapshots while both
+    * endpoint probes are clean (hand-committed foreign paths later
+    * rewritten away, or an expire-then-rollback lineage dance) is not
+    * walked; the clone/branch verbs never produce that shape. */
+  private[graft] def foreignWalkRefs(
+      droppedRefs: Set[String],
+      droppedTable: String,
+      candidates: Seq[String]): Seq[String] = {
+    val candidateSet = candidates.toSet
+    def liveRefsOf(t: String): Seq[String] = refsOf(t).filterNot(droppedRefs.contains)
+    val droppedTree = tableDirOf(droppedTable) + "/"
+    val trees = tables().filterNot(t => droppedRefs.contains(t) || t == droppedTable)
+      .map(t => t -> (tableDirOf(t) + "/"))
+    if (candidates.exists(p => !p.startsWith(droppedTree) &&
+        !trees.exists { case (_, tr) => p.startsWith(tr) }))
+      return trees.flatMap(x => liveRefsOf(x._1))
+    def hits(snap: Option[SnapshotMeta]): Boolean =
+      snap.exists(referencedPaths(_).exists(candidateSet.contains))
+    trees.filter { case (t, tr) =>
+      candidates.exists(_.startsWith(tr)) ||
+        liveRefsOf(t).exists(r => hits(firstSnapshot(r)) || hits(currentSnapshot(r)))
+    }.flatMap(x => liveRefsOf(x._1))
+  }
+
+  /** A table and its branch refs. */
+  private def refsOf(table: String): Seq[String] =
+    table +: branches(table).map(branchRef(table, _))
+
+  /** Every path `snap` references, normalized: data and delete files,
+    * bloom and sketch sidecars (legacy inline bloom values are not
+    * paths), PQ codes directories and the PQ model. The one reference
+    * list the vacuums and the purge read. */
+  private def referencedPaths(snap: SnapshotMeta): Iterator[String] =
+    (snap.files.iterator.flatMap(f => Iterator(f.path) ++
+      (f.blooms.valuesIterator ++ f.sketches.valuesIterator).filter(_.startsWith("/")) ++
+      f.pqCodes) ++
+      snap.deleteFiles.iterator.map(_.path) ++
+      snap.props.get(SnapshotCatalog.PqModelProp)).map(normalize)
+
+  /** Every path any snapshot of `refs` references. */
+  private def liveSet(refs: Seq[String]): Set[String] =
+    refs.iterator.flatMap(r => snapshots(r).iterator.flatMap(referencedPaths)).toSet
+
+  /** Is `p` live: referenced itself, or under a referenced directory
+    * (a PQ codes dir protects every file in it)? */
+  private def isLive(live: Set[String], p: String): Boolean =
+    Iterator.iterate(Paths.get(normalize(p)))(_.getParent).takeWhile(_ != null)
+      .exists(a => live.contains(a.toString))
+
+  /** Delete one payload path; a directory (PQ codes) goes whole. */
+  private def deletePayload(p: String): Boolean = {
+    val path = Paths.get(p)
+    if (Files.isDirectory(path)) SnapshotCatalog.deleteRecursively(path)
+    else Files.deleteIfExists(path)
+  }
+
+  /** Every regular file under `dir` (none when it is absent). */
+  private def filesUnder(dir: Path): Seq[String] =
+    if (!Files.isDirectory(dir)) Nil
+    else {
+      val stream = Files.walk(dir)
+      try stream.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(_.toAbsolutePath.toString).toList
+      finally stream.close()
+    }
+
+  /** Best-effort removal of the empty directories among `dirs` and
+    * their ancestors, deepest first, up to (not including) the catalog
+    * root; a non-empty directory stays and ends its climb. */
+  private def pruneEmptyDirs(dirs: Seq[Path]): Unit = {
+    val rootAbs = Paths.get(root).toAbsolutePath
+    dirs.map(_.toAbsolutePath).sortBy(-_.getNameCount).foreach { start =>
+      var d = start
+      while (d != null && d.startsWith(rootAbs) && d != rootAbs && Files.isDirectory(d) &&
+          scala.util.Try(Files.delete(d)).isSuccess)
+        d = d.getParent
+    }
+  }
+
+  /** The payload dirs of `table` and of each of its branch directories,
+    * absolute. Branch dirs come from DISK, not [[branches]]: a dropped
+    * branch leaves its payload behind with no live snapshot, and a
+    * clone taken from it before the drop may still reference those
+    * bytes. */
+  private def payloadDirs(table: String): Seq[Path] = {
     val dir = tableDir(table)
-    val kinds = Seq("data", "blooms", "sketches")
-    // branch dirs from DISK, not branches(): a dropped branch leaves its
-    // spared data behind with no live snapshot, and a clone taken from
-    // it before the drop may still reference those bytes
     val brDir = dir.resolve("branches")
     val onDisk =
       if (!Files.isDirectory(brDir)) Nil
@@ -1365,15 +1462,15 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
         try stream.iterator().asScala.filter(Files.isDirectory(_)).toList
         finally stream.close()
       }
-    (kinds.map(d => dir.resolve(d)) ++
-      onDisk.flatMap(bd => kinds.map(d => bd.resolve(d))))
+    (dir +: onDisk).flatMap(d => SnapshotCatalog.PayloadDirs.map(d.resolve))
       .map(_.toAbsolutePath)
   }
 
   /** Rename a table: a METADATA-ONLY move of its manifests, pointer,
     * tags, staged WAP entries and branch metadata into the new name's
-    * directory. Data files and bloom/sketch sidecars are PATH-ADDRESSED
-    * by the manifests (absolute paths), so they STAY where they are and
+    * directory. Payload — data files, bloom/sketch sidecars and the
+    * vector index ([[SnapshotCatalog.PayloadDirs]]) — is PATH-ADDRESSED
+    * by the manifests (absolute paths), so it STAYS where it is and
     * every snapshot keeps reading verbatim — time travel, branches,
     * CDC eras and zero-copy clones taken from this table all survive
     * unchanged, and a later vacuum under either name still sees the
@@ -1486,19 +1583,18 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
   private def isTableMetaFile(name: String): Boolean =
     !name.startsWith(".rename") && !name.startsWith(SnapshotCatalog.ReplaceTmpPrefix)
 
-  /** Everything except the path-addressed payload dirs
-    * (data/blooms/sketches) and rename markers copies; `branches/` (and
-    * `tags/`) recurse — a branch is a nested table dir with the same
-    * layout, keeping ITS payload dirs behind too. Source untouched. */
+  /** Everything except the payload dirs ([[SnapshotCatalog.PayloadDirs]])
+    * and rename markers copies; `branches/` (and `tags/`) recurse — a
+    * branch is a nested table dir with the same layout, keeping ITS
+    * payload dirs behind too. Source untouched. */
   private def copyTableMeta(src: Path, dst: Path): Unit = {
-    val keep = Set("data", "blooms", "sketches")
     Files.createDirectories(dst)
     val stream = Files.list(src)
     val entries = try stream.iterator().asScala.toList finally stream.close()
     entries.foreach { p =>
       val n = p.getFileName.toString
       if (Files.isDirectory(p)) {
-        if (!keep.contains(n)) copyTableMeta(p, dst.resolve(n))
+        if (!SnapshotCatalog.PayloadDirs.contains(n)) copyTableMeta(p, dst.resolve(n))
       } else if (isTableMetaFile(n)) {
         Files.copy(p, dst.resolve(n),
           java.nio.file.StandardCopyOption.REPLACE_EXISTING)
@@ -1511,14 +1607,13 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
     * keeping payload dirs and rename markers (handled explicitly by the
     * caller); empty subdirs fall bottom-up. */
   private def deleteTableMeta(dir: Path): Unit = {
-    val keep = Set("data", "blooms", "sketches")
     if (!Files.isDirectory(dir)) return
     val stream = Files.list(dir)
     val entries = try stream.iterator().asScala.toList finally stream.close()
     entries.foreach { p =>
       val n = p.getFileName.toString
       if (Files.isDirectory(p)) {
-        if (!keep.contains(n)) {
+        if (!SnapshotCatalog.PayloadDirs.contains(n)) {
           deleteTableMeta(p)
           try { Files.delete(p); () }
           catch { case _: java.nio.file.DirectoryNotEmptyException => () }
@@ -1538,7 +1633,7 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
     * manifest parse. The purge-attribution probe: any file a clone or
     * branch shares sits in its fork-point snapshot, which (until
     * expired) is its oldest. */
-  def firstSnapshot(table: String): Option[SnapshotMeta] = {
+  private def firstSnapshot(table: String): Option[SnapshotMeta] = {
     val dir = tableDir(table)
     if (!Files.isDirectory(dir)) return None
     val stream = Files.list(dir)
@@ -1547,23 +1642,6 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
     paths.flatMap(p => re.findFirstMatchIn(p.getFileName.toString)
         .map(m => m.group(1).toLong -> p))
       .sortBy(_._1).headOption.map(x => parseSnap(x._2))
-  }
-
-  /** Best-effort bottom-up removal of now-empty directories under the
-    * table dir (and the dir itself) — the tail of a PURGE after the
-    * liveness-checked file deletions; shared survivors keep their dirs
-    * (delete on a non-empty dir fails and is ignored). */
-  def pruneEmptyDirs(table: String): Unit = {
-    val dir = tableDir(table)
-    if (!Files.isDirectory(dir)) return
-    val stream = Files.walk(dir)
-    val all = try stream.iterator().asScala.toList finally stream.close()
-    all.sortBy(-_.getNameCount).foreach { p =>
-      if (Files.isDirectory(p)) {
-        try Files.delete(p)
-        catch { case _: java.io.IOException => () } // non-empty: keep
-      }
-    }
   }
 
   def snapshots(table: String): Seq[SnapshotMeta] = {
@@ -2230,14 +2308,17 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
     * commits; existing sidecar references carry file-for-file.
     *
     * CAVEAT (narrower than Delta shallow clones since r10): the clone
-    * references files under the SOURCE's data directories. Within the
-    * SAME catalog both [[vacuumDataFiles]] and `DROP ... PURGE` treat
-    * any file another table's history lists as live, so expiring the
-    * cloned-from snapshot and vacuuming the source cannot delete bytes
-    * the clone still needs. The hazard remains only for clones tracked
-    * by a DIFFERENT catalog instance root — there, keep clones inside
-    * the source's retention window, or `compact` the clone (rewrites
-    * its live rows into its own directories) to sever the tie. */
+    * references files under the SOURCE's payload directories (data,
+    * sidecars and the vector index). A drop or rename of the source
+    * leaves them in place, and within the SAME catalog both vacuums and
+    * [[purgeTable]] treat any path another table's history references
+    * as live, so expiring the cloned-from snapshot and vacuuming or
+    * purging the source cannot delete bytes the clone still needs
+    * (search on a clone's vector index included). The hazard remains
+    * only for clones tracked by a DIFFERENT catalog instance root —
+    * there, keep clones inside the source's retention window, or
+    * `compact` the clone (rewrites its live rows into its own
+    * directories) to sever the tie. */
   def cloneTable(src: String, dst: String, fromSnapshotId: Option[Long] = None): SnapshotMeta = {
     val s = resolveSnapshot(src, fromSnapshotId)
     val sticky = s.props.filter { case (k, _) =>
@@ -2264,12 +2345,14 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
     names.filter(n => currentSnapshot(s"$table/branches/$n").isDefined).sorted
   }
 
-  /** Delete a branch: its manifests, pointer, tags and sidecars. Data
-    * files the branch wrote are left to [[vacuumDataFiles]] — they stop
-    * being live the moment the branch metadata is gone (and a zero-copy
-    * clone taken FROM the branch may still reference them). */
+  /** Delete a branch: its manifests, pointer and tags ([[dropTable]] on
+    * the branch ref). The data files and sidecars the branch wrote stay
+    * on disk — a zero-copy clone taken FROM the branch may still
+    * reference them — and stop being live the moment the branch
+    * metadata is gone: [[vacuumDataFiles]] and [[vacuumSidecars]]
+    * reclaim them once nothing else references them. */
   def dropBranch(table: String, name: String): Boolean =
-    dropTable(branchRef(table, name), spareDataDir = true)
+    dropTable(branchRef(table, name))
 
   /** Publish a branch into its table (Iceberg `fast_forward`): replays
     * every branch commit after the fork point onto the table head, in
@@ -2840,15 +2923,10 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
     * branch forked before the expire can still reference them, and an
     * in-flight commit's sidecars land before its manifest publishes;
     * the vacuum's branch-aware liveness + grace window cover both).
-    * Returns the number removed. */
-  def expireSnapshots(table: String, keepLast: Int, dryRun: Boolean = false): Int = {
-    require(keepLast >= 1, "must keep at least one snapshot")
-    val snaps = snapshots(table)
-    val tagged = tags(table).values.toSet
-    val toDrop = snaps.dropRight(keepLast).filterNot(s => tagged.contains(s.snapshotId))
-    if (!dryRun) toDrop.foreach { s => Files.deleteIfExists(snapPath(table, s.snapshotId)) }
-    toDrop.size
-  }
+    * Returns the number removed. The age-free case of
+    * [[expireSnapshotsOlderThan]]. */
+  def expireSnapshots(table: String, keepLast: Int, dryRun: Boolean = false): Int =
+    expireSnapshotsOlderThan(table, Long.MaxValue, keepLast, dryRun)
 
   /** Age-based expiration (Iceberg's `expire_snapshots(older_than,
     * retain_last)`): drop snapshots committed strictly before
@@ -2930,12 +3008,12 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
         s.props.contains(SnapshotCatalog.RetentionAgeMsProp))
 
   /** Orphan data-file GC (the Iceberg remove_orphan_files analogue):
-    * delete `.parquet` files under `dataDir` that NO surviving snapshot
-    * of `table` references — the data-side complement of
-    * [[expireSnapshots]] (which is metadata-only). COW rewrites and
-    * compactions strand their input files once the snapshots that
-    * referenced them expire; without GC, storage grows with write
-    * amplification instead of live data.
+    * delete `.parquet` files under `dataDir` that no surviving snapshot
+    * references ([[sweep]] has the liveness rule) — the data-side
+    * complement of [[expireSnapshots]] (which is metadata-only). COW
+    * rewrites and compactions strand their input files once the
+    * snapshots that referenced them expire; without GC, storage grows
+    * with write amplification instead of live data.
     *
     * `dataDir` must belong exclusively to this table (the same contract
     * Iceberg's action has for a table location). Files newer than
@@ -2944,39 +3022,6 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
     * Returns the deleted paths. */
   def vacuumDataFiles(table: String, dataDir: String, graceMs: Long = 3600 * 1000L,
       dryRun: Boolean = false): Seq[String] = {
-    // staged-but-unpublished WAP files are live too: an in-audit stage
-    // must survive a routine vacuum (discard is the explicit path out)
-    val stagedLive = listStaged(table)
-      .flatMap(staged(table, _)).flatMap(_.paths).map(normalize)
-    // branch-referenced files are live: a branch shares the table's data
-    // dir until fast-forward or drop, and dropBranch is the explicit
-    // path that releases its files to a later vacuum
-    val branchLive = branches(table).flatMap { b =>
-      val ref = branchRef(table, b)
-      val bs = snapshots(ref)
-      bs.flatMap(_.files).map(f => normalize(f.path)) ++
-        bs.flatMap(_.deleteFiles).map(d => normalize(d.path)) ++
-        listStaged(ref).flatMap(staged(ref, _)).flatMap(_.paths).map(normalize)
-    }
-    // zero-copy clones reference files under the SOURCE's data dir, and
-    // this walk is scoped by directory, not by referent — so a file any
-    // OTHER table (or its branches) still lists anywhere in its history
-    // is live here too, or expiring the cloned-from snapshot and
-    // vacuuming would delete bytes out from under the clone (the same
-    // cross-table discipline DROP ... PURGE applies). O(catalog
-    // metadata), memoized manifests — a maintenance-op cost.
-    val foreignLive = tables().filterNot(_ == table).flatMap { t2 =>
-      val refs = t2 +: branches(t2).map(b => branchRef(t2, b))
-      refs.flatMap(r => snapshots(r).flatMap(sn =>
-        sn.files.map(f => normalize(f.path)) ++
-          sn.deleteFiles.map(d => normalize(d.path))))
-    }
-    val snaps = snapshots(table)
-    val live: Set[String] =
-      (snaps.flatMap(_.files).map(f => normalize(f.path)) ++
-        snaps.flatMap(_.deleteFiles).map(d => normalize(d.path)) ++
-        stagedLive ++ branchLive ++ foreignLive).toSet
-    val cutoff = clock() - graceMs
     // Walk must tolerate a racing writer: Spark deletes `_temporary/`
     // commit-protocol dirs at job end, and Files.walk throws
     // NoSuchFileException when an entry vanishes mid-walk — a vacuum
@@ -2997,20 +3042,41 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
       override def visitFileFailed(f: Path, e: IOException): FileVisitResult =
         FileVisitResult.CONTINUE
     })
-    val candidates = found.result()
+    sweep(table, found.result(), graceMs, dryRun)
+  }
+
+  /** The step both vacuums share: delete the `candidates` of `table`'s
+    * vacuum that no snapshot references and that are older than
+    * `graceMs` (an in-flight commit writes its files BEFORE its
+    * manifest publishes). Live are the paths any snapshot of ANY table
+    * or branch in this catalog references — a branch shares its table's
+    * directories, and a zero-copy clone lists the source's files and
+    * sidecars verbatim, so expiring the cloned-from snapshot must not
+    * free them — plus the staged-but-unpublished WAP paths of `table`
+    * and its branches (an in-audit stage survives a routine vacuum;
+    * discard is the explicit path out). O(catalog metadata), memoized
+    * manifests — a maintenance-op cost. With `dryRun`, reports what
+    * WOULD go (the VACUUM DRY RUN safety valve). Returns the deleted
+    * paths. */
+  private def sweep(table: String, candidates: Seq[String], graceMs: Long,
+      dryRun: Boolean): Seq[String] = {
+    val own = refsOf(table)
+    val live = liveSet(own ++ tables().filterNot(_ == table).flatMap(refsOf)) ++
+      own.flatMap(r => listStaged(r).flatMap(staged(r, _)).flatMap(_.paths)).map(normalize)
+    val cutoff = clock() - graceMs
     val doomed = candidates
-      .filterNot(p => live.contains(normalize(p)))
+      .filterNot(isLive(live, _))
       .filter(p => scala.util.Try(
         Files.getLastModifiedTime(Paths.get(p)).toMillis < cutoff).getOrElse(false))
-    // dry run reports what WOULD go (the VACUUM DRY RUN safety valve)
-    if (dryRun) doomed else doomed.filter(p => Files.deleteIfExists(Paths.get(p)))
+    if (dryRun) doomed else doomed.filter(deletePayload)
   }
 
   // ---- committed vector index accessors (r17, [[VectorIndex]]) ---------
 
   /** Sidecar dir of the committed vector index (model JSONs + per-commit
     * codes parquet dirs). */
-  private[meta] def pqIndexDir(table: String): Path = tableDir(table).resolve("pqindex")
+  private[meta] def pqIndexDir(table: String): Path =
+    tableDir(table).resolve(SnapshotCatalog.PqIndexDir)
 
   /** Logical-era scan of `paths` with `_file` lineage for index
     * backfills ([[VectorIndex.indexVectors]]): renamed/widened/
@@ -3020,56 +3086,26 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
       spark: SparkSession, snap: SnapshotMeta, paths: Seq[String]): DataFrame =
     readLogical(spark, snap.schema, snap, paths, withLineage = true)
 
-  /** GC orphan bloom/sketch SIDECARS: every rewrite retires its inputs'
-    * index files, and after the inputs' snapshots expire nothing
-    * references those sidecars — on a streaming table (a commit per
-    * micro-batch, sticky indexing) they otherwise accumulate forever.
-    * A sidecar is live iff ANY surviving snapshot of the table or its
-    * branches references it (legacy inline-base64 bloom values are not
-    * paths and are skipped). Same grace window as the data vacuum so a
-    * mid-commit sidecar written before its manifest survives. Returns
-    * deleted paths. */
+  /** GC orphan SIDECARS (blooms, sketches, vector-index models and
+    * codes): every rewrite retires its inputs' index files, and after
+    * the inputs' snapshots expire nothing references those sidecars —
+    * on a streaming table (a commit per micro-batch, sticky indexing)
+    * they otherwise accumulate forever. Candidates are the entries of
+    * the sidecar payload dirs of the table AND of every branch
+    * directory on disk, so a dropped branch's sidecars are reclaimed
+    * too; a PQ codes dir goes whole. Liveness, grace window and dry run
+    * are the data vacuum's ([[vacuumDataFiles]]). Returns deleted
+    * paths. */
   def vacuumSidecars(table: String, graceMs: Long = 3600 * 1000L,
       dryRun: Boolean = false): Seq[String] = {
-    def refsOf(chain: Seq[SnapshotMeta]): Seq[String] =
-      chain.flatMap(_.files).flatMap(f =>
-        f.blooms.values.filter(_.startsWith("/")) ++ f.sketches.values ++ f.pqCodes) ++
-        chain.flatMap(_.props.get(SnapshotCatalog.PqModelProp))
-    // clones copy manifest entries verbatim, sidecar paths included —
-    // a sidecar any OTHER table's history still references is live
-    // here too (same cross-table discipline as the data vacuum)
-    val foreign = tables().filterNot(_ == table).flatMap { t2 =>
-      refsOf(snapshots(t2)) ++ branches(t2).flatMap(b =>
-        refsOf(snapshots(branchRef(t2, b))))
-    }
-    val live: Set[String] =
-      (refsOf(snapshots(table)) ++ branches(table).flatMap(b =>
-        refsOf(snapshots(branchRef(table, b)))) ++ foreign).map(normalize).toSet
-    val cutoff = clock() - graceMs
-    // `pqindex` entries can be DIRECTORIES (per-commit codes parquet
-    // dirs) as well as files (model JSONs) — an unreferenced dir
-    // removes recursively
-    Seq("blooms", "sketches", "pqindex").flatMap { kind =>
-      val dir = tableDir(table).resolve(kind)
-      if (!Files.isDirectory(dir)) Nil
-      else {
+    val candidates = payloadDirs(table)
+      .filter(d => d.getFileName.toString != SnapshotCatalog.DataDir && Files.isDirectory(d))
+      .flatMap { dir =>
         val stream = Files.list(dir)
-        val candidates = try stream.iterator().asScala
-          .filter(p => Files.isRegularFile(p) || Files.isDirectory(p))
-          .map(_.toAbsolutePath.toString).toList
+        try stream.iterator().asScala.map(_.toAbsolutePath.toString).toList
         finally stream.close()
-        val doomed = candidates
-          .filterNot(p => live.contains(normalize(p)))
-          .filter(p => scala.util.Try(
-            Files.getLastModifiedTime(Paths.get(p)).toMillis < cutoff).getOrElse(false))
-        if (dryRun) doomed
-        else doomed.filter { p =>
-          val path = Paths.get(p)
-          if (Files.isDirectory(path)) SnapshotCatalog.deleteRecursively(path)
-          else Files.deleteIfExists(path)
-        }
       }
-    }
+    sweep(table, candidates, graceMs, dryRun)
   }
 
   /** The rows of `paths` VISIBLE under `snap` — raw parquet rows minus
@@ -3667,6 +3703,19 @@ object SnapshotCatalog {
   /** Name prefix of the temp file an atomic metadata replace writes
     * before moving it into place. */
   private[meta] val ReplaceTmpPrefix = ".replace-"
+
+  /** The subdirectories of a table directory (and of each branch
+    * directory) that hold PATH-ADDRESSED payload: data files, bloom and
+    * sketch sidecars, and the vector index's models and codes. Manifests
+    * name these files by absolute path, so a clone, a branch or a
+    * renamed table may still read them after the metadata that wrote
+    * them moves or goes. A drop or rename never deletes bytes here; only
+    * the liveness-checked purge and the vacuums do. */
+  val DataDir = "data"
+  val BloomDir = "blooms"
+  val SketchDir = "sketches"
+  val PqIndexDir = "pqindex"
+  val PayloadDirs: Seq[String] = Seq(DataDir, BloomDir, SketchDir, PqIndexDir)
 
   /** Set on a published snapshot to the staged id it came from —
     * the WAP audit trail (Iceberg's `wap.id` summary entry). */

@@ -10,8 +10,6 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.functions.{col, lit}
 
-import scala.jdk.CollectionConverters._
-
 /** SQL DML over catalog tables through pure `SparkSessionExtensions` —
   * the write half of the SQL-only deployment story (S50 gave it reads +
   * time travel; this gives it writes):
@@ -289,7 +287,7 @@ object GraftDml {
       s"invalid table name: $table")
     session.conf.getOption(DataDirConf).filter(_.nonEmpty)
       .map(base => java.nio.file.Paths.get(base, table).toString)
-      .getOrElse(java.nio.file.Paths.get(root, table, "data").toString)
+      .getOrElse(java.nio.file.Paths.get(root, table, SnapshotCatalog.DataDir).toString)
   }
 
   /** Strip qualifiers that refer to the target relation (its name or
@@ -2254,26 +2252,6 @@ case class GraftTruncateCommand(
   }
 }
 
-/** `DROP TABLE [IF EXISTS] t [PURGE]` → removes the table's metadata
-  * tree (snapshots, tags, branches, staged commits). PURGE additionally
-  * deletes the data/delete files the table's histories reference — the
-  * Iceberg `DROP TABLE ... PURGE` contract — with two bounds that make
-  * it safe in a catalog with zero-copy clones and branches:
-  *   - the candidate set covers MAIN plus every branch history (a file
-  *     written only on `t/branches/dev` would otherwise become a
-  *     permanently unidentifiable orphan once the metadata tree dies);
-  *   - a file still listed anywhere in ANOTHER table's or branch's
-  *     history is skipped (a clone references the source's files
-  *     verbatim, so `DROP <clone> PURGE` must not reach through the
-  *     shared references and corrupt the source — and vice versa).
-  * Crucially the byte deletions go ONLY through that liveness-checked
-  * list — PURGE never tree-wipes the data/blooms/sketches subtrees,
-  * because in the default SQL deployment a clone's shared files live
-  * under the SOURCE table's own `<tableDir>/data`; empty directories
-  * are pruned afterwards, so an unshared table still vanishes whole.
-  * Without PURGE the files stay for other referents entirely.
-  * The target may also be a backquoted branch ref `t/branches/dev`
-  * (drops just that branch, same purge discipline). */
 /** `ALTER TABLE t RENAME TO t2` → [[SnapshotCatalog.renameTable]]: a
   * metadata-only move (manifests, pointer, tags, staged entries, branch
   * metadata); data files and sidecars are path-addressed and stay put,
@@ -2293,6 +2271,15 @@ case class GraftRenameTableCommand(
   }
 }
 
+/** `DROP TABLE [IF EXISTS] t [PURGE]` → [[SnapshotCatalog.dropTable]]:
+  * removes the table's metadata tree (snapshots, tags, branches, staged
+  * commits) and leaves every payload byte in place, since a zero-copy
+  * clone may still read it. PURGE → [[SnapshotCatalog.purgeTable]]: also
+  * deletes the paths main's and every branch's histories reference
+  * (data, delete files, sidecars, the vector index) that no other table
+  * or branch still references, then the directories left empty. The
+  * target may also be a backquoted branch ref `t/branches/dev` (drops
+  * just that branch, same purge discipline). */
 case class GraftDropCommand(
     root: String,
     table: String,
@@ -2311,129 +2298,10 @@ case class GraftDropCommand(
       throw new IllegalArgumentException(
         s"no table $table in the graft catalog (DROP TABLE IF EXISTS to ignore)")
     }
-    def refsOf(t: String): Seq[String] =
-      t +: cat.branches(t).map(b => s"$t/branches/$b")
-    def historyPaths(ref: String): Iterator[String] =
-      cat.snapshots(ref).iterator.flatMap(s =>
-        s.files.iterator.map(_.path) ++ s.deleteFiles.iterator.map(_.path))
-    def sidecarPaths(ref: String): Iterator[String] =
-      cat.snapshots(ref).iterator.flatMap(_.files.iterator).flatMap(f =>
-        (f.blooms.valuesIterator ++ f.sketches.valuesIterator)
-          .filter(_.startsWith("/")))
-    val droppedRefs = if (isBranchRef) Seq(table) else refsOf(table)
-    val purgePaths: Seq[String] =
-      if (!purge) Nil
-      else {
-        // candidate byte-deletions: every data/delete file and bloom/
-        // sketch sidecar the dropped histories reference, PLUS any file
-        // physically under the dropped ref's spared subtrees (failed-
-        // write orphans die with the table, as a tree wipe would do)
-        val physical = cat.sparedSubtrees(table).flatMap { sub =>
-          if (!java.nio.file.Files.isDirectory(sub)) Nil
-          else {
-            val st = java.nio.file.Files.walk(sub)
-            try st.iterator().asScala
-              .filter(java.nio.file.Files.isRegularFile(_))
-              .map(_.toAbsolutePath.toString).toList
-            finally st.close()
-          }
-        }
-        val candidates = (droppedRefs.flatMap(historyPaths) ++
-          droppedRefs.flatMap(sidecarPaths) ++ physical).distinct
-        val walkRefs =
-          GraftDropCommand.foreignWalkRefs(cat, droppedRefs.toSet, table, candidates)
-        val foreign = walkRefs.iterator
-          .flatMap(r => historyPaths(r) ++ sidecarPaths(r)).toSet
-        candidates.filterNot(foreign.contains)
-      }
-    // even under PURGE the metadata drop SPARES the data/blooms/sketches
-    // subtrees: byte deletion goes ONLY through the foreign-reference-
-    // checked list above. In the default SQL deployment DML writes data
-    // under <tableDir>/data, so a tree wipe here would reach through a
-    // clone's shared references and corrupt it — purging a cloned-from
-    // source must leave exactly the files the clone still lists.
-    cat.dropTable(table, spareDataDir = true)
+    if (purge) cat.purgeTable(table) else cat.dropTable(table)
     // cached entries outlive the NAME, not the table: a later table
     // re-created under this name must never hit a stale persisted plan
     GraftSqlResolution.cacheFor(root).invalidateTable(table)
-    purgePaths.foreach { p =>
-      try java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(p))
-      catch { case _: java.io.IOException => () } // best-effort, like vacuum
-    }
-    if (purge) {
-      // purged bytes may live under ANOTHER table's spared tree (this
-      // was the last clone of a since-dropped source): climb and remove
-      // the directories they leave empty, up to the catalog root
-      val rootAbs = java.nio.file.Paths.get(root).toAbsolutePath
-      def dirEmpty(d: java.nio.file.Path): Boolean = {
-        val st = java.nio.file.Files.list(d)
-        try !st.iterator().hasNext finally st.close()
-      }
-      purgePaths
-        .flatMap(p => Option(java.nio.file.Paths.get(p).toAbsolutePath.getParent))
-        .distinct.foreach { start =>
-          var d = start
-          var go = true
-          while (go && d != null && d.startsWith(rootAbs) && d != rootAbs &&
-              java.nio.file.Files.isDirectory(d) && dirEmpty(d)) {
-            try java.nio.file.Files.delete(d)
-            catch { case _: java.io.IOException => go = false }
-            d = d.getParent
-          }
-        }
-      // with nothing shared, this removes the whole tree (the old PURGE
-      // end state); shared survivors keep their directories alive
-      cat.pruneEmptyDirs(table)
-    }
     Seq.empty
-  }
-}
-
-object GraftDropCommand {
-  /** Foreign refs whose FULL snapshot histories must be consulted before
-    * purging `candidates` — the bound that keeps `DROP ... PURGE` from
-    * parsing every other table's 10k-snapshot history on a large
-    * catalog. A foreign table can reference a candidate only through
-    * file sharing, and the supported sharing verbs (clone, branch) all
-    * surface the shared paths in a ref's FIRST (fork-point) or CURRENT
-    * snapshot, or place candidates under that table's own directory
-    * tree (the dropped table was cloned FROM it). So a table is walked
-    * iff any cheap probe hits: tree-prefix containment, or candidate
-    * membership in its refs' first/current snapshots (two memoized
-    * manifest parses per ref). If any candidate lies OUTSIDE every
-    * known table tree (external shared dataDir deployments), attribution
-    * is impossible and every ref is walked — the conservative old
-    * behavior. Residual, accepted and documented: a ref whose ONLY
-    * references to candidates sit in mid-history snapshots while both
-    * endpoint probes are clean (hand-committed foreign paths later
-    * rewritten away, or an expire-then-rollback lineage dance) is not
-    * walked; the clone/branch verbs never produce that shape. */
-  private[sql] def foreignWalkRefs(
-      cat: graft.meta.SnapshotCatalog,
-      droppedRefs: Set[String],
-      droppedTable: String,
-      candidates: Seq[String]): Seq[String] = {
-    val candidateSet = candidates.toSet
-    val foreignTables = cat.tables().filterNot(droppedRefs.contains)
-      .filterNot(_ == droppedTable)
-    def liveRefsOf(t: String): Seq[String] =
-      (t +: cat.branches(t).map(b => s"$t/branches/$b"))
-        .filterNot(droppedRefs.contains)
-    val droppedTree = cat.tableDirOf(droppedTable) + "/"
-    val trees = foreignTables.map(t => t -> (cat.tableDirOf(t) + "/"))
-    if (candidates.exists(p => !p.startsWith(droppedTree) &&
-        !trees.exists { case (_, tr) => p.startsWith(tr) }))
-      return foreignTables.flatMap(liveRefsOf)
-    def hits(snap: Option[graft.meta.SnapshotMeta]): Boolean = snap.exists { s =>
-      s.files.exists(f => candidateSet.contains(f.path) ||
-        f.blooms.valuesIterator.exists(candidateSet.contains) ||
-        f.sketches.valuesIterator.exists(candidateSet.contains)) ||
-        s.deleteFiles.exists(d => candidateSet.contains(d.path))
-    }
-    foreignTables.filter { t =>
-      candidates.exists(_.startsWith(cat.tableDirOf(t) + "/")) ||
-        liveRefsOf(t).exists(r =>
-          hits(cat.firstSnapshot(r)) || hits(cat.currentSnapshot(r)))
-    }.flatMap(liveRefsOf)
   }
 }

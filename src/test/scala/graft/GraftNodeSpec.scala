@@ -20,8 +20,8 @@ class GraftNodeSpec extends SparkSpec {
 
   test("node maintenance runs the FULL S69 pass over the node's own catalog") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-node-maint-").toString
-    val dataDir = java.nio.file.Files.createTempDirectory("graft-node-maint-d-").toString
+    val root = tempDir("graft-node-maint-").toString
+    val dataDir = tempDir("graft-node-maint-d-").toString
     val node = GraftConfig.node(spark, dataDir, GraftConfig(catalogRoot = Some(root)))
     val cat = node.catalog.get
     graft.sinks.Writers.writeSnapshot(cat, "nm_src",
@@ -61,8 +61,8 @@ class GraftNodeSpec extends SparkSpec {
   }
 
   test("node.serve stands up the HTTP endpoint wired to the node's catalog") {
-    val root = java.nio.file.Files.createTempDirectory("graft-node-cat-").toString
-    val dataDir = java.nio.file.Files.createTempDirectory("graft-node-data-").toString
+    val root = tempDir("graft-node-cat-").toString
+    val dataDir = tempDir("graft-node-data-").toString
     val node = GraftConfig.node(spark, sfDir, GraftConfig(catalogRoot = Some(root)))
     graft.sinks.Writers.writeSnapshot(node.catalog.get, "cust",
       Tables.customer(spark, sfDir), dataDir)

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 class BloomPruningSpec extends SparkSpec {
 
   test("bloom filter skips files that cannot contain an equality value") {
-    val data = Files.createTempDirectory("graft-bloom-").toString
+    val data = tempDir("graft-bloom-").toString
     val n = Tables.nation(spark, sfDir)
     n.filter(col("n_nationkey") < 12).coalesce(1).write.parquet(s"$data/a")
     n.filter(col("n_nationkey") >= 12).coalesce(1).write.parquet(s"$data/b")
@@ -16,7 +16,7 @@ class BloomPruningSpec extends SparkSpec {
       .filter(_.getName.endsWith(".parquet")).head.getAbsolutePath
     val (fa, fb) = (one("a"), one("b"))
 
-    val cat = new SnapshotCatalog(Files.createTempDirectory("graft-cat-").toString)
+    val cat = new SnapshotCatalog(tempDir("graft-cat-").toString)
     val snap = cat.commit(spark, "nation", Seq(fa, fb),
       bloomColumns = Seq("n_name"))
     assert(snap.files.forall(_.blooms.contains("n_name")))
@@ -50,7 +50,7 @@ class BloomPruningSpec extends SparkSpec {
   }
 
   test("bloom index is sticky: a COW delete's rewritten files are re-indexed") {
-    val base = Files.createTempDirectory("graft-bloomstick-").toString
+    val base = tempDir("graft-bloomstick-").toString
     val cat = new SnapshotCatalog(s"$base/cat")
     val n = Tables.nation(spark, sfDir)
     graft.sinks.Writers.writeSnapshot(cat, "nation", n, s"$base/data",
@@ -76,7 +76,7 @@ class BloomPruningSpec extends SparkSpec {
   }
 
   test("bloom-enabled commit runs O(1) Spark jobs regardless of file count") {
-    val data = Files.createTempDirectory("graft-bloomjobs-").toString
+    val data = tempDir("graft-bloomjobs-").toString
     val c = Tables.customer(spark, sfDir)
     val nFiles = 8
     (0 until nFiles).foreach { i =>
@@ -95,7 +95,7 @@ class BloomPruningSpec extends SparkSpec {
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      val cat = new SnapshotCatalog(Files.createTempDirectory("graft-cat-").toString)
+      val cat = new SnapshotCatalog(tempDir("graft-cat-").toString)
       val snap = cat.commit(spark, "customer", paths,
         bloomColumns = Seq("c_mktsegment", "c_name"))
       Thread.sleep(1000) // listener events are async; let the bus drain
@@ -109,8 +109,8 @@ class BloomPruningSpec extends SparkSpec {
 
     // the single-job blooms still prune: a segment value absent from a
     // file's rows prunes that file via bloom membership
-    val cat2 = new SnapshotCatalog(Files.createTempDirectory("graft-cat2-").toString)
-    val byseg = Files.createTempDirectory("graft-bloomseg-").toString
+    val cat2 = new SnapshotCatalog(tempDir("graft-cat2-").toString)
+    val byseg = tempDir("graft-bloomseg-").toString
     c.filter(col("c_mktsegment") === "BUILDING").coalesce(1).write.parquet(s"$byseg/a")
     c.filter(col("c_mktsegment") === "MACHINERY").coalesce(1).write.parquet(s"$byseg/b")
     def one(sub: String) = new java.io.File(s"$byseg/$sub").listFiles()
@@ -126,7 +126,7 @@ class BloomPruningSpec extends SparkSpec {
     // collected serialized blooms to the driver (the pre-r8 shape), task
     // result traffic would exceed the bloom size. The executor-side write
     // returns only sidecar paths, so total result bytes stay far below it.
-    val data = Files.createTempDirectory("graft-bloomexec-").toString
+    val data = tempDir("graft-bloomexec-").toString
     spark.range(400000L)
       .select(col("id"), concat(lit("val_"), col("id")).as("v"))
       .coalesce(1).write.parquet(s"$data/big")
@@ -141,7 +141,7 @@ class BloomPruningSpec extends SparkSpec {
     spark.sparkContext.addSparkListener(listener)
     val snap =
       try {
-        val cat = new SnapshotCatalog(Files.createTempDirectory("graft-cat-").toString)
+        val cat = new SnapshotCatalog(tempDir("graft-cat-").toString)
         val s = cat.commit(spark, "big", Seq(path),
           bloomColumns = Seq("v"), sketchColumns = Seq("v"))
         Thread.sleep(1000) // listener events are async; let the bus drain

@@ -21,7 +21,7 @@ class BranchSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getString(1))).toSet
 
   test("branch writes are invisible to the table; branch sees fork state plus its own commits") {
-    val base = Files.createTempDirectory("graft-br-").toString
+    val base = tempDir("graft-br-").toString
     val cat = new SnapshotCatalog(s"$base/cat")
     val c = Tables.customer(spark, sfDir)
     Writers.writeSnapshot(cat, "cust", c.filter(col("c_custkey") <= 40), s"$base/d")
@@ -60,7 +60,7 @@ class BranchSpec extends SparkSpec {
   }
 
   test("branch from an older snapshot id; branch-of-branch refused; bad names refused") {
-    val base = Files.createTempDirectory("graft-br2-").toString
+    val base = tempDir("graft-br2-").toString
     val cat = new SnapshotCatalog(s"$base/cat")
     val c = Tables.customer(spark, sfDir)
     val s1 = Writers.writeSnapshot(cat, "cust", c.filter(col("c_custkey") <= 20), s"$base/d")
@@ -76,7 +76,7 @@ class BranchSpec extends SparkSpec {
   }
 
   test("fast-forward replays the branch chain onto the table with an exact change feed") {
-    val base = Files.createTempDirectory("graft-ff-").toString
+    val base = tempDir("graft-ff-").toString
     val cat = new SnapshotCatalog(s"$base/cat")
     val c = Tables.customer(spark, sfDir)
     val head = Writers.writeSnapshot(cat, "cust", c.filter(col("c_custkey") <= 50), s"$base/d")
@@ -103,7 +103,7 @@ class BranchSpec extends SparkSpec {
   }
 
   test("fast-forward refuses a diverged table") {
-    val base = Files.createTempDirectory("graft-ffd-").toString
+    val base = tempDir("graft-ffd-").toString
     val cat = new SnapshotCatalog(s"$base/cat")
     val c = Tables.customer(spark, sfDir)
     Writers.writeSnapshot(cat, "cust", c.filter(col("c_custkey") <= 30), s"$base/d")
@@ -116,7 +116,7 @@ class BranchSpec extends SparkSpec {
   }
 
   test("vacuum keeps branch-only files live until the branch is dropped") {
-    val base = Files.createTempDirectory("graft-brv-").toString
+    val base = tempDir("graft-brv-").toString
     val cat = new SnapshotCatalog(s"$base/cat")
     val c = Tables.customer(spark, sfDir)
     Writers.writeSnapshot(cat, "cust", c.filter(col("c_custkey") <= 20), s"$base/d")
@@ -141,7 +141,7 @@ class BranchSpec extends SparkSpec {
   }
 
   test("MoR equality delete on a branch stays branch-local and fast-forwards exactly") {
-    val base = Files.createTempDirectory("graft-brm-").toString
+    val base = tempDir("graft-brm-").toString
     val cat = new SnapshotCatalog(s"$base/cat")
     val c = Tables.customer(spark, sfDir)
     val head = Writers.writeSnapshot(cat, "cust", c.filter(col("c_custkey") <= 40), s"$base/d")

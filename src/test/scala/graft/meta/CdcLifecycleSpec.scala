@@ -78,9 +78,9 @@ class CdcLifecycleSpec extends SparkSpec {
     val opsPerSeq = 6
 
     for (seq <- 0 until nSequences) {
-      val rootDir = Files.createTempDirectory(s"graft-cdcp-$seq-").toString
+      val rootDir = tempDir(s"graft-cdcp-$seq-").toString
       val cat = new SnapshotCatalog(rootDir)
-      val dataDir = Files.createTempDirectory(s"graft-cdcp-data-$seq-").toString
+      val dataDir = tempDir(s"graft-cdcp-data-$seq-").toString
       val t = "t"
       es.conf.set(graft.sql.GraftSqlResolution.RootConf, rootDir)
 
@@ -573,7 +573,7 @@ class CdcLifecycleSpec extends SparkSpec {
                 val vsnap = cat.currentSnapshot(v).get
                 if (vsnap.files.size == 1 && cat.read(spark, v).count() > 1) {
                   val stDf = cat.read(spark, v)
-                  val dir = Files.createTempDirectory(s"graft-cdcp-mvsplit-$seq-")
+                  val dir = tempDir(s"graft-cdcp-mvsplit-$seq-")
                   stDf.filter(col("id") < 50).coalesce(1)
                     .write.parquet(dir.resolve("a").toString)
                   stDf.filter(col("id") >= 50).coalesce(1)
@@ -592,7 +592,7 @@ class CdcLifecycleSpec extends SparkSpec {
             // must skip it (fingerprints rode the commit). Same model
             // effect as any append.
             val b = batch(3 + rnd.nextInt(6))
-            val landing = Files.createTempDirectory(s"graft-cdcp-land-$seq-")
+            val landing = tempDir(s"graft-cdcp-land-$seq-")
             val lines = b.map { case (id, v) =>
               if (evolved) s"$id,$v,${id * 2}" else s"$id,$v"
             }

@@ -16,7 +16,7 @@ class CloneSpec extends SparkSpec {
     cat.read(spark, table).select(col("c_custkey")).collect().map(_.getLong(0)).toSet
 
   test("clone reads the pinned state; both sides then diverge independently") {
-    val base = Files.createTempDirectory("graft-clone-").toString
+    val base = tempDir("graft-clone-").toString
     val cat = new SnapshotCatalog(s"$base/cat")
     val c = Tables.customer(spark, sfDir)
     Writers.writeSnapshot(cat, "cust", c.filter(col("c_custkey") <= 50), s"$base/d")
@@ -57,7 +57,7 @@ class CloneSpec extends SparkSpec {
   }
 
   test("clone pins a historical snapshot; sticky index props carry; name collisions refuse") {
-    val base = Files.createTempDirectory("graft-clone2-").toString
+    val base = tempDir("graft-clone2-").toString
     val cat = new SnapshotCatalog(s"$base/cat")
     val c = Tables.customer(spark, sfDir)
     Writers.writeSnapshot(cat, "cust", c.filter(col("c_custkey") <= 20), s"$base/d",
@@ -79,7 +79,7 @@ class CloneSpec extends SparkSpec {
 
   test("source-side expire + vacuum never deletes bytes a clone still lists") {
     import java.nio.file.Paths
-    val base = Files.createTempDirectory("graft-clone3-").toString
+    val base = tempDir("graft-clone3-").toString
     val cat = new SnapshotCatalog(s"$base/cat")
     val c = Tables.customer(spark, sfDir)
     Writers.writeSnapshot(cat, "vsrc", c.filter(col("c_custkey") <= 30)
@@ -101,7 +101,7 @@ class CloneSpec extends SparkSpec {
     assert(keys(cat, "vkeep") == c.filter(col("c_custkey") <= 30)
       .select(col("c_custkey")).collect().map(_.getLong(0)).toSet)
     // dropping the clone releases the bytes to the next vacuum
-    cat.dropTable("vkeep", spareDataDir = true)
+    cat.dropTable("vkeep")
     val removed2 = cat.vacuumDataFiles("vsrc", s"$base/d", graceMs = 0L)
     assert(shared.forall(p => removed2.contains(p) ||
       !java.nio.file.Files.exists(Paths.get(p))))
@@ -110,7 +110,7 @@ class CloneSpec extends SparkSpec {
   test("clone-referenced SIDECARS survive source drop/vacuum; missing ones degrade, not fail") {
     import java.nio.file.Paths
     import graft.meta.{EqString => Eq}
-    val base = Files.createTempDirectory("graft-clone4-").toString
+    val base = tempDir("graft-clone4-").toString
     val cat = new SnapshotCatalog(s"$base/cat")
     val c = Tables.customer(spark, sfDir)
     Writers.writeSnapshot(cat, "bsrc", c.filter(col("c_custkey") <= 30).coalesce(1),
@@ -132,7 +132,7 @@ class CloneSpec extends SparkSpec {
 
     // plain DROP of the source spares sidecar dirs too: the clone keeps
     // reading AND keeps its bloom pruning
-    cat.dropTable("bsrc", spareDataDir = true)
+    cat.dropTable("bsrc")
     assert(sidecars.forall(p => java.nio.file.Files.exists(Paths.get(p))))
     assert(cat.planFiles("bkeep", Seq(Eq("c_name", ghost))).isEmpty)
     assert(keys(cat, "bkeep") == c.filter(col("c_custkey") <= 30)
@@ -144,5 +144,34 @@ class CloneSpec extends SparkSpec {
     assert(cat.planFiles("bkeep", Seq(Eq("c_name", ghost))).nonEmpty)
     assert(keys(cat, "bkeep") == c.filter(col("c_custkey") <= 30)
       .select(col("c_custkey")).collect().map(_.getLong(0)).toSet)
+  }
+
+  test("a dropped branch's sidecars fall to the sidecar vacuum") {
+    import java.nio.file.Paths
+    val base = tempDir("graft-clone5-").toString
+    val cat = new SnapshotCatalog(s"$base/cat")
+    val c = Tables.customer(spark, sfDir)
+    Writers.writeSnapshot(cat, "t", c.filter(col("c_custkey") <= 20).coalesce(1),
+      s"$base/d", bloomColumns = Seq("c_name"))
+    cat.createBranch("t", "dev")
+    val ref = cat.branchRef("t", "dev")
+    Writers.writeSnapshot(cat, ref, c.filter(col("c_custkey").between(21, 40)).coalesce(1),
+      s"$base/d")
+    val mainSidecars = cat.currentSnapshot("t").get.files.flatMap(_.blooms.values).toSet
+    val branchSidecars = cat.currentSnapshot(ref).get.files.flatMap(_.blooms.values)
+      .filterNot(mainSidecars.contains)
+    assert(branchSidecars.nonEmpty &&
+      branchSidecars.forall(_.startsWith(cat.tableDirOf(ref) + "/")))
+    // while the branch lives, its sidecars are live
+    assert(cat.vacuumSidecars("t", graceMs = 0L).isEmpty)
+
+    assert(cat.dropBranch("t", "dev"))
+    assert(branchSidecars.forall(p => Files.exists(Paths.get(p))),
+      "a drop deletes no payload bytes")
+    cat.expireSnapshots("t", keepLast = 1)
+    val removed = cat.vacuumSidecars("t", graceMs = 0L)
+    assert(branchSidecars.forall(removed.contains), s"not reclaimed: $branchSidecars")
+    assert(branchSidecars.forall(p => !Files.exists(Paths.get(p))))
+    assert(mainSidecars.forall(p => Files.exists(Paths.get(p))))
   }
 }

@@ -1,7 +1,5 @@
 package graft.meta
 
-import java.nio.file.Files
-
 import graft.{SparkSpec, Tables}
 import graft.sinks.Writers
 import org.apache.spark.sql.functions._
@@ -18,7 +16,7 @@ import org.apache.spark.sql.functions._
 class ColumnDefaultsSpec extends SparkSpec {
 
   private def freshCat(): (SnapshotCatalog, String) = {
-    val dir = Files.createTempDirectory("graft-defaults-").toString
+    val dir = tempDir("graft-defaults-").toString
     (new SnapshotCatalog(dir), dir)
   }
 

@@ -23,8 +23,8 @@ import scala.jdk.CollectionConverters._
 class CommitConflictSpec extends SparkSpec {
 
   private def freshTable(prefix: String): (SnapshotCatalog, String) = {
-    val cat = new SnapshotCatalog(Files.createTempDirectory(s"graft-$prefix-").toString)
-    (cat, Files.createTempDirectory(s"graft-$prefix-data-").toString)
+    val cat = new SnapshotCatalog(tempDir(s"graft-$prefix-").toString)
+    (cat, tempDir(s"graft-$prefix-data-").toString)
   }
 
   private def customers = graft.Tables.customer(spark, sfDir)
@@ -69,8 +69,8 @@ class CommitConflictSpec extends SparkSpec {
   }
 
   test("append whose basis is rewritten and expired during its publish still lands") {
-    val root = Files.createTempDirectory("graft-ccr-exp-").toString
-    val dataDir = Files.createTempDirectory("graft-ccr-exp-data-").toString
+    val root = tempDir("graft-ccr-exp-").toString
+    val dataDir = tempDir("graft-ccr-exp-data-").toString
     val race = new PublishRace
     val cat = new SnapshotCatalog(root, race.clock)
     val other = new SnapshotCatalog(root)
@@ -100,8 +100,8 @@ class CommitConflictSpec extends SparkSpec {
   }
 
   test("table props set by a commit landing inside an append's publish survive it") {
-    val root = Files.createTempDirectory("graft-ccr-props-").toString
-    val dataDir = Files.createTempDirectory("graft-ccr-props-data-").toString
+    val root = tempDir("graft-ccr-props-").toString
+    val dataDir = tempDir("graft-ccr-props-data-").toString
     val race = new PublishRace
     val cat = new SnapshotCatalog(root, race.clock)
     val other = new SnapshotCatalog(root)

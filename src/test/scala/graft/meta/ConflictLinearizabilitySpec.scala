@@ -25,8 +25,8 @@ class ConflictLinearizabilitySpec extends SparkSpec {
   private type Op = (String, Set[Long] => Set[Long], () => Unit)
 
   test("30 rounds of racing writer pairs always land on a serial-order state") {
-    val cat = new SnapshotCatalog(Files.createTempDirectory("graft-lin-").toString)
-    val dataDir = Files.createTempDirectory("graft-lin-data-").toString
+    val cat = new SnapshotCatalog(tempDir("graft-lin-").toString)
+    val dataDir = tempDir("graft-lin-data-").toString
     val customers = graft.Tables.customer(spark, sfDir)
     val corpusMax = 140L
 
@@ -135,8 +135,8 @@ class ConflictLinearizabilitySpec extends SparkSpec {
   }
 
   test("10 rounds of racing merges and updates always land on a serial-order state") {
-    val cat = new SnapshotCatalog(Files.createTempDirectory("graft-linm-").toString)
-    val dataDir = Files.createTempDirectory("graft-linm-data-").toString
+    val cat = new SnapshotCatalog(tempDir("graft-linm-").toString)
+    val dataDir = tempDir("graft-linm-data-").toString
     val customers = graft.Tables.customer(spark, sfDir)
     val tagType = customers.schema("c_nationkey").dataType
     val corpusMax = 140L

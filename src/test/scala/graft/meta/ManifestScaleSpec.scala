@@ -14,14 +14,14 @@ import org.apache.spark.sql.functions._
 class ManifestScaleSpec extends SparkSpec {
 
   private def oneFile(): String = {
-    val data = Files.createTempDirectory("graft-mscale-").toString
+    val data = tempDir("graft-mscale-").toString
     Tables.nation(spark, sfDir).coalesce(1).write.parquet(s"$data/f")
     new java.io.File(s"$data/f").listFiles()
       .filter(_.getName.endsWith(".parquet")).head.getAbsolutePath
   }
 
   test("read-side manifest parses stay O(1) at 1000 snapshots") {
-    val root = Files.createTempDirectory("graft-mcat-").toString
+    val root = tempDir("graft-mcat-").toString
     val writer = new SnapshotCatalog(root)
     writer.commit(spark, "t", Seq(oneFile()))
     // 999 metadata-only commits: the streaming-ingest shape (one commit
@@ -55,7 +55,7 @@ class ManifestScaleSpec extends SparkSpec {
   }
 
   test("as-of resolution is O(log n) parses on a cold cache; holes fall back correctly") {
-    val root = Files.createTempDirectory("graft-masof-").toString
+    val root = tempDir("graft-masof-").toString
     var tick = 1000L
     val writer = new SnapshotCatalog(root, clock = () => { tick += 1000; tick })
     writer.commit(spark, "t", Seq(oneFile()))
@@ -84,7 +84,7 @@ class ManifestScaleSpec extends SparkSpec {
     // the T5 streaming design point (one commit per micro-batch) reaches
     // 10k+ snapshots in days; the whole metadata path must stay O(1)
     // per operation — no hidden directory listing or log replay.
-    val root = Files.createTempDirectory("graft-m10k-").toString
+    val root = tempDir("graft-m10k-").toString
     val writer = new SnapshotCatalog(root)
     writer.commit(spark, "t", Seq(oneFile()))
     def commits(n: Int): Unit = (0 until n).foreach { _ =>
@@ -120,7 +120,7 @@ class ManifestScaleSpec extends SparkSpec {
   }
 
   test("commit cost does not scale with snapshot count (pointer, not list+parse)") {
-    val root = Files.createTempDirectory("graft-mcat2-").toString
+    val root = tempDir("graft-mcat2-").toString
     val writer = new SnapshotCatalog(root)
     writer.commit(spark, "t", Seq(oneFile()))
     (1 until 500).foreach { _ =>
@@ -135,7 +135,7 @@ class ManifestScaleSpec extends SparkSpec {
   }
 
   test("readers racing a committer always see a complete, monotonically advancing snapshot") {
-    val root = Files.createTempDirectory("graft-race-").toString
+    val root = tempDir("graft-race-").toString
     val writer = new SnapshotCatalog(root)
     writer.commit(spark, "t", Seq(oneFile()))
     val reader = new SnapshotCatalog(root)
@@ -171,7 +171,7 @@ class ManifestScaleSpec extends SparkSpec {
   }
 
   test("bloom-enabled manifest bytes are proportional to committed rows (sidecars, not inline)") {
-    val root = Files.createTempDirectory("graft-mcat3-").toString
+    val root = tempDir("graft-mcat3-").toString
     val cat = new SnapshotCatalog(root)
     val snap = cat.commit(spark, "nation", Seq(oneFile()), bloomColumns = Seq("n_name"))
     val f = snap.files.head

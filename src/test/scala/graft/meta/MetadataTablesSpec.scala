@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 class MetadataTablesSpec extends SparkSpec {
 
   test("snapshotsDf: one row per snapshot with operation lineage") {
-    val base = Files.createTempDirectory("graft-metatbl-").toString
+    val base = tempDir("graft-metatbl-").toString
     val cat = new SnapshotCatalog(s"$base/cat")
     val n = Tables.nation(spark, sfDir)
     Writers.writeSnapshot(cat, "nation", n, s"$base/data")
@@ -34,7 +34,7 @@ class MetadataTablesSpec extends SparkSpec {
   }
 
   test("filesDf: one row per manifest file incl. partition values and stat columns") {
-    val base = Files.createTempDirectory("graft-metatbl2-").toString
+    val base = tempDir("graft-metatbl2-").toString
     val cat = new SnapshotCatalog(s"$base/cat")
     val c = Tables.customer(spark, sfDir)
     Writers.writePartitionedSnapshot(cat, "cust", c, s"$base/data", Seq("c_mktsegment"))
@@ -55,7 +55,7 @@ class MetadataTablesSpec extends SparkSpec {
 
   test("deleteFilesDf: one row per MoR delete file; tableStats counts masked rows") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-metatbl3-").toString
+    val base = tempDir("graft-metatbl3-").toString
     val cat = new SnapshotCatalog(s"$base/cat")
     val c = Tables.customer(spark, sfDir)
     Writers.writeSnapshot(cat, "cust", c.filter(col("c_custkey") <= 50), s"$base/data")
@@ -86,7 +86,7 @@ class MetadataTablesSpec extends SparkSpec {
   }
 
   test("tables() lists exactly the committed tables, sorted") {
-    val base = Files.createTempDirectory("graft-lstbl-").toString
+    val base = tempDir("graft-lstbl-").toString
     val cat = new SnapshotCatalog(s"$base/cat")
     assert(cat.tables().isEmpty)
     val n = Tables.nation(spark, sfDir)
@@ -98,7 +98,7 @@ class MetadataTablesSpec extends SparkSpec {
   }
 
   test("dropTable removes all metadata; the name is immediately reusable") {
-    val base = Files.createTempDirectory("graft-drop-").toString
+    val base = tempDir("graft-drop-").toString
     val cat = new SnapshotCatalog(s"$base/cat")
     val n = Tables.nation(spark, sfDir)
     Writers.writeSnapshot(cat, "nation", n, s"$base/data")
@@ -120,7 +120,7 @@ class MetadataTablesSpec extends SparkSpec {
 
   test("partitionsDf: per-partition rollup reconciles with data; deletes charged") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-metapart-").toString
+    val base = tempDir("graft-metapart-").toString
     val cat = new SnapshotCatalog(s"$base/cat")
     val n = Tables.nation(spark, sfDir).withColumn("p_rk", col("n_regionkey"))
     Writers.writePartitionedSnapshot(cat, "nation", n, s"$base/c1", Seq("p_rk"))
@@ -152,7 +152,7 @@ class MetadataTablesSpec extends SparkSpec {
   }
 
   test("metadata tables are SQL-queryable through the engine") {
-    val base = Files.createTempDirectory("graft-metasql-").toString
+    val base = tempDir("graft-metasql-").toString
     val cat = new SnapshotCatalog(s"$base/cat")
     val n = Tables.nation(spark, sfDir)
     Writers.writeSnapshot(cat, "nation", n, s"$base/data")

@@ -16,7 +16,7 @@ class SchemaEvolveV2Spec extends SparkSpec {
 
   test("rename is metadata-only; reads map old and new files; stats re-key for pruning") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-sev2-").toString
+    val dir = tempDir("graft-sev2-").toString
     val cat = new SnapshotCatalog(dir)
     val c = Tables.customer(spark, sfDir)
     Writers.writeRangedSnapshot(cat, "cust", c.filter(col("c_custkey") <= 75),
@@ -48,7 +48,7 @@ class SchemaEvolveV2Spec extends SparkSpec {
 
   test("rename chain (a->b->c) and rename of an evolved-in column") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-sev2c-").toString
+    val dir = tempDir("graft-sev2c-").toString
     val cat = new SnapshotCatalog(dir)
     Writers.writeSnapshot(cat, "t", Seq((1L, 10.0), (2L, 20.0)).toDF("id", "a").coalesce(1), dir)
     cat.renameColumn("t", "a", "b")
@@ -68,7 +68,7 @@ class SchemaEvolveV2Spec extends SparkSpec {
 
   test("rename composes with MoR position deletes and COW rewrites") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-sev2m-").toString
+    val dir = tempDir("graft-sev2m-").toString
     val cat = new SnapshotCatalog(dir)
     Writers.writeSnapshot(cat, "t",
       Seq((1L, 10L), (2L, 20L), (3L, 30L)).toDF("id", "v").coalesce(1), dir)
@@ -87,7 +87,7 @@ class SchemaEvolveV2Spec extends SparkSpec {
 
   test("drop hides the column; re-added name reads null from pre-drop files") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-sev2d-").toString
+    val dir = tempDir("graft-sev2d-").toString
     val cat = new SnapshotCatalog(dir)
     Writers.writeSnapshot(cat, "t",
       Seq((1L, "secret1", 5.0), (2L, "secret2", 6.0)).toDF("id", "pii", "x").coalesce(1), dir)
@@ -105,7 +105,7 @@ class SchemaEvolveV2Spec extends SparkSpec {
 
   test("feeds: appends across a rename render in the end schema; pre-rename rewrites refuse") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-sev2f-").toString
+    val dir = tempDir("graft-sev2f-").toString
     val cat = new SnapshotCatalog(dir)
     val s1 = Writers.writeSnapshot(cat, "t",
       Seq((1L, 10L), (2L, 20L)).toDF("id", "v").coalesce(1), dir)
@@ -139,7 +139,7 @@ class SchemaEvolveV2Spec extends SparkSpec {
 
   test("refusals: equality-delete keys, duplicate names, last column") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-sev2r-").toString
+    val dir = tempDir("graft-sev2r-").toString
     val cat = new SnapshotCatalog(dir)
     Writers.writeSnapshot(cat, "t", Seq((1L, 10L), (2L, 20L)).toDF("id", "v").coalesce(1), dir)
     Writers.deleteByKeys(spark, cat, "t", Seq(1L).toDF("id"), Seq("id"), dir)
@@ -153,7 +153,7 @@ class SchemaEvolveV2Spec extends SparkSpec {
   test("type widening: metadata-only, old files read widened, pruning stays exact") {
     import spark.implicits._
     import org.apache.spark.sql.types._
-    val dir = Files.createTempDirectory("graft-sevw-").toString
+    val dir = tempDir("graft-sevw-").toString
     val cat = new SnapshotCatalog(dir)
     // era 1: int ids, float scores, ranged so pruning has file bounds
     val era1 = (1 to 60).map(i => (i, i * 1.5f)).toDF("id", "score")
@@ -220,7 +220,7 @@ class SchemaEvolveV2Spec extends SparkSpec {
   test("widening composes with rename, MoR deletes, rewrites and the change feed") {
     import spark.implicits._
     import org.apache.spark.sql.types._
-    val dir = Files.createTempDirectory("graft-sevwc-").toString
+    val dir = tempDir("graft-sevwc-").toString
     val cat = new SnapshotCatalog(dir)
     val t0 = Writers.writeSnapshot(cat, "t",
       (1 to 20).map(i => (i, i * 10)).toDF("id", "v").coalesce(1), dir)

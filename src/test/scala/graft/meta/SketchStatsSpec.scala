@@ -1,7 +1,5 @@
 package graft.meta
 
-import java.nio.file.Files
-
 import graft.{SparkSpec, Tables}
 import graft.sinks.Writers
 import org.apache.spark.sql.functions._
@@ -12,7 +10,7 @@ import org.apache.spark.sql.functions._
 class SketchStatsSpec extends SparkSpec {
 
   test("metadata-only NDV estimate lands within 5% of exact, across multiple files") {
-    val base = Files.createTempDirectory("graft-sk-").toString
+    val base = tempDir("graft-sk-").toString
     val cat = new SnapshotCatalog(s"$base/cat")
     val c = Tables.customer(spark, sfDir).repartition(4)
     Writers.writeSnapshot(cat, "cust", c, s"$base/data",
@@ -31,7 +29,7 @@ class SketchStatsSpec extends SparkSpec {
   }
 
   test("sketches are sticky: appends and COW rewrites stay estimable") {
-    val base = Files.createTempDirectory("graft-sk2-").toString
+    val base = tempDir("graft-sk2-").toString
     val cat = new SnapshotCatalog(s"$base/cat")
     val c = Tables.customer(spark, sfDir)
     Writers.writeSnapshot(cat, "cust", c.filter(col("c_custkey") <= 100),
@@ -73,7 +71,7 @@ class SketchStatsSpec extends SparkSpec {
   }
 
   test("un-sketched columns refuse to estimate rather than lie") {
-    val base = Files.createTempDirectory("graft-sk3-").toString
+    val base = tempDir("graft-sk3-").toString
     val cat = new SnapshotCatalog(s"$base/cat")
     Writers.writeSnapshot(cat, "nation", Tables.nation(spark, sfDir), s"$base/data")
     assert(cat.approxCountDistinct(spark, "nation", "n_name").isEmpty)

@@ -10,7 +10,7 @@ class SnapshotCatalogSpec extends SparkSpec {
   /** Write customer split into two files partitioned by key parity so
     * min/max pruning has something to skip. */
   private def twoFileTable(): (String, String, String) = {
-    val data = Files.createTempDirectory("graft-data-").toString
+    val data = tempDir("graft-data-").toString
     val c = Tables.customer(spark, sfDir)
     c.filter(col("c_custkey") <= 75).coalesce(1).write.parquet(s"$data/low")
     c.filter(col("c_custkey") > 75).coalesce(1).write.parquet(s"$data/high")
@@ -24,7 +24,7 @@ class SnapshotCatalogSpec extends SparkSpec {
   test("commit records per-file rows, bytes, min/max; read returns all data") {
     val (_, low, high) = twoFileTable()
     var t = 1000L
-    val cat = new SnapshotCatalog(Files.createTempDirectory("graft-cat-").toString, () => t)
+    val cat = new SnapshotCatalog(tempDir("graft-cat-").toString, () => t)
     val snap = cat.commit(spark, "customer", Seq(low, high))
     assert(snap.snapshotId == 1 && snap.files.size == 2)
     assert(snap.totalRows == Tables.customer(spark, sfDir).count())
@@ -37,7 +37,7 @@ class SnapshotCatalogSpec extends SparkSpec {
 
   test("min/max pruning skips non-overlapping files") {
     val (_, low, high) = twoFileTable()
-    val cat = new SnapshotCatalog(Files.createTempDirectory("graft-cat-").toString)
+    val cat = new SnapshotCatalog(tempDir("graft-cat-").toString)
     cat.commit(spark, "customer", Seq(low, high))
     val planned = cat.planFiles("customer", Seq(RangeNum("c_custkey", 100, 200)))
     assert(planned.map(_.path) == Seq(high))
@@ -47,7 +47,7 @@ class SnapshotCatalogSpec extends SparkSpec {
 
   test("pruning everything yields empty frame with schema") {
     val (_, low, high) = twoFileTable()
-    val cat = new SnapshotCatalog(Files.createTempDirectory("graft-cat-").toString)
+    val cat = new SnapshotCatalog(tempDir("graft-cat-").toString)
     cat.commit(spark, "customer", Seq(low, high))
     val df = cat.read(spark, "customer", Seq(RangeNum("c_custkey", 1e9, 2e9)))
     assert(df.count() == 0)
@@ -57,7 +57,7 @@ class SnapshotCatalogSpec extends SparkSpec {
   test("snapshot log: history, time travel by id and by timestamp") {
     val (_, low, high) = twoFileTable()
     var t = 1000L
-    val cat = new SnapshotCatalog(Files.createTempDirectory("graft-cat-").toString, () => t)
+    val cat = new SnapshotCatalog(tempDir("graft-cat-").toString, () => t)
     cat.commit(spark, "customer", Seq(low))
     t = 2000L
     cat.commit(spark, "customer", Seq(high))
@@ -80,7 +80,7 @@ class SnapshotCatalogSpec extends SparkSpec {
 
   test("schema and tableStats surface snapshot metadata") {
     val (_, low, high) = twoFileTable()
-    val cat = new SnapshotCatalog(Files.createTempDirectory("graft-cat-").toString)
+    val cat = new SnapshotCatalog(tempDir("graft-cat-").toString)
     cat.commit(spark, "customer", Seq(low, high))
     assert(cat.schema("customer").get.fieldNames.toSet ==
       Tables.customer(spark, sfDir).schema.fieldNames.toSet)
@@ -92,7 +92,7 @@ class SnapshotCatalogSpec extends SparkSpec {
 
   test("unknown snapshot id raises") {
     val (_, low, _) = twoFileTable()
-    val cat = new SnapshotCatalog(Files.createTempDirectory("graft-cat-").toString)
+    val cat = new SnapshotCatalog(tempDir("graft-cat-").toString)
     cat.commit(spark, "customer", Seq(low))
     intercept[IllegalArgumentException] {
       cat.planFiles("customer", Nil, snapshotId = Some(99L))
@@ -101,14 +101,14 @@ class SnapshotCatalogSpec extends SparkSpec {
 
   test("timestamp stats keep sub-second precision: millisecond-range prune cannot skip matching rows") {
     import spark.implicits._
-    val data = Files.createTempDirectory("graft-tsdata-").toString
+    val data = tempDir("graft-tsdata-").toString
     // all rows inside one second: 10:00:00.200 .. 10:00:00.800
     Seq("2024-01-01 10:00:00.2", "2024-01-01 10:00:00.8")
       .toDF("s").select(to_timestamp(col("s")).as("ts"))
       .coalesce(1).write.parquet(s"$data/f")
     val p = new java.io.File(s"$data/f").listFiles()
       .filter(_.getName.endsWith(".parquet")).head.getAbsolutePath
-    val cat = new SnapshotCatalog(Files.createTempDirectory("graft-cat-").toString)
+    val cat = new SnapshotCatalog(tempDir("graft-cat-").toString)
     val snap = cat.commit(spark, "tsx", Seq(p))
     val st = snap.files.head.stats("ts")
     val t200 = java.sql.Timestamp.valueOf("2024-01-01 10:00:00.2").getTime.toDouble
@@ -125,7 +125,7 @@ class SnapshotCatalogSpec extends SparkSpec {
 
   test("concurrent committers mint distinct ids; no snapshot is overwritten") {
     val (_, low, high) = twoFileTable()
-    val cat = new SnapshotCatalog(Files.createTempDirectory("graft-cat-").toString)
+    val cat = new SnapshotCatalog(tempDir("graft-cat-").toString)
     cat.commit(spark, "customer", Seq(low))
     val base = cat.currentSnapshot("customer").get
     import scala.concurrent.{Await, Future}
@@ -145,8 +145,8 @@ class SnapshotCatalogSpec extends SparkSpec {
 
   test("tags: named refs resolve, retag moves, expire keeps tagged snapshots") {
     import graft.sinks.Writers
-    val cat = new SnapshotCatalog(Files.createTempDirectory("graft-tag-").toString)
-    val dataDir = Files.createTempDirectory("graft-tag-data-").toString
+    val cat = new SnapshotCatalog(tempDir("graft-tag-").toString)
+    val dataDir = tempDir("graft-tag-data-").toString
     val c = graft.Tables.customer(spark, sfDir)
     val s1 = Writers.writeSnapshot(cat, "cust", c.filter(col("c_custkey") <= 30), dataDir)
     val s2 = Writers.writeSnapshot(cat, "cust",
@@ -185,8 +185,8 @@ class SnapshotCatalogSpec extends SparkSpec {
 
   test("vacuum deletes orphaned data files but never live or in-grace ones") {
     import graft.sinks.Writers
-    val cat = new SnapshotCatalog(Files.createTempDirectory("graft-vac-").toString)
-    val dataDir = Files.createTempDirectory("graft-vac-data-").toString
+    val cat = new SnapshotCatalog(tempDir("graft-vac-").toString)
+    val dataDir = tempDir("graft-vac-data-").toString
     val c = graft.Tables.customer(spark, sfDir)
     Writers.writeSnapshot(cat, "cust", c.filter(col("c_custkey") <= 75), dataDir)
     // COW delete rewrites the file; the original becomes orphaned once
@@ -221,8 +221,8 @@ class SnapshotCatalogSpec extends SparkSpec {
     import graft.sinks.Writers
     var now = 1000L
     val cat = new SnapshotCatalog(
-      Files.createTempDirectory("graft-expage-").toString, clock = () => now)
-    val dataDir = Files.createTempDirectory("graft-expage-data-").toString
+      tempDir("graft-expage-").toString, clock = () => now)
+    val dataDir = tempDir("graft-expage-data-").toString
     val c = graft.Tables.customer(spark, sfDir)
     val s1 = Writers.writeSnapshot(cat, "cust", c.filter(col("c_custkey").between(1, 10)), dataDir)
     now = 2000L
@@ -243,9 +243,9 @@ class SnapshotCatalogSpec extends SparkSpec {
 
   test("sidecar vacuum: orphaned bloom/sketch indexes GC after expiry; live ones survive") {
     import graft.sinks.Writers
-    val root = Files.createTempDirectory("graft-vacsc-").toString
+    val root = tempDir("graft-vacsc-").toString
     val cat = new SnapshotCatalog(root)
-    val dataDir = Files.createTempDirectory("graft-vacsc-data-").toString
+    val dataDir = tempDir("graft-vacsc-data-").toString
     val c = graft.Tables.customer(spark, sfDir)
     Writers.writeSnapshot(cat, "cust", c.filter(col("c_custkey") <= 75), dataDir,
       bloomColumns = Seq("c_mktsegment"), sketchColumns = Seq("c_mktsegment"))

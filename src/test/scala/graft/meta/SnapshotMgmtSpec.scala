@@ -1,7 +1,5 @@
 package graft.meta
 
-import java.nio.file.Files
-
 import graft.{SparkSpec, Tables}
 import graft.sinks.Writers
 import org.apache.spark.sql.functions._
@@ -14,7 +12,7 @@ class SnapshotMgmtSpec extends SparkSpec {
     cat.read(spark, table).select(col("c_custkey")).collect().map(_.getLong(0)).toSet
 
   test("rollback restores an earlier file state as a NEW net-exact commit") {
-    val base = Files.createTempDirectory("graft-rb-").toString
+    val base = tempDir("graft-rb-").toString
     val cat = new SnapshotCatalog(s"$base/cat")
     val c = Tables.customer(spark, sfDir)
     val sA = Writers.writeSnapshot(cat, "cust", c.filter(col("c_custkey") <= 50), s"$base/d")
@@ -41,7 +39,7 @@ class SnapshotMgmtSpec extends SparkSpec {
   }
 
   test("cherry-pick replays an append onto the current head; rejects rewrites") {
-    val base = Files.createTempDirectory("graft-cp-").toString
+    val base = tempDir("graft-cp-").toString
     val cat = new SnapshotCatalog(s"$base/cat")
     val c = Tables.customer(spark, sfDir)
     val sA = Writers.writeSnapshot(cat, "cust", c.filter(col("c_custkey") <= 30), s"$base/d")
@@ -72,7 +70,7 @@ class SnapshotMgmtSpec extends SparkSpec {
   }
 
   test("per-commit feed attributes every change to its commit; intra-range churn preserved") {
-    val base = Files.createTempDirectory("graft-cdf-").toString
+    val base = tempDir("graft-cdf-").toString
     val cat = new SnapshotCatalog(s"$base/cat")
     val c = Tables.customer(spark, sfDir)
     val s1 = Writers.writeSnapshot(cat, "cust", c.filter(col("c_custkey") <= 20), s"$base/d")

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
 class TopKSpec extends SparkSpec {
 
   private def rangedOrders(): (SnapshotCatalog, String) = {
-    val dir = Files.createTempDirectory("graft-topk-").toString
+    val dir = tempDir("graft-topk-").toString
     val cat = new SnapshotCatalog(dir)
     Writers.writeRangedSnapshot(cat, "orders", Tables.orders(spark, sfDir),
       dir, "o_totalprice", 8)
@@ -86,7 +86,7 @@ class TopKSpec extends SparkSpec {
 
   test("nulls and boundary ties: planted data, exact against a driver-side sort") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-topkn-").toString
+    val dir = tempDir("graft-topkn-").toString
     val cat = new SnapshotCatalog(dir)
     // three files: high values with ties at the boundary, mids, and a
     // file of mostly-nulls whose rowCount would overstate any guarantee
@@ -107,7 +107,7 @@ class TopKSpec extends SparkSpec {
 
   test("files without usable stats are kept, never mis-pruned") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-topku-").toString
+    val dir = tempDir("graft-topku-").toString
     val cat = new SnapshotCatalog(dir)
     // an all-null file has no min/max for x: it must be kept (its rows
     // can still surface when k exceeds the non-null row count)

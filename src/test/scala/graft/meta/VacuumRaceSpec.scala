@@ -35,8 +35,8 @@ class VacuumRaceSpec extends SparkSpec {
     val t = "t"
 
     for (round <- 0 until 5) {
-      val root = Files.createTempDirectory(s"graft-vacrace-$round-").toString
-      val dataDir = Files.createTempDirectory(s"graft-vacrace-data-$round-").toString
+      val root = tempDir(s"graft-vacrace-$round-").toString
+      val dataDir = tempDir(s"graft-vacrace-data-$round-").toString
       val cat = new SnapshotCatalog(root)
 
       def df(rows: Seq[(Long, Long)]): DataFrame = rows.toDF("id", "v").coalesce(1)

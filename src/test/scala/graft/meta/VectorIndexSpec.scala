@@ -4,7 +4,8 @@ import java.nio.file.Files
 
 import graft.SparkSpec
 import graft.sinks.Writers
-import org.apache.spark.sql.DataFrame
+import graft.sql.GraftSqlResolution
+import org.apache.spark.sql.{DataFrame, GraftColumnShim, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Lifecycle contracts of the COMMITTED vector index (r17,
@@ -28,8 +29,16 @@ class VectorIndexSpec extends SparkSpec {
   }
 
   private def freshCat(): (SnapshotCatalog, String) = {
-    val root = Files.createTempDirectory("graft-vecidx-").toString
+    val root = tempDir("graft-vecidx-").toString
     (new SnapshotCatalog(root), root)
+  }
+
+  /** A SQL session over the catalog at `root`. */
+  private def sqlOn(root: String): SparkSession = {
+    val s = GraftColumnShim.sessionWithExtensions(
+      spark, e => new graft.GraftExtensions().apply(e))
+    s.conf.set(GraftSqlResolution.RootConf, root)
+    s
   }
 
   private def queriesOf(df: DataFrame, n: Int): Seq[(String, Seq[Double])] =
@@ -184,5 +193,59 @@ class VectorIndexSpec extends SparkSpec {
     assert(!dropped.props.contains(SnapshotCatalog.PqColumnsProp))
     assert(!dropped.props.contains(SnapshotCatalog.PqModelProp))
     assert(!dropped.props.contains(SnapshotCatalog.PqGenerationProp))
+  }
+
+  test("rename keeps the vector index searchable under the new name") {
+    val (cat, root) = freshCat()
+    val df = planted(0 until 40)
+    Writers.writeSnapshot(cat, "vecs", df, s"$root/data")
+    VectorIndex.indexVectors(spark, cat, "vecs", "id", "vec", m = 4, k = 4, nCells = 4)
+    val qs = queriesOf(df, 4)
+    val before = resultSet(
+      VectorIndex.search(spark, cat, "vecs", qs, k = 3, excludeSelf = true))
+    cat.renameTable("vecs", "vecs2")
+    assert(resultSet(
+      VectorIndex.search(spark, cat, "vecs2", qs, k = 3, excludeSelf = true)) == before)
+  }
+
+  test("a clone's vector index survives SQL DROP and DROP PURGE of its source") {
+    val (cat, root) = freshCat()
+    val ext = sqlOn(root)
+    val df = planted(0 until 40)
+    val qs = queriesOf(df, 4)
+    for (purge <- Seq(false, true)) {
+      val (src, cl) = if (purge) ("vsrc_p", "vcl_p") else ("vsrc", "vcl")
+      // the default SQL deployment: data under the source's own tree
+      Writers.writeSnapshot(cat, src, df, s"$root/$src/${SnapshotCatalog.DataDir}")
+      VectorIndex.indexVectors(spark, cat, src, "id", "vec", m = 4, k = 4, nCells = 4)
+      cat.cloneTable(src, cl)
+      val before = resultSet(
+        VectorIndex.search(spark, cat, cl, qs, k = 3, excludeSelf = true))
+      assert(before.nonEmpty)
+      ext.sql(s"DROP TABLE graft.$src" + (if (purge) " PURGE" else ""))
+      assert(resultSet(
+        VectorIndex.search(spark, cat, cl, qs, k = 3, excludeSelf = true)) == before,
+        s"DROP TABLE $src${if (purge) " PURGE" else ""} changed the clone's answers")
+    }
+  }
+
+  test("DROP TABLE PURGE of an unshared vector-indexed table leaves no pqindex file") {
+    val (cat, root) = freshCat()
+    Writers.writeSnapshot(cat, "vecs", planted(0 until 40), s"$root/vecs/data")
+    VectorIndex.indexVectors(spark, cat, "vecs", "id", "vec", m = 4, k = 4, nCells = 4)
+    // an append encodes a second codes dir under the sticky model
+    Writers.writeSnapshot(cat, "vecs", planted(100 until 120), s"$root/vecs/data")
+    val pq = java.nio.file.Paths.get(root, "vecs", SnapshotCatalog.PqIndexDir)
+    def filesUnderPq: Long =
+      if (!Files.exists(pq)) 0L
+      else {
+        val st = Files.walk(pq)
+        try st.filter(Files.isRegularFile(_)).count() finally st.close()
+      }
+    assert(filesUnderPq > 0)
+    sqlOn(root).sql("DROP TABLE graft.vecs PURGE")
+    assert(filesUnderPq == 0, s"PURGE left $filesUnderPq files under $pq")
+    assert(!Files.exists(java.nio.file.Paths.get(root, "vecs")),
+      "an unshared table vanishes whole")
   }
 }

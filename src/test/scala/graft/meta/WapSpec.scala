@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
 class WapSpec extends SparkSpec {
 
   test("staged append is invisible to reads, CDC and history until published") {
-    val base = Files.createTempDirectory("graft-wap-").toString
+    val base = tempDir("graft-wap-").toString
     val cat = new SnapshotCatalog(s"$base/cat")
     val c = Tables.customer(spark, sfDir)
     Writers.writeSnapshot(cat, "cust", c.filter(col("c_custkey") <= 50), s"$base/data")
@@ -41,7 +41,7 @@ class WapSpec extends SparkSpec {
   }
 
   test("audit of a MoR-masked table shows the prospective VISIBLE state") {
-    val base = Files.createTempDirectory("graft-wapmor-").toString
+    val base = tempDir("graft-wapmor-").toString
     val cat = new SnapshotCatalog(s"$base/cat")
     val c = Tables.customer(spark, sfDir)
     Writers.writeSnapshot(cat, "cust", c.filter(col("c_custkey") <= 50), s"$base/data")
@@ -55,7 +55,7 @@ class WapSpec extends SparkSpec {
   }
 
   test("publish applies onto a head that moved after staging (append cherry-pick)") {
-    val base = Files.createTempDirectory("graft-wap2-").toString
+    val base = tempDir("graft-wap2-").toString
     val cat = new SnapshotCatalog(s"$base/cat")
     val c = Tables.customer(spark, sfDir)
     Writers.writeSnapshot(cat, "cust", c.filter(col("c_custkey") <= 30), s"$base/data")
@@ -72,7 +72,7 @@ class WapSpec extends SparkSpec {
   }
 
   test("discard leaves no trace; vacuum reclaims the never-referenced files") {
-    val base = Files.createTempDirectory("graft-wap3-").toString
+    val base = tempDir("graft-wap3-").toString
     val cat = new SnapshotCatalog(s"$base/cat")
     val c = Tables.customer(spark, sfDir)
     Writers.writeSnapshot(cat, "cust", c.filter(col("c_custkey") <= 50), s"$base/data")

@@ -107,7 +107,7 @@ class EdgeCaseSpec extends SparkSpec {
 
   test("sequence packing and decontamination survive empty corpora") {
     import graft.queries.TrainPrep
-    val dir = java.nio.file.Files.createTempDirectory("graft-edge-").toString
+    val dir = tempDir("graft-edge-").toString
     empty.withColumn("lang", lit("en")).withColumn("source", lit("s"))
       .withColumn("n_chars", lit(0L))
       .write.parquet(s"$dir/documents.parquet")
@@ -150,8 +150,8 @@ class EdgeCaseSpec extends SparkSpec {
     import graft.sinks.Writers
     import graft.meta.SnapshotCatalog
     val cat = new SnapshotCatalog(
-      java.nio.file.Files.createTempDirectory("graft-edge-m-").toString)
-    val dataDir = java.nio.file.Files.createTempDirectory("graft-edge-md-").toString
+      tempDir("graft-edge-m-").toString)
+    val dataDir = tempDir("graft-edge-md-").toString
     val t = Seq((1L, "x"), (2L, "y")).toDF("k", "v")
     Writers.writeSnapshot(cat, "t", t, dataDir)
     // empty source: a no-op upsert — table unchanged, commit still clean

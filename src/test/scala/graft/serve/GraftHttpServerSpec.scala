@@ -179,8 +179,8 @@ class GraftHttpServerSpec extends SparkSpec {
   test("/changes streams the net CDC feed and /history the snapshot log") {
     import org.apache.spark.sql.functions.col
     val cat = new graft.meta.SnapshotCatalog(
-      java.nio.file.Files.createTempDirectory("graft-http-cdc-").toString)
-    val dataDir = java.nio.file.Files.createTempDirectory("graft-http-cdc-d-").toString
+      tempDir("graft-http-cdc-").toString)
+    val dataDir = tempDir("graft-http-cdc-d-").toString
     val c = graft.Tables.customer(spark, sfDir)
     val s1 = graft.sinks.Writers.writeSnapshot(cat, "cust",
       c.filter(col("c_custkey") <= 50), dataDir)
@@ -240,8 +240,8 @@ class GraftHttpServerSpec extends SparkSpec {
   test("/ndv answers from manifest sketches and /staged lists the audit queue") {
     import org.apache.spark.sql.functions.col
     val cat = new graft.meta.SnapshotCatalog(
-      java.nio.file.Files.createTempDirectory("graft-http-ndv-").toString)
-    val dataDir = java.nio.file.Files.createTempDirectory("graft-http-ndv-d-").toString
+      tempDir("graft-http-ndv-").toString)
+    val dataDir = tempDir("graft-http-ndv-d-").toString
     val c = graft.Tables.customer(spark, sfDir)
     graft.sinks.Writers.writeSnapshot(cat, "cust", c, dataDir,
       sketchColumns = Seq("c_mktsegment"))
@@ -266,8 +266,8 @@ class GraftHttpServerSpec extends SparkSpec {
   test("/branches lists branch refs with head and fork point") {
     import org.apache.spark.sql.functions.col
     val cat = new graft.meta.SnapshotCatalog(
-      java.nio.file.Files.createTempDirectory("graft-http-br-").toString)
-    val dataDir = java.nio.file.Files.createTempDirectory("graft-http-br-d-").toString
+      tempDir("graft-http-br-").toString)
+    val dataDir = tempDir("graft-http-br-d-").toString
     val c = graft.Tables.customer(spark, sfDir)
     graft.sinks.Writers.writeSnapshot(cat, "cust", c.filter(col("c_custkey") <= 30), dataDir)
     cat.createBranch("cust", "dev")
@@ -290,8 +290,8 @@ class GraftHttpServerSpec extends SparkSpec {
   test("/partitions serves the per-partition manifest rollup") {
     import org.apache.spark.sql.functions.col
     val cat = new graft.meta.SnapshotCatalog(
-      java.nio.file.Files.createTempDirectory("graft-http-part-").toString)
-    val dataDir = java.nio.file.Files.createTempDirectory("graft-http-part-d-").toString
+      tempDir("graft-http-part-").toString)
+    val dataDir = tempDir("graft-http-part-d-").toString
     val n = graft.Tables.nation(spark, sfDir).withColumn("p_rk", col("n_regionkey"))
     graft.sinks.Writers.writePartitionedSnapshot(cat, "nation", n, s"$dataDir/c1", Seq("p_rk"))
 
@@ -311,8 +311,8 @@ class GraftHttpServerSpec extends SparkSpec {
   test("/stats serves manifest table stats incl. outstanding MoR delete masks") {
     import org.apache.spark.sql.functions.col
     val cat = new graft.meta.SnapshotCatalog(
-      java.nio.file.Files.createTempDirectory("graft-http-stats-").toString)
-    val dataDir = java.nio.file.Files.createTempDirectory("graft-http-stats-d-").toString
+      tempDir("graft-http-stats-").toString)
+    val dataDir = tempDir("graft-http-stats-d-").toString
     val c = graft.Tables.customer(spark, sfDir)
     graft.sinks.Writers.writeSnapshot(cat, "cust",
       c.filter(col("c_custkey") <= 50), dataDir)
@@ -340,8 +340,8 @@ class GraftHttpServerSpec extends SparkSpec {
   test("/query SQL time-travels catalog tables on a catalog-configured node") {
     import graft.sinks.Writers
     import org.apache.spark.sql.functions.col
-    val root = java.nio.file.Files.createTempDirectory("graft-httptt-").toString
-    val dataDir = java.nio.file.Files.createTempDirectory("graft-httptt-data-").toString
+    val root = tempDir("graft-httptt-").toString
+    val dataDir = tempDir("graft-httptt-data-").toString
     val cat = new graft.meta.SnapshotCatalog(root)
     val c = graft.Tables.customer(spark, sfDir)
     Writers.writeSnapshot(cat, "cust_tt", c.filter(col("c_custkey").between(1, 10)), dataDir)
@@ -379,8 +379,8 @@ class GraftHttpServerSpec extends SparkSpec {
   test("/query runs the r13+r14 surface over the wire: WAP, RENAME, TBLPROPERTIES, MV, cache") {
     import graft.sinks.Writers
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-httpwap-").toString
-    val dataDir = java.nio.file.Files.createTempDirectory("graft-httpwap-data-").toString
+    val root = tempDir("graft-httpwap-").toString
+    val dataDir = tempDir("graft-httpwap-data-").toString
     val cat = new graft.meta.SnapshotCatalog(root)
     Writers.writeSnapshot(cat, "wap_http",
       Seq((1L, 10.0), (2L, 20.0), (3L, 30.0)).toDF("k", "v"), dataDir)
@@ -435,7 +435,7 @@ class GraftHttpServerSpec extends SparkSpec {
       assert(rows("SELECT count(*) AS n FROM wap_http2").head.contains("4"),
         "retention is metadata-only; the data must not move")
       // idempotent landing-zone ingest over the wire
-      val landing = java.nio.file.Files.createTempDirectory("graft-httping-")
+      val landing = tempDir("graft-httping-")
       java.nio.file.Files.write(landing.resolve("d.csv"),
         "11,110.0\n".getBytes("UTF-8"))
       val ing = rows(s"CALL graft.ingest('wap_http2', '$landing', format => 'csv')").head
@@ -444,7 +444,7 @@ class GraftHttpServerSpec extends SparkSpec {
       assert(rerun.contains("\"ingested\":0") && rerun.contains("\"skipped\":1"))
       assert(rows("SELECT count(*) AS n FROM wap_http2").head.contains("5"))
       // export over the wire: the shards land and report files/bytes
-      val out = java.nio.file.Files.createTempDirectory("graft-httpexp-")
+      val out = tempDir("graft-httpexp-")
         .toString + "/shards"
       val exp = rows(s"CALL graft.export('wap_http2', '$out')").head
       assert(exp.contains("\"files\":"))

@@ -1,7 +1,5 @@
 package graft.serve
 
-import java.nio.file.Files
-
 import graft.SparkSpec
 import graft.cache.{CacheKey, TableCache}
 import graft.meta.SnapshotCatalog
@@ -17,9 +15,9 @@ class MaintenanceSpec extends SparkSpec {
   test("runOnce sweeps opted-in tables under the injected clock; errors isolate") {
     import spark.implicits._
     var nowMs = 1700000000000L
-    val root = Files.createTempDirectory("graft-maint-").toString
+    val root = tempDir("graft-maint-").toString
     val cat = new SnapshotCatalog(root, () => nowMs)
-    val dataDir = Files.createTempDirectory("graft-maint-data-").toString
+    val dataDir = tempDir("graft-maint-data-").toString
 
     // m1: full policy — 10 old rows (2h before "now"), 10 fresh ones,
     // across two commits so the history trim has something to cut.
@@ -101,7 +99,7 @@ class MaintenanceSpec extends SparkSpec {
   }
 
   test("a failing pass is recorded on the handle, never silently swallowed") {
-    val root = Files.createTempDirectory("graft-maint-err-").toString
+    val root = tempDir("graft-maint-err-").toString
     val cat = new SnapshotCatalog(root)
     val boom = new java.util.concurrent.atomic.AtomicBoolean(true)
     // a pass that fails outright (FS outage / bad root shape) until

@@ -1,7 +1,5 @@
 package graft.sinks
 
-import java.nio.file.Files
-
 import graft.{SparkSpec, Tables}
 import graft.meta.{RangeNum, SnapshotCatalog}
 import org.apache.spark.sql.functions._
@@ -9,8 +7,8 @@ import org.apache.spark.sql.functions._
 class DeleteEvolveSpec extends SparkSpec {
 
   test("copy-on-write delete rewrites only affected files; untouched metadata reused") {
-    val cat = new SnapshotCatalog(Files.createTempDirectory("graft-cow-").toString)
-    val dataDir = Files.createTempDirectory("graft-cow-data-").toString
+    val cat = new SnapshotCatalog(tempDir("graft-cow-").toString)
+    val dataDir = tempDir("graft-cow-data-").toString
     val c = Tables.customer(spark, sfDir)
     Writers.writeSnapshot(cat, "cust", c.filter(col("c_custkey") <= 75), dataDir)
     Writers.writeSnapshot(cat, "cust", c.filter(col("c_custkey") > 75), dataDir)
@@ -35,8 +33,8 @@ class DeleteEvolveSpec extends SparkSpec {
   }
 
   test("incremental read is CDC-correct across a COW delete: no resurrected rows") {
-    val cat = new SnapshotCatalog(Files.createTempDirectory("graft-cdc-").toString)
-    val dataDir = Files.createTempDirectory("graft-cdc-data-").toString
+    val cat = new SnapshotCatalog(tempDir("graft-cdc-").toString)
+    val dataDir = tempDir("graft-cdc-data-").toString
     val c = Tables.customer(spark, sfDir)
 
     val s1 = Writers.writeSnapshot(cat, "cust", c.filter(col("c_custkey") <= 50), dataDir)
@@ -81,8 +79,8 @@ class DeleteEvolveSpec extends SparkSpec {
   }
 
   test("change feed nets out in-range appends partially deleted in-range (no phantom events)") {
-    val cat = new SnapshotCatalog(Files.createTempDirectory("graft-net-").toString)
-    val dataDir = Files.createTempDirectory("graft-net-data-").toString
+    val cat = new SnapshotCatalog(tempDir("graft-net-").toString)
+    val dataDir = tempDir("graft-net-data-").toString
     val c = Tables.customer(spark, sfDir)
     val s1 = Writers.writeSnapshot(cat, "cust", c.filter(col("c_custkey") <= 50), dataDir)
     Writers.writeSnapshot(cat, "cust",
@@ -106,8 +104,8 @@ class DeleteEvolveSpec extends SparkSpec {
   }
 
   test("schema evolution: appended column surfaces, old files read as null") {
-    val cat = new SnapshotCatalog(Files.createTempDirectory("graft-evo-").toString)
-    val dataDir = Files.createTempDirectory("graft-evo-data-").toString
+    val cat = new SnapshotCatalog(tempDir("graft-evo-").toString)
+    val dataDir = tempDir("graft-evo-data-").toString
     val c = Tables.customer(spark, sfDir)
     Writers.writeSnapshot(cat, "cust", c.filter(col("c_custkey") <= 75), dataDir)
     val v2 = c.filter(col("c_custkey") > 75)

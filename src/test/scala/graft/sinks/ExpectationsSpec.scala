@@ -1,7 +1,5 @@
 package graft.sinks
 
-import java.nio.file.Files
-
 import graft.SparkSpec
 import graft.meta.SnapshotCatalog
 import org.apache.spark.sql.functions._
@@ -67,7 +65,7 @@ class ExpectationsSpec extends SparkSpec {
   }
 
   test("expectation-gated WAP: dirty stage refused and left staged; clean stage publishes") {
-    val base = Files.createTempDirectory("graft-exp-").toString
+    val base = tempDir("graft-exp-").toString
     val cat = new SnapshotCatalog(s"$base/cat")
     val good = Seq((1L, 10.0), (2L, 20.0)).toDF("id", "v")
     Writers.writeSnapshot(cat, "t", good, s"$base/d")

@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions._
   * refuse to write over an existing export. */
 class ExportSpec extends SparkSpec {
 
-  private lazy val root = Files.createTempDirectory("graft-exp-").toString
-  private lazy val dataDir = Files.createTempDirectory("graft-exp-data-").toString
+  private lazy val root = tempDir("graft-exp-").toString
+  private lazy val dataDir = tempDir("graft-exp-data-").toString
   private lazy val cat = new SnapshotCatalog(root)
 
   private lazy val ext = {
@@ -33,7 +33,7 @@ class ExportSpec extends SparkSpec {
     ext.sql("DELETE FROM exp WHERE id <= 5")
 
     // current state, parquet
-    val out1 = Files.createTempDirectory("graft-expout-").toString + "/cur"
+    val out1 = tempDir("graft-expout-").toString + "/cur"
     val r1 = ext.sql(s"CALL graft.export('exp', '$out1')").head()
     assert(r1.getLong(0) >= 1 && r1.getLong(1) > 0)
     val back1 = spark.read.parquet(out1)
@@ -41,12 +41,12 @@ class ExportSpec extends SparkSpec {
       ext.sql("SELECT sum(id) FROM exp").head().getLong(0))
 
     // the tagged epoch exports the OLD state
-    val out2 = Files.createTempDirectory("graft-expout-").toString + "/v1"
+    val out2 = tempDir("graft-expout-").toString + "/v1"
     ext.sql(s"CALL graft.export('exp', '$out2', version => 'epoch1')")
     assert(spark.read.parquet(out2).count() == 50)
 
     // where both scopes the scan and filters the rows; csv round-trips
-    val out3 = Files.createTempDirectory("graft-expout-").toString + "/csv"
+    val out3 = tempDir("graft-expout-").toString + "/csv"
     ext.sql(s"CALL graft.export('exp', '$out3', format => 'csv', " +
       "header => 'true', where => 'id BETWEEN 10 AND 20')")
     val back3 = spark.read.option("header", "true").option("inferSchema", "true").csv(out3)
@@ -76,7 +76,7 @@ class ExportSpec extends SparkSpec {
     }
     assert(e4b.getMessage.contains("no snapshot id or tag"))
     // timestamp travel: as-of NOW serves current; a pre-table timestamp refuses
-    val out4 = Files.createTempDirectory("graft-expout-").toString + "/asof"
+    val out4 = tempDir("graft-expout-").toString + "/asof"
     ext.sql(s"CALL graft.export('exp', '$out4', as_of_ms => ${System.currentTimeMillis()})")
     assert(spark.read.parquet(out4).count() == 46)
     val e5 = intercept[Exception] {
@@ -90,7 +90,7 @@ class ExportSpec extends SparkSpec {
     Writers.writeSnapshot(cat, "expp",
       (1L to 30L).map(i => (i, if (i % 2 == 0) "even" else "odd", i * 1.0))
         .toDF("id", "parity", "score"), dataDir)
-    val out = Files.createTempDirectory("graft-expout-p-").toString + "/hive"
+    val out = tempDir("graft-expout-p-").toString + "/hive"
     ext.sql(s"CALL graft.export('expp', '$out', partition_by => 'parity')")
     assert(Files.isDirectory(java.nio.file.Paths.get(out, "parity=even")) &&
       Files.isDirectory(java.nio.file.Paths.get(out, "parity=odd")),
@@ -109,7 +109,7 @@ class ExportSpec extends SparkSpec {
     // per-commit feed must preserve it with attribution)
     ext.sql("INSERT INTO expc SELECT id, id * 1.0 AS v FROM range(41, 61)")
     ext.sql("DELETE FROM expc WHERE id BETWEEN 30 AND 50")
-    val out = Files.createTempDirectory("graft-expout-c-").toString + "/feed"
+    val out = tempDir("graft-expout-c-").toString + "/feed"
     val r = ext.sql(s"CALL graft.export('expc', '$out', changes_from => 1)").head()
     assert(r.getLong(0) >= 1)
     val feed = spark.read.parquet(out)
@@ -127,7 +127,7 @@ class ExportSpec extends SparkSpec {
 
     // percommit preserves the churn WITH commit attribution, and its
     // per-commit application reproduces the same end state
-    val outP = Files.createTempDirectory("graft-expout-c-").toString + "/percommit"
+    val outP = tempDir("graft-expout-c-").toString + "/percommit"
     ext.sql(s"CALL graft.export('expc', '$outP', changes_from => 1, " +
       "mode => 'percommit')")
     val pfeed = spark.read.parquet(outP)
@@ -159,7 +159,7 @@ class ExportSpec extends SparkSpec {
     // file:// URIs are valid writer destinations; the post-write count
     // (and the containment check) must go through the SAME Hadoop
     // filesystem the write used — a java.nio walk would throw here
-    val dir = Files.createTempDirectory("graft-expout-u-").toString
+    val dir = tempDir("graft-expout-u-").toString
     val r = ext.sql(s"CALL graft.export('expu', 'file:$dir/shards')").head()
     assert(r.getLong(0) >= 1 && r.getLong(1) > 0)
     assert(spark.read.parquet(s"$dir/shards").count() == 10)
@@ -174,7 +174,7 @@ class ExportSpec extends SparkSpec {
     // the pinned snapshot speaks the OLD schema: its where filters must
     // translate against THAT schema's stats domain (the current schema
     // no longer has `score` at all)
-    val out = Files.createTempDirectory("graft-expout-s-").toString + "/pinned"
+    val out = tempDir("graft-expout-s-").toString + "/pinned"
     ext.sql(s"CALL graft.export('exps', '$out', version => 'before_rename', " +
       "where => 'score >= 30.0')")
     val back = spark.read.parquet(out)
@@ -188,10 +188,10 @@ class ExportSpec extends SparkSpec {
       (1L to 10L).map(i => (i, i * 2L)).toDF("id", "v"), dataDir)
     ext.sql("CALL graft.branch('expb', 'dev')")
     ext.sql("INSERT INTO `expb/branches/dev` VALUES (11, 22)")
-    val out = Files.createTempDirectory("graft-expout-b-").toString + "/dev"
+    val out = tempDir("graft-expout-b-").toString + "/dev"
     ext.sql(s"CALL graft.export('expb/branches/dev', '$out')")
     assert(spark.read.parquet(out).count() == 11)
-    val outMain = Files.createTempDirectory("graft-expout-b-").toString + "/main"
+    val outMain = tempDir("graft-expout-b-").toString + "/main"
     ext.sql(s"CALL graft.export('expb', '$outMain')")
     assert(spark.read.parquet(outMain).count() == 10,
       "the base table export must not see branch commits")

@@ -13,7 +13,7 @@ import org.apache.spark.sql.GraftColumnShim
   * atomic commit; malformed rows refuse the whole batch. */
 class IngestSpec extends SparkSpec {
 
-  private lazy val root = Files.createTempDirectory("graft-ing-").toString
+  private lazy val root = tempDir("graft-ing-").toString
   private lazy val cat = new SnapshotCatalog(root)
 
   private lazy val ext = {
@@ -30,7 +30,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("ingest loads fresh CSV once, re-runs skip, new arrivals load alone") {
-    val landing = Files.createTempDirectory("graft-landing-")
+    val landing = tempDir("graft-landing-")
     drop(landing, "a.csv", "1,alpha", "2,beta")
     drop(landing, "b.csv", "3,gamma", "4,delta")
     // hidden-convention files are never data
@@ -71,7 +71,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("ingest bootstraps a new table (inferred schema) and respects pattern") {
-    val landing = Files.createTempDirectory("graft-landing-j-")
+    val landing = tempDir("graft-landing-j-")
     drop(landing, "a.json", """{"k": 1, "v": "x"}""", """{"k": 2, "v": "y"}""")
     drop(landing, "notes.txt", "not data")
     val r = ext.sql(
@@ -85,7 +85,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("an existing schema drives the read: malformed rows refuse the whole batch") {
-    val landing = Files.createTempDirectory("graft-landing-bad-")
+    val landing = tempDir("graft-landing-bad-")
     drop(landing, "bad.csv", "1,ok", "notanumber,broken")
     ext.sql("CREATE TABLE graft.ingbad (id BIGINT, name STRING)")
     val err = intercept[Exception] {
@@ -103,7 +103,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("refusals: unknown format, missing source, view shadow, source under the root") {
-    val landing = Files.createTempDirectory("graft-landing-r-")
+    val landing = tempDir("graft-landing-r-")
     drop(landing, "a.csv", "1,x")
     val e1 = intercept[Exception] {
       ext.sql(s"CALL graft.ingest('ingr', '$landing', format => 'orc')").collect()
@@ -125,7 +125,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("explicit files => list and max_files batch cap") {
-    val landing = Files.createTempDirectory("graft-landing-x-")
+    val landing = tempDir("graft-landing-x-")
     drop(landing, "a.csv", "1,x")
     drop(landing, "b.csv", "2,y")
     drop(landing, "c.csv", "3,z")
@@ -158,8 +158,8 @@ class IngestSpec extends SparkSpec {
   }
 
   test("files =>/pattern escapes refuse per RESOLVED file; files+pattern refuse together") {
-    val outside = Files.createTempDirectory("graft-escape-")
-    val landing = Files.createTempDirectory(outside, "landing-")
+    val outside = tempDir("graft-escape-")
+    val landing = Files.createDirectories(outside.resolve("landing"))
     drop(landing, "a.csv", "1,x")
     // a perfectly valid CSV OUTSIDE the landing zone — reachable only
     // by escaping `src`, which the per-file containment must refuse
@@ -211,9 +211,9 @@ class IngestSpec extends SparkSpec {
 
   test("a pre-digest (FNV) fingerprint still counts as already-ingested") {
     import spark.implicits._
-    val landing = Files.createTempDirectory("graft-landing-legacy-")
+    val landing = tempDir("graft-landing-legacy-")
     val a = drop(landing, "a.csv", "1,old", "2,old")
-    val dataDir = Files.createTempDirectory("graft-ing-legacy-data-").toString
+    val dataDir = tempDir("graft-ing-legacy-data-").toString
     // a catalog written BEFORE the SHA-256 switch: the commit's dedupe
     // prop carries the legacy 64-bit FNV fingerprint of the landed file
     val legacy = Ingest.legacyFingerprint(a.toUri.getPath,
@@ -237,10 +237,10 @@ class IngestSpec extends SparkSpec {
 
   test("two racing ingests of one landing dir load each file exactly once") {
     import spark.implicits._
-    val landing = Files.createTempDirectory("graft-landing-race-")
+    val landing = tempDir("graft-landing-race-")
     drop(landing, "a.csv", "1,x", "2,y")
     drop(landing, "b.csv", "3,z")
-    val dataDir = Files.createTempDirectory("graft-ing-race-data-").toString
+    val dataDir = tempDir("graft-ing-race-data-").toString
     Writers.writeSnapshot(cat, "ingrace",
       Seq((0L, "seed")).toDF("id", "name"), dataDir)
     val latch = new java.util.concurrent.CountDownLatch(1)
@@ -268,7 +268,7 @@ class IngestSpec extends SparkSpec {
 
   test("partition_by ingest: landed files carry partition values; reads prune from metadata") {
     import graft.meta.EqString
-    val landing = Files.createTempDirectory("graft-landing-p-")
+    val landing = tempDir("graft-landing-p-")
     drop(landing, "d1.csv", "1,1,alpha", "2,1,beta")
     ext.sql("CREATE TABLE graft.ingp (id BIGINT, day BIGINT, name STRING)")
     val r1 = ext.sql(s"CALL graft.ingest('ingp', '$landing', format => 'csv', " +
@@ -323,7 +323,7 @@ class IngestSpec extends SparkSpec {
     // change feed key their row lineage on. This pins the composition:
     // a mask over a partition-landed table must select lineage AFTER
     // that join, and the feed must render the path-served column.
-    val landing = Files.createTempDirectory("graft-landing-pmor-")
+    val landing = tempDir("graft-landing-pmor-")
     drop(landing, "m1.csv", "1,1,alpha", "2,1,beta")
     drop(landing, "m2.csv", "3,2,gamma", "4,2,delta")
     ext.sql("CREATE TABLE graft.ingpm (id BIGINT, day BIGINT, name STRING)")
@@ -359,7 +359,7 @@ class IngestSpec extends SparkSpec {
     // its BYTES carry the real day column: the commit must refuse to
     // record the path literal for the byte-carried column, so reads
     // serve the bytes (pre-partition-aware behavior), not the directory
-    val dataDir = Files.createTempDirectory("graft-ing-shadow-")
+    val dataDir = tempDir("graft-ing-shadow-")
     val landed = dataDir.resolve("day=9")
     Seq((1L, 1L, "alpha"), (2L, 2L, "beta")).toDF("id", "day", "name")
       .coalesce(1).write.parquet(landed.toString)
@@ -384,7 +384,7 @@ class IngestSpec extends SparkSpec {
 
   test("partition_by => days(ts): hidden-transform landing prunes by day from metadata") {
     import graft.meta.EqString
-    val landing = Files.createTempDirectory("graft-landing-d-")
+    val landing = tempDir("graft-landing-d-")
     drop(landing, "d1.csv", "1,2024-01-10 05:00:00,1.5", "2,2024-01-10 07:00:00,2.5")
     ext.sql("CREATE TABLE graft.ingdays (id BIGINT, ts TIMESTAMP, v DOUBLE)")
     val r1 = ext.sql(s"CALL graft.ingest('ingdays', '$landing', format => 'csv', " +
@@ -426,11 +426,11 @@ class IngestSpec extends SparkSpec {
   }
 
   test("two racing PARTITIONED ingests load each file exactly once") {
-    val landing = Files.createTempDirectory("graft-landing-pr-")
+    val landing = tempDir("graft-landing-pr-")
     drop(landing, "a.csv", "1,1,x", "2,1,y")
     drop(landing, "b.csv", "3,2,z")
     ext.sql("CREATE TABLE graft.ingprace (id BIGINT, day BIGINT, name STRING)")
-    val dataDir = Files.createTempDirectory("graft-ingprace-data-").toString
+    val dataDir = tempDir("graft-ingprace-data-").toString
     val latch = new java.util.concurrent.CountDownLatch(1)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
     try {
@@ -453,7 +453,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("the dedupe window is snapshot retention: expired fingerprints age out") {
-    val landing = Files.createTempDirectory("graft-landing-w-")
+    val landing = tempDir("graft-landing-w-")
     drop(landing, "a.csv", "1,x")
     ext.sql("CREATE TABLE graft.ingw (id BIGINT, name STRING)")
     ext.sql(s"CALL graft.ingest('ingw', '$landing', format => 'csv')")

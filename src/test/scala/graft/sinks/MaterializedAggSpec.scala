@@ -1,7 +1,5 @@
 package graft.sinks
 
-import java.nio.file.Files
-
 import graft.{SparkSpec, Tables}
 import graft.meta.{CommitIntent, SnapshotCatalog, SnapshotMeta}
 import graft.meta.PublishRace
@@ -30,7 +28,7 @@ class MaterializedAggSpec extends SparkSpec {
         r.getDecimal(2).setScale(6))).toSet
 
   test("build, then refresh across append / delete / merge — always equals recompute") {
-    val base = Files.createTempDirectory("graft-mv-").toString
+    val base = tempDir("graft-mv-").toString
     val cat = new SnapshotCatalog(s"$base/cat")
     val o = Tables.orders(spark, sfDir)
     Writers.writeSnapshot(cat, "orders", o.filter(col("o_orderkey") <= 900), s"$base/data")
@@ -100,7 +98,7 @@ class MaterializedAggSpec extends SparkSpec {
         r.getDouble(3), r.getDouble(4), r.getDouble(5), r.getLong(6))).toSet
 
   test("min/max/avg/nd refresh equals recompute; extremum deletes recompute key-scoped") {
-    val base = Files.createTempDirectory("graft-mv3-").toString
+    val base = tempDir("graft-mv3-").toString
     val cat = new SnapshotCatalog(s"$base/cat")
     val o = Tables.orders(spark, sfDir)
     Writers.writeSnapshot(cat, "orders", o.filter(col("o_orderkey") <= 900), s"$base/data")
@@ -144,7 +142,7 @@ class MaterializedAggSpec extends SparkSpec {
   }
 
   test("where-scoped MV: the filtered fold tracks rows crossing the predicate") {
-    val base = Files.createTempDirectory("graft-mv4-").toString
+    val base = tempDir("graft-mv4-").toString
     val cat = new SnapshotCatalog(s"$base/cat")
     val o = Tables.orders(spark, sfDir)
     Writers.writeSnapshot(cat, "orders", o, s"$base/data")
@@ -176,7 +174,7 @@ class MaterializedAggSpec extends SparkSpec {
 
   test("delta-merge refresh: untouched-key view files are REUSED byte-for-byte") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-mv-dm-").toString
+    val base = tempDir("graft-mv-dm-").toString
     val cat = new SnapshotCatalog(s"$base/cat")
     val src = (1 to 100).flatMap(k => Seq((k.toLong, k * 1.0), (k.toLong, k * 2.0)))
       .toDF("k", "v")
@@ -240,7 +238,7 @@ class MaterializedAggSpec extends SparkSpec {
     // plain key-list full-outer join passed the view's null-group row
     // and its delta one-sided, so the delta's net-zero row count fell
     // to the n_rows > 0 filter and its sum change vanished)
-    val base = Files.createTempDirectory("graft-mv-null-").toString
+    val base = tempDir("graft-mv-null-").toString
     val cat = new SnapshotCatalog(s"$base/cat")
     val src = Seq((Some("a"), 1.0, "pA"), (None, 2.0, "pA"), (None, 3.0, "pB"),
       (Some("b"), 4.0, "pA")).toDF("k", "v", "p")
@@ -338,7 +336,7 @@ class MaterializedAggSpec extends SparkSpec {
 
   test("delta-merge refresh: invalidating deletes ride the merge path key-scoped") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-mv-dm3-").toString
+    val base = tempDir("graft-mv-dm3-").toString
     val cat = new SnapshotCatalog(s"$base/cat")
     // two rows per key: min = k, max = 2k, nd(p) = 2
     val src = (1 to 100).flatMap(k =>
@@ -411,7 +409,7 @@ class MaterializedAggSpec extends SparkSpec {
 
   test("delta-merge: out-of-scope churn advances the watermark metadata-only") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-mv-dm2-").toString
+    val base = tempDir("graft-mv-dm2-").toString
     val cat = new SnapshotCatalog(s"$base/cat")
     Writers.writeSnapshot(cat, "dm2_src",
       (1 to 40).map(k => (k.toLong, k * 1.0)).toDF("k", "v"), s"$base/data")
@@ -450,7 +448,7 @@ class MaterializedAggSpec extends SparkSpec {
 
   test("a compaction of the view landing inside a watermark-only refresh survives") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-mv-race-").toString
+    val base = tempDir("graft-mv-race-").toString
     val race = new PublishRace
     val cat = new SnapshotCatalog(s"$base/cat", race.clock)
     val other = new SnapshotCatalog(s"$base/cat")
@@ -493,7 +491,7 @@ class MaterializedAggSpec extends SparkSpec {
 
   test("the view definition survives compaction, a table comment and an index commit") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-mv-keep-").toString
+    val base = tempDir("graft-mv-keep-").toString
     val cat = new SnapshotCatalog(s"$base/cat")
     Writers.writeSnapshot(cat, "keep_src",
       (1 to 40).map(k => (k.toLong, k * 1.0)).toDF("k", "v"), s"$base/data")
@@ -527,7 +525,7 @@ class MaterializedAggSpec extends SparkSpec {
   }
 
   test("a key whose rows all vanish leaves the view; no-op refresh commits nothing") {
-    val base = Files.createTempDirectory("graft-mv2-").toString
+    val base = tempDir("graft-mv2-").toString
     val cat = new SnapshotCatalog(s"$base/cat")
     val o = Tables.orders(spark, sfDir)
     Writers.writeSnapshot(cat, "orders", o, s"$base/data")

@@ -1,7 +1,5 @@
 package graft.sinks
 
-import java.nio.file.Files
-
 import graft.{SparkSpec, Tables}
 import graft.meta.SnapshotCatalog
 import org.apache.spark.sql.functions._
@@ -13,8 +11,8 @@ import org.apache.spark.sql.functions._
 class MergeCompactSpec extends SparkSpec {
 
   test("mergeInto updates matched keys, inserts new keys, leaves out-of-range files untouched") {
-    val cat = new SnapshotCatalog(Files.createTempDirectory("graft-merge-").toString)
-    val dataDir = Files.createTempDirectory("graft-merge-data-").toString
+    val cat = new SnapshotCatalog(tempDir("graft-merge-").toString)
+    val dataDir = tempDir("graft-merge-data-").toString
     val evens = Tables.customer(spark, sfDir).filter(col("c_custkey") % 2 === 0)
     Writers.writeSnapshot(cat, "cust", evens.filter(col("c_custkey") <= 75), dataDir)
     Writers.writeSnapshot(cat, "cust", evens.filter(col("c_custkey") > 75), dataDir)
@@ -59,8 +57,8 @@ class MergeCompactSpec extends SparkSpec {
     // inserts. Pinned so the behavior reads as a choice, not an
     // accident; machinery whose contract IS null-safe grouping (the MV
     // fold) routes null-group churn around MERGE instead.
-    val cat = new SnapshotCatalog(Files.createTempDirectory("graft-merge-nk-").toString)
-    val dataDir = Files.createTempDirectory("graft-merge-nk-data-").toString
+    val cat = new SnapshotCatalog(tempDir("graft-merge-nk-").toString)
+    val dataDir = tempDir("graft-merge-nk-data-").toString
     Writers.writeSnapshot(cat, "nkm",
       Seq((Some(1L), "a"), (Option.empty[Long], "x")).toDF("k", "v"), dataDir)
     Writers.mergeInto(spark, cat, "nkm",
@@ -74,8 +72,8 @@ class MergeCompactSpec extends SparkSpec {
   }
 
   test("incremental read across a merge returns exactly the source rows") {
-    val cat = new SnapshotCatalog(Files.createTempDirectory("graft-minc-").toString)
-    val dataDir = Files.createTempDirectory("graft-minc-data-").toString
+    val cat = new SnapshotCatalog(tempDir("graft-minc-").toString)
+    val dataDir = tempDir("graft-minc-data-").toString
     val c = Tables.customer(spark, sfDir)
     val s1 = Writers.writeSnapshot(cat, "cust", c.filter(col("c_custkey") <= 100), dataDir)
     val source = c.filter(col("c_custkey").between(40, 60))
@@ -88,8 +86,8 @@ class MergeCompactSpec extends SparkSpec {
   }
 
   test("change feed across a merge: old versions out, source rows in, no-op updates silent") {
-    val cat = new SnapshotCatalog(Files.createTempDirectory("graft-mcdc-").toString)
-    val dataDir = Files.createTempDirectory("graft-mcdc-data-").toString
+    val cat = new SnapshotCatalog(tempDir("graft-mcdc-").toString)
+    val dataDir = tempDir("graft-mcdc-data-").toString
     val c = Tables.customer(spark, sfDir)
     val base = c.filter(col("c_custkey") <= 100)
     val s1 = Writers.writeSnapshot(cat, "cust", base, dataDir)
@@ -123,8 +121,8 @@ class MergeCompactSpec extends SparkSpec {
   }
 
   test("compaction bin-packs small files, preserves rows, and is invisible to the change feed") {
-    val cat = new SnapshotCatalog(Files.createTempDirectory("graft-cpt-").toString)
-    val dataDir = Files.createTempDirectory("graft-cpt-data-").toString
+    val cat = new SnapshotCatalog(tempDir("graft-cpt-").toString)
+    val dataDir = tempDir("graft-cpt-data-").toString
     val c = Tables.customer(spark, sfDir)
     (0 until 5).foreach { i =>
       Writers.writeSnapshot(cat, "cust",
@@ -148,8 +146,8 @@ class MergeCompactSpec extends SparkSpec {
 
   test("model property: random upsert batches through mergeInto equal a Map-based model") {
     import spark.implicits._
-    val cat = new SnapshotCatalog(Files.createTempDirectory("graft-mmod-").toString)
-    val dataDir = Files.createTempDirectory("graft-mmod-data-").toString
+    val cat = new SnapshotCatalog(tempDir("graft-mmod-").toString)
+    val dataDir = tempDir("graft-mmod-data-").toString
     val rnd = new scala.util.Random(42)
     var model = (0L until 100L).map(k => k -> s"v0-$k").toMap
     Writers.writeRangedSnapshot(cat, "t",
@@ -173,8 +171,8 @@ class MergeCompactSpec extends SparkSpec {
   }
 
   test("compaction never eats in-range appends from incremental reads (pure and mixed bins)") {
-    val cat = new SnapshotCatalog(Files.createTempDirectory("graft-cinc-").toString)
-    val dataDir = Files.createTempDirectory("graft-cinc-data-").toString
+    val cat = new SnapshotCatalog(tempDir("graft-cinc-").toString)
+    val dataDir = tempDir("graft-cinc-data-").toString
     val c = Tables.customer(spark, sfDir)
     // s1: the pre-existing base
     val s1 = Writers.writeSnapshot(cat, "cust", c.filter(col("c_custkey") <= 50), dataDir)

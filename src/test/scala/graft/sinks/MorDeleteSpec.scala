@@ -16,7 +16,7 @@ class MorDeleteSpec extends SparkSpec {
     df.select(col("c_custkey")).collect().map(_.getLong(0)).toSet
 
   private def freshCat(prefix: String): (SnapshotCatalog, String) = {
-    val base = Files.createTempDirectory(prefix).toString
+    val base = tempDir(prefix).toString
     (new SnapshotCatalog(s"$base/cat"), s"$base/d")
   }
 

@@ -1,7 +1,5 @@
 package graft.sinks
 
-import java.nio.file.Files
-
 import graft.{SparkSpec, Tables}
 import graft.meta.SnapshotCatalog
 import org.apache.spark.sql.functions._
@@ -22,7 +20,7 @@ class OverwriteSpec extends SparkSpec {
   }
 
   test("touched partition replaced wholesale, untouched files not re-scanned") {
-    val dir = Files.createTempDirectory("graft-ow-").toString
+    val dir = tempDir("graft-ow-").toString
     val cat = new SnapshotCatalog(dir)
     seed(cat, dir)
     val before = cat.currentSnapshot("nation").get
@@ -55,7 +53,7 @@ class OverwriteSpec extends SparkSpec {
   }
 
   test("incremental read across an overwrite returns exactly the restated rows") {
-    val dir = Files.createTempDirectory("graft-owinc-").toString
+    val dir = tempDir("graft-owinc-").toString
     val cat = new SnapshotCatalog(dir)
     seed(cat, dir)
     val s1 = cat.currentSnapshot("nation").get
@@ -70,7 +68,7 @@ class OverwriteSpec extends SparkSpec {
   }
 
   test("net change feed across an overwrite applies from -> to; verbatim restatement cancels") {
-    val dir = Files.createTempDirectory("graft-owcdc-").toString
+    val dir = tempDir("graft-owcdc-").toString
     val cat = new SnapshotCatalog(dir)
     seed(cat, dir)
     val s1 = cat.currentSnapshot("nation").get
@@ -100,7 +98,7 @@ class OverwriteSpec extends SparkSpec {
   }
 
   test("refuses a layout not consistently partitioned on the overwrite columns") {
-    val dir = Files.createTempDirectory("graft-owref-").toString
+    val dir = tempDir("graft-owref-").toString
     val cat = new SnapshotCatalog(dir)
     // plain (unpartitioned) snapshot: files carry no p_rk values
     Writers.writeSnapshot(cat, "nation", Tables.nation(spark, sfDir), dir)
@@ -127,7 +125,7 @@ class OverwriteSpec extends SparkSpec {
 
     val rnd = new Random(20260813L)
     for (seq <- 0 until 25) {
-      val dir = Files.createTempDirectory(s"graft-owprop-$seq-").toString
+      val dir = tempDir(s"graft-owprop-$seq-").toString
       val cat = new SnapshotCatalog(dir)
       val t = "t"
       var commitN = 0
@@ -205,7 +203,7 @@ class OverwriteSpec extends SparkSpec {
   test("special-char partition values round-trip: stats, MoR + equality deletes, overwrite") {
     import spark.implicits._
     import graft.meta.RangeNum
-    val dir = Files.createTempDirectory("graft-owsp-").toString
+    val dir = tempDir("graft-owsp-").toString
     val cat = new SnapshotCatalog(dir)
     // partition values with a space and a literal percent: Spark writes
     // the literal name on disk, but _metadata.file_path renders it
@@ -240,7 +238,7 @@ class OverwriteSpec extends SparkSpec {
   }
 
   test("first overwrite on an empty table commits as the initial snapshot") {
-    val dir = Files.createTempDirectory("graft-owfirst-").toString
+    val dir = tempDir("graft-owfirst-").toString
     val cat = new SnapshotCatalog(dir)
     val n = Tables.nation(spark, sfDir).withColumn("p_rk", col("n_regionkey"))
     val s1 = Writers.overwritePartitions(cat, "nation", n, s"$dir/ow0", Seq("p_rk"))

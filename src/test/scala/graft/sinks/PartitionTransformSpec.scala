@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
 class PartitionTransformSpec extends SparkSpec {
 
   test("days(ts): raw epoch-range predicate prunes to the window's day partitions") {
-    val base = Files.createTempDirectory("graft-days-").toString
+    val base = tempDir("graft-days-").toString
     val cat = new SnapshotCatalog(s"$base/cat")
     val e = Tables.events(spark, sfDir)
     val spec = Seq(DaysTransform("ts"))
@@ -76,7 +76,7 @@ class PartitionTransformSpec extends SparkSpec {
   }
 
   test("compaction bins within partitions and preserves hidden-partition pruning") {
-    val base = Files.createTempDirectory("graft-cpt-").toString
+    val base = tempDir("graft-cpt-").toString
     val cat = new SnapshotCatalog(s"$base/cat")
     val e = Tables.events(spark, sfDir)
     val spec = Seq(DaysTransform("ts"))
@@ -113,7 +113,7 @@ class PartitionTransformSpec extends SparkSpec {
   }
 
   test("partition evolution: files written under different specs prune by their own layout") {
-    val base = Files.createTempDirectory("graft-evo-").toString
+    val base = tempDir("graft-evo-").toString
     val cat = new SnapshotCatalog(s"$base/cat")
     val c = Tables.customer(spark, sfDir)
     val specA = Seq(BucketTransform("c_mktsegment", 4))
@@ -145,7 +145,7 @@ class PartitionTransformSpec extends SparkSpec {
   }
 
   test("bucket(n): point lookup reads exactly one bucket's files, IN-list their union") {
-    val base = Files.createTempDirectory("graft-bkt-").toString
+    val base = tempDir("graft-bkt-").toString
     val cat = new SnapshotCatalog(s"$base/cat")
     val c = Tables.customer(spark, sfDir)
     val spec = Seq(BucketTransform("c_mktsegment", 4))

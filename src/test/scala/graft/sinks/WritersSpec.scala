@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 class WritersSpec extends SparkSpec {
 
   test("partitioned write prunes directories on partition filter") {
-    val path = Files.createTempDirectory("graft-part-").toString + "/orders"
+    val path = tempDir("graft-part-").toString + "/orders"
     val o = Tables.orders(spark, sfDir).withColumn("o_year", year(col("o_orderdate")))
     Writers.writePartitioned(o, path, Seq("o_year"))
 
@@ -23,7 +23,7 @@ class WritersSpec extends SparkSpec {
   }
 
   test("partitioned snapshot commit records partition values and prunes from metadata alone") {
-    val base = Files.createTempDirectory("graft-psnap-").toString
+    val base = tempDir("graft-psnap-").toString
     val cat = new SnapshotCatalog(s"$base/cat")
     val c = Tables.customer(spark, sfDir)
     val snap = Writers.writePartitionedSnapshot(
@@ -71,7 +71,7 @@ class WritersSpec extends SparkSpec {
   }
 
   test("partitioned appends into one path keep every snapshot readable") {
-    val base = Files.createTempDirectory("graft-papp-")
+    val base = tempDir("graft-papp-")
     try {
       val cat = new SnapshotCatalog(s"$base/cat")
       val c = Tables.customer(spark, sfDir)
@@ -84,7 +84,7 @@ class WritersSpec extends SparkSpec {
   }
 
   test("partition values with path-special characters prune and survive compaction") {
-    val base = Files.createTempDirectory("graft-pesc-")
+    val base = tempDir("graft-pesc-")
     try {
       val cat = new SnapshotCatalog(s"$base/cat")
       val zones = Seq("a+b", "c d", "e%f", "x/y")
@@ -132,8 +132,8 @@ class WritersSpec extends SparkSpec {
 
   test("z-ordered write prunes files on EVERY z dimension; linear layouts cannot") {
     import graft.meta.RangeNum
-    val cat = new SnapshotCatalog(Files.createTempDirectory("graft-zcat-").toString)
-    val dataDir = Files.createTempDirectory("graft-zdata-").toString
+    val cat = new SnapshotCatalog(tempDir("graft-zcat-").toString)
+    val dataDir = tempDir("graft-zdata-").toString
     val l = Tables.lineitem(spark, sfDir)
     val stats = l.agg(
       min(col("l_orderkey")), max(col("l_orderkey")),
@@ -158,7 +158,7 @@ class WritersSpec extends SparkSpec {
 
     // contrast: the same data sorted linearly by orderkey prunes orderkey
     // slices perfectly but partkey slices not at all
-    val linDir = Files.createTempDirectory("graft-lindata-").toString
+    val linDir = tempDir("graft-lindata-").toString
     l.repartitionByRange(16, col("l_orderkey"))
       .write.parquet(s"$linDir/files")
     val linFiles = new java.io.File(s"$linDir/files").listFiles()
@@ -205,8 +205,8 @@ class WritersSpec extends SparkSpec {
   }
 
   test("writeSnapshot commits appends; incremental read sees only new rows") {
-    val cat = new SnapshotCatalog(Files.createTempDirectory("graft-cat-").toString)
-    val dataDir = Files.createTempDirectory("graft-data-").toString
+    val cat = new SnapshotCatalog(tempDir("graft-cat-").toString)
+    val dataDir = tempDir("graft-data-").toString
     val c = Tables.customer(spark, sfDir)
 
     val s1 = Writers.writeSnapshot(cat, "cust", c.filter(col("c_custkey") <= 75), dataDir)
@@ -220,8 +220,8 @@ class WritersSpec extends SparkSpec {
   }
 
   test("expireSnapshots drops old manifests but keeps current data readable") {
-    val cat = new SnapshotCatalog(Files.createTempDirectory("graft-cat-").toString)
-    val dataDir = Files.createTempDirectory("graft-data-").toString
+    val cat = new SnapshotCatalog(tempDir("graft-cat-").toString)
+    val dataDir = tempDir("graft-data-").toString
     val c = Tables.customer(spark, sfDir)
     Writers.writeSnapshot(cat, "cust", c.filter(col("c_custkey") <= 50), dataDir)
     Writers.writeSnapshot(cat, "cust", c.filter(col("c_custkey") > 50 && col("c_custkey") <= 100), dataDir)

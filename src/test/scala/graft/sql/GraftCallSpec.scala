@@ -16,8 +16,8 @@ import org.apache.spark.sql.functions._
   * the caller can assert on. */
 class GraftCallSpec extends SparkSpec {
 
-  private lazy val root = Files.createTempDirectory("graft-call-").toString
-  private lazy val dataDir = Files.createTempDirectory("graft-call-data-").toString
+  private lazy val root = tempDir("graft-call-").toString
+  private lazy val dataDir = tempDir("graft-call-data-").toString
   private lazy val cat = new SnapshotCatalog(root)
 
   private lazy val ext = {

@@ -14,8 +14,8 @@ import org.apache.spark.sql.functions._
   * has: append commits, MoR position deletes, key-merge rewrites. */
 class GraftDmlSpec extends SparkSpec {
 
-  private lazy val root = Files.createTempDirectory("graft-dml-").toString
-  private lazy val dataDir = Files.createTempDirectory("graft-dml-data-").toString
+  private lazy val root = tempDir("graft-dml-").toString
+  private lazy val dataDir = tempDir("graft-dml-data-").toString
   private lazy val cat = new SnapshotCatalog(root)
 
   private lazy val ext = {
@@ -592,19 +592,19 @@ class GraftDmlSpec extends SparkSpec {
     // dropping the SOURCE: its candidates live under its own tree; the
     // clone is found by the fork-snapshot membership probe
     val srcCands = cat.snapshots("fw_src").flatMap(_.files.map(_.path)).distinct
-    val w1 = GraftDropCommand.foreignWalkRefs(cat, Set("fw_src"), "fw_src", srcCands)
+    val w1 = cat.foreignWalkRefs(Set("fw_src"), "fw_src", srcCands)
     assert(w1.contains("fw_cl"), "the clone must be fully walked")
     assert(!w1.exists(r => r.startsWith("fw_u1") || r.startsWith("fw_u2")),
       "unrelated tables must be skipped")
     // dropping the CLONE: candidates sit under the source's tree — the
     // tree-prefix probe attributes them to the source alone
     val clCands = cat.snapshots("fw_cl").flatMap(_.files.map(_.path)).distinct
-    val w2 = GraftDropCommand.foreignWalkRefs(cat, Set("fw_cl"), "fw_cl", clCands)
+    val w2 = cat.foreignWalkRefs(Set("fw_cl"), "fw_cl", clCands)
     assert(w2.contains("fw_src"))
     assert(!w2.exists(r => r.startsWith("fw_u1") || r.startsWith("fw_u2")))
     // a candidate OUTSIDE every table tree (external shared dataDir):
     // attribution impossible — conservative full walk
-    val w3 = GraftDropCommand.foreignWalkRefs(cat, Set("fw_cl"), "fw_cl",
+    val w3 = cat.foreignWalkRefs(Set("fw_cl"), "fw_cl",
       clCands :+ "/somewhere/external/shared.parquet")
     assert(w3.contains("fw_u1") && w3.contains("fw_u2") && w3.contains("fw_src"))
   }

@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions._
   * through `spark.sql` on a session with the extensions installed. */
 class GraftSqlResolutionSpec extends SparkSpec {
 
-  private lazy val root = Files.createTempDirectory("graft-sqlres-").toString
-  private lazy val dataDir = Files.createTempDirectory("graft-sqlres-data-").toString
+  private lazy val root = tempDir("graft-sqlres-").toString
+  private lazy val dataDir = tempDir("graft-sqlres-data-").toString
 
   // controllable commit clock so TIMESTAMP AS OF boundaries are exact
   private var now = 1000L * 1000
@@ -69,7 +69,7 @@ class GraftSqlResolutionSpec extends SparkSpec {
   test("an MV reads rendered from pure SQL: <view>__rendered hides raw state") {
     setup()
     import spark.implicits._
-    val mvDataDir = Files.createTempDirectory("graft-res-mvr-").toString
+    val mvDataDir = tempDir("graft-res-mvr-").toString
     Writers.writeSnapshot(writeCat, "mvrsrc",
       Seq((1L, Some(10.0), "a"), (1L, Some(20.0), "b"),
         (2L, Some(5.0), "a"), (2L, None, "c")).toDF("k", "v", "tag"), mvDataDir)

@@ -1,7 +1,5 @@
 package graft.sql
 
-import java.nio.file.Files
-
 import graft.SparkSpec
 import graft.meta.SnapshotCatalog
 import graft.sinks.Writers
@@ -16,8 +14,8 @@ import org.apache.spark.sql.functions._
   * meaning). */
 class GraftViewSpec extends SparkSpec {
 
-  private lazy val root = Files.createTempDirectory("graft-view-").toString
-  private lazy val dataDir = Files.createTempDirectory("graft-view-data-").toString
+  private lazy val root = tempDir("graft-view-").toString
+  private lazy val dataDir = tempDir("graft-view-data-").toString
   private lazy val cat = new SnapshotCatalog(root)
 
   private lazy val ext = {

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import graft.SparkSpec
 import graft.meta.SnapshotCatalog
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -13,14 +11,14 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 class IngestDedupSinkSpec extends SparkSpec {
 
   private def newCat = new SnapshotCatalog(
-    Files.createTempDirectory("graft-ingdd-").toString)
+    tempDir("graft-ingdd-").toString)
 
   test("cross-batch and in-batch dups drop; novel docs land; restartable state") {
     implicit val sq = spark.sqlContext
     import spark.implicits._
     val cat = newCat
-    val dataDir = Files.createTempDirectory("graft-ingdd-data-").toString
-    val ckpt = Files.createTempDirectory("graft-ingdd-ckpt-").toString
+    val dataDir = tempDir("graft-ingdd-data-").toString
+    val ckpt = tempDir("graft-ingdd-ckpt-").toString
     val mem = MemoryStream[(Long, String)]
     val stream = mem.toDF().toDF("doc_id", "text")
 
@@ -81,8 +79,8 @@ class IngestDedupSinkSpec extends SparkSpec {
     implicit val sq = spark.sqlContext
     import spark.implicits._
     val cat = newCat
-    val dataDir = Files.createTempDirectory("graft-ndd-data-").toString
-    val ckpt = Files.createTempDirectory("graft-ndd-ckpt-").toString
+    val dataDir = tempDir("graft-ndd-data-").toString
+    val ckpt = tempDir("graft-ndd-ckpt-").toString
     // long shared base so near-dups clear the LSH bands + jaccard 0.8
     val base = (1 to 40).map(i => s"tok$i").mkString(" ")
     val nearA = base.replace("tok7", "edited7")   // ~0.9 jaccard vs base
@@ -151,8 +149,8 @@ class IngestDedupSinkSpec extends SparkSpec {
     // artifact, measured at the 10× gate corpus.)
     import spark.implicits._
     val cat = newCat
-    val dataDir = Files.createTempDirectory("graft-ingdd-data-").toString
-    val ckpt = Files.createTempDirectory("graft-ingdd-ckpt-").toString
+    val dataDir = tempDir("graft-ingdd-data-").toString
+    val ckpt = tempDir("graft-ingdd-ckpt-").toString
     val all = graft.Tables.documents(spark, sfDir)
       .select("doc_id", "text").limit(480).collect()
       .map(r => (r.getLong(0), r.getString(1))).toSeq.sortBy(_._1)
@@ -187,8 +185,8 @@ class IngestDedupSinkSpec extends SparkSpec {
     implicit val sq = spark.sqlContext
     import spark.implicits._
     val cat = newCat
-    val dataDir = Files.createTempDirectory("graft-ingdd-data-").toString
-    val ckpt = Files.createTempDirectory("graft-ingdd-ckpt-").toString
+    val dataDir = tempDir("graft-ingdd-data-").toString
+    val ckpt = tempDir("graft-ingdd-ckpt-").toString
     // ascending doc_id order makes "first seen" == "global min id per
     // fingerprint", so the batch exactGroups keeper set is the oracle
     val docs = graft.Tables.documents(spark, sfDir)

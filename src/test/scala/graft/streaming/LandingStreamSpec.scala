@@ -24,8 +24,8 @@ class LandingStreamSpec extends SparkSpec {
   }
 
   test("a landing zone streams into the catalog: each file lands exactly once") {
-    val landing = Files.createTempDirectory("graft-lstream-")
-    val base = Files.createTempDirectory("graft-lstream-cat-").toString
+    val landing = tempDir("graft-lstream-")
+    val base = tempDir("graft-lstream-cat-").toString
     val cat = new SnapshotCatalog(s"$base/cat")
     val ckpt = s"$base/chk"
     val sch = StructType(Seq(

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import graft.{SparkSpec, Tables}
 import graft.meta.SnapshotCatalog
 import graft.sinks.{MaterializedAgg, Writers}
@@ -14,7 +12,7 @@ import org.apache.spark.sql.functions._
   * the correctness anchor. */
 class MvMaintenanceSpec extends SparkSpec {
 
-  private val base = Files.createTempDirectory("graft-mvd-").toString
+  private val base = tempDir("graft-mvd-").toString
   private val root = s"$base/cat"
   private val cat = new SnapshotCatalog(root)
 

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import graft.SparkSpec
@@ -14,7 +13,7 @@ class SnapshotSinkSpec extends SparkSpec {
 
   test("each micro-batch commits one snapshot; history and incremental reads work") {
     implicit val sqlCtx = spark.sqlContext
-    val tmp = Files.createTempDirectory("graft-sink-").toString
+    val tmp = tempDir("graft-sink-").toString
     val cat = new SnapshotCatalog(s"$tmp/cat")
     val mem = MemoryStream[(Long, String, Double)]
     val df = mem.toDF().toDF("event_id", "event_type", "value")
@@ -45,7 +44,7 @@ class SnapshotSinkSpec extends SparkSpec {
   }
 
   test("a re-delivered batch id is skipped: ingestion is idempotent") {
-    val tmp = Files.createTempDirectory("graft-sink-idem-").toString
+    val tmp = tempDir("graft-sink-idem-").toString
     val cat = new SnapshotCatalog(s"$tmp/cat")
     val chk = s"$tmp/chk"
     val batch = Seq((1L, "click", 1.0), (2L, "view", 2.0))

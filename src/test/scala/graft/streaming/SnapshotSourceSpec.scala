@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import graft.{SparkSpec, Tables}
 import graft.meta.{RangeNum, SnapshotCatalog}
 import graft.sinks.Writers
@@ -14,8 +12,8 @@ import org.apache.spark.sql.streaming.OutputMode
 class SnapshotSourceSpec extends SparkSpec {
 
   test("streams the table: full first batch, append-only increments, delete-silent") {
-    val root = Files.createTempDirectory("graft-src-").toString
-    val dataDir = Files.createTempDirectory("graft-src-data-").toString
+    val root = tempDir("graft-src-").toString
+    val dataDir = tempDir("graft-src-data-").toString
     val cat = new SnapshotCatalog(root)
     val c = Tables.customer(spark, sfDir)
     Writers.writeSnapshot(cat, "cust", c.filter(col("c_custkey") <= 50), dataDir)
@@ -55,8 +53,8 @@ class SnapshotSourceSpec extends SparkSpec {
   }
 
   test("maxSnapshotsPerTrigger bounds catch-up batches; backlog still drains completely") {
-    val root = Files.createTempDirectory("graft-rate-").toString
-    val dataDir = Files.createTempDirectory("graft-rate-data-").toString
+    val root = tempDir("graft-rate-").toString
+    val dataDir = tempDir("graft-rate-data-").toString
     val cat = new SnapshotCatalog(root)
     val c = Tables.customer(spark, sfDir)
     Writers.writeSnapshot(cat, "cust", c.filter(col("c_custkey") <= 20), dataDir)
@@ -87,9 +85,9 @@ class SnapshotSourceSpec extends SparkSpec {
   }
 
   test("restart from checkpoint resumes at the last committed snapshot offset") {
-    val root = Files.createTempDirectory("graft-ckpt-").toString
-    val dataDir = Files.createTempDirectory("graft-ckpt-data-").toString
-    val ckpt = Files.createTempDirectory("graft-ckpt-meta-").toString
+    val root = tempDir("graft-ckpt-").toString
+    val dataDir = tempDir("graft-ckpt-data-").toString
+    val ckpt = tempDir("graft-ckpt-meta-").toString
     val cat = new SnapshotCatalog(root)
     val c = Tables.customer(spark, sfDir)
     Writers.writeSnapshot(cat, "cust", c.filter(col("c_custkey") <= 50), dataDir)
@@ -119,8 +117,8 @@ class SnapshotSourceSpec extends SparkSpec {
   }
 
   test("cdc mode streams the row-level change feed; a mirror folded from it tracks the table") {
-    val root = Files.createTempDirectory("graft-cdc-").toString
-    val dataDir = Files.createTempDirectory("graft-cdc-data-").toString
+    val root = tempDir("graft-cdc-").toString
+    val dataDir = tempDir("graft-cdc-data-").toString
     val cat = new SnapshotCatalog(root)
     val c = Tables.customer(spark, sfDir)
     Writers.writeSnapshot(cat, "cust", c.filter(col("c_custkey") <= 40), dataDir)
@@ -170,8 +168,8 @@ class SnapshotSourceSpec extends SparkSpec {
   }
 
   test("cdc mode rejects unknown modes; append mode is the default") {
-    val root = Files.createTempDirectory("graft-cdcm-").toString
-    val dataDir = Files.createTempDirectory("graft-cdcm-data-").toString
+    val root = tempDir("graft-cdcm-").toString
+    val dataDir = tempDir("graft-cdcm-data-").toString
     val cat = new SnapshotCatalog(root)
     Writers.writeSnapshot(cat, "cust",
       Tables.customer(spark, sfDir).limit(5), dataDir)
@@ -193,7 +191,7 @@ class SnapshotSourceSpec extends SparkSpec {
     }
     intercept[Exception] {
       spark.readStream.format("graft.streaming.SnapshotSourceProvider")
-        .option("catalogRoot", Files.createTempDirectory("graft-empty-").toString)
+        .option("catalogRoot", tempDir("graft-empty-").toString)
         .option("table", "nope").load()
     }
   }

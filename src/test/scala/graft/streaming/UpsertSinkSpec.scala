@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import graft.SparkSpec
 import graft.meta.SnapshotCatalog
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -19,7 +17,7 @@ class UpsertSinkSpec extends SparkSpec {
 
   test("streamed upsert batches: bootstrap, merge, last-writer-wins, exactly-once restart") {
     implicit val sqlCtx = spark.sqlContext
-    val tmp = Files.createTempDirectory("graft-upsert-").toString
+    val tmp = tempDir("graft-upsert-").toString
     val cat = new SnapshotCatalog(s"$tmp/cat")
     val mem = MemoryStream[(Long, String, Long)]
     val df = mem.toDF().toDF("id", "status", "ver")
@@ -51,7 +49,7 @@ class UpsertSinkSpec extends SparkSpec {
   }
 
   test("re-delivered batch id is skipped; CDC across the merge is exact") {
-    val tmp = Files.createTempDirectory("graft-upsert-idem-").toString
+    val tmp = tempDir("graft-upsert-idem-").toString
     val cat = new SnapshotCatalog(s"$tmp/cat")
     val chk = s"$tmp/chk"
     val b0 = Seq((1L, "new", 1L), (2L, "new", 1L)).toDF("id", "status", "ver")
