@@ -1336,7 +1336,8 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
     *   - the candidates are every path the dropped refs' snapshots
     *     reference — main plus every branch of a base table, just the
     *     branch for a branch ref — plus every file under the dropped
-    *     ref's payload dirs (failed-write orphans die with the table);
+    *     ref's [[reclaimDirs]] (failed-write orphans die with the table,
+    *     and so do the sidecars a rename left under the old name);
     *   - a candidate another ref still references survives
     *     ([[foreignWalkRefs]] bounds which refs are walked): a clone
     *     lists its source's files verbatim, so purging either side must
@@ -1346,13 +1347,14 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
     * best-effort, like a vacuum. */
   def purgeTable(table: String): Unit = {
     val dropped = if (table.contains("/branches/")) Seq(table) else refsOf(table)
+    val dirs = reclaimDirs(table)
     val candidates = (dropped.flatMap(r => snapshots(r).flatMap(referencedPaths)) ++
-      payloadDirs(table).flatMap(filesUnder)).distinct
+      dirs.flatMap(filesUnder)).distinct
     val foreign = liveSet(foreignWalkRefs(dropped.toSet, table, candidates))
     val doomed = candidates.filterNot(isLive(foreign, _))
     dropTable(table)
     doomed.foreach(p => try deletePayload(p) catch { case _: IOException => false })
-    pruneEmptyDirs(doomed.flatMap(p => Option(Paths.get(p).getParent)).distinct)
+    pruneEmptyDirs((doomed.flatMap(p => Option(Paths.get(p).getParent)) ++ dirs).distinct)
   }
 
   /** Foreign refs whose FULL snapshot histories must be consulted before
@@ -1466,6 +1468,29 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
       .map(_.toAbsolutePath)
   }
 
+  /** [[payloadDirs]] plus the sidecar dirs of every FORMER table
+    * directory `table`'s snapshots still read from: a rename leaves the
+    * payload under the old name's directory ([[renameTable]]), which no
+    * table claims afterwards. A former directory is found through the
+    * files the table still references there, so once none is left
+    * (every file rewritten under the new name and the old snapshots
+    * expired) its unreferenced bytes fall to nothing. Former data dirs
+    * are left out: a data dir outside every table tree may be an
+    * external one that other tables share. */
+  private def reclaimDirs(table: String): Seq[Path] = {
+    val rootAbs = Paths.get(root).toAbsolutePath
+    val claimed = tables().map(tableDir(_).toAbsolutePath)
+    val former = refsOf(table).iterator
+      .flatMap(r => snapshots(r).iterator.flatMap(referencedPaths))
+      .flatMap(p => Iterator.iterate(Paths.get(p).getParent)(_.getParent).takeWhile(_ != null)
+        .find(a => SnapshotCatalog.PayloadDirs.contains(String.valueOf(a.getFileName)))
+        .map(_.getParent))
+      .toSet
+      .filter(d => d.startsWith(rootAbs) && d != rootAbs && !claimed.exists(d.startsWith))
+    payloadDirs(table) ++ former.toSeq.sortBy(_.toString).flatMap(d =>
+      SnapshotCatalog.PayloadDirs.filterNot(_ == SnapshotCatalog.DataDir).map(d.resolve))
+  }
+
   /** Rename a table: a METADATA-ONLY move of its manifests, pointer,
     * tags, staged WAP entries and branch metadata into the new name's
     * directory. Payload — data files, bloom/sketch sidecars and the
@@ -1474,7 +1499,11 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
     * every snapshot keeps reading verbatim — time travel, branches,
     * CDC eras and zero-copy clones taken from this table all survive
     * unchanged, and a later vacuum under either name still sees the
-    * files through the cross-table liveness walk. Refuses under
+    * files through the cross-table liveness walk. The sidecar vacuum
+    * and the purge of the new name reach the sidecars left under the
+    * old name while the table still references a file there
+    * ([[reclaimDirs]]); the data vacuum walks only the `dataDir` it is
+    * given. Refuses under
     * dependent views (stored view bodies reference the OLD name — the
     * S62 refuse-and-name discipline) and on any name collision.
     * O(metadata) driver-side file copies + deletes, zero data I/O.
@@ -3091,14 +3120,15 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
     * the inputs' snapshots expire nothing references those sidecars —
     * on a streaming table (a commit per micro-batch, sticky indexing)
     * they otherwise accumulate forever. Candidates are the entries of
-    * the sidecar payload dirs of the table AND of every branch
-    * directory on disk, so a dropped branch's sidecars are reclaimed
-    * too; a PQ codes dir goes whole. Liveness, grace window and dry run
+    * the sidecar payload dirs of the table, of every branch directory
+    * on disk (a dropped branch's sidecars are reclaimed too) and of
+    * the directory a rename left them in ([[reclaimDirs]]); a PQ codes
+    * dir goes whole. Liveness, grace window and dry run
     * are the data vacuum's ([[vacuumDataFiles]]). Returns deleted
     * paths. */
   def vacuumSidecars(table: String, graceMs: Long = 3600 * 1000L,
       dryRun: Boolean = false): Seq[String] = {
-    val candidates = payloadDirs(table)
+    val candidates = reclaimDirs(table)
       .filter(d => d.getFileName.toString != SnapshotCatalog.DataDir && Files.isDirectory(d))
       .flatMap { dir =>
         val stream = Files.list(dir)

@@ -208,6 +208,38 @@ class VectorIndexSpec extends SparkSpec {
       VectorIndex.search(spark, cat, "vecs2", qs, k = 3, excludeSelf = true)) == before)
   }
 
+  test("after a rename, the sidecar vacuum and PURGE reach the vector index left under the old name") {
+    val (cat, root) = freshCat()
+    val ext = sqlOn(root)
+    val df = planted(0 until 40)
+    for (purge <- Seq(false, true)) {
+      val (t, t2) = if (purge) ("vp", "vp2") else ("vv", "vv2")
+      // the SQL layout: data under the table's own tree, so the renamed
+      // table keeps reading files under the old name's directory
+      Writers.writeSnapshot(cat, t, df, s"$root/$t/${SnapshotCatalog.DataDir}")
+      VectorIndex.indexVectors(spark, cat, t, "id", "vec", m = 4, k = 4, nCells = 4)
+      cat.renameTable(t, t2)
+      // a retrain under the new name, then expiry: gen-1 is unreferenced
+      VectorIndex.indexVectors(spark, cat, t2, "id", "vec", m = 2, k = 4, nCells = 2)
+      cat.expireSnapshots(t2, keepLast = 1)
+      val oldPq = s"$root/$t/${SnapshotCatalog.PqIndexDir}/"
+      if (!purge) {
+        val reaped = cat.vacuumSidecars(t2, graceMs = 0)
+        assert(reaped.exists(p => p.startsWith(oldPq) && p.contains("model-g1-")) &&
+          reaped.exists(p => p.startsWith(oldPq) && p.contains("codes-g1-")),
+          s"expected the old name's gen-1 model and codes reaped, got: $reaped")
+        assert(resultSet(VectorIndex.search(spark, cat, t2, queriesOf(df, 2), k = 3,
+          excludeSelf = true)).nonEmpty)
+      } else {
+        ext.sql(s"DROP TABLE graft.$t2 PURGE")
+        // the old name's data dir keeps Spark's commit debris (_SUCCESS,
+        // .crc): a data dir outside the table's own tree is not listed
+        val left = Seq(oldPq, s"$root/$t2").map(java.nio.file.Paths.get(_)).filter(Files.exists(_))
+        assert(left.isEmpty, s"PURGE left $left")
+      }
+    }
+  }
+
   test("a clone's vector index survives SQL DROP and DROP PURGE of its source") {
     val (cat, root) = freshCat()
     val ext = sqlOn(root)

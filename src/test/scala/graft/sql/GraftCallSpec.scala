@@ -364,6 +364,12 @@ class GraftCallSpec extends SparkSpec {
     assert(ext.sql(s"SELECT count(*) AS n FROM $t").head().getLong(0) == 6)
     ext.sql(s"CALL graft.drop_branch('$t', 'dev')")
     assert(!cat.branches(t).contains("dev"))
+    // a second drop finds no branch, though the branch's payload stays on disk
+    assert(Files.isDirectory(Paths.get(cat.tableDirOf(s"$t/branches/dev"))))
+    val again = intercept[Exception] {
+      ext.sql(s"CALL graft.drop_branch('$t', 'dev')")
+    }
+    assert(again.getMessage.contains("no branch 'dev'"))
     // the dropped ref no longer resolves in SQL
     val err = intercept[Exception] { ext.sql(s"SELECT * FROM $ref") }
     assert(err != null)
