@@ -1342,8 +1342,10 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
     *     ([[foreignWalkRefs]] bounds which refs are walked): a clone
     *     lists its source's files verbatim, so purging either side must
     *     spare the other's.
-    * The directories the deletions leave empty are removed up to the
-    * catalog root, so an unshared table vanishes whole. Deletion is
+    * The directories the deletions leave holding nothing but Spark's
+    * commit bookkeeping ([[dropDeadWriteDirs]]) or nothing at all are
+    * removed up to the catalog root, so an unshared table vanishes
+    * whole, also under a name it was renamed from. Deletion is
     * best-effort, like a vacuum. */
   def purgeTable(table: String): Unit = {
     val dropped = if (table.contains("/branches/")) Seq(table) else refsOf(table)
@@ -1354,6 +1356,7 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
     val doomed = candidates.filterNot(isLive(foreign, _))
     dropTable(table)
     doomed.foreach(p => try deletePayload(p) catch { case _: IOException => false })
+    dropDeadWriteDirs(Paths.get(root), doomed)
     pruneEmptyDirs((doomed.flatMap(p => Option(Paths.get(p).getParent)) ++ dirs).distinct)
   }
 
@@ -2633,24 +2636,89 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
         throw new IllegalArgumentException(s"No snapshots for table $table"))
     }
 
+  /** One commit of a feed range: `parent` is the previous SURVIVING
+    * snapshot (the range start for the first step), so the commits of
+    * expired interior snapshots fold into the next step. What the feeds
+    * classify: the data files the commit removed and added, and (net
+    * feed only) the files whose merge-on-read delete coverage changed. */
+  private final class FeedStep(val parent: SnapshotMeta, val snap: SnapshotMeta) {
+    private val parentPaths = parent.files.map(_.path).toSet
+    val paths: Set[String] = snap.files.map(_.path).toSet
+    val removed: Set[String] = parentPaths.diff(paths)
+    val added: Seq[String] = snap.files.map(_.path).filterNot(parentPaths.contains)
+
+    /** Files that stayed put while their MoR delete-entry coverage
+      * changed (a new position delete masked rows, a rollback unmasked
+      * them): a rewrite-in-place whose visible rows changed with zero
+      * file churn. */
+    lazy val morTouched: Set[String] =
+      if (parent.deleteFiles == snap.deleteFiles) Set.empty
+      else {
+        def coverage(m: SnapshotMeta): Map[String, Set[String]] =
+          m.deleteFiles.flatMap(d => d.dataPaths.map(_ -> d.path))
+            .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+        val (pc, cc) = (coverage(parent), coverage(snap))
+        (pc.keySet ++ cc.keySet)
+          .filter(p => pc.getOrElse(p, Set.empty) != cc.getOrElse(p, Set.empty))
+          .intersect(parentPaths).intersect(paths)
+      }
+
+    /** A RENAME re-labels columns mid-range: row-level parts built
+      * BEFORE it carry the old names and would mis-render in the end
+      * schema (null-filled, not mapped) — refuse, like Iceberg's
+      * incremental scan refuses overwrites. Parts built after the last
+      * in-range rename are in the end era and flow through; a rename
+      * with no prior parts is a clean boundary. */
+    def refuseRenameAfter(partsPending: Boolean, range: => String): Unit =
+      for (rename <- snap.props.get(SnapshotCatalog.RenameProp) if partsPending &&
+          snap.props.get(SnapshotCatalog.OperationProp).contains(SnapshotCatalog.OpSchemaEvolve))
+        throw new UnsupportedOperationException(
+          s"$range spans row-level rewrites followed by a column rename at snapshot " +
+            s"${snap.snapshotId} ($rename); split the range at the rename commit")
+  }
+
+  /** The one walk over a feed range: a step per surviving snapshot in
+    * (`from`, `to`], in commit order. Each snapshot is one O(1) manifest
+    * probe; no data file is opened. */
+  private def feedSteps(table: String, from: SnapshotMeta, to: SnapshotMeta): Seq[FeedStep] = {
+    var parent = from
+    ((from.snapshotId + 1) to to.snapshotId).flatMap(snapshotById(table, _)).map { s =>
+      val step = new FeedStep(parent, s)
+      parent = s
+      step
+    }
+  }
+
+  /** The `added` files still in `to`, read under `to`'s delete mask: an
+    * appended row MoR-deleted inside the range did not survive, and must
+    * not surface. */
+  private def survivingAppends(
+      spark: SparkSession, to: SnapshotMeta, added: Iterable[String]): DataFrame = {
+    val toPaths = to.files.map(_.path).toSet
+    visibleAs(spark, to.schema, to, added.iterator.filter(toPaths.contains).toSeq)
+  }
+
   /** Incremental read: rows APPENDED between `fromSnapshotId`
     * (exclusive) and `toSnapshotId` (inclusive; default current) — the
     * Iceberg incremental-append-scan pattern for CDC-style consumption.
-    *
-    * The chain is walked commit by commit so copy-on-write rewrites are
-    * never misread as inserts: only commits whose `operation` prop is
-    * `append` (the default for legacy snapshots) contribute added files;
-    * a delete/rewrite commit's outputs carry surviving OLD rows and are
-    * excluded, and a file removed mid-range drops out of the result
-    * (its appended rows did not survive intact to `to` — the same
-    * "appends only, no overwrites in range" contract Iceberg's
-    * incremental scan enforces). Two rewrite kinds keep their appends
+    * A fold over the range's commits ([[feedSteps]], the walk the net
+    * and per-commit feeds share), classified by each commit's
+    * `operation` label, so copy-on-write rewrites are never misread as
+    * inserts: `append` (the default for legacy snapshots) contributes
+    * its added files; a delete/rewrite commit's outputs carry surviving
+    * OLD rows and are excluded, and a file removed mid-range drops out
+    * of the result (its appended rows did not survive intact to `to` —
+    * the same "appends only, no overwrites in range" contract Iceberg's
+    * incremental scan enforces). Three rewrite kinds keep their appends
     * anyway: a `merge` contributes exactly its net-new files (recorded
-    * in `insert_files` at commit), and a row-preserving `compact`
-    * substitutes outputs for in-range inputs — path-wise when all its
-    * inputs were in-range, row-wise (outputs minus pre-existing rows)
-    * when the bin mixed eras. If interior snapshots were expired, the
-    * walk degrades to a path diff across the gap. */
+    * in `insert_files` at commit), an `overwrite`'s outputs hold only
+    * new rows, and a row-preserving `compact` substitutes outputs for
+    * in-range inputs — path-wise when all its inputs were in-range,
+    * row-wise (outputs minus pre-existing rows) when the bin mixed eras.
+    * An expired interior snapshot folds into the next commit (a path
+    * diff across the gap); an expired `from` throws. MoR delete coverage
+    * changes classify nothing here: appended rows are read under `to`'s
+    * mask. */
   def readIncremental(
       spark: SparkSession,
       table: String,
@@ -2658,113 +2726,79 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
       toSnapshotId: Option[Long] = None): DataFrame = {
     val from = resolveSnapshot(table, Some(fromSnapshotId))
     val to = resolveSnapshot(table, toSnapshotId)
-    var prevPaths = from.files.map(_.path).toSet
-    var prevSnap = from
     val added = scala.collection.mutable.LinkedHashSet[String]()
     // row-level parts for rewrites whose appends can't be carved out
     // path-wise (a compaction that bin-packed pre-existing files together
     // with in-range appends), keyed by the rewrite's output paths so a
     // LATER commit rewriting those outputs invalidates the part
     val extraParts = scala.collection.mutable.ArrayBuffer[(Set[String], DataFrame)]()
-    ((from.snapshotId + 1) to to.snapshotId).foreach { id =>
-      snapshotById(table, id).foreach { s =>
-        // same rename-mid-range refusal as changesBetween, for the
-        // row-level mixed-compaction carve-outs (their columns carry
-        // the pre-rename names)
-        if (s.props.get(SnapshotCatalog.OperationProp).contains(SnapshotCatalog.OpSchemaEvolve) &&
-            s.props.contains(SnapshotCatalog.RenameProp) && extraParts.nonEmpty)
-          throw new UnsupportedOperationException(
-            s"readIncremental($fromSnapshotId,${to.snapshotId}) on $table spans a mixed " +
-              s"compaction followed by a column rename at snapshot $id; split the range")
-        val curPaths = s.files.map(_.path)
-        val curSet = curPaths.toSet
-        val op = s.props.getOrElse(SnapshotCatalog.OperationProp, SnapshotCatalog.OpAppend)
-        val removed = prevPaths.diff(curSet)
-        val newPaths = curPaths.filterNot(prevPaths.contains)
-        // a commit that rewrites any output of an earlier mixed
-        // compaction may have retired some of that carve-out's rows; the
-        // row-level lineage can't tell which, so the whole part is
-        // dropped — conservative under-report (this feed promises
-        // appended-rows-that-survive, never resurrection)
-        extraParts.filterInPlace { case (outs, _) => outs.intersect(removed).isEmpty }
-        op match {
-          case SnapshotCatalog.OpAppend =>
-            added ++= newPaths
-          case SnapshotCatalog.OpMerge =>
-            // a merge commit separates its outputs: survivor rewrites
-            // (old rows — excluded) vs pure net-new files (listed in
-            // insert_files — these ARE appends: new keys and new
-            // versions of updated keys)
-            val ins = s.props.get(SnapshotCatalog.InsertFilesProp)
-              .map(_.split(',').toSeq.filter(_.nonEmpty)).getOrElse(Nil)
-            added ++= ins.filter(curSet.contains)
-          case SnapshotCatalog.OpCompact if removed.forall(added.contains) =>
-            // row-preserving rewrite whose inputs were ALL appended
-            // in-range: the outputs hold exactly those appended rows, so
-            // lineage substitutes outputs for inputs — compaction does
-            // not eat in-range appends
-            added ++= newPaths
-          case SnapshotCatalog.OpCompact if removed.exists(added.contains) =>
-            // mixed-input compaction: outputs interleave pre-existing
-            // rows with in-range appends. Row-level lineage recovers the
-            // appends exactly — outputs minus the pre-existing inputs'
-            // rows (compaction preserves rows, so the multiset
-            // difference IS the in-range contribution). Cost is bounded
-            // by the compacted bytes, not the table.
-            val preExisting = removed.filterNot(added.contains)
-            // visible rows on both sides: the pre-existing inputs as the
-            // compaction saw them (prev's delete mask — compact reads
-            // visible rows, so its outputs hold no MoR-deleted row), the
-            // outputs under `to`'s mask (a LATER MoR delete on an output
-            // must not resurface those rows as in-range appends)
-            extraParts += ((newPaths.toSet,
-              visibleAs(spark, s.schema, to, newPaths)
-                .exceptAll(visibleAs(spark, s.schema, prevSnap, preExisting.toSeq))))
-          case SnapshotCatalog.OpOverwrite =>
-            // a dynamic partition overwrite's outputs hold only
-            // brand-new rows (replaced files drop wholesale, they are
-            // never read) — the outputs are appends, and the removed
-            // paths fall out of `added` below like any other rewrite
-            added ++= newPaths
-          case _ => // delete / generic rewrite / all-pre-existing compact:
-            // outputs carry surviving OLD rows — never appends
-        }
-        // files this commit removed (rewritten or fully deleted) no
-        // longer hold their appended rows intact
-        removed.foreach(added.remove)
-        prevPaths = curSet
-        prevSnap = s
+    feedSteps(table, from, to).foreach { step =>
+      step.refuseRenameAfter(extraParts.nonEmpty,
+        s"readIncremental($fromSnapshotId,${to.snapshotId}) on $table")
+      val removed = step.removed
+      // a commit that rewrites any output of an earlier mixed
+      // compaction may have retired some of that carve-out's rows; the
+      // row-level lineage can't tell which, so the whole part is
+      // dropped — conservative under-report (this feed promises
+      // appended-rows-that-survive, never resurrection)
+      extraParts.filterInPlace { case (outs, _) => outs.intersect(removed).isEmpty }
+      step.snap.props.getOrElse(SnapshotCatalog.OperationProp, SnapshotCatalog.OpAppend) match {
+        case SnapshotCatalog.OpAppend | SnapshotCatalog.OpOverwrite =>
+          // a dynamic partition overwrite's outputs hold only brand-new
+          // rows (replaced files drop wholesale, they are never read) —
+          // the removed paths fall out of `added` below
+          added ++= step.added
+        case SnapshotCatalog.OpMerge =>
+          // a merge commit separates its outputs: survivor rewrites
+          // (old rows — excluded) vs pure net-new files (listed in
+          // insert_files — these ARE appends: new keys and new
+          // versions of updated keys)
+          added ++= step.snap.props.get(SnapshotCatalog.InsertFilesProp).toSeq
+            .flatMap(_.split(',')).filter(step.paths.contains)
+        case SnapshotCatalog.OpCompact if removed.forall(added.contains) =>
+          // row-preserving rewrite whose inputs were ALL appended
+          // in-range: the outputs hold exactly those appended rows, so
+          // lineage substitutes outputs for inputs — compaction does
+          // not eat in-range appends
+          added ++= step.added
+        case SnapshotCatalog.OpCompact if removed.exists(added.contains) =>
+          // mixed-input compaction: outputs interleave pre-existing
+          // rows with in-range appends. Row-level lineage recovers the
+          // appends exactly — outputs minus the pre-existing inputs'
+          // rows (compaction preserves rows, so the multiset
+          // difference IS the in-range contribution). Cost is bounded
+          // by the compacted bytes, not the table. Visible rows on both
+          // sides: the pre-existing inputs as the compaction saw them
+          // (the parent's delete mask — compact reads visible rows), the
+          // outputs under `to`'s mask (a LATER MoR delete on an output
+          // must not resurface those rows as in-range appends)
+          val preExisting = removed.filterNot(added.contains)
+          extraParts += ((step.added.toSet,
+            visibleAs(spark, step.snap.schema, to, step.added)
+              .exceptAll(visibleAs(spark, step.snap.schema, step.parent, preExisting.toSeq))))
+        case _ => // delete / generic rewrite / all-pre-existing compact:
+          // outputs carry surviving OLD rows — never appends
       }
+      // files this commit removed (rewritten or fully deleted) no
+      // longer hold their appended rows intact
+      removed.foreach(added.remove)
     }
     val toPaths = to.files.map(_.path).toSet
-    val files = added.toSeq.filter(toPaths.contains)
-    // appended files read under `to`'s delete mask: an appended row
-    // MoR-deleted inside the range did not survive, and must not surface
-    val base = visibleAs(spark, to.schema, to, files)
     extraParts.collect { case (outs, df) if outs.subsetOf(toPaths) => df }
-      .foldLeft(base)(_.unionByName(_, allowMissingColumns = true))
+      .foldLeft(survivingAppends(spark, to, added))(_.unionByName(_, allowMissingColumns = true))
   }
 
   /** Row-level NET change feed between two snapshots, in a
     * `_change_type` column: `insert` = rows present at `to` but not at
     * `from`; `delete` = rows present at `from` but not at `to` — so
     * applying the feed to the `from` state reproduces the `to` state.
-    * Iceberg's incremental scan refuses ranges containing overwrites;
-    * here the chain walk classifies each COW rewrite by whether its
-    * inputs were themselves appended inside the range:
-    *
-    *   - pure in-range rewrite (all inputs appended since `from`): the
-    *     outputs carry only surviving in-range rows, so they remain on
-    *     the insert side and nothing is a `from`-row delete;
-    *   - pre-existing rewrite: outputs carry surviving OLD rows
-    *     (excluded from inserts) and `before EXCEPT ALL after` emits
-    *     exactly the net-deleted `from` rows;
-    *   - mixed inputs: the rewrite contributes `before EXCEPT ALL
-    *     after` deletes and `after EXCEPT ALL before` inserts, and the
-    *     two row-level sides are multiset-cancelled against each other
-    *     at the end, so a row version that was both introduced AND
-    *     retired inside the range (a merge's insert later re-merged,
-    *     a delete of a row a rewrite had produced) never surfaces.
+    * A fold over the range's commits ([[feedSteps]], shared with
+    * [[readIncremental]] and [[changesPerCommit]]) that classifies each
+    * commit by its file delta, not its label ([[netChanges]] has the
+    * rules): appends are file-level scans, rewrites diff only their own
+    * inputs and outputs, and row versions introduced and retired inside
+    * the range cancel. An expired interior snapshot folds into the next
+    * commit; an expired `from` throws.
     *
     * Guarantees (property-tested over random op interleavings in
     * `CdcLifecycleSpec`): applying the feed to the `from` state
@@ -2783,165 +2817,113 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
       table: String,
       fromSnapshotId: Long,
       toSnapshotId: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.Row
     val from = resolveSnapshot(table, Some(fromSnapshotId))
     val to = resolveSnapshot(table, toSnapshotId)
-    var prevPaths = from.files.map(_.path).toSet
-    var prevSnap = from
-    val added = scala.collection.mutable.LinkedHashSet[String]()
-    val deleteParts = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    val insertParts = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    ((from.snapshotId + 1) to to.snapshotId).foreach { id =>
-      snapshotById(table, id).foreach { s =>
-        // a RENAME re-labels columns mid-range: row-level diff parts
-        // built BEFORE it carry the old names and would mis-render in
-        // the end schema (null-filled, not mapped) — refuse, like
-        // Iceberg's incremental scan refuses overwrites. Parts built
-        // after the last in-range rename are in the end era and flow
-        // through; a rename with no prior parts is a clean boundary.
-        if (s.props.get(SnapshotCatalog.OperationProp).contains(SnapshotCatalog.OpSchemaEvolve) &&
-            s.props.contains(SnapshotCatalog.RenameProp) &&
-            (insertParts.nonEmpty || deleteParts.nonEmpty))
-          throw new UnsupportedOperationException(
-            s"changesBetween($fromSnapshotId,${to.snapshotId}) on $table spans rewrites " +
-              s"followed by a column rename at snapshot $id (${s.props(SnapshotCatalog.RenameProp)}); " +
-              "split the range at the rename commit")
-        val curSet = s.files.map(_.path).toSet
-        val op = s.props.getOrElse(SnapshotCatalog.OperationProp, SnapshotCatalog.OpAppend)
-        val removedFiles = prevPaths.diff(curSet)
-        // A data file whose MoR delete-entry coverage CHANGED while the
-        // file itself stayed put (a new position-delete masked rows, or a
-        // rollback unmasked them) is a rewrite-in-place: its visible rows
-        // changed with zero file churn. Fold those paths into the rewrite
-        // classification as removed+re-added, and let the visible-row
-        // before/after diff below net the exact row delta — a delete
-        // materialization (same visible rows, new physical files) then
-        // cancels to nothing by the same arithmetic.
-        def coverage(m: SnapshotMeta): Map[String, Set[String]] =
-          m.deleteFiles.flatMap(d => d.dataPaths.map(_ -> d.path))
-            .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-        val morTouched: Set[String] =
-          if (prevSnap.deleteFiles == s.deleteFiles) Set.empty
-          else {
-            val (pc, cc) = (coverage(prevSnap), coverage(s))
-            (pc.keySet ++ cc.keySet)
-              .filter(p => pc.getOrElse(p, Set.empty) != cc.getOrElse(p, Set.empty))
-              .intersect(prevPaths).intersect(curSet)
-          }
-        val removed = removedFiles ++ morTouched
-        val newPaths =
-          s.files.map(_.path).filterNot(prevPaths.contains) ++ morTouched.toSeq.sorted
-        // a commit that removes no files only adds rows, whatever its
-        // label (plain append, insert-only merge): all outputs are net-new
-        if (removed.isEmpty) {
-          added ++= newPaths
-        } else {
-          // a true append never removes files: a commit that does (e.g. a
-          // legacy COW delete whose manifest predates the operation prop)
-          // takes the rewrite classification regardless of the labeled op
-          val removedInRange = removed.filter(added.contains)
-          val removedPreExisting = removed.diff(removedInRange)
-          removed.foreach(added.remove)
-          if (removedPreExisting.isEmpty) {
-            // pure in-range rewrite: outputs are surviving in-range rows
-            added ++= newPaths
-          } else {
-            // rewrite touching pre-existing rows (COW delete, merge,
-            // compaction, mixed inputs): the NET effect inside the
-            // rewritten region is exact in both directions —
-            //   deletes = before \ after  (rows that did not survive)
-            //   inserts = after \ before  (new versions, new keys, and
-            //             surviving rows of in-range inputs)
-            // Identical rows cancel multiset-wise, so a no-op rewrite or
-            // a compaction of pre-existing files contributes NOTHING.
-            // Before/after are VISIBLE rows (each side under its own
-            // snapshot's delete mask): a MoR delete diffs to exactly its
-            // killed rows, a materialization to exactly nothing.
-            val before = visibleAs(spark, s.schema, prevSnap, removedPreExisting.toSeq)
-            val after = visibleAs(spark, s.schema, s, newPaths)
-            // parts render in the END schema (columns evolved later in
-            // the range null-fill; the within-commit diff runs on the
-            // commit's own schema first, so its cancellation is exact)
-            deleteParts += renderAs(to.schema, before.exceptAll(after))
-            insertParts += renderAs(to.schema, after.exceptAll(before))
-          }
-        }
-        prevPaths = curSet
-        prevSnap = s
-      }
-    }
-    val toPaths = to.files.map(_.path).toSet
-    val insertFiles = added.toSeq.filter(toPaths.contains)
-    // file-level appends read under `to`'s delete mask: an in-range
-    // append later MoR-deleted in-range contributes only its survivors
-    val insertedBase = visibleAs(spark, to.schema, to, insertFiles)
-    // Net the row-level sides against each other: a row version
-    // introduced by one in-range rewrite (e.g. a merge's insert files)
-    // and retired by a later one appears in both insertParts and
-    // deleteParts — without cancellation the feed would emit a delete
-    // for a row that was never present at `from`. Both sides are
-    // bounded by the range's rewritten bytes (never whole snapshots),
-    // so the two except-alls stay cheap at scale; the file-level
-    // append side (insertedBase ⊆ `to`'s files) can't produce phantom
-    // rows and is deliberately left out of the netting so bulk appends
-    // remain a straight parquet scan.
-    val insPart = insertParts.reduceOption(_ unionByName _)
-    val delPart = deleteParts.reduceOption(_ unionByName _)
-    val (netIns, netDel) = (insPart, delPart) match {
-      case (Some(i), Some(d0)) =>
-        // exceptAll resolves POSITIONALLY; parts from different commits
-        // can carry the same columns in evolved order — align by name
-        // first (differing column SETS already fail loudly in the
-        // unionByName reduce above)
-        val d = d0.select(i.columns.map(col): _*)
-        (Some(i.exceptAll(d)), Some(d.exceptAll(i)))
-      case other => other
-    }
-    val inserted = netIns
-      .foldLeft(insertedBase)(_ unionByName _)
-      .withColumn("_change_type", lit("insert"))
-    val deleted = netDel
-      .map(_.withColumn("_change_type", lit("delete")))
-      .getOrElse {
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], to.schema)
-          .withColumn("_change_type", lit("delete"))
-      }
-    inserted.unionByName(deleted, allowMissingColumns = true)
+    netChanges(spark, to, feedSteps(table, from, to),
+      s"changesBetween($fromSnapshotId,${to.snapshotId}) on $table")
   }
 
   /** Per-commit change feed (the Delta CDF surface: `_change_type` plus
-    * `_commit_snapshot_id` / `_commit_timestamp_ms` attribution): one
-    * [[changesBetween]] diff per adjacent SURVIVING snapshot pair in the
-    * range, unioned in commit order. Use this when the consumer needs to
-    * know WHICH commit changed a row (audit trails, ordered replay);
-    * use the net [[changesBetween]] when only the endpoint delta matters
-    * — the net feed cancels intra-range churn, this one preserves it.
+    * `_commit_snapshot_id` / `_commit_timestamp_ms` attribution): the
+    * net fold of each commit of ONE walk over the range, on its own,
+    * unioned in commit order. Use this when the consumer needs to know
+    * WHICH commit changed a row (audit trails, ordered replay); use the
+    * net [[changesBetween]] when only the endpoint delta matters — the
+    * net feed cancels intra-range churn, this one preserves it.
     *
-    * Cost: each adjacent diff is bounded by that commit's rewritten
+    * Cost: each commit's part is bounded by that commit's rewritten
     * bytes (appends are file-level scans, rewrites diff only their
     * inputs/outputs), so the whole feed costs the sum of the commits'
-    * own work — never pairs × table. Expired interior snapshots collapse
-    * into the next surviving pair, attributed to its later endpoint. */
+    * own work — never commits × table. Expired interior snapshots fold
+    * into the next surviving commit, attributed to it; an expired `from`
+    * starts the feed at the first surviving snapshot after it. An empty
+    * range is an empty frame with the attribution columns. */
   def changesPerCommit(
       spark: SparkSession,
       table: String,
       fromSnapshotId: Long,
       toSnapshotId: Option[Long] = None): DataFrame = {
     val to = resolveSnapshot(table, toSnapshotId)
-    val ids = snapshots(table).map(_.snapshotId)
-      .filter(id => id >= fromSnapshotId && id <= to.snapshotId).sorted
-    val parts = ids.zip(ids.drop(1)).map { case (a, b) =>
-      val snapB = snapshotById(table, b).get
-      changesBetween(spark, table, a, Some(b))
-        .withColumn("_commit_snapshot_id", lit(b))
-        .withColumn("_commit_timestamp_ms", lit(snapB.timestampMs))
+    def attributed(s: SnapshotMeta, steps: Seq[FeedStep]): DataFrame =
+      netChanges(spark, s, steps, s"changesPerCommit($fromSnapshotId,${to.snapshotId}) on $table")
+        .withColumn("_commit_snapshot_id", lit(s.snapshotId))
+        .withColumn("_commit_timestamp_ms", lit(s.timestampMs))
+    snapshotById(table, fromSnapshotId).orElse(snapshots(table).find(_.snapshotId > fromSnapshotId))
+      .toSeq.flatMap(feedSteps(table, _, to)).map(step => attributed(step.snap, Seq(step)))
+      .reduceOption(_.unionByName(_, allowMissingColumns = true))
+      .getOrElse(attributed(to, Nil).limit(0))
+  }
+
+  /** The net fold over `steps`, rendered in `to`'s schema. A commit
+    * that removes no file only adds rows, whatever its label (plain
+    * append, insert-only merge). Otherwise the rewrite is classified by
+    * whether its inputs were themselves appended inside the range:
+    *
+    *   - pure in-range rewrite (all inputs appended since `from`): the
+    *     outputs carry only surviving in-range rows, so they remain on
+    *     the insert side and nothing is a `from`-row delete;
+    *   - pre-existing or mixed inputs: the rewrite contributes `before
+    *     EXCEPT ALL after` deletes and `after EXCEPT ALL before` inserts
+    *     (visible rows, each side under its own snapshot's delete mask),
+    *     and the two row-level sides are multiset-cancelled against each
+    *     other at the end, so a row version that was both introduced AND
+    *     retired inside the range (a merge's insert later re-merged, a
+    *     delete of a row a rewrite had produced) never surfaces.
+    *
+    * A file whose MoR coverage changed counts as removed and re-added,
+    * so a MoR delete diffs to exactly its killed rows and a delete
+    * materialization (same visible rows, new files) to nothing. */
+  private def netChanges(
+      spark: SparkSession,
+      to: SnapshotMeta,
+      steps: Seq[FeedStep],
+      range: => String): DataFrame = {
+    val added = scala.collection.mutable.LinkedHashSet[String]()
+    val deleteParts = scala.collection.mutable.ArrayBuffer[DataFrame]()
+    val insertParts = scala.collection.mutable.ArrayBuffer[DataFrame]()
+    steps.foreach { step =>
+      step.refuseRenameAfter(insertParts.nonEmpty || deleteParts.nonEmpty, range)
+      val removed = step.removed ++ step.morTouched
+      val newPaths = step.added ++ step.morTouched.toSeq.sorted
+      // a true append never removes files: a commit that does (e.g. a
+      // legacy COW delete whose manifest predates the operation prop)
+      // takes the rewrite classification regardless of the labeled op
+      val removedPreExisting = removed.filterNot(added.contains)
+      removed.foreach(added.remove)
+      if (removedPreExisting.isEmpty) added ++= newPaths
+      else {
+        val before = visibleAs(spark, step.snap.schema, step.parent, removedPreExisting.toSeq)
+        val after = visibleAs(spark, step.snap.schema, step.snap, newPaths)
+        // parts render in the END schema (columns evolved later in the
+        // range null-fill; the within-commit diff runs on the commit's
+        // own schema first, so its cancellation is exact)
+        deleteParts += renderAs(to.schema, before.exceptAll(after))
+        insertParts += renderAs(to.schema, after.exceptAll(before))
+      }
     }
-    parts.reduceOption(_.unionByName(_, allowMissingColumns = true)).getOrElse {
-      changesBetween(spark, table, to.snapshotId, Some(to.snapshotId))
-        .withColumn("_commit_snapshot_id", lit(to.snapshotId))
-        .withColumn("_commit_timestamp_ms", lit(to.timestampMs))
-        .limit(0)
-    }
+    // Net the row-level sides against each other (a row version
+    // introduced by one in-range rewrite and retired by a later one
+    // appears in both). Both sides are bounded by the range's rewritten
+    // bytes, so the two except-alls stay cheap at scale; the file-level
+    // append side can't produce phantom rows and is deliberately left
+    // out of the netting so bulk appends remain a straight parquet scan.
+    val (netIns, netDel) =
+      (insertParts.reduceOption(_ unionByName _), deleteParts.reduceOption(_ unionByName _)) match {
+        case (Some(i), Some(d0)) =>
+          // exceptAll resolves POSITIONALLY; parts from different
+          // commits can carry the same columns in evolved order — align
+          // by name first (differing column SETS already fail loudly in
+          // the unionByName reduce above)
+          val d = d0.select(i.columns.map(col): _*)
+          (Some(i.exceptAll(d)), Some(d.exceptAll(i)))
+        case other => other
+      }
+    val inserted = netIns
+      .foldLeft(survivingAppends(spark, to, added))(_ unionByName _)
+      .withColumn("_change_type", lit("insert"))
+    val deleted = netDel.getOrElse(visibleAs(spark, to.schema, to, Nil))
+      .withColumn("_change_type", lit("delete"))
+    inserted.unionByName(deleted, allowMissingColumns = true)
   }
 
   /** Expire old snapshots, keeping the most recent `keepLast` manifests
@@ -3048,7 +3030,8 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
     * Iceberg's action has for a table location). Files newer than
     * `graceMs` are kept: an in-flight commit writes data files BEFORE
     * its manifest publishes, and the grace window keeps the race away.
-    * Returns the deleted paths. */
+    * The write directories the deletions leave without a data file go
+    * too ([[dropDeadWriteDirs]]). Returns the deleted `.parquet` paths. */
   def vacuumDataFiles(table: String, dataDir: String, graceMs: Long = 3600 * 1000L,
       dryRun: Boolean = false): Seq[String] = {
     // Walk must tolerate a racing writer: Spark deletes `_temporary/`
@@ -3071,8 +3054,28 @@ final class SnapshotCatalog(root: String, clock: () => Long = () => System.curre
       override def visitFileFailed(f: Path, e: IOException): FileVisitResult =
         FileVisitResult.CONTINUE
     })
-    sweep(table, found.result(), graceMs, dryRun)
+    val deleted = sweep(table, found.result(), graceMs, dryRun)
+    if (!dryRun) dropDeadWriteDirs(Paths.get(dataDir), deleted)
+    deleted
   }
+
+  /** Remove each directory under `base` that the deletion of the
+    * `deleted` files left holding nothing but Spark's commit bookkeeping
+    * (`_SUCCESS`, `.crc` files) — no data file, no sidecar, no
+    * `_temporary` entry of a commit in flight: every write goes to a
+    * fresh directory, so without this each vacuumed write leaves one
+    * behind. Climbs toward `base`, never removing `base` itself; a
+    * directory that changes mid-check stays. */
+  private def dropDeadWriteDirs(base: Path, deleted: Seq[String]): Unit =
+    deleted.flatMap(p => Option(Paths.get(p).getParent)).distinct.sortBy(-_.getNameCount)
+      .foreach { start =>
+        var d = start
+        while (d.startsWith(base.toAbsolutePath) && d != base.toAbsolutePath &&
+            scala.util.Try(filesUnder(d).forall(p => !p.contains("/_temporary/") &&
+              (p.endsWith("/_SUCCESS") || p.endsWith(".crc")))).getOrElse(false) &&
+            SnapshotCatalog.deleteRecursively(d))
+          d = d.getParent
+      }
 
   /** The step both vacuums share: delete the `candidates` of `table`'s
     * vacuum that no snapshot references and that are older than
@@ -3782,6 +3785,19 @@ object SnapshotCatalog {
         val Array(k, v) = seg.split("=", 2)
         ExternalCatalogUtils.unescapePathName(k) -> ExternalCatalogUtils.unescapePathName(v)
     }.toMap
+
+  /** The change-feed mode a caller names, as "per-commit?": `net` (the
+    * default — [[SnapshotCatalog.changesBetween]]'s endpoint delta) or
+    * `percommit` ([[SnapshotCatalog.changesPerCommit]]), in any letter
+    * case. Anything else is refused: a typo must not get the other feed.
+    * CALL `changelog`, CALL `export` and HTTP `/changes` all read it. */
+  def perCommitFeed(mode: Option[String]): Boolean =
+    mode.map(_.toLowerCase(java.util.Locale.ROOT)) match {
+      case None | Some("net") => false
+      case Some("percommit") => true
+      case _ => throw new IllegalArgumentException(
+        s"feed mode must be net|percommit; got '${mode.get}'")
+    }
 
   val OperationProp = "operation"
   val OpAppend = "append"

@@ -29,9 +29,10 @@ import org.apache.spark.sql.{DataFrame, GraftArrowShim, SparkSession}
   *   - `GET /table?name=...[&format=arrow]` — stream a whole table by
   *     name: the reference's literal `do_get` ticket shape (server.py:40,
   *     ticket = table id)
-  *   - `GET /changes?table=...&from=ID[&to=ID][&format=arrow]` — stream
-  *     the net row-level change feed between two snapshots (CDC as a
-  *     service; needs a `SnapshotCatalog` wired at construction)
+  *   - `GET /changes?table=...&from=ID[&to=ID][&mode=net|percommit][&format=arrow]`
+  *     — stream the row-level change feed between two snapshots, net by
+  *     default (CDC as a service; needs a `SnapshotCatalog` wired at
+  *     construction); an unknown mode is a 400
   *   - `GET /history?table=...[&limit=N]` — snapshot history, newest
   *     first (reference: `get_snapshot_history`, metadata.py:189)
   *   - `GET /ndv?table=...&column=...[&snapshot=ID]` — metadata-only
@@ -153,21 +154,23 @@ final class GraftHttpServer(
   private def cat: graft.meta.SnapshotCatalog = catalog.getOrElse(
     throw new IllegalArgumentException("no snapshot catalog configured on this server"))
 
-  /** Net row-level change feed between snapshots, streamed like any
-    * query result — CDC-as-a-service over
-    * [[graft.meta.SnapshotCatalog.changesBetween]]:
-    * `GET /changes?table=T&from=ID[&to=ID][&format=arrow]`. */
+  /** Row-level change feed between snapshots, streamed like any query
+    * result — CDC-as-a-service over
+    * [[graft.meta.SnapshotCatalog.changesBetween]] (or, with
+    * `mode=percommit`, [[graft.meta.SnapshotCatalog.changesPerCommit]]):
+    * `GET /changes?table=T&from=ID[&to=ID][&mode=net|percommit][&format=arrow]`. */
   private def handleChanges(ex: HttpExchange): Unit = {
     val table = required(ex, "table")
     val from = required(ex, "from").toLong
     val to = param(ex, "to").map(_.toLong)
     // mode=percommit streams the Delta-CDF-style attributed feed (one
     // diff per commit, _commit_snapshot_id/_commit_timestamp_ms columns);
-    // the default streams the NET endpoint delta
-    val feed = param(ex, "mode") match {
-      case Some("percommit") => cat.changesPerCommit(spark, table, from, to)
-      case _ => cat.changesBetween(spark, table, from, to)
-    }
+    // the default (mode=net) streams the NET endpoint delta, and any
+    // other mode is a 400
+    val feed =
+      if (graft.meta.SnapshotCatalog.perCommitFeed(param(ex, "mode")))
+        cat.changesPerCommit(spark, table, from, to)
+      else cat.changesBetween(spark, table, from, to)
     streamResult(ex, feed, s"/changes: $table $from..${to.getOrElse("current")}")
   }
 

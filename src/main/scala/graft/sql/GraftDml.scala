@@ -1771,9 +1771,7 @@ case class GraftCallCommand(
         val from = long(1, "from_snapshot", -1L)
         require(from >= 0, s"CALL graft.$proc: pass the from-snapshot id")
         val to = arg(2, "to_snapshot").map(asLong("to_snapshot", _))
-        val mode = named.get("mode").map(_.toString.toLowerCase).getOrElse("net")
-        require(Set("net", "percommit").contains(mode),
-          s"CALL graft.$proc: mode must be 'net' or 'percommit'; got '$mode'")
+        val perCommit = SnapshotCatalog.perCommitFeed(named.get("mode").map(_.toString))
         val view = named.get("view").map(_.toString).getOrElse(s"${table}_changes")
         require(view.matches("[A-Za-z_][A-Za-z0-9_]*"),
           s"CALL graft.$proc: invalid view name $view")
@@ -1787,7 +1785,7 @@ case class GraftCallCommand(
               s"${if (cat.viewMeta(view).isDefined) "view" else "table"} and a temp " +
               "view would shadow it for plain-name reads; pass view => '<other name>'")
         val feed =
-          if (mode == "percommit") cat.changesPerCommit(session, table, from, to)
+          if (perCommit) cat.changesPerCommit(session, table, from, to)
           else cat.changesBetween(session, table, from, to)
         feed.createOrReplaceTempView(view)
         Seq(Row(view))
@@ -2081,13 +2079,11 @@ case class GraftCallCommand(
             require(stateArgs.isEmpty,
               s"CALL graft.$proc: changes_from is a FEED export; " +
                 s"${stateArgs.mkString(", ")} select a STATE — pass one or the other")
-            val mode = named.get("mode").map(_.toString).getOrElse("net")
-            require(mode == "net" || mode == "percommit",
-              s"CALL graft.$proc: mode must be 'net' or 'percommit'; got '$mode'")
             val (nFiles, nBytes) = graft.sinks.Export.exportChanges(session, cat,
               table, dest, asLong("changes_from", fromArg),
               toSnapshotId = named.get("changes_to").map(asLong("changes_to", _)),
-              perCommit = mode == "percommit", format = fmt, options = opts,
+              perCommit = SnapshotCatalog.perCommitFeed(named.get("mode").map(_.toString)),
+              format = fmt, options = opts,
               overwrite = overwrite, partitionBy = partitionBy)
             Seq(Row(nFiles, nBytes))
           case None =>

@@ -21,11 +21,12 @@ import org.apache.spark.sql.types.{LongType, StringType, StructType}
   *
   * Semantics, `mode=append` (default): the first batch is the full table
   * at the then-current snapshot; every later batch is
-  * `readIncremental(lastSeen, current)` — appends only, walked
-  * commit-by-commit, so COW deletes/rewrites, merges and compactions
-  * between triggers are classified exactly like any other incremental
-  * read (rewrite outputs never resurface as inserts; merge insert-files
-  * and compaction lineage pass through).
+  * `readIncremental(lastSeen, current)` — appends only, folded over the
+  * catalog's one walk of the range's commits (the walk the net and
+  * per-commit feeds share), so COW deletes/rewrites, merges and
+  * compactions between triggers are classified exactly like any other
+  * incremental read (rewrite outputs never resurface as inserts; merge
+  * insert-files and compaction lineage pass through).
   *
   * `mode=cdc` (the Delta `readChangeFeed` analogue): batches carry the
   * PER-COMMIT row-level change feed instead — table columns plus
@@ -33,7 +34,8 @@ import org.apache.spark.sql.types.{LongType, StringType, StructType}
   * `_commit_timestamp_ms` — so a downstream consumer can maintain a
   * mirror or an incremental aggregate from the stream alone. The first
   * batch is the full table as `insert` rows attributed to the starting
-  * snapshot; each later batch is `changesPerCommit(lastSeen, current)`
+  * snapshot; each later batch is `changesPerCommit(lastSeen, current)`,
+  * the net fold of each commit of that same walk on its own
   * (deletes arrive as explicit `delete` rows; compactions are silent;
   * updates net to delete+insert pairs — exactly the semantics the batch
   * feed proves in `CdcLifecycleSpec`).

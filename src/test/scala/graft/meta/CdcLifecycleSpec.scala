@@ -7,7 +7,7 @@ import scala.util.Random
 
 import graft.SparkSpec
 import graft.sinks.Writers
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Full-lifecycle CDC property test.
@@ -31,9 +31,10 @@ import org.apache.spark.sql.functions._
   *      read is an appended-rows feed, so ⊆ is the contract; exactness
   *      is per-kind spec'd.)
   *
-  * All tables are tiny (≤ ~200 rows), so each check is one collect and
-  * the multiset algebra runs driver-side — the spec's cost is Spark job
-  * scheduling, not data.
+  * All tables are tiny (≤ ~200 rows), so each kind of check (time
+  * travel, net feed, incremental feed) is one collect per sequence over
+  * the union of its frames, and the multiset algebra runs driver-side —
+  * the spec's cost is Spark job scheduling, not data.
   */
 class CdcLifecycleSpec extends SparkSpec {
 
@@ -64,9 +65,16 @@ class CdcLifecycleSpec extends SparkSpec {
   private def subsetOf(a: MS, b: MS): Boolean =
     a.forall { case (k, n) => b.getOrElse(k, 0) >= n }
 
-  private def collectMs(df: DataFrame): MS =
-    ms(df.select(col("id"), col("v")).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSeq)
+  /** The rows of each of `frames`, projected to `(_k, id, v, extra…)`,
+    * collected through ONE Spark action (a union tagged by frame index
+    * `_k`): a check kind costs one job per sequence, not one per frame. */
+  private def collectEach(frames: Seq[DataFrame], extra: String*): Seq[Seq[Row]] = {
+    val cols = (Seq("id", "v") ++ extra).map(col)
+    val byFrame = frames.zipWithIndex
+      .map { case (df, k) => df.select(lit(k).as("_k") +: cols: _*) }
+      .reduceOption(_ union _).map(_.collect().toSeq.groupBy(_.getInt(0))).getOrElse(Map.empty)
+    frames.indices.map(byFrame.getOrElse(_, Nil))
+  }
 
   test("changesBetween/readIncremental hold over 80 random 6-op sequences") {
     import spark.implicits._
@@ -611,20 +619,23 @@ class CdcLifecycleSpec extends SparkSpec {
       }
 
       // 1. every surviving snapshot time-travels to its model state
-      for ((id, expected) <- states) {
-        val got = collectMs(cat.read(spark, t, snapshotId = Some(id)))
+      val reads = collectEach(states.map { case (id, _) =>
+        cat.read(spark, t, snapshotId = Some(id)) })
+      for (((id, expected), rows) <- states.zip(reads)) {
+        val got = ms(rows.map(r => (r.getLong(1), r.getLong(2))))
         assert(got == expected, s"seq=$seq snapshot $id read != model state")
       }
 
       // 2 + 3. every surviving pair
-      for (i <- states.indices; j <- (i + 1) until states.size) {
-        val (aId, aState) = states(i)
-        val (bId, bState) = states(j)
-
-        val feed = cat.changesBetween(spark, t, aId, Some(bId))
-          .select(col("id"), col("v"), col("_change_type")).collect()
-        val ins = ms(feed.filter(_.getString(2) == "insert").map(r => (r.getLong(0), r.getLong(1))).toSeq)
-        val del = ms(feed.filter(_.getString(2) == "delete").map(r => (r.getLong(0), r.getLong(1))).toSeq)
+      val pairs = for (i <- states.indices; j <- (i + 1) until states.size)
+        yield (states(i), states(j))
+      val feeds = collectEach(pairs.map { case ((aId, _), (bId, _)) =>
+        cat.changesBetween(spark, t, aId, Some(bId)) }, "_change_type")
+      val incs = collectEach(pairs.map { case ((aId, _), (bId, _)) =>
+        cat.readIncremental(spark, t, aId, Some(bId)) })
+      for ((((aId, aState), (bId, bState)), feed, incRows) <- pairs.lazyZip(feeds).lazyZip(incs)) {
+        val ins = ms(feed.filter(_.getString(3) == "insert").map(r => (r.getLong(1), r.getLong(2))))
+        val del = ms(feed.filter(_.getString(3) == "delete").map(r => (r.getLong(1), r.getLong(2))))
         val applied = plus(minus(aState, del), ins)
         assert(applied == bState,
           s"seq=$seq changesBetween($aId,$bId) applied to a != b: " +
@@ -633,7 +644,7 @@ class CdcLifecycleSpec extends SparkSpec {
         assert(subsetOf(del, aState), s"seq=$seq changesBetween($aId,$bId) deletes rows absent at a")
         assert(subsetOf(ins, bState), s"seq=$seq changesBetween($aId,$bId) inserts rows absent at b")
 
-        val inc = collectMs(cat.readIncremental(spark, t, aId, Some(bId)))
+        val inc = ms(incRows.map(r => (r.getLong(1), r.getLong(2))))
         assert(subsetOf(inc, bState),
           s"seq=$seq readIncremental($aId,$bId) resurrects rows: ${minus(inc, bState)}")
       }

@@ -217,6 +217,35 @@ class SnapshotCatalogSpec extends SparkSpec {
     assert(cat.read(spark, "cust").count() == preCount)
   }
 
+  test("vacuum removes the write directories it leaves without a live file") {
+    import graft.sinks.Writers
+    import scala.jdk.CollectionConverters._
+    val cat = new SnapshotCatalog(tempDir("graft-vacdirs-").toString)
+    val dataDir = java.nio.file.Paths.get(tempDir("graft-vacdirs-data-").toString)
+    val c = graft.Tables.customer(spark, sfDir)
+    (0 until 3).foreach { i =>
+      Writers.writeSnapshot(cat, "cust", c.filter(col("c_custkey") % 3 === i).coalesce(1),
+        dataDir.toString)
+    }
+    assert(Writers.compact(spark, cat, "cust", dataDir.toString).isDefined)
+    cat.expireSnapshots("cust", keepLast = 1)
+    def dirs(): Set[java.nio.file.Path] = {
+      val s = Files.walk(dataDir)
+      try s.iterator().asScala.filter(d => d != dataDir && Files.isDirectory(d)).toSet
+      finally s.close()
+    }
+    val before = dirs()
+    assert(cat.vacuumDataFiles("cust", dataDir.toString, graceMs = 0L, dryRun = true).size == 3)
+    assert(dirs() == before, "a dry run deletes nothing")
+    assert(cat.vacuumDataFiles("cust", dataDir.toString, graceMs = 0L).size == 3)
+    val live = cat.currentSnapshot("cust").get.files
+      .map(f => java.nio.file.Paths.get(SnapshotCatalog.normalizePath(f.path)))
+    val dead = dirs().filterNot(d => live.exists(_.startsWith(d)))
+    assert(dead.isEmpty, s"vacuum left write directories without a live file: $dead")
+    assert(Files.isDirectory(dataDir))
+    assert(cat.read(spark, "cust").count() == c.count())
+  }
+
   test("age-based expiration drops old snapshots but retains tagged and newest") {
     import graft.sinks.Writers
     var now = 1000L

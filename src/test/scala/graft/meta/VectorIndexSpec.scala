@@ -232,9 +232,10 @@ class VectorIndexSpec extends SparkSpec {
           excludeSelf = true)).nonEmpty)
       } else {
         ext.sql(s"DROP TABLE graft.$t2 PURGE")
-        // the old name's data dir keeps Spark's commit debris (_SUCCESS,
-        // .crc): a data dir outside the table's own tree is not listed
-        val left = Seq(oldPq, s"$root/$t2").map(java.nio.file.Paths.get(_)).filter(Files.exists(_))
+        // the old name's directory goes whole: its data dir's write
+        // directories held only Spark's commit bookkeeping after the purge
+        val left = Seq(s"$root/$t", s"$root/$t2").map(java.nio.file.Paths.get(_))
+          .filter(Files.exists(_))
         assert(left.isEmpty, s"PURGE left $left")
       }
     }

@@ -237,6 +237,25 @@ class GraftHttpServerSpec extends SparkSpec {
     } finally srv.stop()
   }
 
+  test("/changes refuses an unknown feed mode the way the CALL verbs do") {
+    import org.apache.spark.sql.functions.col
+    val cat = new graft.meta.SnapshotCatalog(tempDir("graft-http-mode-").toString)
+    val dataDir = tempDir("graft-http-mode-d-").toString
+    val c = graft.Tables.customer(spark, sfDir)
+    val s1 = graft.sinks.Writers.writeSnapshot(cat, "cust", c.filter(col("c_custkey") <= 5), dataDir)
+    graft.sinks.Writers.writeSnapshot(cat, "cust", c.filter(col("c_custkey") === 6), dataDir)
+    val srv = new GraftHttpServer(spark, sfDir, port = 0, catalog = Some(cat)).start()
+    try {
+      val base = s"http://127.0.0.1:${srv.boundPort}/changes?table=cust&from=${s1.snapshotId}"
+      val (code, body) = get(s"$base&mode=percomit")
+      assert(code == 400 && body.contains("net|percommit"), s"$code $body")
+      // the valid modes read in any letter case
+      val (pc, pbody) = get(s"$base&mode=PerCommit")
+      assert(pc == 200 && pbody.contains("_commit_snapshot_id"), s"$pc $pbody")
+      assert(get(s"$base&mode=NET")._1 == 200)
+    } finally srv.stop()
+  }
+
   test("/ndv answers from manifest sketches and /staged lists the audit queue") {
     import org.apache.spark.sql.functions.col
     val cat = new graft.meta.SnapshotCatalog(

@@ -652,6 +652,23 @@ class GraftCallSpec extends SparkSpec {
     assert(e.getMessage.contains("percommit"))
   }
 
+  test("CALL graft.export reads the feed mode like changelog: any letter case, typos refused") {
+    val t = freshTable("cdfexp", 1 to 5)
+    val s1 = cat.currentSnapshot(t).get.snapshotId
+    ext.sql(s"INSERT INTO $t VALUES (901, 'A#901', 1.0)")
+    val s2 = cat.currentSnapshot(t).get.snapshotId
+    val out = tempDir("graft-call-expmode-").toString + "/feed"
+    ext.sql(s"CALL graft.export('$t', '$out', changes_from => $s1, mode => 'PERCOMMIT')")
+    val feed = spark.read.parquet(out)
+      .select(col("_commit_snapshot_id"), col("_change_type"), col("c_custkey"))
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
+    assert(feed == Set((s2, "insert", 901L)))
+    val e = intercept[Exception] {
+      ext.sql(s"CALL graft.export('$t', '$out-typo', changes_from => $s1, mode => 'percomit')")
+    }
+    assert(e.getMessage.contains("net|percommit"), e.getMessage)
+  }
+
   test("CALL graft.create_mv / refresh_mv: CDC-folded aggregate view from pure SQL") {
     Writers.writeSnapshot(cat, "mvsrc",
       graft.Tables.orders(spark, sfDir)
